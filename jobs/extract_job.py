@@ -6,8 +6,9 @@
 
 Packaging: ``cd /root/repo && zip -r rss.zip receipt_scanner_spark`` —
 the module only imports the package, so ``--py-files`` ships everything
-executors need.  On a cluster, drop the LOCAL_MASTER env fallback and
-submit against YARN/K8s; the code path is identical.
+executors need.  Run outside spark-submit, it starts a local session via
+``plans/session.get_spark``; on a cluster, submit against YARN/K8s —
+the code path is identical.
 
 Behavior (north rule): checkpointed per-partition commits with lineage
 and extraction-success metrics; rerunning after a kill resumes pending
@@ -57,22 +58,18 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from receipt_scanner_spark.plans.session import get_spark
     from receipt_scanner_spark.table.snapshots import (
         SnapshotTable,
         run_resumable_extraction,
     )
 
     # under spark-submit the session comes preconfigured; standalone runs
-    # (and this sandbox) fall back to local
-    builder = SparkSession.builder.appName("rss-extract")
-    if not os.environ.get("SPARK_ENV_LOADED"):  # not under spark-submit
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        builder = (
-            builder.master(f"local[{cores}]")
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.shuffle.partitions", str(2 * int(cores)))
-        )
-    spark = builder.getOrCreate()
+    # fall back to a local session
+    if os.environ.get("SPARK_ENV_LOADED"):
+        spark = SparkSession.builder.appName("rss-extract").getOrCreate()
+    else:
+        spark = get_spark(app_name="rss-extract")
     spark.conf.set("spark.sql.parquet.compression.codec", args.codec)
     spark.sparkContext.setLogLevel("WARN")
 

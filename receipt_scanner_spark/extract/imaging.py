@@ -740,7 +740,7 @@ def decode_pnm(data: bytes) -> np.ndarray:
     kind = data[1] - 0x30
     pos = 2
 
-    def token() -> int:
+    def skip_blanks() -> None:
         nonlocal pos
         while pos < len(data):
             c = data[pos]
@@ -751,6 +751,10 @@ def decode_pnm(data: bytes) -> np.ndarray:
                     pos += 1
             else:
                 break
+
+    def token() -> int:
+        nonlocal pos
+        skip_blanks()
         start = pos
         while pos < len(data) and data[pos] in b"0123456789":
             pos += 1
@@ -768,7 +772,15 @@ def decode_pnm(data: bytes) -> np.ndarray:
         raise ValueError("bad PNM maxval")
     nch = 3 if kind in (3, 6) else 1
 
-    if kind in (1, 2, 3):  # ASCII
+    if kind == 1:  # plain PBM: one '0'/'1' per pixel, blanks optional
+        vals = np.empty(w * h, dtype=np.uint32)
+        for i in range(vals.size):
+            skip_blanks()
+            if pos >= len(data) or data[pos] not in b"01":
+                raise ValueError("bad PBM pixel")
+            vals[i] = data[pos] - 0x30
+            pos += 1
+    elif kind in (2, 3):  # ASCII
         vals = np.empty(w * h * nch, dtype=np.uint32)
         for i in range(vals.size):
             vals[i] = token()

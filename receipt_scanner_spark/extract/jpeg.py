@@ -1610,7 +1610,9 @@ def _decode_hierarchical(
             state = cur["pstate"]
             if state is None or not state.n_scans:
                 raise ValueError("hierarchical frame without scan data")
-            planes = _hier_dct_planes(state, qtables, diffmode)
+            planes = _hier_dct_planes(
+                state, {**qtables, **cur["qt"]}, diffmode
+            )
             raw = []
             for (cid, h, v, _tq), pl in zip(state.comps, planes):
                 yi = -(-state.H * v // state.vmax)
@@ -1744,6 +1746,8 @@ def _decode_hierarchical(
                 "lplanes": {},
                 "lpts": {},
                 "exp": exp_pending if differential else None,
+                # quant tables as of each component's first scan
+                "qt": {},
             }
             exp_pending = None
         elif marker == 0xC8:
@@ -1791,6 +1795,15 @@ def _decode_hierarchical(
             else:
                 if cur["pstate"] is None:
                     cur["pstate"] = _ProgState(cur["frame"], precision)
+                # the frame dequantizes at finish_frame(), which runs only
+                # at the next SOF/EXP/EOI: snapshot the tables now so a
+                # DQT between frames redefining a table id (B.2.4.1)
+                # applies to the next frame, not to this one
+                tq_of = {c: tq for c, _h, _v, tq in cur["frame"][2]}
+                for c in range(seg[0]):
+                    tq = tq_of.get(seg[1 + 2 * c])
+                    if tq in qtables:
+                        cur["qt"].setdefault(tq, qtables[tq])
                 if cur["progressive"] and cur["arithmetic"]:
                     from . import jarith
 

@@ -126,8 +126,8 @@ def segment_lines(
 
     Defaults are PASS-THROUGH thresholds: the reference pipes tesseract
     output to the parser cascade unfiltered (lib/image_processor.js:48-54
-    → lib/processor.js:68-78), so filtering must be opt-in to keep
-    byte-identity.  Use via ``build_process_udf(line_filter=...)``.
+    → lib/processor.js:68-78), so the extraction UDF does not call
+    this: its output stays byte-identical to the extractor's text.
     """
     out = []
     for line in text.split("\n"):

@@ -9,13 +9,12 @@ calls*, per BASELINE.json input_hint — the per-row work is regex/DOM
 parsing that is irreducibly row-wise, batched through one vectorized
 call).
 
-Two fusion levels:
-
-* ``extract_udf`` / ``parse_udf`` — composable stages (format sniff +
-  text extraction; parser cascade).
-* ``process_udf`` — fused extract+parse, ONE Arrow round-trip per
-  batch.  The default pipeline uses this: two chained pandas UDFs cost
-  two JVM↔Python exchanges in the same stage, fusing halves transfer.
+One fusion level: ``process_udf`` runs format sniff, text extraction
+and the parser cascade in ONE Arrow round-trip per batch (two chained
+pandas UDFs would cost two JVM↔Python exchanges in the same stage).
+The row kernels ``extract_row`` / ``parse_row`` and the layer entry
+points are looked up as module globals on every row, so a profiler
+can wrap them in place (perfbench/tracing.py does).
 
 Custom parsers (reference plug-in surface T17, lib/processor.js:86-90)
 are supported by building a UDF from an explicit parser list via
@@ -43,7 +42,7 @@ from ..extract.html_fast import extract_main_text_fast as extract_main_text
 from ..extract.pdf import OCR_UNAVAILABLE_ERROR, process_pdf
 from ..extract.sniff import maybe_gunzip, sniff_format, unsupported_error
 from ..parsers.amount import parse_amount
-from ..parsers.date import parse_date, prepare_text as prepare_date_text
+from ..parsers.date import parse_date
 from ..parsers.registry import PARSERS
 
 SPAN_TYPE = StructType(
@@ -55,16 +54,11 @@ SPAN_TYPE = StructType(
     ]
 )
 
-EXTRACT_SCHEMA = StructType(
+PROCESS_SCHEMA = StructType(
     [
         StructField("format", StringType()),
         StructField("extracted_text", StringType()),
         StructField("error", StringType()),
-    ]
-)
-
-PARSE_SCHEMA = StructType(
-    [
         StructField("amount", StringType()),
         StructField("date", StringType()),
         StructField("spans", ArrayType(SPAN_TYPE)),
@@ -75,10 +69,8 @@ PARSE_SCHEMA = StructType(
     ]
 )
 
-PROCESS_SCHEMA = StructType(EXTRACT_SCHEMA.fields + PARSE_SCHEMA.fields)
 
-
-# --- row kernels (pure, shared by all fusion levels) -------------------------
+# --- row kernels (pure) ------------------------------------------------------
 
 def extract_row(
     html: bytes | None,
@@ -219,42 +211,15 @@ def parse_row(
     return amount_val, date_val, spans, (extra or None)
 
 
-# --- UDF builders -------------------------------------------------------------
-
-def build_extract_udf(ocr: Callable | None = None, ocr_arrays: Callable | None = None):
-    @pandas_udf(EXTRACT_SCHEMA)
-    def extract(html: pd.Series, text: pd.Series) -> pd.DataFrame:
-        rows = [
-            extract_row(h, t, ocr, ocr_arrays=ocr_arrays)
-            for h, t in zip(html, text)
-        ]
-        return pd.DataFrame(rows, columns=["format", "extracted_text", "error"])
-
-    return extract
-
-
-def build_parse_udf(parsers: list | None = None):
-    @pandas_udf(PARSE_SCHEMA)
-    def parse(text: pd.Series) -> pd.DataFrame:
-        rows = [parse_row(t, parsers) for t in text]
-        return pd.DataFrame(rows, columns=["amount", "date", "spans", "extra"])
-
-    return parse
-
+# --- UDF builder -------------------------------------------------------------
 
 def build_process_udf(
     parsers: list | None = None,
     ocr: Callable | None = None,
-    line_filter: Callable | None = None,
     profile: str | None = None,
     ocr_arrays: Callable | None = None,
 ):
     """Fused extract+parse: one Arrow exchange per batch.
-
-    ``line_filter``: optional OCR-text line segmentation stage
-    (e.g. ``lambda t: "\n".join(segment_lines(t, 3, 0.3))``), applied
-    to extracted text before parsing.  Off by default — the reference
-    parses raw extractor output, and byte-identity is the contract.
 
     ``profile``: named stripper preprocessing profile
     (extract/profiles.PROFILES) — the reference's selectable
@@ -265,20 +230,11 @@ def build_process_udf(
         out = []
         for h, t in zip(html, text):
             fmt, extracted, error = extract_row(h, t, ocr, profile, ocr_arrays)
-            if line_filter is not None and extracted is not None:
-                extracted = line_filter(extracted)
-            amount, date, spans, extra = parse_row(extracted, parsers)
-            out.append((fmt, extracted, error, amount, date, spans, extra))
-        return pd.DataFrame(
-            out,
-            columns=["format", "extracted_text", "error", "amount", "date",
-                     "spans", "extra"],
-        )
+            out.append((fmt, extracted, error, *parse_row(extracted, parsers)))
+        return pd.DataFrame(out, columns=PROCESS_SCHEMA.names)
 
     return process
 
 
-# Default instances (module-level so Spark serializes one closure).
-extract_udf = build_extract_udf()
-parse_udf = build_parse_udf()
+# Default instance (module-level so Spark serializes one closure).
 process_udf = build_process_udf()

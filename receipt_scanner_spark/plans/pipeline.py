@@ -35,6 +35,19 @@ PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 OBSERVATION_NAME = "extraction_metrics"
 
 
+def extraction_counts() -> list:
+    """The extraction counters: rows, rows with a parsed amount, rows
+    with a parsed date, rows carrying an error (``total``/``amount``/
+    ``date``/``errors``).  Shared by ``observe`` metrics, snapshot
+    commit metrics and the per-host and ``--summary`` aggregates."""
+    return [
+        F.count(F.lit(1)).alias("total"),
+        F.count("amount").alias("amount"),
+        F.count("date").alias("date"),
+        F.count("error").alias("errors"),
+    ]
+
+
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
     """Scan the pages table (parquet dir or file).  On a real deployment
     this is ``spark.read.table('warehouse.pages')`` over Iceberg — the
@@ -92,13 +105,7 @@ def extract_pages(
     ).select("url", "warc_ts", "lang", "_r.*")
 
     if observe:
-        result = result.observe(
-            OBSERVATION_NAME,
-            F.count(F.lit(1)).alias("total"),
-            F.count("amount").alias("amount"),
-            F.count("date").alias("date"),
-            F.count("error").alias("errors"),
-        )
+        result = result.observe(OBSERVATION_NAME, *extraction_counts())
     return result
 
 
@@ -107,11 +114,7 @@ def summary(results: DataFrame) -> DataFrame:
     docs, docs with a parsed amount, docs with a parsed date — errors
     excluded from total, as in cli.js:205-217."""
     ok = results.filter(F.col("error").isNull())
-    return ok.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.count("amount").alias("amount"),
-        F.count("date").alias("date"),
-    )
+    return ok.agg(*extraction_counts()[:3])
 
 
 def success_by_host(results: DataFrame) -> DataFrame:
@@ -120,12 +123,7 @@ def success_by_host(results: DataFrame) -> DataFrame:
     return (
         results.withColumn("host", host_of())
         .groupBy("host")
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            F.count("amount").alias("amount"),
-            F.count("date").alias("date"),
-            F.count("error").alias("errors"),
-        )
+        .agg(*extraction_counts())
     )
 
 
@@ -153,26 +151,30 @@ def golden_regressions(results: DataFrame, goldens: DataFrame) -> DataFrame:
     )
 
 
-def success_rate_gate(results: DataFrame, goldens: DataFrame,
-                      min_rate: float = 0.85) -> dict:
-    """Benchmark gate (D5, image_preprocessors.js:138,143): success rate =
-    exact matches / total; returns the report dict and raises if the
-    rate is below ``min_rate`` (the reference's CI semantics)."""
-    total = goldens.count()
-    failures = golden_regressions(results, goldens).count()
-    # full-outer semantics: results without a golden count as failures,
-    # so an empty goldens table must not grade green against non-empty
-    # results (rate 1.0 only when there were no mismatches at all).
+def _grade(total: int, failures: int) -> tuple[float, dict]:
+    """(success rate, report) for ``failures`` golden mismatches out of
+    ``total`` goldens, graded with the 0.85 / 0.95 coloring (D5).
+    Full-outer semantics: results without a golden count as failures,
+    so an empty goldens table must not grade green against non-empty
+    results (rate 1.0 only when there were no mismatches at all)."""
     if total == 0:
         rate = 1.0 if failures == 0 else 0.0
     else:
         rate = max(0.0, (total - failures) / total)
-    report = {
+    return rate, {
         "total": total,
         "failures": failures,
         "success_rate": round(rate, 4),
         "grade": "green" if rate > 0.95 else ("yellow" if rate > 0.85 else "red"),
     }
+
+
+def success_rate_gate(results: DataFrame, goldens: DataFrame,
+                      min_rate: float = 0.85) -> dict:
+    """Benchmark gate (D5, image_preprocessors.js:138,143): success rate =
+    exact matches / total; returns the report dict and raises if the
+    rate is below ``min_rate`` (the reference's CI semantics)."""
+    rate, report = _grade(goldens.count(), golden_regressions(results, goldens).count())
     if rate < min_rate:
         raise AssertionError(f"success rate {rate:.4f} below gate {min_rate}: {report}")
     return report
@@ -203,18 +205,7 @@ def benchmark_profiles(
     total = goldens.count()  # loop-invariant: one action, not one per profile
     for name in names:
         results = extract_pages(pages, observe=False, profile=name)
-        failures = golden_regressions(results, goldens).count()
-        rate = (
-            (1.0 if failures == 0 else 0.0)
-            if total == 0
-            else max(0.0, (total - failures) / total)
-        )
-        out[name] = {
-            "total": total,
-            "failures": failures,
-            "success_rate": round(rate, 4),
-            "grade": "green" if rate > 0.95 else ("yellow" if rate > 0.85 else "red"),
-        }
+        _rate, out[name] = _grade(total, golden_regressions(results, goldens).count())
     if gate_profile in out and out[gate_profile]["success_rate"] < min_rate:
         raise AssertionError(
             f"gated profile {gate_profile!r} below {min_rate}: {out[gate_profile]}"

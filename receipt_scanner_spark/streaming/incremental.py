@@ -22,8 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import PROCESS_SCHEMA, process_udf
-from ..sources.pages import generate_pages  # noqa: F401  (schema source of truth)
+from ..plans.pipeline import extract_pages
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -50,14 +49,7 @@ def stream_extract(
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    pages = reader.load(src_dir)
-
-    result = pages.select(
-        "url",
-        "warc_ts",
-        "lang",
-        process_udf(F.col("html"), F.col("text")).alias("_r"),
-    ).select("url", "warc_ts", "lang", "_r.*")
+    result = extract_pages(reader.load(src_dir), observe=False)
 
     writer = (
         result.writeStream.format("parquet")

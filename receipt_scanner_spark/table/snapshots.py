@@ -350,7 +350,7 @@ def run_resumable_extraction(
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from ..plans.pipeline import extract_pages
+    from ..plans.pipeline import extract_pages, extraction_counts
 
     all_parts = [
         str(r[0]) for r in pages.select(partition_column).distinct().collect()
@@ -360,13 +360,7 @@ def run_resumable_extraction(
         subset = pages.filter(F.col(partition_column) == part)
         result = extract_pages(subset, observe=False, **extract_kwargs)
         obs = Observation()
-        observed = result.observe(
-            obs,
-            F.count(F.lit(1)).alias("total"),
-            F.count("amount").alias("amount"),
-            F.count("date").alias("date"),
-            F.count("error").alias("errors"),
-        )
+        observed = result.observe(obs, *extraction_counts())
         snap = table.commit(
             observed,
             [part],

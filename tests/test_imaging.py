@@ -1316,6 +1316,9 @@ class TestPnm:
         data = b"P4\n9 1\n" + np.packbits(np.pad(bits[0], (0, 7))).tobytes()
         out = decode_pnm(data)
         np.testing.assert_array_equal(out, np.where(bits == 1, 0, 255))
+        # plain PBM: blanks between pixels are optional
+        for plain in (b"P1\n9 1\n1 0 1 0 0 1 1 0 1\n", b"P1\n9 1\n1010\n# c\n01101"):
+            np.testing.assert_array_equal(decode_pnm(plain), out)
 
     def test_ascii_variants_match_binary(self):
         rng = np.random.default_rng(43)

@@ -144,6 +144,12 @@ class HierEncoder:
         out += b"\xff\xcc\x00\x06" + bytes([0x00, 0x10, 0x10, 5])
         self.out = out
 
+    def dqt(self, q):
+        """Redefine quant table 0 as uniform ``q`` for later frames."""
+        self.q = q
+        self.out += b"\xff\xdb" + (2 + 1 + 64).to_bytes(2, "big")
+        self.out += b"\x00" + bytes([q] * 64)
+
     def exp(self, eh=1, ev=1):
         self.out += b"\xff\xdf\x00\x03" + bytes([eh << 4 | ev])
 
@@ -527,6 +533,21 @@ class TestDctPyramid:
         expect = np.clip((up + rec) & 0xFFFF, 0, 255).astype(np.uint8)
         out = decode_jpeg(enc.bytes())
         assert np.array_equal(out, expect)
+
+    def test_per_frame_dqt_redefining_table_id(self):
+        # per-frame encoder output: each frame's DQT precedes it and
+        # reuses table id 0; the base frame must still dequantize with
+        # the table in force when it was scanned
+        rng = np.random.default_rng(33)
+        img = rng.integers(0, 256, (24, 24), dtype=np.int32)
+        enc = HierEncoder(24, 24, q=16)
+        ref = enc.dct_frame([(1, _decimate(img))], differential=False)[0]
+        enc.dqt(2)
+        enc.exp(1, 1)
+        up = _exp_upsample(ref, 1, 1)[:24, :24]
+        rec = enc.dct_frame([(1, img - up)], differential=True)[0]
+        expect = np.clip((up + rec) & 0xFFFF, 0, 255).astype(np.uint8)
+        assert np.array_equal(decode_jpeg(enc.bytes()), expect)
 
     def test_dct_base_lossless_correction_is_exact(self):
         # the J.1 design goal: lossy DCT pyramid + one differential-

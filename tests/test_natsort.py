@@ -4,12 +4,15 @@ oracle (the comparator is extracted from the read-only reference at test
 time and run under system node — no reference code lives in this repo)."""
 
 import json
+import os
 import shutil
 import subprocess
 
 import pytest
 
 from receipt_scanner_spark.functions.natsort import natural_key
+
+REFERENCE_CLI = "/root/reference/cli.js"
 
 
 def _spark_order(spark, names):
@@ -78,6 +81,7 @@ def test_whitespace_token_ordering_matches_reference(spark):
 
 
 @pytest.mark.skipif(shutil.which("node") is None, reason="node unavailable")
+@pytest.mark.skipif(not os.path.isfile(REFERENCE_CLI), reason="reference corpus absent")
 def test_differential_vs_reference_natural_sort(spark):
     """Extract naturalSort from the reference cli.js at test time and
     diff orderings on url/filename shapes (decimal-fraction tie shapes
@@ -107,7 +111,7 @@ def test_differential_vs_reference_natural_sort(spark):
     names = sorted(set(names))
     script = """
 const fs = require('fs');
-const src = fs.readFileSync('/root/reference/cli.js', 'utf8');
+const src = fs.readFileSync(process.argv[2], 'utf8');
 const m = src.match(/function naturalSort[\\s\\S]*?\\n}/);
 if (!m) { throw new Error('naturalSort not found'); }
 const naturalSort = eval('(' + m[0] + ')');
@@ -117,7 +121,7 @@ console.log(JSON.stringify(names));
 """
     ref = json.loads(
         subprocess.run(
-            ["node", "-e", script, json.dumps(names)],
+            ["node", "-e", script, json.dumps(names), REFERENCE_CLI],
             capture_output=True, text=True, check=True,
         ).stdout
     )
