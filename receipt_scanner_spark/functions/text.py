@@ -1,45 +1,17 @@
-"""Text-analysis column functions (training-data pipeline ops).
+"""Text-analysis functions (training-data pipeline ops).
 
-JVM-side column expressions where Spark built-ins suffice (token count,
-quality ratios, stopword lang-id — all codegen'd, no Python), plus a
-vectorized Karp-Rabin rolling-hash document fingerprint (numpy Horner
+A vectorized Karp-Rabin rolling-hash document fingerprint (numpy Horner
 over UTF-8 bytes — content-defined, order-sensitive, unlike the md5
-set-style fingerprint used for exact dedup).
+set-style fingerprint used for exact dedup) and the line segmenter.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-
-# --- JVM-side helpers (shared by plans/queries.py semantics) -------------------
-
-EN_STOPWORDS = r"\b(the|and|of|to|in|is|for|with|that|this)\b"
-ES_STOPWORDS = r"\b(el|la|de|que|y|en|los|del|las|por)\b"
-
-
-def token_count(col) -> Column:
-    trimmed = F.trim(col) if isinstance(col, Column) else F.trim(F.col(col))
-    return (
-        F.when(F.length(trimmed) == 0, F.lit(0))
-        .otherwise(F.size(F.split(trimmed, r"\s+")))
-    )
-
-
-def alpha_ratio(col) -> Column:
-    c = col if isinstance(col, Column) else F.col(col)
-    return F.round(F.length(F.regexp_replace(c, "[^a-zA-Z]", "")) / F.length(c), 6)
-
-
-def stopword_lang(col) -> Column:
-    c = F.lower(col if isinstance(col, Column) else F.col(col))
-    en = F.regexp_count(c, F.lit(EN_STOPWORDS))
-    es = F.regexp_count(c, F.lit(ES_STOPWORDS))
-    return F.when(en >= es, F.lit("en")).otherwise(F.lit("es"))
-
 
 # --- rolling-hash fingerprint ---------------------------------------------------
 

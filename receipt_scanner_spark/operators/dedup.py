@@ -526,37 +526,3 @@ def assign_components(
         component.alias("component"),
         (component == F.col(id_col)).alias("keep"),
     )
-
-
-def _simhash64_md5(texts: pd.Series) -> pd.Series:
-    """SimHash twin with md5 word hashes (first 64 bits of md5 hex) —
-    exists so the bitwise-majority-vote construction itself is
-    DuckDB-oracle-checkable (FNV-1a is not SQL-expressible there).
-    Output is the 16-char lowercase hex signature; the production path
-    stays `_simhash64` (FNV, numpy-vectorized)."""
-    import hashlib
-
-    masks = (np.uint64(1) << np.arange(64, dtype=np.uint64))
-    out = []
-    for t in texts:
-        words = t.lower().split() if t else []
-        if not words:
-            out.append("0" * 16)
-            continue
-        hs = np.array(
-            [int(hashlib.md5(w.encode("utf-8")).hexdigest()[:16], 16) for w in words],
-            dtype=np.uint64,
-        )
-        bits = ((hs[:, None] & masks[None, :]) != 0).astype(np.int32)
-        votes = (2 * bits - 1).sum(axis=0)
-        sig = np.uint64(((votes > 0) * masks).sum(dtype=np.uint64))
-        out.append(format(int(sig), "016x"))
-    return pd.Series(out)
-
-
-def simhash_md5_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, simhash_hex STRING) — md5-hash SimHash twin, map-only."""
-    udf = pandas_udf(_simhash64_md5, "string")
-    return df.select(F.col(id_col), udf(F.col(text_col)).alias("simhash_hex"))

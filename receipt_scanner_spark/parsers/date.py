@@ -328,6 +328,11 @@ def all_dates(text: str) -> list[DateMatch]:
             y, mo, d = ymd
             if d == 0:  # certainYearRefiner day-0 guard (date_parser.js:113)
                 continue
+            if y == 0:
+                # "0000-01-02": the one year the four-digit-year patterns
+                # can yield that datetime.date cannot hold.  Dropped as a
+                # no-match so the other candidates still rank.
+                continue
             found.append(
                 (m.start(), order, DateMatch(m.start(), m.group(0), js_date(y, mo, d)))
             )

@@ -1,24 +1,24 @@
-"""Named queries for the driver contract (__spark_entry__.py) and bench.
+"""Oracle-checked operator queries for the driver contract (__spark_entry__.py).
 
-Each query is a ``(spark, sf_dir) -> DataFrame`` callable with, where
-SQL-expressible, a DuckDB oracle string over the same parquet tables.
-Conventions that make the oracle value-hash stable:
+Each query is a ``(spark, sf_dir) -> DataFrame`` callable paired with a
+DuckDB oracle string over the same parquet tables (``ORACLE_QUERIES``).
+An entry belongs here only if its Spark side runs code defined in this
+package (the dedup, ANN, as-of and text operators), directly or through
+another entry, or if another entry composes it (quality_filter); a
+query that exercises only Spark's built-ins tests Spark, not this
+engine.  Conventions that make the oracle value-hash stable:
 
-* money arithmetic goes through DECIMAL intermediates (exact,
-  associative — immune to float summation-order differences between
-  engines), cast to DOUBLE only at the end;
 * every computed column is aliased identically in both engines;
 * top-k queries carry a total tie-break ordering;
 * float similarity scores are rounded to 6 decimals on both sides.
 
 Scale notes are in each docstring: what shuffles, what broadcasts, and
-why the plan survives 100 TB (SURVEY.md §4 / the judge's efficiency
-rubric).
+why the plan survives 100 TB (SURVEY.md §4).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -26,341 +26,16 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# --- TPC-H-ish relational coverage -------------------------------------------
+# --- dedup over documents: shingles, MinHash-LSH, n-gram Jaccard, SimHash -----
 
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: scan+filter+groupBy-agg with map-side partial
-    aggregation; 4-group output means the shuffle is tiny regardless of
-    input size.  Decimal sums → exact across engines."""
-    li = t(spark, sf_dir, "lineitem")
-    price = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc = F.col("l_discount").cast("decimal(7,4)")
-    tax = F.col("l_tax").cast("decimal(7,4)")
-    one = F.lit(1).cast("decimal(7,4)")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(12,2)")).cast("double").alias("sum_qty"),
-            F.sum(price).cast("double").alias("sum_base_price"),
-            # round decimals to scale 2 BEFORE the double cast: keeps the
-            # unscaled value < 2^53 so decimal->double is exact in every
-            # engine (scale-10 decimals convert with 1-ulp divergence).
-            F.round(F.sum(price * (one - disc)), 2).cast("double").alias("sum_disc_price"),
-            F.round(F.sum(price * (one - disc) * (one + tax)), 2).cast("double").alias("sum_charge"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-Q1_SQL = """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(7,4)) - CAST(l_discount AS DECIMAL(7,4)))), 2) AS DOUBLE) AS sum_disc_price,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(7,4)) - CAST(l_discount AS DECIMAL(7,4))) * (CAST(1 AS DECIMAL(7,4)) + CAST(l_tax AS DECIMAL(7,4)))), 2) AS DOUBLE) AS sum_charge,
-       COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: selective dimension (customer) broadcast into the
-    fact join — no shuffle of lineitem on the customer side; only the
-    orders⨝lineitem equi-join shuffles, and AQE handles residual skew.
-    At 100 TB: customer ≪ lineitem, broadcast is the right call."""
-    cutoff = F.lit("1998-01-01").cast("timestamp")
-    cust = t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
-    li = t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
-    price = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc = F.col("l_discount").cast("decimal(7,4)")
-    one = F.lit(1).cast("decimal(7,4)")
-    return (
-        li.join(F.broadcast(orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(price * (one - disc)), 2).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-Q3_SQL = """
-SELECT l_orderkey, o_orderdate, o_orderpriority,
-       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(7,4)) - CAST(l_discount AS DECIMAL(7,4)))), 2) AS DOUBLE) AS revenue
-FROM customer JOIN orders ON c_custkey = o_custkey
-              JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-01-01'
-  AND l_shipdate  > TIMESTAMP '1998-01-01'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey ASC
-LIMIT 10
-"""
-
-
-def q6_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: pure filter+sum — entirely map-side, the filters
-    push down to the parquet scan (PushedFilters)."""
-    li = t(spark, sf_dir, "lineitem")
-    price = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc = F.col("l_discount").cast("decimal(7,4)")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(F.round(F.sum(price * disc), 2).cast("double").alias("revenue"))
-    )
-
-
-Q6_SQL = """
-SELECT CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(7,4))), 2) AS DOUBLE) AS revenue
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
-"""
-
-
-def top_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window row_number: one shuffle on the partition key; at scale the
-    key (custkey) is high-cardinality so it spreads well."""
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        t(spark, sf_dir, "orders")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-        .orderBy("o_custkey")
-    )
-
-
-TOP_ORDER_SQL = """
-SELECT o_custkey, o_orderkey, o_totalprice FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-  FROM orders
-) WHERE rn = 1 ORDER BY o_custkey
-"""
-
-
-def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization (30-min gap): two stacked windows over the same
-    (user_id, ts) partitioning — Catalyst plans ONE shuffle, both
-    windows run in the same stage.  The streaming twin lives in
-    streaming/ (session_window); this is the batch form."""
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # interval comparison keeps full microsecond precision in both engines
-    is_new = F.when(
-        F.lag("ts").over(w).isNull()
-        | ((F.col("ts") - F.lag("ts").over(w)) > F.expr("INTERVAL 30 MINUTE")),
-        1,
-    ).otherwise(0)
-    return (
-        ev.withColumn("is_new", is_new)
-        .withColumn("session_id", F.sum("is_new").over(
-            Window.partitionBy("user_id").orderBy("ts", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("user_id", "session_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.round(F.sum(F.col("value").cast("decimal(12,2)")), 2).cast("double").alias("session_value"),
-        )
-        .orderBy("user_id", "session_id")
-    )
-
-
-SESSIONIZE_SQL = """
-WITH marked AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN LAG(ts) OVER w IS NULL
-                   OR ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS is_new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sessions AS (
-  SELECT user_id, ts, value,
-         CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-  FROM marked
-)
-SELECT user_id, session_id,
-       COUNT(*) AS n_events,
-       MIN(ts) AS session_start,
-       MAX(ts) AS session_end,
-       CAST(ROUND(SUM(CAST(value AS DECIMAL(12,2))), 2) AS DOUBLE) AS session_value
-FROM sessions
-GROUP BY user_id, session_id
-ORDER BY user_id, session_id
-"""
-
-
-def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti-join (set-difference shape).  At scale: broadcast the
-    distinct custkeys of the smaller side when feasible; AQE converts
-    to broadcast automatically below the threshold."""
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    )
-
-
-CUSTOMERS_WITHOUT_ORDERS_SQL = """
-SELECT c_custkey, c_name FROM customer
-WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_custkey IS NOT NULL)
-ORDER BY c_custkey
-"""
-
-
-def priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP grouping sets over orders — partial aggregation applies;
-    output cardinality is bounded by the dimension product."""
-    return (
-        t(spark, sf_dir, "orders")
-        .rollup("o_orderpriority", "o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(14,2)")), 2).cast("double").alias("total_price"),
-        )
-        .orderBy(
-            F.col("o_orderpriority").asc_nulls_first(),
-            F.col("o_orderstatus").asc_nulls_first(),
-        )
-    )
-
-
-PRIORITY_ROLLUP_SQL = """
-SELECT o_orderpriority, o_orderstatus,
-       COUNT(*) AS n_orders,
-       CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(14,2))), 2) AS DOUBLE) AS total_price
-FROM orders
-GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
-ORDER BY o_orderpriority ASC NULLS FIRST, o_orderstatus ASC NULLS FIRST
-"""
-
-
-# --- training-data / text ops over documents ----------------------------------
-
-def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace token counting — JVM-side split, no Python."""
-    docs = t(spark, sf_dir, "documents")
-    trimmed = F.trim(F.col("text"))
-    return docs.select(
-        "doc_id",
-        F.when(F.length(trimmed) == 0, F.lit(0))
-        .otherwise(F.size(F.split(trimmed, r"\s+")))
-        .alias("n_tokens"),
-    ).orderBy("doc_id")
-
-
-TOKEN_COUNT_SQL = r"""
-SELECT doc_id,
-       CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-            ELSE LEN(regexp_split_to_array(TRIM(text), '\s+')) END AS n_tokens
-FROM documents ORDER BY doc_id
-"""
-
-
-def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality scoring: length + alpha/digit/space ratios, JVM-side."""
-    docs = t(spark, sf_dir, "documents")
-    n = F.length("text")
-    alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", ""))
-    digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
-    space = F.length(F.regexp_replace("text", r"[^\s]", ""))
-    return docs.select(
-        "doc_id",
-        n.alias("n_chars"),
-        F.round(alpha / n, 6).alias("alpha_ratio"),
-        F.round(digit / n, 6).alias("digit_ratio"),
-        F.round(space / n, 6).alias("space_ratio"),
-    ).orderBy("doc_id")
-
-
-DOC_QUALITY_SQL = r"""
-SELECT doc_id,
-       LENGTH(text) AS n_chars,
-       ROUND(LENGTH(regexp_replace(text, '[^a-zA-Z]', '', 'g')) / CAST(LENGTH(text) AS DOUBLE), 6) AS alpha_ratio,
-       ROUND(LENGTH(regexp_replace(text, '[^0-9]', '', 'g')) / CAST(LENGTH(text) AS DOUBLE), 6) AS digit_ratio,
-       ROUND(LENGTH(regexp_replace(text, '[^\s]', '', 'g')) / CAST(LENGTH(text) AS DOUBLE), 6) AS space_ratio
-FROM documents ORDER BY doc_id
-"""
-
-
-def _shingles3(words=None, text_col: str = "text"):
+def _shingles3():
     """Distinct word-3-gram shingles of the text column, Arrow-batched
     (operators/dedup.word_shingles_udf — the JVM transform(sequence(…))
     HOF it replaces runs interpreted per element, measured 4.2× slower;
-    outputs identical, so the DuckDB oracles are unaffected).  The
-    ``words`` arg is retained for signature compatibility and ignored."""
+    outputs identical, so the DuckDB oracles are unaffected)."""
     from ..operators.dedup import word_shingles_udf
 
-    return word_shingles_udf(3)(F.col(text_col))
-
-
-_EN_STOPWORDS = r"\b(the|and|of|to|in|is|for|with|that|this)\b"
-_ES_STOPWORDS = r"\b(el|la|de|que|y|en|los|del|las|por)\b"
-
-
-def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-hit language ID (n-gram-heuristic family), JVM regex."""
-    docs = t(spark, sf_dir, "documents")
-    en = F.regexp_count(F.lower("text"), F.lit(_EN_STOPWORDS))
-    es = F.regexp_count(F.lower("text"), F.lit(_ES_STOPWORDS))
-    return docs.select(
-        "doc_id",
-        en.alias("en_hits"),
-        es.alias("es_hits"),
-        F.when(en >= es, F.lit("en")).otherwise(F.lit("es")).alias("pred_lang"),
-        "lang",
-    ).orderBy("doc_id")
-
-
-LANG_ID_SQL = rf"""
-SELECT doc_id,
-       LEN(regexp_extract_all(LOWER(text), '{_EN_STOPWORDS}')) AS en_hits,
-       LEN(regexp_extract_all(LOWER(text), '{_ES_STOPWORDS}')) AS es_hits,
-       CASE WHEN LEN(regexp_extract_all(LOWER(text), '{_EN_STOPWORDS}'))
-                 >= LEN(regexp_extract_all(LOWER(text), '{_ES_STOPWORDS}'))
-            THEN 'en' ELSE 'es' END AS pred_lang,
-       lang
-FROM documents ORDER BY doc_id
-"""
-
-
-def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup on whitespace-normalized md5 fingerprint: hash-groupBy,
-    keep min doc_id.  At 100 TB this is the canonical 'one shuffle on a
-    uniform key' job — md5 keys cannot skew."""
-    docs = t(spark, sf_dir, "documents")
-    fp = F.md5(F.trim(F.lower(F.regexp_replace("text", r"\s+", " "))))
-    return (
-        docs.select(fp.alias("fp"), "doc_id")
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("keeper"), F.count(F.lit(1)).alias("n_dups"))
-        .orderBy("keeper")
-    )
-
-
-EXACT_DEDUP_SQL = r"""
-SELECT md5(TRIM(LOWER(regexp_replace(text, '\s+', ' ', 'g')))) AS fp,
-       MIN(doc_id) AS keeper, COUNT(*) AS n_dups
-FROM documents GROUP BY 1 ORDER BY keeper
-"""
+    return word_shingles_udf(3)(F.col("text"))
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
@@ -369,8 +44,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFram
     the oracle matches bit-for-bit.  At scale: explode→groupBy is one
     shuffle; K mins fold map-side."""
     docs = t(spark, sf_dir, "documents")
-    words = F.split(F.trim(F.lower("text")), r"\s+")
-    exploded = docs.select("doc_id", F.explode(_shingles3(words)).alias("sh"))
+    exploded = docs.select("doc_id", F.explode(_shingles3()).alias("sh"))
     aggs = [
         F.min(F.md5(F.concat(F.col("sh"), F.lit(f"#{i}")))).alias(f"h{i}")
         for i in range(k)
@@ -405,7 +79,6 @@ def ngram_jaccard_pairs(
     the presentation orderBy for consumers that immediately destroy the
     order (connected components) — one less range exchange."""
     docs = t(spark, sf_dir, "documents")
-    words = F.split(F.trim(F.lower("text")), r"\s+")
     # ONE shingle pass (r4; PLANS.md previously documented four
     # ArrowEvalPython recomputes: both self-join sides + two size
     # branches).  The compact PER-DOC array table (one row per doc) is
@@ -420,7 +93,7 @@ def ngram_jaccard_pairs(
     # shingle sets past the signature fold.
     shing = (
         docs.select(
-            "doc_id", "lang", "source", _shingles3(words).alias("sh_arr")
+            "doc_id", "lang", "source", _shingles3().alias("sh_arr")
         )
         .withColumn("n_sh", F.size("sh_arr"))
         .localCheckpoint(eager=False)
@@ -480,329 +153,6 @@ ORDER BY doc_a, doc_b
 """
 
 
-# --- similarity search over embeddings ----------------------------------------
-
-def embedding_topk(spark: SparkSession, sf_dir: str, query_vec_id: int = 0, k: int = 10) -> DataFrame:
-    """Brute-force cosine top-k against one query vector — the exact
-    baseline for ANN.  Arrow-batched numpy matvec against the broadcast
-    query (operators/ann.cosine_to_query_udf) — the zip_with/aggregate
-    fold it replaces runs interpreted per row per element (100× slower,
-    same measurement as embedding_cosine_pairs).  At 100 TB the scale
-    path is LSH bucketing (operators/ann.py); this exact scan stays the
-    recall oracle."""
-    from ..operators.ann import cosine_to_query_udf
-
-    emb = t(spark, sf_dir, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == query_vec_id).select("embedding").first()
-    qvec = [float(x) for x in qrow["embedding"]]
-    cosine = cosine_to_query_udf(qvec)(F.col("embedding"))
-    return (
-        emb.filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id", "label", F.round(cosine, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-EMBEDDING_TOPK_SQL = """
-WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-SELECT vec_id, label,
-       ROUND(
-         list_dot_product(CAST(embedding AS DOUBLE[]), qv)
-         / (SQRT(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))
-            * SQRT(list_dot_product(qv, qv))), 6) AS cosine
-FROM embeddings, q
-WHERE vec_id <> 0
-ORDER BY cosine DESC, vec_id ASC
-LIMIT 10
-"""
-
-
-# --- registry -------------------------------------------------------------------
-
-ORACLE_QUERIES: dict[str, tuple] = {
-    "q1_pricing_summary": (q1_pricing_summary, Q1_SQL),
-    "q3_shipping_priority": (q3_shipping_priority, Q3_SQL),
-    "q6_revenue_change": (q6_revenue_change, Q6_SQL),
-    "top_order_per_customer": (top_order_per_customer, TOP_ORDER_SQL),
-    "sessionize_events": (sessionize_events, SESSIONIZE_SQL),
-    "customers_without_orders": (customers_without_orders, CUSTOMERS_WITHOUT_ORDERS_SQL),
-    "priority_rollup": (priority_rollup, PRIORITY_ROLLUP_SQL),
-    "token_count": (token_count, TOKEN_COUNT_SQL),
-    "doc_quality": (doc_quality, DOC_QUALITY_SQL),
-    "lang_id": (lang_id, LANG_ID_SQL),
-    "exact_dedup": (exact_dedup, EXACT_DEDUP_SQL),
-    "minhash_signatures": (minhash_signatures, minhash_signatures_sql()),
-    "ngram_jaccard_pairs": (ngram_jaccard_pairs, NGRAM_JACCARD_SQL),
-    "embedding_topk": (embedding_topk, EMBEDDING_TOPK_SQL),
-}
-
-
-# --- round-1 breadth: percentiles, set ops, subqueries, scalar batteries --------
-
-def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles per group (continuous definition is
-    identical in Spark `percentile` and DuckDB `quantile_cont`).  At
-    scale, swap to approx_percentile — documented tradeoff."""
-    ev = t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
-            F.round(F.expr("percentile(value, 0.9)"), 6).alias("p90"),
-            F.round(F.expr("percentile(value, 0.99)"), 6).alias("p99"),
-        )
-        .orderBy("event_type")
-    )
-
-
-VALUE_PERCENTILES_SQL = """
-SELECT event_type, COUNT(*) AS n,
-       ROUND(quantile_cont(value, 0.5), 6) AS p50,
-       ROUND(quantile_cont(value, 0.9), 6) AS p90,
-       ROUND(quantile_cont(value, 0.99), 6) AS p99
-FROM events GROUP BY event_type ORDER BY event_type
-"""
-
-
-def customer_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION / EXCEPT / INTERSECT (distinct set semantics)."""
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders")
-    building = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    big = (
-        orders.filter(F.col("o_totalprice") > 300000)
-        .select(F.col("o_custkey").alias("c_custkey"))
-    )
-    negative = cust.filter(F.col("c_acctbal") < 0).select("c_custkey")
-    return (
-        building.union(big).distinct()
-        .exceptAll(negative.distinct())
-        .intersect(cust.select("c_custkey"))
-        .orderBy("c_custkey")
-    )
-
-
-CUSTOMER_SET_OPS_SQL = """
-(SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
- UNION
- SELECT o_custkey AS c_custkey FROM orders WHERE o_totalprice > 300000)
-EXCEPT
-SELECT c_custkey FROM customer WHERE c_acctbal < 0
-INTERSECT
-SELECT c_custkey FROM customer
-ORDER BY c_custkey
-"""
-
-
-def segments_with_big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXISTS-style correlated filter as a semi join: customers having at
-    least one order over the threshold, counted per market segment."""
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 250000)
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("c_mktsegment")
-    )
-
-
-SEGMENTS_BIG_SPENDERS_SQL = """
-SELECT c_mktsegment, COUNT(*) AS n_customers
-FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o
-              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 250000)
-GROUP BY c_mktsegment ORDER BY c_mktsegment
-"""
-
-
-def string_functions_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar string-function coverage, computed identically in both
-    engines (upper/lower/substr/replace/trim/lpad/split_part/concat)."""
-    part = t(spark, sf_dir, "part")
-    name = F.col("p_name")
-    return part.select(
-        "p_partkey",
-        F.upper(name).alias("upper_name"),
-        F.lower(name).alias("lower_name"),
-        F.substring(name, 1, 5).alias("prefix5"),
-        F.regexp_replace(name, "[aeiou]", "_").alias("devoweled"),
-        F.length(name).alias("name_len"),
-        F.lpad(F.col("p_partkey").cast("string"), 8, "0").alias("padded_key"),
-        F.split_part(name, F.lit(" "), F.lit(1)).alias("first_word"),
-        F.concat_ws("#", name, F.col("p_brand")).alias("name_brand"),
-        F.reverse(name).alias("reversed_name"),
-    ).orderBy("p_partkey")
-
-
-STRING_BATTERY_SQL = """
-SELECT p_partkey,
-       UPPER(p_name) AS upper_name,
-       LOWER(p_name) AS lower_name,
-       SUBSTRING(p_name, 1, 5) AS prefix5,
-       regexp_replace(p_name, '[aeiou]', '_', 'g') AS devoweled,
-       LENGTH(p_name) AS name_len,
-       LPAD(CAST(p_partkey AS VARCHAR), 8, '0') AS padded_key,
-       split_part(p_name, ' ', 1) AS first_word,
-       concat_ws('#', p_name, p_brand) AS name_brand,
-       REVERSE(p_name) AS reversed_name
-FROM part ORDER BY p_partkey
-"""
-
-
-def date_functions_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar date/timestamp-function coverage with engine-portable
-    definitions (extract, date_trunc, last_day, explicit day diffs)."""
-    orders = t(spark, sf_dir, "orders")
-    d = F.col("o_orderdate")
-    return orders.select(
-        "o_orderkey",
-        F.year(d).alias("y"),
-        F.month(d).alias("m"),
-        F.dayofmonth(d).alias("d"),
-        F.date_trunc("month", d).alias("month_start"),
-        F.last_day(d).cast("timestamp").alias("month_end"),
-        F.datediff(d.cast("date"), F.lit("1995-01-01").cast("date")).alias("days_since_epoch_start"),
-        F.date_format(d, "yyyy-MM").alias("ym"),
-    ).orderBy("o_orderkey")
-
-
-DATE_BATTERY_SQL = """
-SELECT o_orderkey,
-       EXTRACT(year FROM o_orderdate) AS y,
-       EXTRACT(month FROM o_orderdate) AS m,
-       EXTRACT(day FROM o_orderdate) AS d,
-       date_trunc('month', o_orderdate) AS month_start,
-       CAST(last_day(CAST(o_orderdate AS DATE)) AS TIMESTAMP) AS month_end,
-       date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS days_since_epoch_start,
-       strftime(o_orderdate, '%Y-%m') AS ym
-FROM orders ORDER BY o_orderkey
-"""
-
-
-def docs_summary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's --summary statistics shape (cli.js:200-225)
-    generalized: conditional counts + exact decimal averages per lang."""
-    docs = t(spark, sf_dir, "documents")
-    return (
-        docs.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            F.count_if(F.col("n_chars") > 300).alias("n_long"),
-            F.count_if(F.col("source") == "src1").alias("n_src1"),
-            F.round(
-                F.sum(F.col("n_chars").cast("decimal(18,0)"))
-                / F.count(F.lit(1)),
-                4,
-            ).cast("double").alias("avg_chars"),
-        )
-        .orderBy("lang")
-    )
-
-
-DOCS_SUMMARY_SQL = """
-SELECT lang, COUNT(*) AS total,
-       CAST(count_if(n_chars > 300) AS BIGINT) AS n_long,
-       CAST(count_if(source = 'src1') AS BIGINT) AS n_src1,
-       CAST(ROUND(SUM(CAST(n_chars AS DECIMAL(18,0))) / COUNT(*), 4) AS DOUBLE) AS avg_chars
-FROM documents GROUP BY lang ORDER BY lang
-"""
-
-
-def top_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-2 events by value per user (rank window with total tie-break)."""
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
-    return (
-        ev.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 2)
-        .select("user_id", "rnk", "event_id", "event_type", "value")
-        .orderBy("user_id", "rnk")
-    )
-
-
-TOP_EVENTS_SQL = """
-SELECT user_id, rnk, event_id, event_type, value FROM (
-  SELECT user_id, event_id, event_type, value,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value DESC, event_id ASC) AS rnk
-  FROM events
-) WHERE rnk <= 2 ORDER BY user_id, rnk
-"""
-
-
-ORACLE_QUERIES.update(
-    {
-        # value_percentiles lives on in RETIRED_ORACLE_QUERIES (pytest
-        # parity only): its p50/p90/p99 are subsumed by the merged
-        # percentiles_and_sketches driver entry (50-entry driver cap)
-        "customer_set_ops": (customer_set_ops, CUSTOMER_SET_OPS_SQL),
-        "segments_with_big_spenders": (
-            segments_with_big_spenders, SEGMENTS_BIG_SPENDERS_SQL),
-        "string_functions_battery": (string_functions_battery, STRING_BATTERY_SQL),
-        "date_functions_battery": (date_functions_battery, DATE_BATTERY_SQL),
-        "docs_summary_stats": (docs_summary_stats, DOCS_SUMMARY_SQL),
-        "top_events_per_user": (top_events_per_user, TOP_EVENTS_SQL),
-    }
-)
-
-
-def quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-data quality filtering: composite keep/drop decision from
-    length, token, and character-class signals — the standard pre-train
-    corpus gate, entirely JVM-side."""
-    docs = t(spark, sf_dir, "documents")
-    trimmed = F.trim(F.col("text"))
-    n_tokens = F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"\s+"))
-    )
-    alpha = F.round(
-        F.length(F.regexp_replace("text", "[^a-zA-Z]", "")) / F.length("text"), 6
-    )
-    raw_mean = F.length(trimmed) / F.greatest(n_tokens, F.lit(1))
-    # keep-decision uses the RAW ratio (rounding only for display), so the
-    # oracle comparison cannot diverge on round-boundary values
-    keep = (
-        (n_tokens >= 20)
-        & (alpha >= 0.5)
-        & (raw_mean >= 3.0)
-        & (raw_mean <= 12.0)
-    )
-    return docs.select(
-        "doc_id",
-        n_tokens.alias("n_tokens"),
-        alpha.alias("alpha_ratio"),
-        F.round(raw_mean, 6).alias("mean_token_len"),
-        keep.alias("keep"),
-    ).orderBy("doc_id")
-
-
-QUALITY_FILTER_SQL = r"""
-WITH scored AS (
-  SELECT doc_id,
-         CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-              ELSE LEN(regexp_split_to_array(TRIM(text), '\s+')) END AS n_tokens,
-         ROUND(LENGTH(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-               / CAST(LENGTH(text) AS DOUBLE), 6) AS alpha_ratio,
-         LENGTH(TRIM(text)) AS n_trim
-  FROM documents
-)
-SELECT doc_id, n_tokens, alpha_ratio,
-       ROUND(n_trim / CAST(GREATEST(n_tokens, 1) AS DOUBLE), 6) AS mean_token_len,
-       (n_tokens >= 20 AND alpha_ratio >= 0.5
-        AND n_trim / CAST(GREATEST(n_tokens, 1) AS DOUBLE) >= 3.0
-        AND n_trim / CAST(GREATEST(n_tokens, 1) AS DOUBLE) <= 12.0) AS keep
-FROM scored ORDER BY doc_id
-"""
-
-
-ORACLE_QUERIES["quality_filter"] = (quality_filter, QUALITY_FILTER_SQL)
-
-
-# --- round-1 additions: dedup clustering, exact cosine pairs, tf-idf ------------
-
-
 def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERING: n-gram Jaccard candidate pairs (>= 0.2) fed
     through alternating large-star/small-star connected components; each
@@ -853,240 +203,6 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
 ORDER BY d.doc_id
 """
-
-
-def embedding_cosine_pairs(
-    spark: SparkSession, sf_dir: str, sort: bool = True
-) -> DataFrame:
-    """Exact all-pairs cosine near-dup (threshold 0.35) — the small-scale
-    ground truth for embedding_near_dup_candidates (hyperplane LSH).
-
-    Physical design: BLOCK-PARTITIONED matrix multiply.  Vectors are
-    packed into ~128-row blocks (applyInPandas), block pairs cross-join
-    (B(B+1)/2 rows, each carrying two small matrices), and one
-    mapInPandas computes the block-pair cosine submatrix with a single
-    BLAS matmul.  This is both the fast shape here (a 64-wide row-at-a-
-    time dot product never reaches whole-stage codegen: Spark's HOF
-    lambdas run interpreted, and a 64-term unrolled Add tree trips the
-    codegen size fallback — measured 175 s vs 3 s for this design at
-    sf0.1's 2M pairs) and the shape that scales: at 100 TB the same
-    blocking bounds memory per task, and LSH bucketing
-    (operators/dedup.py) replaces the all-pairs block grid.
-
-    Float note: BLAS summation order differs from a sequential fold in
-    the last ulp; after 6-decimal rounding the values are identical to
-    the DuckDB oracle on every pair at every SF (pinned by the oracle
-    parity test)."""
-    import numpy as np
-    import pandas as pd
-
-    emb = t(spark, sf_dir, "embeddings")
-    block = 128
-
-    # fixed-size id-range blocks: no count() action needed to size the
-    # grid, and block size (hence task memory) stays constant at any
-    # table size — distinct g values simply grow with the data
-    vecs = emb.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("v"),
-        F.floor(F.col("vec_id") / block).alias("g"),
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id")
-        mat = np.array(pdf["v"].tolist(), dtype=np.float64)
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        return pd.DataFrame(
-            {
-                "g": [int(pdf["g"].iloc[0])],
-                "ids": [pdf["vec_id"].to_numpy().tolist()],
-                "mat": [mat.tobytes()],
-                "norms": [norms.tobytes()],
-                "rows": [mat.shape[0]],
-            }
-        )
-
-    packed = vecs.groupBy("g").applyInPandas(
-        pack, "g long, ids array<long>, mat binary, norms binary, rows int"
-    )
-
-    a = packed.select(
-        F.col("g").alias("ga"), F.col("ids").alias("ids_a"),
-        F.col("mat").alias("mat_a"), F.col("norms").alias("norms_a"),
-        F.col("rows").alias("rows_a"),
-    )
-    b = packed.select(
-        F.col("g").alias("gb"), F.col("ids").alias("ids_b"),
-        F.col("mat").alias("mat_b"), F.col("norms").alias("norms_b"),
-        F.col("rows").alias("rows_b"),
-    )
-    grid = a.join(b, F.col("ga") <= F.col("gb"))
-
-    def block_cosine(batches):
-        for pdf in batches:
-            out_a, out_b, out_c = [], [], []
-            for row in pdf.itertuples(index=False):
-                ma = np.frombuffer(row.mat_a, dtype=np.float64).reshape(row.rows_a, -1)
-                mb = np.frombuffer(row.mat_b, dtype=np.float64).reshape(row.rows_b, -1)
-                na = np.frombuffer(row.norms_a, dtype=np.float64)
-                nb = np.frombuffer(row.norms_b, dtype=np.float64)
-                ids_a = np.asarray(row.ids_a)
-                ids_b = np.asarray(row.ids_b)
-                cos = np.round((ma @ mb.T) / np.outer(na, nb), 6)
-                ia, ib = np.nonzero(cos >= 0.35)
-                va, vb, vc = ids_a[ia], ids_b[ib], cos[ia, ib]
-                if row.ga == row.gb:
-                    # same block: strict upper triangle only
-                    keep = va < vb
-                    va, vb, vc = va[keep], vb[keep], vc[keep]
-                # cross block (ga < gb): id ranges are disjoint with every
-                # a-id < every b-id (floor(vec_id/block) blocking), so the
-                # pair is already canonically ordered — nothing to do
-                out_a.append(va)
-                out_b.append(vb)
-                out_c.append(vc)
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.concatenate(out_a),
-                        "id_b": np.concatenate(out_b),
-                        "cosine": np.concatenate(out_c),
-                    }
-                )
-
-    out = grid.mapInPandas(block_cosine, "id_a long, id_b long, cosine double")
-    # sort is presentation-only (this query's oracle compares ordered
-    # output); component consumers skip it — CC re-shuffles immediately
-    return out.orderBy("id_a", "id_b") if sort else out
-
-
-EMBEDDING_COSINE_PAIRS_SQL = """
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       ROUND(
-         list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-         / (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-            * SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))),
-         6) AS cosine
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE ROUND(
-         list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-         / (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-            * SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))),
-         6) >= 0.35
-ORDER BY id_a, id_b
-"""
-
-
-def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
-    """Per-source top-k terms by tf-idf (idf = ln(n_docs / df), smoothed
-    +1): explode -> two partial-agg shuffles -> one window.  Vocabulary
-    aggregation is the classic map-side-combine win; ties broken by term
-    for determinism."""
-    docs = t(spark, sf_dir, "documents")
-    # n_docs as an in-plan broadcast scalar (no separate count() action)
-    n_scalar = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    tokens = docs.select(
-        "doc_id",
-        "source",
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("term"),
-    ).filter(F.col("term") != "")
-    tf = tokens.groupBy("source", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df_ = tokens.groupBy("term").agg(F.count_distinct("doc_id").alias("df"))
-    from pyspark.sql.window import Window
-
-    scored = tf.join(df_, "term").crossJoin(F.broadcast(n_scalar)).select(
-        "source",
-        "term",
-        F.round(
-            F.col("tf") * F.log(F.col("n_docs") / (F.col("df") + F.lit(1.0))), 6
-        ).alias("tfidf"),
-    )
-    w = Window.partitionBy("source").orderBy(F.desc("tfidf"), F.asc("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("source", "rank", "term", "tfidf")
-        .orderBy("source", "rank")
-    )
-
-
-TFIDF_TOP_TERMS_SQL = r"""
-WITH tokens AS (
-  SELECT doc_id, source, term
-  FROM (
-    SELECT doc_id, source,
-           UNNEST(regexp_split_to_array(TRIM(LOWER(text)), '\s+')) AS term
-    FROM documents
-  ) WHERE term <> ''
-), tf AS (
-  SELECT source, term, COUNT(*) AS tf FROM tokens GROUP BY 1, 2
-), dfreq AS (
-  SELECT term, COUNT(DISTINCT doc_id) AS df FROM tokens GROUP BY 1
-), n AS (SELECT COUNT(*) AS n_docs FROM documents),
-scored AS (
-  SELECT source, term,
-         ROUND(tf * LN(n_docs / (df + 1.0)), 6) AS tfidf
-  FROM tf JOIN dfreq USING (term), n
-), ranked AS (
-  SELECT source, term, tfidf,
-         ROW_NUMBER() OVER (PARTITION BY source ORDER BY tfidf DESC, term ASC) AS rank
-  FROM scored
-)
-SELECT source, rank, term, tfidf FROM ranked WHERE rank <= 5
-ORDER BY source, rank
-"""
-
-
-ORACLE_QUERIES["near_dup_components"] = (near_dup_components, NEAR_DUP_COMPONENTS_SQL)
-ORACLE_QUERIES["embedding_cosine_pairs"] = (
-    embedding_cosine_pairs,
-    EMBEDDING_COSINE_PAIRS_SQL,
-)
-ORACLE_QUERIES["tfidf_top_terms"] = (tfidf_top_terms, TFIDF_TOP_TERMS_SQL)
-
-
-def embedding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the exact-cosine similarity graph
-    (>= 0.35): a dense, chain-heavy graph that exercises the alternating
-    large-star/small-star operator on non-trivial topology (multi-hop
-    clusters), unlike the sparse text near-dup graph."""
-    from receipt_scanner_spark.operators.dedup import assign_components
-
-    emb = t(spark, sf_dir, "embeddings").select("vec_id")
-    pairs = embedding_cosine_pairs(spark, sf_dir, sort=False)
-    return assign_components(
-        emb, pairs, id_col="vec_id", pair_a="id_a", pair_b="id_b"
-    ).orderBy("vec_id")
-
-
-EMBEDDING_COMPONENTS_SQL = """
-WITH RECURSIVE pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-  WHERE ROUND(
-         list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-         / (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-            * SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))),
-         6) >= 0.35
-), und AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION SELECT id_b, id_a FROM pairs
-), reach(node, label) AS (
-  SELECT src, src FROM und
-  UNION
-  SELECT u.src, r.label FROM und u JOIN reach r ON r.node = u.dst
-), comp AS (
-  SELECT node, MIN(label) AS component FROM reach GROUP BY node
-)
-SELECT e.vec_id,
-       COALESCE(c.component, e.vec_id) AS component,
-       (COALESCE(c.component, e.vec_id) = e.vec_id) AS keep
-FROM embeddings e LEFT JOIN comp c ON c.node = e.vec_id
-ORDER BY e.vec_id
-"""
-
-
-ORACLE_QUERIES["embedding_components"] = (embedding_components, EMBEDDING_COMPONENTS_SQL)
 
 
 def minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1146,739 +262,6 @@ FROM banded a JOIN banded b
   ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
 ORDER BY id_a, id_b
 """
-
-
-ORACLE_QUERIES["minhash_band_pairs"] = (minhash_band_pairs, MINHASH_BAND_PAIRS_SQL)
-
-
-def ivf_topk_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with n_probe = n_centroids: probing every partition makes the
-    approximate index EXACT by construction, so the whole IVF machinery
-    (k-means centroids, partition assignment, partition-pruned probe,
-    in-partition rerank) is pinned against the brute-force SQL oracle.
-    The production path (ivf_topk, n_probe=4) stays rows-only — its
-    recall-vs-probe tradeoff is the point, not exactness."""
-    from receipt_scanner_spark.operators.ann import (
-        assign_centroids,
-        ivf_topk,
-        train_centroids,
-    )
-
-    emb = t(spark, sf_dir, "embeddings")
-    query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    cents = train_centroids(emb, n_centroids=8, seed=42)
-    indexed = assign_centroids(emb.filter(F.col("vec_id") != 0), cents)
-    return ivf_topk(indexed, cents, query, k=10, n_probe=8)
-
-
-IVF_TOPK_FULLPROBE_SQL = """
-WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-SELECT vec_id,
-       ROUND(
-         list_dot_product(CAST(embedding AS DOUBLE[]), qv)
-         / (SQRT(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))
-            * SQRT(list_dot_product(qv, qv))), 6) AS cosine
-FROM embeddings, q
-WHERE vec_id <> 0
-ORDER BY cosine DESC, vec_id ASC
-LIMIT 10
-"""
-
-
-ORACLE_QUERIES["ivf_topk_fullprobe"] = (ivf_topk_fullprobe, IVF_TOPK_FULLPROBE_SQL)
-
-
-def simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash with md5 word hashes: the bitwise majority-vote signature
-    construction, oracle-checked bit-for-bit (hex output).  Production
-    uses the numpy FNV-1a variant (operators/dedup.simhash_signatures,
-    rows-only) — same algorithm, cheaper hash."""
-    from receipt_scanner_spark.operators.dedup import simhash_md5_signatures
-
-    docs = t(spark, sf_dir, "documents")
-    return simhash_md5_signatures(docs).orderBy("doc_id")
-
-
-SIMHASH_MD5_SQL = r"""
-WITH words AS (
-  SELECT doc_id, UNNEST(regexp_split_to_array(TRIM(LOWER(text)), '\s+')) AS w
-  FROM documents
-), tok AS (
-  SELECT doc_id, ('0x' || substr(md5(w), 1, 16))::UBIGINT AS h
-  FROM words WHERE w <> ''
-), votes AS (
-  SELECT doc_id, b.bit,
-         SUM(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-  FROM tok, (SELECT UNNEST(range(64)) AS bit) b
-  GROUP BY 1, 2
-), sig AS (
-  SELECT doc_id,
-         SUM(CASE WHEN v > 0 THEN (1::UBIGINT << bit) ELSE 0::UBIGINT END) AS s
-  FROM votes GROUP BY doc_id
-)
-SELECT d.doc_id,
-       COALESCE(lpad(lower(hex(g.s)), 16, '0'), repeat('0', 16)) AS simhash_hex
-FROM documents d LEFT JOIN sig g ON g.doc_id = d.doc_id
-ORDER BY d.doc_id
-"""
-
-
-# simhash_md5 moved to RETIRED_ORACLE_QUERIES (pytest parity only):
-# superseded in the driver battery by the production FNV-1a pair
-# simhash_signatures_64 + simhash_band_candidates (50-entry driver cap).
-
-
-def asof_purchase_prior_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: each purchase event gets the user's most recent click
-    at-or-before the purchase (operators/asof.py — union-tag + window
-    carry-forward, ONE keyed shuffle, no range-join explosion).  Oracle:
-    DuckDB's native ASOF LEFT JOIN over the same deduped right side."""
-    from receipt_scanner_spark.operators.asof import asof_join
-
-    ev = t(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "ts", "user_id", "value"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    out = asof_join(
-        purchases,
-        clicks,
-        by="user_id",
-        right_cols=["ts", "event_id", "value"],
-        dedupe_order_col="event_id",
-        prefix="click_",
-    )
-    return out.select(
-        "event_id", "user_id", "ts", "value",
-        "click_event_id", "click_ts", "click_value",
-    ).orderBy("event_id")
-
-
-ASOF_PURCHASE_PRIOR_CLICK_SQL = """
-WITH clicks AS (
-  SELECT user_id, ts, event_id, value FROM (
-    SELECT user_id, ts, event_id, value,
-           ROW_NUMBER() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
-    FROM events WHERE event_type = 'click'
-  ) WHERE rn = 1
-), purchases AS (
-  SELECT event_id, ts, user_id, value FROM events WHERE event_type = 'purchase'
-)
-SELECT p.event_id, p.user_id, p.ts, p.value,
-       c.event_id AS click_event_id, c.ts AS click_ts, c.value AS click_value
-FROM purchases p ASOF LEFT JOIN clicks c
-  ON p.user_id = c.user_id AND p.ts >= c.ts
-ORDER BY p.event_id
-"""
-
-
-ORACLE_QUERIES["asof_purchase_prior_click"] = (
-    asof_purchase_prior_click,
-    ASOF_PURCHASE_PRIOR_CLICK_SQL,
-)
-
-
-def event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT: per-user event-type counts as columns.  Spark's pivot
-    with an explicit value list stays a single groupBy (one shuffle,
-    map-side partial agg); never pivot on unlisted values at scale —
-    that adds a distinct-values job over the full table."""
-    ev = t(spark, sf_dir, "events")
-    types = ["click", "error", "purchase", "signup", "view"]
-    return (
-        ev.groupBy("user_id")
-        .pivot("event_type", types)
-        .agg(F.count(F.lit(1)))
-        .na.fill(0, types)
-        .orderBy("user_id")
-    )
-
-
-EVENT_TYPE_PIVOT_SQL = """
-SELECT user_id,
-       COUNT(*) FILTER (event_type = 'click')    AS click,
-       COUNT(*) FILTER (event_type = 'error')    AS error,
-       COUNT(*) FILTER (event_type = 'purchase') AS purchase,
-       COUNT(*) FILTER (event_type = 'signup')   AS signup,
-       COUNT(*) FILTER (event_type = 'view')     AS view
-FROM events GROUP BY user_id ORDER BY user_id
-"""
-
-
-def order_priority_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over (orderpriority, orderstatus): all 4 grouping-set
-    combinations in ONE pass — partial aggregation replicates rows per
-    grouping set map-side, so the shuffle carries |groups| * 4, still
-    tiny.  NULL marker columns made explicit for engine-stable output."""
-    o = t(spark, sf_dir, "orders")
-    return (
-        o.cube("o_orderpriority", "o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
-            .cast("double")
-            .alias("total_price"),
-        )
-        .select(
-            F.coalesce("o_orderpriority", F.lit("<all>")).alias("priority"),
-            F.coalesce("o_orderstatus", F.lit("<all>")).alias("status"),
-            "n_orders",
-            "total_price",
-        )
-        .orderBy("priority", "status")
-    )
-
-
-ORDER_PRIORITY_CUBE_SQL = """
-SELECT COALESCE(o_orderpriority, '<all>') AS priority,
-       COALESCE(o_orderstatus, '<all>') AS status,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE) AS total_price
-FROM orders
-GROUP BY CUBE (o_orderpriority, o_orderstatus)
-ORDER BY priority, status
-"""
-
-
-ORACLE_QUERIES["event_type_pivot"] = (event_type_pivot, EVENT_TYPE_PIVOT_SQL)
-ORACLE_QUERIES["order_priority_cube"] = (order_priority_cube, ORDER_PRIORITY_CUBE_SQL)
-
-
-def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repetition / diversity quality signals (the Gopher-rule family):
-    type-token ratio and the count of the most-repeated word 3-gram per
-    document.  Both fold map-side before their groupBy shuffles; at
-    100 TB this is the standard pre-train repetition gate."""
-    docs = t(spark, sf_dir, "documents")
-    words = F.split(F.trim(F.lower("text")), r"\s+")
-    base = docs.select(
-        "doc_id",
-        F.size(words).alias("n_words"),
-        F.size(F.array_distinct(words)).alias("n_distinct"),
-        words.alias("_w"),
-    )
-    # non-distinct 3-grams: repetition is the point, so no dedup
-    # (Arrow-batched — see word_shingles_udf on the interpreted-HOF trap)
-    from ..operators.dedup import word_shingles_udf
-
-    g = docs.select(
-        "doc_id",
-        F.explode(word_shingles_udf(3, distinct=False)(F.col("text"))).alias("g"),
-    )
-    top = (
-        g.groupBy("doc_id", "g")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(F.max("c").alias("top_3gram_count"))
-    )
-    return (
-        base.select(
-            "doc_id",
-            "n_words",
-            "n_distinct",
-            F.round(F.col("n_distinct") / F.col("n_words"), 6).alias("ttr"),
-        )
-        .join(top, "doc_id", "left")
-        .select(
-            "doc_id", "n_words", "n_distinct", "ttr",
-            F.coalesce("top_3gram_count", F.lit(0)).alias("top_3gram_count"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-REPETITION_STATS_SQL = r"""
-WITH words AS (
-  SELECT doc_id, regexp_split_to_array(TRIM(LOWER(text)), '\s+') AS w
-  FROM documents
-), base AS (
-  SELECT doc_id, LEN(w) AS n_words,
-         LEN(list_distinct(w)) AS n_distinct, w
-  FROM words
-), grams AS (
-  SELECT doc_id, w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] AS g
-  FROM base, UNNEST(range(GREATEST(LEN(w) - 2, 0))) AS t(i)
-), top AS (
-  SELECT doc_id, MAX(c) AS top_3gram_count FROM (
-    SELECT doc_id, g, COUNT(*) AS c FROM grams GROUP BY 1, 2
-  ) GROUP BY doc_id
-)
-SELECT b.doc_id, b.n_words, b.n_distinct,
-       ROUND(b.n_distinct / CAST(b.n_words AS DOUBLE), 6) AS ttr,
-       COALESCE(t.top_3gram_count, 0) AS top_3gram_count
-FROM base b LEFT JOIN top t ON t.doc_id = b.doc_id
-ORDER BY b.doc_id
-"""
-
-
-ORACLE_QUERIES["repetition_stats"] = (repetition_stats, REPETITION_STATS_SQL)
-
-
-def doc_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Karp-Rabin document fingerprint (Horner fold mod 2^61-1, base
-    257, over whitespace-normalized lowercased UTF-8).  Map-only pandas
-    UDF on the Spark side; the DuckDB oracle reproduces the exact
-    integer fold with list_reduce over HUGEINT — valid because the test
-    corpus is pure ASCII (codepoint == UTF-8 byte; verified for every
-    SF) and the hash value < 2^61 makes the 63-bit mask a no-op."""
-    from receipt_scanner_spark.functions.text import rolling_fingerprint
-
-    docs = t(spark, sf_dir, "documents")
-    return rolling_fingerprint(docs).orderBy("doc_id")
-
-
-DOC_ROLLING_FINGERPRINT_SQL = r"""
-SELECT doc_id,
-       CASE WHEN length(norm) = 0 THEN 0
-            ELSE (list_reduce(
-                    list_transform(range(1, length(norm) + 1),
-                                   i -> ord(substr(norm, i, 1))::HUGEINT),
-                    (a, b) -> (a * 257 + b) % 2305843009213693951::HUGEINT
-                  ))::BIGINT
-       END AS fingerprint
-FROM (
-  SELECT doc_id, TRIM(regexp_replace(LOWER(text), '\s+', ' ', 'g')) AS norm
-  FROM documents
-)
-ORDER BY doc_id
-"""
-
-
-ORACLE_QUERIES["doc_rolling_fingerprint"] = (
-    doc_rolling_fingerprint,
-    DOC_ROLLING_FINGERPRINT_SQL,
-)
-
-
-def simhash_signatures_64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION SimHash (numpy-vectorized FNV-1a word hashes,
-    bitwise majority vote) — oracle-checked bit-for-bit: DuckDB
-    reproduces the FNV-1a fold with a HUGEINT list_reduce (exact mod-
-    2^64 arithmetic; corpus is pure ASCII so ord == UTF-8 byte) and the
-    signed-int64 reinterpretation of the unsigned signature."""
-    from receipt_scanner_spark.operators.dedup import simhash_signatures
-
-    docs = t(spark, sf_dir, "documents")
-    return simhash_signatures(docs).orderBy("doc_id")
-
-
-SIMHASH_SIGNATURES_64_SQL = r"""
-WITH words AS (
-  SELECT doc_id, UNNEST(regexp_split_to_array(TRIM(LOWER(text)), '\s+')) AS w
-  FROM documents
-), tok AS (
-  SELECT doc_id,
-         (list_reduce(
-            list_prepend(14695981039346656037::HUGEINT,
-              list_transform(range(1, length(w) + 1),
-                             i -> ord(substr(w, i, 1))::HUGEINT)),
-            (a, b) -> (xor(a, b) * 1099511628211::HUGEINT)
-                      % 18446744073709551616::HUGEINT))::UBIGINT AS h
-  FROM words WHERE w <> ''
-), votes AS (
-  SELECT doc_id, b.bit,
-         SUM(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-  FROM tok, (SELECT UNNEST(range(64)) AS bit) b
-  GROUP BY 1, 2
-), sig AS (
-  SELECT doc_id,
-         SUM(CASE WHEN v > 0 THEN (1::HUGEINT << bit) ELSE 0::HUGEINT END) AS s
-  FROM votes GROUP BY doc_id
-)
-SELECT d.doc_id,
-       COALESCE(CASE WHEN g.s >= 9223372036854775808::HUGEINT
-                     THEN (g.s - 18446744073709551616::HUGEINT)::BIGINT
-                     ELSE g.s::BIGINT END, 0) AS simhash
-FROM documents d LEFT JOIN sig g ON g.doc_id = d.doc_id
-ORDER BY d.doc_id
-"""
-
-
-ORACLE_QUERIES["simhash_signatures_64"] = (
-    simhash_signatures_64,
-    SIMHASH_SIGNATURES_64_SQL,
-)
-
-
-def simhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production SimHash near-dup candidates: pairs agreeing on any of
-    the 4 16-bit bands of the FNV-1a signature, with exact Hamming
-    distance attached.  Fully oracle-checked — the signature fold,
-    band extraction (arithmetic shift + mask, identical on signed
-    64-bit in both engines) and bit_count(xor) all reproduce."""
-    from receipt_scanner_spark.operators.dedup import simhash_candidates
-
-    docs = t(spark, sf_dir, "documents")
-    return simhash_candidates(docs).orderBy("id_a", "id_b")
-
-
-SIMHASH_BAND_CANDIDATES_SQL = r"""
-WITH words AS (
-  SELECT doc_id, UNNEST(regexp_split_to_array(TRIM(LOWER(text)), '\s+')) AS w
-  FROM documents
-), tok AS (
-  SELECT doc_id,
-         (list_reduce(
-            list_prepend(14695981039346656037::HUGEINT,
-              list_transform(range(1, length(w) + 1),
-                             i -> ord(substr(w, i, 1))::HUGEINT)),
-            (a, b) -> (xor(a, b) * 1099511628211::HUGEINT)
-                      % 18446744073709551616::HUGEINT))::UBIGINT AS h
-  FROM words WHERE w <> ''
-), votes AS (
-  SELECT doc_id, b.bit,
-         SUM(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-  FROM tok, (SELECT UNNEST(range(64)) AS bit) b
-  GROUP BY 1, 2
-), rawsig AS (
-  SELECT doc_id,
-         SUM(CASE WHEN v > 0 THEN (1::HUGEINT << bit) ELSE 0::HUGEINT END) AS s
-  FROM votes GROUP BY doc_id
-), sig AS (
-  SELECT d.doc_id,
-         COALESCE(CASE WHEN g.s >= 9223372036854775808::HUGEINT
-                       THEN (g.s - 18446744073709551616::HUGEINT)::BIGINT
-                       ELSE g.s::BIGINT END, 0) AS simhash
-  FROM documents d LEFT JOIN rawsig g ON g.doc_id = d.doc_id
-), banded AS (
-  SELECT doc_id, simhash, b.band, (simhash >> (b.band * 16)) & 65535 AS bucket
-  FROM sig, (SELECT UNNEST(range(4)) AS band) b
-)
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       bit_count(xor(a.simhash, b.simhash)) AS hamming
-FROM banded a JOIN banded b
-  ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-ORDER BY id_a, id_b
-"""
-
-
-ORACLE_QUERIES["simhash_band_candidates"] = (
-    simhash_band_candidates,
-    SIMHASH_BAND_CANDIDATES_SQL,
-)
-
-
-def range_join_purchases_in_click_sessions(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Interval/range join: purchases matched into the user's click
-    ACTIVITY WINDOWS (24-hour-gap sessionization of click events; a
-    purchase joins every window containing its timestamp).
-
-    Physical shape: the equi-key (user_id) drives ONE hash shuffle and
-    the range predicate rides along as a join filter — at 100 TB the
-    refinement is time-bucketing both sides so the range match is
-    co-partitioned too.  DuckDB executes the same query with its IEJoin
-    and must agree row-for-row."""
-    ev = t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    is_new = F.when(
-        F.lag("ts").over(w).isNull()
-        | ((F.col("ts") - F.lag("ts").over(w)) > F.expr("INTERVAL 24 HOUR")),
-        1,
-    ).otherwise(0)
-    sessions = (
-        clicks.withColumn("is_new", is_new)
-        .withColumn(
-            "session_id",
-            F.sum("is_new").over(
-                Window.partitionBy("user_id")
-                .orderBy("ts", "event_id")
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-        .groupBy("user_id", "session_id")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"),
-        F.col("event_id").alias("p_event"), F.col("value").alias("p_value"),
-    )
-    joined = sessions.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("session_start"))
-        & (F.col("p_ts") <= F.col("session_end")),
-    )
-    return (
-        joined.groupBy("user_id", "session_id", "session_start", "session_end")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            F.round(F.sum(F.col("p_value").cast("decimal(12,2)")), 2)
-            .cast("double")
-            .alias("purchase_value"),
-        )
-        .orderBy("user_id", "session_id")
-    )
-
-
-RANGE_JOIN_SQL = """
-WITH clicks AS (
-  SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'
-), marked AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN LAG(ts) OVER w IS NULL
-                   OR ts - LAG(ts) OVER w > INTERVAL 24 HOUR
-              THEN 1 ELSE 0 END AS is_new
-  FROM clicks
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), numbered AS (
-  SELECT user_id, ts,
-         CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-  FROM marked
-), sessions AS (
-  SELECT user_id, session_id, MIN(ts) AS session_start, MAX(ts) AS session_end
-  FROM numbered GROUP BY user_id, session_id
-)
-SELECT s.user_id, s.session_id, s.session_start, s.session_end,
-       COUNT(*) AS n_purchases,
-       CAST(ROUND(SUM(CAST(p.value AS DECIMAL(12,2))), 2) AS DOUBLE) AS purchase_value
-FROM sessions s JOIN events p
-  ON p.event_type = 'purchase'
- AND p.user_id = s.user_id
- AND p.ts >= s.session_start
- AND p.ts <= s.session_end
-GROUP BY s.user_id, s.session_id, s.session_start, s.session_end
-ORDER BY s.user_id, s.session_id
-"""
-
-
-ORACLE_QUERIES["range_join_purchases_in_click_sessions"] = (
-    range_join_purchases_in_click_sessions,
-    RANGE_JOIN_SQL,
-)
-
-
-def json_props_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured column functions: extract a typed field from the
-    JSON ``props`` string per event and aggregate per event type.
-    get_json_object stays JVM-side (Jackson) — no Python on the path;
-    at 100 TB prefer from_json with an explicit schema once the shape
-    stabilizes (single parse, pruned struct)."""
-    ev = t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("int")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count("k").alias("n_with_k"),
-            F.sum("k").alias("sum_k"),
-            F.min("k").alias("min_k"),
-            F.max("k").alias("max_k"),
-        )
-        .orderBy("event_type")
-    )
-
-
-JSON_PROPS_BATTERY_SQL = """
-SELECT event_type,
-       COUNT(*) AS n,
-       COUNT(json_extract(props, '$.k')::INT) AS n_with_k,
-       CAST(SUM(json_extract(props, '$.k')::INT) AS BIGINT) AS sum_k,
-       MIN(json_extract(props, '$.k')::INT) AS min_k,
-       MAX(json_extract(props, '$.k')::INT) AS max_k
-FROM events GROUP BY event_type ORDER BY event_type
-"""
-
-
-ORACLE_QUERIES["json_props_battery"] = (json_props_battery, JSON_PROPS_BATTERY_SQL)
-
-
-# --- round-2 breadth: URL battery, NFC normalization, approx quantiles --------
-
-def url_functions_per_host(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host URL-function battery: URLs are synthesized
-    deterministically from the documents table (no external data), then
-    decomposed with Spark's JVM-side parse_url (PROTOCOL/HOST/PATH/
-    QUERY/param) and aggregated per host.  At 100 TB this is the
-    crawl-partitioning workhorse: host extraction feeds the salted
-    repartition key, stays in whole-stage codegen, and the per-host agg
-    combines map-side.  Oracle: DuckDB regexp equivalents on the same
-    synthesized URLs."""
-    d = t(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://"),
-        F.col("source"),
-        F.lit(".example.com"),
-        F.when(F.col("doc_id") % 7 == 0, F.lit(":8443")).otherwise(F.lit("")),
-        F.lit("/"),
-        F.col("lang"),
-        F.lit("/doc-"),
-        F.col("doc_id").cast("string"),
-        F.lit("?ref=r"),
-        (F.col("doc_id") % 5).cast("string"),
-        F.lit("&page="),
-        (F.col("doc_id") % 3).cast("string"),
-    )
-    u = d.select(
-        F.col("doc_id"),
-        F.col("n_chars"),
-        url.alias("url"),
-        F.parse_url(url, F.lit("PROTOCOL")).alias("protocol"),
-        F.parse_url(url, F.lit("HOST")).alias("host"),
-        F.parse_url(url, F.lit("PATH")).alias("path"),
-        F.parse_url(url, F.lit("QUERY")).alias("query"),
-        F.parse_url(url, F.lit("QUERY"), F.lit("ref")).alias("ref"),
-    )
-    return (
-        u.groupBy("protocol", "host")
-        .agg(
-            F.count(F.lit(1)).alias("n_urls"),
-            F.count_distinct("path").alias("n_paths"),
-            F.count_distinct("ref").alias("n_refs"),
-            F.sum(F.length("query")).alias("query_chars"),
-            F.sum(F.length("path")).alias("path_chars"),
-            F.min("url").alias("first_url"),
-        )
-        .orderBy("host", "protocol")
-    )
-
-
-URL_FUNCTIONS_PER_HOST_SQL = r"""
-WITH u AS (
-  SELECT doc_id, n_chars,
-         'https://' || source || '.example.com'
-           || CASE WHEN doc_id % 7 = 0 THEN ':8443' ELSE '' END
-           || '/' || lang || '/doc-' || doc_id
-           || '?ref=r' || (doc_id % 5) || '&page=' || (doc_id % 3) AS url,
-         'https' AS protocol,
-         source || '.example.com' AS host,
-         '/' || lang || '/doc-' || doc_id AS path,
-         'ref=r' || (doc_id % 5) || '&page=' || (doc_id % 3) AS query,
-         'r' || (doc_id % 5) AS ref
-  FROM documents
-)
-SELECT protocol, host,
-       COUNT(*) AS n_urls,
-       COUNT(DISTINCT path) AS n_paths,
-       COUNT(DISTINCT ref) AS n_refs,
-       CAST(SUM(LEN(query)) AS BIGINT) AS query_chars,
-       CAST(SUM(LEN(path)) AS BIGINT) AS path_chars,
-       MIN(url) AS first_url
-FROM u GROUP BY protocol, host ORDER BY host, protocol
-"""
-
-
-ORACLE_QUERIES["url_functions_per_host"] = (
-    url_functions_per_host,
-    URL_FUNCTIONS_PER_HOST_SQL,
-)
-
-
-def nfc_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode NFC text normalization over a deterministically
-    'denormalized' column: docs get a decomposed suffix (e + COMBINING
-    ACUTE, A + COMBINING RING) appended, an Arrow-batched pandas UDF
-    applies unicodedata.normalize('NFC', ·) (Spark has no built-in
-    normalizer; the UDF is str.translate-free C-level unicodedata per
-    batch), and the query reports per-lang counts and codepoint deltas.
-    Web-text pipelines normalize before hashing/dedup — byte-level
-    equality of semantically equal strings is exactly what exact-dedup
-    keys need.  Oracle: DuckDB's native nfc_normalize."""
-    import unicodedata
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _nfc(texts):
-        return pd.Series(
-            [None if s is None else unicodedata.normalize("NFC", s) for s in texts]
-        )
-
-    nfc = pandas_udf(_nfc, "string")
-
-    d = t(spark, sf_dir, "documents")
-    # decomposed suffix: 'e' + U+0301, 'A' + U+030A (NFC: é, Å)
-    raw = F.concat(
-        F.substring("text", 1, 24), F.lit(" caf"), F.lit("é"),
-        F.lit(" "), F.lit("ÅNGSTROM"),
-    )
-    u = d.select(
-        "doc_id", "lang", raw.alias("raw"), nfc(raw).alias("norm")
-    )
-    return (
-        u.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.length("raw")).alias("raw_chars"),
-            F.sum(F.length("norm")).alias("norm_chars"),
-            F.sum((F.length("raw") - F.length("norm"))).alias("chars_removed"),
-            F.count(F.when(F.col("raw") != F.col("norm"), 1)).alias("n_changed"),
-        )
-        .orderBy("lang")
-    )
-
-
-NFC_NORMALIZATION_SQL = """
-WITH u AS (
-  SELECT doc_id, lang,
-         SUBSTRING(text, 1, 24) || ' caf' || 'e' || CHR(769)
-           || ' ' || 'A' || CHR(778) || 'NGSTROM' AS raw
-  FROM documents
-)
-SELECT lang,
-       COUNT(*) AS n,
-       CAST(SUM(LEN(raw)) AS BIGINT) AS raw_chars,
-       CAST(SUM(LEN(nfc_normalize(raw))) AS BIGINT) AS norm_chars,
-       CAST(SUM(LEN(raw) - LEN(nfc_normalize(raw))) AS BIGINT) AS chars_removed,
-       COUNT(CASE WHEN raw <> nfc_normalize(raw) THEN 1 END) AS n_changed
-FROM u GROUP BY lang ORDER BY lang
-"""
-
-
-ORACLE_QUERIES["nfc_normalization"] = (nfc_normalization, NFC_NORMALIZATION_SQL)
-
-
-def approx_percentiles_with_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate quantiles (the 100 TB path: approx_percentile's
-    KLL/GK-style sketch merges map-side, one tiny shuffle) checked
-    in-plan against the exact interpolated percentile.  The oracle
-    can't reproduce Spark's sketch, so the contract hashes (a) the
-    EXACT percentiles — independently computed by DuckDB — and (b) an
-    accuracy flag: |approx - exact| within 3% of exact.  The oracle
-    emits TRUE; the entry only hash-matches if Spark's sketch is
-    actually inside the tolerance.  3% is 3× headroom over the typical
-    observed error — the sketch's guarantee is a RANK bound
-    (≤ N/accuracy positions), so the value-space tolerance needs slack
-    for sparse regions or the flag flakes on a different SF with no
-    code bug (r3 ADVICE)."""
-    ev = t(spark, sf_dir, "events")
-    exact50 = F.expr("percentile(value, 0.5)")
-    exact95 = F.expr("percentile(value, 0.95)")
-    appr = F.expr("approx_percentile(value, array(0.5, 0.95), 10000)")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.round(exact50, 6).alias("p50_exact"),
-            F.round(exact95, 6).alias("p95_exact"),
-            (
-                (F.abs(appr[0] - exact50) <= F.abs(exact50) * 0.03 + 1e-6)
-                & (F.abs(appr[1] - exact95) <= F.abs(exact95) * 0.03 + 1e-6)
-            ).alias("approx_within_3pct"),
-        )
-        .orderBy("event_type")
-    )
-
-
-APPROX_PERCENTILES_SQL = """
-SELECT event_type,
-       ROUND(quantile_cont(value, 0.5), 6) AS p50_exact,
-       ROUND(quantile_cont(value, 0.95), 6) AS p95_exact,
-       TRUE AS approx_within_3pct
-FROM events GROUP BY event_type ORDER BY event_type
-"""
-
-
-# approx_percentiles_with_exact moved to RETIRED_ORACLE_QUERIES (pytest
-# parity only): subsumed by the merged percentiles_and_sketches entry.
 
 
 def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2038,205 +421,544 @@ ORDER BY e.id_a, e.id_b
 """
 
 
-ORACLE_QUERIES["minhash_jaccard_estimate"] = (
-    minhash_jaccard_estimate,
-    MINHASH_JACCARD_ESTIMATE_SQL,
+def simhash_signatures_64(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The PRODUCTION SimHash (numpy-vectorized FNV-1a word hashes,
+    bitwise majority vote) — oracle-checked bit-for-bit: DuckDB
+    reproduces the FNV-1a fold with a HUGEINT list_reduce (exact mod-
+    2^64 arithmetic; corpus is pure ASCII so ord == UTF-8 byte) and the
+    signed-int64 reinterpretation of the unsigned signature."""
+    from receipt_scanner_spark.operators.dedup import simhash_signatures
+
+    docs = t(spark, sf_dir, "documents")
+    return simhash_signatures(docs).orderBy("doc_id")
+
+
+SIMHASH_SIGNATURES_64_SQL = r"""
+WITH words AS (
+  SELECT doc_id, UNNEST(regexp_split_to_array(TRIM(LOWER(text)), '\s+')) AS w
+  FROM documents
+), tok AS (
+  SELECT doc_id,
+         (list_reduce(
+            list_prepend(14695981039346656037::HUGEINT,
+              list_transform(range(1, length(w) + 1),
+                             i -> ord(substr(w, i, 1))::HUGEINT)),
+            (a, b) -> (xor(a, b) * 1099511628211::HUGEINT)
+                      % 18446744073709551616::HUGEINT))::UBIGINT AS h
+  FROM words WHERE w <> ''
+), votes AS (
+  SELECT doc_id, b.bit,
+         SUM(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
+  FROM tok, (SELECT UNNEST(range(64)) AS bit) b
+  GROUP BY 1, 2
+), sig AS (
+  SELECT doc_id,
+         SUM(CASE WHEN v > 0 THEN (1::HUGEINT << bit) ELSE 0::HUGEINT END) AS s
+  FROM votes GROUP BY doc_id
 )
+SELECT d.doc_id,
+       COALESCE(CASE WHEN g.s >= 9223372036854775808::HUGEINT
+                     THEN (g.s - 18446744073709551616::HUGEINT)::BIGINT
+                     ELSE g.s::BIGINT END, 0) AS simhash
+FROM documents d LEFT JOIN sig g ON g.doc_id = d.doc_id
+ORDER BY d.doc_id
+"""
 
 
-def window_functions_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Analytic window-function battery per (user, ts) stream: lag/lead
-    navigation, ntile/percent_rank ranking, and a bounded rolling sum —
-    the event-stream feature-engineering staples.  All windows share ONE
-    hash exchange on user_id (same-key windows fuse); the rolling sum
-    goes through DECIMAL so frame-order float summation can't diverge
-    between engines."""
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    roll = w.rowsBetween(-2, 0)
+def simhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Production SimHash near-dup candidates: pairs agreeing on any of
+    the 4 16-bit bands of the FNV-1a signature, with exact Hamming
+    distance attached.  Fully oracle-checked — the signature fold,
+    band extraction (arithmetic shift + mask, identical on signed
+    64-bit in both engines) and bit_count(xor) all reproduce."""
+    from receipt_scanner_spark.operators.dedup import simhash_candidates
+
+    docs = t(spark, sf_dir, "documents")
+    return simhash_candidates(docs).orderBy("id_a", "id_b")
+
+
+SIMHASH_BAND_CANDIDATES_SQL = r"""
+WITH words AS (
+  SELECT doc_id, UNNEST(regexp_split_to_array(TRIM(LOWER(text)), '\s+')) AS w
+  FROM documents
+), tok AS (
+  SELECT doc_id,
+         (list_reduce(
+            list_prepend(14695981039346656037::HUGEINT,
+              list_transform(range(1, length(w) + 1),
+                             i -> ord(substr(w, i, 1))::HUGEINT)),
+            (a, b) -> (xor(a, b) * 1099511628211::HUGEINT)
+                      % 18446744073709551616::HUGEINT))::UBIGINT AS h
+  FROM words WHERE w <> ''
+), votes AS (
+  SELECT doc_id, b.bit,
+         SUM(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
+  FROM tok, (SELECT UNNEST(range(64)) AS bit) b
+  GROUP BY 1, 2
+), rawsig AS (
+  SELECT doc_id,
+         SUM(CASE WHEN v > 0 THEN (1::HUGEINT << bit) ELSE 0::HUGEINT END) AS s
+  FROM votes GROUP BY doc_id
+), sig AS (
+  SELECT d.doc_id,
+         COALESCE(CASE WHEN g.s >= 9223372036854775808::HUGEINT
+                       THEN (g.s - 18446744073709551616::HUGEINT)::BIGINT
+                       ELSE g.s::BIGINT END, 0) AS simhash
+  FROM documents d LEFT JOIN rawsig g ON g.doc_id = d.doc_id
+), banded AS (
+  SELECT doc_id, simhash, b.band, (simhash >> (b.band * 16)) & 65535 AS bucket
+  FROM sig, (SELECT UNNEST(range(4)) AS band) b
+)
+SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
+       bit_count(xor(a.simhash, b.simhash)) AS hamming
+FROM banded a JOIN banded b
+  ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+ORDER BY id_a, id_b
+"""
+
+
+# --- similarity search over embeddings ----------------------------------------
+
+def embedding_topk(spark: SparkSession, sf_dir: str, query_vec_id: int = 0, k: int = 10) -> DataFrame:
+    """Brute-force cosine top-k against one query vector — the exact
+    baseline for ANN.  Arrow-batched numpy matvec against the broadcast
+    query (operators/ann.cosine_to_query_udf) — the zip_with/aggregate
+    fold it replaces runs interpreted per row per element (100× slower,
+    same measurement as embedding_cosine_pairs).  At 100 TB the scale
+    path is LSH bucketing (operators/ann.py); this exact scan stays the
+    recall oracle."""
+    from ..operators.ann import cosine_to_query_udf
+
+    emb = t(spark, sf_dir, "embeddings")
+    qrow = emb.filter(F.col("vec_id") == query_vec_id).select("embedding").first()
+    qvec = [float(x) for x in qrow["embedding"]]
+    cosine = cosine_to_query_udf(qvec)(F.col("embedding"))
     return (
-        ev.select(
-            "event_id",
-            "user_id",
-            F.lag("value", 1).over(w).alias("prev_value"),
-            F.lead("value", 1).over(w).alias("next_value"),
-            F.ntile(4).over(w).alias("quartile"),
-            F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(12,2)")).over(roll), 2
-            ).cast("double").alias("rolling3_sum"),
-            F.row_number().over(w).alias("rn"),
-        )
-        .orderBy("event_id")
+        emb.filter(F.col("vec_id") != query_vec_id)
+        .select("vec_id", "label", F.round(cosine, 6).alias("cosine"))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
+        .limit(k)
     )
 
 
-WINDOW_FUNCTIONS_BATTERY_SQL = """
-SELECT event_id, user_id,
-       LAG(value, 1) OVER w AS prev_value,
-       LEAD(value, 1) OVER w AS next_value,
-       NTILE(4) OVER w AS quartile,
-       ROUND(PERCENT_RANK() OVER w, 6) AS pct_rank,
-       CAST(ROUND(SUM(CAST(value AS DECIMAL(12,2)))
-                  OVER (PARTITION BY user_id ORDER BY ts, event_id
-                        ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 2) AS DOUBLE)
-         AS rolling3_sum,
-       ROW_NUMBER() OVER w AS rn
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-ORDER BY event_id
+EMBEDDING_TOPK_SQL = """
+WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
+SELECT vec_id, label,
+       ROUND(
+         list_dot_product(CAST(embedding AS DOUBLE[]), qv)
+         / (SQRT(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))
+            * SQRT(list_dot_product(qv, qv))), 6) AS cosine
+FROM embeddings, q
+WHERE vec_id <> 0
+ORDER BY cosine DESC, vec_id ASC
+LIMIT 10
 """
 
 
-ORACLE_QUERIES["window_functions_battery"] = (
-    window_functions_battery,
-    WINDOW_FUNCTIONS_BATTERY_SQL,
+def ivf_topk_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF with n_probe = n_centroids: probing every partition makes the
+    approximate index EXACT by construction, so the whole IVF machinery
+    (k-means centroids, partition assignment, partition-pruned probe,
+    in-partition rerank) is pinned against the brute-force SQL oracle.
+    The production path (ivf_topk, n_probe=4) stays rows-only — its
+    recall-vs-probe tradeoff is the point, not exactness."""
+    from receipt_scanner_spark.operators.ann import (
+        assign_centroids,
+        ivf_topk,
+        train_centroids,
+    )
+
+    emb = t(spark, sf_dir, "embeddings")
+    query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+    cents = train_centroids(emb, n_centroids=8, seed=42)
+    indexed = assign_centroids(emb.filter(F.col("vec_id") != 0), cents)
+    return ivf_topk(indexed, cents, query, k=10, n_probe=8)
+
+
+IVF_TOPK_FULLPROBE_SQL = """
+WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
+SELECT vec_id,
+       ROUND(
+         list_dot_product(CAST(embedding AS DOUBLE[]), qv)
+         / (SQRT(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))
+            * SQRT(list_dot_product(qv, qv))), 6) AS cosine
+FROM embeddings, q
+WHERE vec_id <> 0
+ORDER BY cosine DESC, vec_id ASC
+LIMIT 10
+"""
+
+
+def embedding_cosine_pairs(
+    spark: SparkSession, sf_dir: str, sort: bool = True
+) -> DataFrame:
+    """Exact all-pairs cosine near-dup (threshold 0.35) — the small-scale
+    ground truth for embedding_near_dup_candidates (hyperplane LSH).
+
+    Physical design: BLOCK-PARTITIONED matrix multiply.  Vectors are
+    packed into ~128-row blocks (applyInPandas), block pairs cross-join
+    (B(B+1)/2 rows, each carrying two small matrices), and one
+    mapInPandas computes the block-pair cosine submatrix with a single
+    BLAS matmul.  This is both the fast shape here (a 64-wide row-at-a-
+    time dot product never reaches whole-stage codegen: Spark's HOF
+    lambdas run interpreted, and a 64-term unrolled Add tree trips the
+    codegen size fallback — measured 175 s vs 3 s for this design at
+    sf0.1's 2M pairs) and the shape that scales: at 100 TB the same
+    blocking bounds memory per task, and LSH bucketing
+    (operators/dedup.py) replaces the all-pairs block grid.
+
+    Float note: BLAS summation order differs from a sequential fold in
+    the last ulp; after 6-decimal rounding the values are identical to
+    the DuckDB oracle on every pair at every SF (pinned by the oracle
+    parity test)."""
+    import numpy as np
+    import pandas as pd
+
+    emb = t(spark, sf_dir, "embeddings")
+    block = 128
+
+    # fixed-size id-range blocks: no count() action needed to size the
+    # grid, and block size (hence task memory) stays constant at any
+    # table size — distinct g values simply grow with the data
+    vecs = emb.select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("v"),
+        F.floor(F.col("vec_id") / block).alias("g"),
+    )
+
+    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id")
+        mat = np.array(pdf["v"].tolist(), dtype=np.float64)
+        norms = np.sqrt((mat * mat).sum(axis=1))
+        return pd.DataFrame(
+            {
+                "g": [int(pdf["g"].iloc[0])],
+                "ids": [pdf["vec_id"].to_numpy().tolist()],
+                "mat": [mat.tobytes()],
+                "norms": [norms.tobytes()],
+                "rows": [mat.shape[0]],
+            }
+        )
+
+    packed = vecs.groupBy("g").applyInPandas(
+        pack, "g long, ids array<long>, mat binary, norms binary, rows int"
+    )
+
+    a = packed.select(
+        F.col("g").alias("ga"), F.col("ids").alias("ids_a"),
+        F.col("mat").alias("mat_a"), F.col("norms").alias("norms_a"),
+        F.col("rows").alias("rows_a"),
+    )
+    b = packed.select(
+        F.col("g").alias("gb"), F.col("ids").alias("ids_b"),
+        F.col("mat").alias("mat_b"), F.col("norms").alias("norms_b"),
+        F.col("rows").alias("rows_b"),
+    )
+    grid = a.join(b, F.col("ga") <= F.col("gb"))
+
+    def block_cosine(batches):
+        for pdf in batches:
+            out_a, out_b, out_c = [], [], []
+            for row in pdf.itertuples(index=False):
+                ma = np.frombuffer(row.mat_a, dtype=np.float64).reshape(row.rows_a, -1)
+                mb = np.frombuffer(row.mat_b, dtype=np.float64).reshape(row.rows_b, -1)
+                na = np.frombuffer(row.norms_a, dtype=np.float64)
+                nb = np.frombuffer(row.norms_b, dtype=np.float64)
+                ids_a = np.asarray(row.ids_a)
+                ids_b = np.asarray(row.ids_b)
+                cos = np.round((ma @ mb.T) / np.outer(na, nb), 6)
+                ia, ib = np.nonzero(cos >= 0.35)
+                va, vb, vc = ids_a[ia], ids_b[ib], cos[ia, ib]
+                if row.ga == row.gb:
+                    # same block: strict upper triangle only
+                    keep = va < vb
+                    va, vb, vc = va[keep], vb[keep], vc[keep]
+                # cross block (ga < gb): id ranges are disjoint with every
+                # a-id < every b-id (floor(vec_id/block) blocking), so the
+                # pair is already canonically ordered — nothing to do
+                out_a.append(va)
+                out_b.append(vb)
+                out_c.append(vc)
+            if out_a:
+                yield pd.DataFrame(
+                    {
+                        "id_a": np.concatenate(out_a),
+                        "id_b": np.concatenate(out_b),
+                        "cosine": np.concatenate(out_c),
+                    }
+                )
+
+    out = grid.mapInPandas(block_cosine, "id_a long, id_b long, cosine double")
+    # sort is presentation-only (this query's oracle compares ordered
+    # output); component consumers skip it — CC re-shuffles immediately
+    return out.orderBy("id_a", "id_b") if sort else out
+
+
+EMBEDDING_COSINE_PAIRS_SQL = """
+SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+       ROUND(
+         list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
+         / (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
+            * SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))),
+         6) AS cosine
+FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+WHERE ROUND(
+         list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
+         / (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
+            * SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))),
+         6) >= 0.35
+ORDER BY id_a, id_b
+"""
+
+
+def embedding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Connected components over the exact-cosine similarity graph
+    (>= 0.35): a dense, chain-heavy graph that exercises the alternating
+    large-star/small-star operator on non-trivial topology (multi-hop
+    clusters), unlike the sparse text near-dup graph."""
+    from receipt_scanner_spark.operators.dedup import assign_components
+
+    emb = t(spark, sf_dir, "embeddings").select("vec_id")
+    pairs = embedding_cosine_pairs(spark, sf_dir, sort=False)
+    return assign_components(
+        emb, pairs, id_col="vec_id", pair_a="id_a", pair_b="id_b"
+    ).orderBy("vec_id")
+
+
+EMBEDDING_COMPONENTS_SQL = """
+WITH RECURSIVE pairs AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+  WHERE ROUND(
+         list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
+         / (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
+            * SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))),
+         6) >= 0.35
+), und AS (
+  SELECT id_a AS src, id_b AS dst FROM pairs
+  UNION SELECT id_b, id_a FROM pairs
+), reach(node, label) AS (
+  SELECT src, src FROM und
+  UNION
+  SELECT u.src, r.label FROM und u JOIN reach r ON r.node = u.dst
+), comp AS (
+  SELECT node, MIN(label) AS component FROM reach GROUP BY node
 )
+SELECT e.vec_id,
+       COALESCE(c.component, e.vec_id) AS component,
+       (COALESCE(c.component, e.vec_id) = e.vec_id) AS keep
+FROM embeddings e LEFT JOIN comp c ON c.node = e.vec_id
+ORDER BY e.vec_id
+"""
 
 
-def approx_distinct_with_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog++ distinct-count sketch checked in-plan against the
-    exact count — same contract as approx_percentiles_with_exact: the
-    oracle hashes the EXACT values (independently computed by DuckDB)
-    plus an accuracy flag (relative error ≤ 15% = 3× the HLL++ default
-    rsd 0.05 — rsd is a standard DEVIATION, not a bound, so a 1σ
-    tolerance would flake on a different SF with no code bug; 3σ keeps
-    the sketch honest without the flake class, r3 ADVICE), so the
-    entry only passes if Spark's sketch is actually that close.
-    At 100 TB the sketch is the only viable path: mergeable fixed-size
-    state, map-side partial merge, one tiny shuffle."""
-    ev = t(spark, sf_dir, "events")
-    exact = F.count_distinct("user_id")
-    appr = F.expr("approx_count_distinct(user_id)")
+# --- per-document text signals ------------------------------------------------
+
+def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Repetition / diversity quality signals (the Gopher-rule family):
+    type-token ratio and the count of the most-repeated word 3-gram per
+    document.  Both fold map-side before their groupBy shuffles; at
+    100 TB this is the standard pre-train repetition gate."""
+    docs = t(spark, sf_dir, "documents")
+    words = F.split(F.trim(F.lower("text")), r"\s+")
+    base = docs.select(
+        "doc_id",
+        F.size(words).alias("n_words"),
+        F.size(F.array_distinct(words)).alias("n_distinct"),
+        words.alias("_w"),
+    )
+    # non-distinct 3-grams: repetition is the point, so no dedup
+    # (Arrow-batched — see word_shingles_udf on the interpreted-HOF trap)
+    from ..operators.dedup import word_shingles_udf
+
+    g = docs.select(
+        "doc_id",
+        F.explode(word_shingles_udf(3, distinct=False)(F.col("text"))).alias("g"),
+    )
+    top = (
+        g.groupBy("doc_id", "g")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .groupBy("doc_id")
+        .agg(F.max("c").alias("top_3gram_count"))
+    )
     return (
-        ev.groupBy("event_type")
-        .agg(
-            exact.alias("n_users_exact"),
-            (
-                F.abs(appr - exact) <= exact * 0.15
-            ).alias("approx_within_15pct"),
+        base.select(
+            "doc_id",
+            "n_words",
+            "n_distinct",
+            F.round(F.col("n_distinct") / F.col("n_words"), 6).alias("ttr"),
         )
-        .orderBy("event_type")
+        .join(top, "doc_id", "left")
+        .select(
+            "doc_id", "n_words", "n_distinct", "ttr",
+            F.coalesce("top_3gram_count", F.lit(0)).alias("top_3gram_count"),
+        )
+        .orderBy("doc_id")
     )
 
 
-APPROX_DISTINCT_SQL = """
-SELECT event_type,
-       COUNT(DISTINCT user_id) AS n_users_exact,
-       TRUE AS approx_within_15pct
-FROM events GROUP BY event_type ORDER BY event_type
+REPETITION_STATS_SQL = r"""
+WITH words AS (
+  SELECT doc_id, regexp_split_to_array(TRIM(LOWER(text)), '\s+') AS w
+  FROM documents
+), base AS (
+  SELECT doc_id, LEN(w) AS n_words,
+         LEN(list_distinct(w)) AS n_distinct, w
+  FROM words
+), grams AS (
+  SELECT doc_id, w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] AS g
+  FROM base, UNNEST(range(GREATEST(LEN(w) - 2, 0))) AS t(i)
+), top AS (
+  SELECT doc_id, MAX(c) AS top_3gram_count FROM (
+    SELECT doc_id, g, COUNT(*) AS c FROM grams GROUP BY 1, 2
+  ) GROUP BY doc_id
+)
+SELECT b.doc_id, b.n_words, b.n_distinct,
+       ROUND(b.n_distinct / CAST(b.n_words AS DOUBLE), 6) AS ttr,
+       COALESCE(t.top_3gram_count, 0) AS top_3gram_count
+FROM base b LEFT JOIN top t ON t.doc_id = b.doc_id
+ORDER BY b.doc_id
 """
 
 
-# approx_distinct_with_exact moved to RETIRED_ORACLE_QUERIES (pytest
-# parity only): subsumed by the merged percentiles_and_sketches entry.
+def doc_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Karp-Rabin document fingerprint (Horner fold mod 2^61-1, base
+    257, over whitespace-normalized lowercased UTF-8).  Map-only pandas
+    UDF on the Spark side; the DuckDB oracle reproduces the exact
+    integer fold with list_reduce over HUGEINT — valid because the test
+    corpus is pure ASCII (codepoint == UTF-8 byte; verified for every
+    SF) and the hash value < 2^61 makes the 63-bit mask a no-op."""
+    from receipt_scanner_spark.functions.text import rolling_fingerprint
+
+    docs = t(spark, sf_dir, "documents")
+    return rolling_fingerprint(docs).orderBy("doc_id")
 
 
-def percentiles_and_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged sketch-accuracy entry (consolidates the r1/r2 trio
-    value_percentiles + approx_percentiles_with_exact +
-    approx_distinct_with_exact under the driver's 50-entry record cap;
-    the originals stay pytest-parity-checked in RETIRED_ORACLE_QUERIES).
+DOC_ROLLING_FINGERPRINT_SQL = r"""
+SELECT doc_id,
+       CASE WHEN length(norm) = 0 THEN 0
+            ELSE (list_reduce(
+                    list_transform(range(1, length(norm) + 1),
+                                   i -> ord(substr(norm, i, 1))::HUGEINT),
+                    (a, b) -> (a * 257 + b) % 2305843009213693951::HUGEINT
+                  ))::BIGINT
+       END AS fingerprint
+FROM (
+  SELECT doc_id, TRIM(regexp_replace(LOWER(text), '\s+', ' ', 'g')) AS norm
+  FROM documents
+)
+ORDER BY doc_id
+"""
 
-    One grouped aggregate computes, per event_type: the EXACT
-    interpolated p50/p90/p99 (identical definition in Spark
-    ``percentile`` and DuckDB ``quantile_cont``), the EXACT distinct
-    user count, and two in-plan accuracy flags for the 100 TB sketch
-    paths — approx_percentile (GK-style, mergeable map-side) within 5%
-    of exact, and HLL++ approx_count_distinct within 15% (= 3× the
-    rsd=0.05 standard deviation, so the flag is a bound the sketch
-    actually honors rather than a 1-sigma coin flip; per ADVICE r2).
-    The oracle emits TRUE — the entry only hash-matches when Spark's
-    sketches really are inside tolerance."""
+
+# --- events: as-of join -------------------------------------------------------
+
+def asof_purchase_prior_click(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join: each purchase event gets the user's most recent click
+    at-or-before the purchase (operators/asof.py — union-tag + window
+    carry-forward, ONE keyed shuffle, no range-join explosion).  Oracle:
+    DuckDB's native ASOF LEFT JOIN over the same deduped right side."""
+    from receipt_scanner_spark.operators.asof import asof_join
+
     ev = t(spark, sf_dir, "events")
-    exact50 = F.expr("percentile(value, 0.5)")
-    exact90 = F.expr("percentile(value, 0.9)")
-    exact99 = F.expr("percentile(value, 0.99)")
-    appr_p = F.expr("approx_percentile(value, array(0.5, 0.99), 10000)")
-    exact_d = F.count_distinct("user_id")
-    appr_d = F.expr("approx_count_distinct(user_id)")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(exact50, 6).alias("p50_exact"),
-            F.round(exact90, 6).alias("p90_exact"),
-            F.round(exact99, 6).alias("p99_exact"),
-            exact_d.alias("n_users_exact"),
-            (
-                (F.abs(appr_p[0] - exact50) <= F.abs(exact50) * 0.05 + 1e-6)
-                & (F.abs(appr_p[1] - exact99) <= F.abs(exact99) * 0.05 + 1e-6)
-            ).alias("pctl_within_5pct"),
-            (F.abs(appr_d - exact_d) <= exact_d * 0.15).alias("hll_within_15pct"),
-        )
-        .orderBy("event_type")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "ts", "user_id", "value"
     )
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", "ts", "event_id", "value"
+    )
+    out = asof_join(
+        purchases,
+        clicks,
+        by="user_id",
+        right_cols=["ts", "event_id", "value"],
+        dedupe_order_col="event_id",
+        prefix="click_",
+    )
+    return out.select(
+        "event_id", "user_id", "ts", "value",
+        "click_event_id", "click_ts", "click_value",
+    ).orderBy("event_id")
 
 
-PERCENTILES_AND_SKETCHES_SQL = """
-SELECT event_type, COUNT(*) AS n,
-       ROUND(quantile_cont(value, 0.5), 6) AS p50_exact,
-       ROUND(quantile_cont(value, 0.9), 6) AS p90_exact,
-       ROUND(quantile_cont(value, 0.99), 6) AS p99_exact,
-       COUNT(DISTINCT user_id) AS n_users_exact,
-       TRUE AS pctl_within_5pct,
-       TRUE AS hll_within_15pct
-FROM events GROUP BY event_type ORDER BY event_type
+ASOF_PURCHASE_PRIOR_CLICK_SQL = """
+WITH clicks AS (
+  SELECT user_id, ts, event_id, value FROM (
+    SELECT user_id, ts, event_id, value,
+           ROW_NUMBER() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
+    FROM events WHERE event_type = 'click'
+  ) WHERE rn = 1
+), purchases AS (
+  SELECT event_id, ts, user_id, value FROM events WHERE event_type = 'purchase'
+)
+SELECT p.event_id, p.user_id, p.ts, p.value,
+       c.event_id AS click_event_id, c.ts AS click_ts, c.value AS click_value
+FROM purchases p ASOF LEFT JOIN clicks c
+  ON p.user_id = c.user_id AND p.ts >= c.ts
+ORDER BY p.event_id
 """
 
 
-ORACLE_QUERIES["percentiles_and_sketches"] = (
-    percentiles_and_sketches,
-    PERCENTILES_AND_SKETCHES_SQL,
-)
+# --- training-data preparation: quality gate + dedup composition --------------
 
-
-def grouping_sets_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS with grouping_id disambiguation — the
-    multi-granularity aggregation idiom (finer than CUBE: only the sets
-    you need, one map-side expand pass, shuffle carries |sets| copies
-    of the group rows, not 2^n)."""
-    return spark.sql(
-        f"""
-        SELECT o_orderpriority, o_orderstatus,
-               CAST(grouping_id(o_orderpriority, o_orderstatus) AS INT)
-                 AS gid,
-               COUNT(*) AS n,
-               CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(14,2))), 2)
-                    AS DOUBLE) AS total
-        FROM parquet.`{sf_dir}/orders.parquet`
-        GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
-                                (o_orderpriority), ())
-        ORDER BY gid, o_orderpriority, o_orderstatus
-        """
+def quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Training-data quality filtering: composite keep/drop decision from
+    length, token, and character-class signals — the standard pre-train
+    corpus gate, entirely JVM-side.  An entry of its own because
+    training_data_prep composes it: a mismatch here localizes a
+    training_data_prep failure to the quality stage."""
+    docs = t(spark, sf_dir, "documents")
+    trimmed = F.trim(F.col("text"))
+    n_tokens = F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
+        F.size(F.split(trimmed, r"\s+"))
     )
+    alpha = F.round(
+        F.length(F.regexp_replace("text", "[^a-zA-Z]", "")) / F.length("text"), 6
+    )
+    raw_mean = F.length(trimmed) / F.greatest(n_tokens, F.lit(1))
+    # keep-decision uses the RAW ratio (rounding only for display), so the
+    # oracle comparison cannot diverge on round-boundary values
+    keep = (
+        (n_tokens >= 20)
+        & (alpha >= 0.5)
+        & (raw_mean >= 3.0)
+        & (raw_mean <= 12.0)
+    )
+    return docs.select(
+        "doc_id",
+        n_tokens.alias("n_tokens"),
+        alpha.alias("alpha_ratio"),
+        F.round(raw_mean, 6).alias("mean_token_len"),
+        keep.alias("keep"),
+    ).orderBy("doc_id")
 
 
-GROUPING_SETS_SQL = """
-SELECT o_orderpriority, o_orderstatus,
-       CAST(GROUPING(o_orderpriority, o_orderstatus) AS INT) AS gid,
-       COUNT(*) AS n,
-       CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(14,2))), 2) AS DOUBLE) AS total
-FROM orders
-GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
-                        (o_orderpriority), ())
-ORDER BY gid, o_orderpriority, o_orderstatus
-"""
-
-
-ORACLE_QUERIES["grouping_sets_battery"] = (
-    grouping_sets_battery,
-    GROUPING_SETS_SQL,
+QUALITY_FILTER_SQL = r"""
+WITH scored AS (
+  SELECT doc_id,
+         CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
+              ELSE LEN(regexp_split_to_array(TRIM(text), '\s+')) END AS n_tokens,
+         ROUND(LENGTH(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
+               / CAST(LENGTH(text) AS DOUBLE), 6) AS alpha_ratio,
+         LENGTH(TRIM(text)) AS n_trim
+  FROM documents
 )
+SELECT doc_id, n_tokens, alpha_ratio,
+       ROUND(n_trim / CAST(GREATEST(n_tokens, 1) AS DOUBLE), 6) AS mean_token_len,
+       (n_tokens >= 20 AND alpha_ratio >= 0.5
+        AND n_trim / CAST(GREATEST(n_tokens, 1) AS DOUBLE) >= 3.0
+        AND n_trim / CAST(GREATEST(n_tokens, 1) AS DOUBLE) <= 12.0) AS keep
+FROM scored ORDER BY doc_id
+"""
 
 
 def training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END training-data preparation — the composite keep/drop
     decision a pre-train corpus pipeline actually ships: quality gate ∧
     exact-dedup canonical ∧ near-dup-cluster canonical, with each
-    stage's verdict exposed for auditability.  Composes the three
-    independently-oracle-checked stages (quality_filter, exact_dedup,
-    near_dup_components); the DuckDB oracle glues the same three
+    stage's verdict exposed for auditability.  Composes quality_filter,
+    an md5 exact-dedup keeper (operators/dedup.normalized_fingerprint)
+    and near_dup_components; the DuckDB oracle glues the same three
     constructions into one CTE chain, so the COMPOSITION itself is
     oracle-checked, not just the parts.  At 100 TB: each stage is its
     own documented scale shape (JVM expressions / one md5 shuffle /
@@ -2345,23 +1067,23 @@ ORDER BY d.doc_id
 """
 
 
-ORACLE_QUERIES["training_data_prep"] = (training_data_prep, TRAINING_DATA_PREP_SQL)
+# --- registry ------------------------------------------------------------------
 
-
-# --- retired driver entries (pytest parity only) ---------------------------------
-#
-# The driver's CORRECTNESS gate records at most 50 queries() entries per
-# round (r2: 56 submitted, exactly the first 50 recorded).  These four
-# remain fully oracle-checked in tests/test_oracle_parity.py but are no
-# longer driver entries — each is subsumed by a surviving entry:
-#   value_percentiles / approx_percentiles_with_exact /
-#   approx_distinct_with_exact → percentiles_and_sketches (merged);
-#   simhash_md5 → simhash_signatures_64 + simhash_band_candidates
-#   (production FNV-1a pair, bit-for-bit HUGEINT oracles).
-RETIRED_ORACLE_QUERIES: dict[str, tuple] = {
-    "value_percentiles": (value_percentiles, VALUE_PERCENTILES_SQL),
-    "approx_percentiles_with_exact": (
-        approx_percentiles_with_exact, APPROX_PERCENTILES_SQL),
-    "approx_distinct_with_exact": (approx_distinct_with_exact, APPROX_DISTINCT_SQL),
-    "simhash_md5": (simhash_md5, SIMHASH_MD5_SQL),
+ORACLE_QUERIES: dict[str, tuple] = {
+    "minhash_signatures": (minhash_signatures, minhash_signatures_sql()),
+    "ngram_jaccard_pairs": (ngram_jaccard_pairs, NGRAM_JACCARD_SQL),
+    "near_dup_components": (near_dup_components, NEAR_DUP_COMPONENTS_SQL),
+    "minhash_band_pairs": (minhash_band_pairs, MINHASH_BAND_PAIRS_SQL),
+    "minhash_jaccard_estimate": (minhash_jaccard_estimate, MINHASH_JACCARD_ESTIMATE_SQL),
+    "simhash_signatures_64": (simhash_signatures_64, SIMHASH_SIGNATURES_64_SQL),
+    "simhash_band_candidates": (simhash_band_candidates, SIMHASH_BAND_CANDIDATES_SQL),
+    "embedding_topk": (embedding_topk, EMBEDDING_TOPK_SQL),
+    "ivf_topk_fullprobe": (ivf_topk_fullprobe, IVF_TOPK_FULLPROBE_SQL),
+    "embedding_cosine_pairs": (embedding_cosine_pairs, EMBEDDING_COSINE_PAIRS_SQL),
+    "embedding_components": (embedding_components, EMBEDDING_COMPONENTS_SQL),
+    "repetition_stats": (repetition_stats, REPETITION_STATS_SQL),
+    "doc_rolling_fingerprint": (doc_rolling_fingerprint, DOC_ROLLING_FINGERPRINT_SQL),
+    "asof_purchase_prior_click": (asof_purchase_prior_click, ASOF_PURCHASE_PRIOR_CLICK_SQL),
+    "quality_filter": (quality_filter, QUALITY_FILTER_SQL),
+    "training_data_prep": (training_data_prep, TRAINING_DATA_PREP_SQL),
 }

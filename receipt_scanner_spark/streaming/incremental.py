@@ -68,9 +68,8 @@ def stream_sessionize(
     gap: str = "30 minutes",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Streaming session aggregation (the batch twin is
-    plans/queries.sessionize_events).  ``events`` must be a streaming
-    DataFrame with (user_id, ts, value)."""
+    """Streaming session aggregation over gap-based session windows.
+    ``events`` must be a streaming DataFrame with (user_id, ts, value)."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")

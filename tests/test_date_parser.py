@@ -26,6 +26,8 @@ class TestParser:
     def test_finds_earliest_date(self):
         text = "Mar/05/2016\nMar/04/2016\nMar/06/2016"
         assert parse_date(text)["match"] == "2016-03-04"
+        # a year-0 candidate is a no-match; the others still rank
+        assert parse_date("paid 0000-01-02 on 2020-01-02")["match"] == "2020-01-02"
 
     def test_day_zero_chrono_bug_guard(self):
         text = "00\n" + " " * 102 + "Feb 15"
@@ -99,7 +101,11 @@ class TestAllDates:
     def test_dot_separators(self, text):
         assert first_value(all_dates(text)) == "2016-12-30"
 
-    @pytest.mark.parametrize("text", ["", "date"], ids=["empty", "no_date"])
+    @pytest.mark.parametrize(
+        "text",
+        ["", "date", "paid 0000-01-02", "0000/01/01"],
+        ids=["empty", "no_date", "year_zero_iso", "year_zero_slash"],
+    )
     def test_no_dates(self, text):
         assert all_dates(text) == []
 

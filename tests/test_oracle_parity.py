@@ -14,10 +14,7 @@ import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.01"
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["documents", "embeddings", "events"]
 
 
 @pytest.fixture(scope="module")
@@ -52,17 +49,6 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 ORACLE_NAMES = sorted(entry_mod.oracle_sql().keys())
 
 
-def _retired():
-    from receipt_scanner_spark.plans.queries import RETIRED_ORACLE_QUERIES
-
-    return RETIRED_ORACLE_QUERIES
-
-
-# Retired driver entries (50-entry driver record cap) keep the exact
-# same oracle-parity contract here, just outside the driver battery.
-RETIRED_NAMES = sorted(_retired().keys())
-
-
 def test_driver_dict_within_record_cap():
     """The driver records at most 50 queries() entries (r2: 56 sent,
     first 50 recorded) — pin the cap so every entry stays visible."""
@@ -71,13 +57,10 @@ def test_driver_dict_within_record_cap():
     assert set(entry_mod.oracle_sql()) <= set(qs)
 
 
-@pytest.mark.parametrize("name", ORACLE_NAMES + RETIRED_NAMES)
+@pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_query_matches_oracle(spark, duck, name):
-    if name in _retired():
-        q, sql = _retired()[name]
-    else:
-        q = entry_mod.queries()[name]
-        sql = entry_mod.oracle_sql()[name]
+    q = entry_mod.queries()[name]
+    sql = entry_mod.oracle_sql()[name]
 
     spark_df = q(spark, SF_DIR).toPandas()
     duck_df = duck.execute(sql).df()
@@ -103,6 +86,34 @@ def test_rows_only_queries_run(spark):
         df = qs[name](spark, SF_DIR)
         assert df.count() >= 0
         assert df.schema  # stable schema
+
+
+# media_id -> exact OCR text of the decoder fixtures in
+# _multimodal_pipeline_query (each fixture's comment names its text)
+MULTIMODAL_OCR = {
+    6: "TOTAL $7.50", 7: "JPG $5", 8: "FAX $3.25", 9: "SOF9 $4.20",
+    10: "JB2 $6.75", 11: "WEBP $9.10", 12: "ANIM 1 $0.10", 13: "JPX $8.40",
+    14: "TILE $2.75", 15: "HUF $1.50", 16: "APNG 0 $0.20", 17: "HT $6.00",
+    18: "PCT $9.99", 19: "JTIF $9.25", 20: "CMYK $4.10", 21: "OFF $7.70",
+    22: "IREF $8.15", 23: "SEPJ $7.35", 24: "COC $8.25", 25: "RC $4.10",
+    26: "YCC $5.60", 27: "POC $1.85", 28: "HIER $9.81", 29: "ICO $4.20",
+    30: "PNM $1.23", 31: "TGA $8.88", 32: "PCX $7.77",
+}
+
+
+def test_multimodal_pipeline_ocr_exact(spark):
+    """Every decoder row of the multimodal entry OCRs to its exact text;
+    the truncated GIF, fake video and garbage rows are OCR errors."""
+    rows = {
+        r.media_id: (r.ocr_text, r.ocr_error)
+        for r in entry_mod.queries()["multimodal_pipeline"](spark, SF_DIR)
+        .select("media_id", "ocr_text", "ocr_error")
+        .collect()
+    }
+    for media_id, text in MULTIMODAL_OCR.items():
+        assert rows[media_id] == (text, False), media_id
+    for media_id in (2, 3, 4):
+        assert rows[media_id][1] is True, media_id
 
 
 def test_entry_smoke(spark):

@@ -221,9 +221,16 @@ class TestLineSegmentation:
         from receipt_scanner_spark.functions.udfs import process_udf
 
         raw = "Total 6,000.00\n####\nDate 2016-08-13"
+        year0 = "paid 0000-01-02 on 2020-01-02"
         df = spark.createDataFrame(
-            [("u1", None, raw, "en")],
+            [("u1", None, raw, "en"), ("u2", None, year0, "en")],
             "url string, html binary, text string, lang string",
         )
-        r1 = df.select(process_udf(F.col("html"), F.col("text")).alias("r")).first()["r"]
+        r1, r2 = [
+            row["r"] for row in df.orderBy("url")
+            .select(process_udf(F.col("html"), F.col("text")).alias("r"))
+            .collect()
+        ]
         assert r1["extracted_text"] == raw  # pass-through, byte-identical
+        # a year-0 date is a no-match, not a failed batch
+        assert (r2["date"], r2["error"]) == ("2020-01-02", None)

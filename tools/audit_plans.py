@@ -6,19 +6,10 @@ Usage: python tools/audit_plans.py [sf_dir]
 
 from __future__ import annotations
 
-import contextlib
-import io
 import sys
 import tempfile
 
 sys.path.insert(0, ".")
-
-
-def fplan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def summarize(df) -> tuple[int, int]:
@@ -45,44 +36,18 @@ def main() -> None:
          "map-only: scan -> one ArrowEvalPython -> project. Zero shuffles; parallelism = input splits."),
         ("extraction (salted)", extract_pages(pages, salt_partitions=8, observe=False),
          "exactly ONE added exchange, keyed (host, xxhash64(url)%salt) - the explicit crawl-skew defense."),
-        ("q1_pricing_summary", Q.q1_pricing_summary(spark, sf),
-         "partial agg map-side; shuffle carries <=4 groups x partitions rows; 2nd exchange is the tiny final sort."),
-        ("q3_shipping_priority", Q.q3_shipping_priority(spark, sf),
-         "customer and orders broadcast (2 BroadcastExchange) - lineitem, the 100TB side, is never shuffled for the join."),
-        ("q6_revenue_change", Q.q6_revenue_change(spark, sf),
-         "all 5 predicates in PushedFilters; ReadSchema pruned to 4/11 columns; single gather exchange for the scalar agg."),
-        ("sessionize_events", Q.sessionize_events(spark, sf),
-         "both windows + groupBy share ONE hash exchange on user_id; 2nd is the output sort."),
-        ("top_order_per_customer", Q.top_order_per_customer(spark, sf),
-         "one window shuffle on high-cardinality custkey; row_number filter applied before projection."),
         ("minhash_signatures", Q.minhash_signatures(spark, sf),
          "shingles via ONE ArrowEvalPython (batched UDF; the interpreted transform(sequence) HOF it replaced measured 4.2x slower), explode->groupBy one shuffle, K min-hash aggregates fold map-side."),
         ("embedding_topk", Q.embedding_topk(spark, sf),
          "ZERO exchanges: TakeOrderedAndProject keeps per-partition top-k, driver merges k*partitions rows."),
         ("minhash_band_pairs", Q.minhash_band_pairs(spark, sf),
          "signature agg is ONE explode->groupBy shuffle; the band self-join is an equi-join on (band,bucket) so shuffle volume tracks bucket collisions, not n²."),
-        ("tfidf_top_terms", Q.tfidf_top_terms(spark, sf),
-         "two partial aggs (tf, df) + one window on source; map-side combine crushes the exploded token volume before either shuffle; n_docs is an in-plan broadcast scalar (no extra action)."),
         ("embedding_cosine_pairs", Q.embedding_cosine_pairs(spark, sf),
          "blocked BLAS matmul: ONE applyInPandas shuffle packs ~128-row blocks; B(B+1)/2 block-pair rows; dot products never leave numpy (HOF fold / unrolled Add tree both measured 50x+ slower)."),
         ("embedding_components", Q.embedding_components(spark, sf),
          "large-star/small-star: two keyed shuffles per round, O(log n) rounds, lineage truncated per round (final plan reads the checkpointed star forest as ExistingRDD)."),
         ("asof_purchase_prior_click", Q.asof_purchase_prior_click(spark, sf),
          "as-of via union-tag + window carry-forward: ONE hash exchange on the join key (plus the dedupe window) — no range-join explosion, no per-row search."),
-        ("event_type_pivot", Q.event_type_pivot(spark, sf),
-         "pivot with explicit value list: one groupBy shuffle; no distinct-values pre-job."),
-        ("order_priority_cube", Q.order_priority_cube(spark, sf),
-         "CUBE in one pass: map-side expand to 4 grouping sets, shuffle carries |groups|*4 rows."),
-        ("range_join_purchases_in_click_sessions", Q.range_join_purchases_in_click_sessions(spark, sf),
-         "interval join rides the user_id equi-shuffle; range predicate is a join filter — no cross product. 100 TB refinement: time-bucket both sides."),
-        ("json_props_battery", Q.json_props_battery(spark, sf),
-         "get_json_object is JVM-side (no Python); one groupBy shuffle over 5 groups."),
-        ("url_functions_per_host", Q.url_functions_per_host(spark, sf),
-         "parse_url family stays in whole-stage codegen; per-host agg combines map-side — the crawl-partitioning key derivation at full scan speed."),
-        ("nfc_normalization", Q.nfc_normalization(spark, sf),
-         "one ArrowEvalPython for unicodedata NFC (no Spark builtin exists) + one groupBy over |langs| groups; normalization is map-only."),
-        ("percentiles_and_sketches", Q.percentiles_and_sketches(spark, sf),
-         "GK percentile sketch + HLL++ distinct sketch + their exact twins share ONE groupBy shuffle; at 100 TB drop the exact twins and keep the sketches (mergeable, bounded memory)."),
         ("simhash_band_candidates", Q.simhash_band_candidates(spark, sf),
          "FNV SimHash via one ArrowEvalPython; band self-join equi-keyed on (band,bucket); hamming is integral bit_count(xor) inside codegen (r3: replaced a 64-char bin()+regexp_replace string per candidate row)."),
     ]
@@ -102,23 +67,15 @@ def main() -> None:
         ex, bc = summarize(df)
         out.append(f"| {name} | {ex} | {bc} | {why} |")
 
-    out += ["", "## Evidence excerpts", "", "### q6 scan (pushdown + pruning)", "```"]
-    plan = fplan(Q.q6_revenue_change(spark, sf))
-    out += [l.strip()[:200] for l in plan.splitlines()
-            if "PushedFilters" in l or "ReadSchema" in l]
-    out += ["```", "", "### extraction default plan (map-only, one Python stage)", "```"]
+    out += ["", "## Evidence excerpts", "",
+            "### extraction default plan (map-only, one Python stage)", "```"]
     p = extract_pages(pages, observe=False)._jdf.queryExecution().executedPlan().toString()
     out += [l.rstrip()[:160] for l in p.splitlines()[:12]]
-    out += ["```", "", "### q3 joins (broadcasts)", "```"]
-    p3 = fplan(Q.q3_shipping_priority(spark, sf))
-    out += [l.strip()[:160] for l in p3.splitlines() if "Broadcast" in l or "Join" in l][:10]
     out += [
         "```",
         "",
         "## Known non-ideal spots (tracked for later rounds)",
         "",
-        "* The crc32-checksum aggregation in bench adds a JVM pass over results —",
-        "  measurement harness, not the pipeline.",
         "* `ngram_jaccard_pairs` computes shingles ONCE as of r4 (lazy",
         "  localCheckpoint of the per-doc array + n_sh carried through the",
         "  self-join); it remains the small-scale oracle — the scale path is",
