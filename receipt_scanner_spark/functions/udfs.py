@@ -229,8 +229,15 @@ def build_process_udf(
     def process(html: pd.Series, text: pd.Series) -> pd.DataFrame:
         out = []
         for h, t in zip(html, text):
-            fmt, extracted, error = extract_row(h, t, ocr, profile, ocr_arrays)
-            out.append((fmt, extracted, error, *parse_row(extracted, parsers)))
+            fmt = extracted = None
+            try:
+                fmt, extracted, error = extract_row(h, t, ocr, profile, ocr_arrays)
+                out.append((fmt, extracted, error, *parse_row(extracted, parsers)))
+            except Exception as exc:
+                # one bad document never fails the batch: an unexpected
+                # exception becomes this row's error value
+                out.append((fmt, extracted, f"internal error: {type(exc).__name__}",
+                            None, None, None, None))
         return pd.DataFrame(out, columns=PROCESS_SCHEMA.names)
 
     return process

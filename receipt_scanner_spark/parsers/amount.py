@@ -21,6 +21,15 @@ and pinned by the reference spec files re-encoded as pytest goldens
 These functions run row-at-a-time *inside* Arrow-batched pandas UDFs
 (receipt_scanner_spark/functions/udfs.py); they are deliberately
 regex-only and allocation-light.
+
+Prefix rule (speed, not semantics): every scan regex starts with a
+character class holding no cased letter, so CPython's ``re`` skips in C
+to the next position that can start a match instead of trying the
+pattern at every character (tests/test_parser_prefix.py pins this).
+The reference's leading ``(^|\\s)`` is therefore written ``[\\s]`` and run
+over ``" " + text``: the sentinel space at position 0 matches where
+``^`` did, and spans are shifted back by one.  The ISO-code alternation
+is grouped by first letter (``_code_trie``), which changes no match.
 """
 
 from __future__ import annotations
@@ -46,31 +55,44 @@ _PSC = (
     "\\uFFE1\\uFFE5\\uFFE6]"
 )
 
-# ISO-4217 alternation (amount_parser.js:140-156).
-_CURRENCY_CODES = "|".join(
-    [
-        "AED", "AFN", "ALL", "AMD", "ANG", "AOA", "ARS", "AUD",
-        "AWG", "AZN", "BAM", "BBD", "BDT", "BGN", "BHD", "BIF", "BMD",
-        "BND", "BOB", "BOV", "BRL", "BSD", "BTN", "BWP", "BYR", "BZD",
-        "CAD", "CDF", "CHE", "CHF", "CHW", "CLF", "CLP", "CNY", "COP",
-        "COU", "CRC", "CUC", "CUP", "CVE", "CZK", "DJF", "DKK", "DOP",
-        "DZD", "EGP", "ERN", "ETB", "EUR", "FJD", "FKP", "GBP", "GEL",
-        "GHS", "GIP", "GMD", "GNF", "GTQ", "GYD", "HKD", "HNL", "HRK",
-        "HTG", "HUF", "IDR", "ILS", "INR", "IQD", "IRR", "ISK", "JMD",
-        "JOD", "JPY", "KES", "KGS", "KHR", "KMF", "KPW", "KRW", "KWD",
-        "KYD", "KZT", "LAK", "LBP", "LKR", "LRD", "LSL", "LTL", "LVL",
-        "LYD", "MAD", "MDL", "MGA", "MKD", "MMK", "MNT", "MOP", "MRO",
-        "MUR", "MVR", "MWK", "MXN", "MXV", "MYR", "MZN", "NAD", "NGN",
-        "NIO", "NOK", "NPR", "NZD", "OMR", "PAB", "PEN", "PGK", "PHP",
-        "PKR", "PLN", "PYG", "QAR", "RON", "RSD", "RUB", "RWF", "SAR",
-        "SBD", "SCR", "SDG", "SEK", "SGD", "SHP", "SLL", "SOS", "SRD",
-        "SSP", "STD", "SYP", "SZL", "THB", "TJS", "TMT", "TND", "TOP",
-        "TRY", "TTD", "TWD", "TZS", "UAH", "UGX", "USD", "USN", "USS",
-        "UYI", "UYU", "UZS", "VEF", "VND", "VUV", "WST", "XAF", "XAG",
-        "XAU", "XBA", "XBB", "XBC", "XBD", "XCD", "XDR", "XFU", "XOF",
-        "XPD", "XPF", "XPT", "XTS", "XXX", "YER", "ZAR", "ZMW",
-    ]
+# ISO-4217 codes (amount_parser.js:140-156).
+_ISO_CODES = (
+    "AED", "AFN", "ALL", "AMD", "ANG", "AOA", "ARS", "AUD",
+    "AWG", "AZN", "BAM", "BBD", "BDT", "BGN", "BHD", "BIF", "BMD",
+    "BND", "BOB", "BOV", "BRL", "BSD", "BTN", "BWP", "BYR", "BZD",
+    "CAD", "CDF", "CHE", "CHF", "CHW", "CLF", "CLP", "CNY", "COP",
+    "COU", "CRC", "CUC", "CUP", "CVE", "CZK", "DJF", "DKK", "DOP",
+    "DZD", "EGP", "ERN", "ETB", "EUR", "FJD", "FKP", "GBP", "GEL",
+    "GHS", "GIP", "GMD", "GNF", "GTQ", "GYD", "HKD", "HNL", "HRK",
+    "HTG", "HUF", "IDR", "ILS", "INR", "IQD", "IRR", "ISK", "JMD",
+    "JOD", "JPY", "KES", "KGS", "KHR", "KMF", "KPW", "KRW", "KWD",
+    "KYD", "KZT", "LAK", "LBP", "LKR", "LRD", "LSL", "LTL", "LVL",
+    "LYD", "MAD", "MDL", "MGA", "MKD", "MMK", "MNT", "MOP", "MRO",
+    "MUR", "MVR", "MWK", "MXN", "MXV", "MYR", "MZN", "NAD", "NGN",
+    "NIO", "NOK", "NPR", "NZD", "OMR", "PAB", "PEN", "PGK", "PHP",
+    "PKR", "PLN", "PYG", "QAR", "RON", "RSD", "RUB", "RWF", "SAR",
+    "SBD", "SCR", "SDG", "SEK", "SGD", "SHP", "SLL", "SOS", "SRD",
+    "SSP", "STD", "SYP", "SZL", "THB", "TJS", "TMT", "TND", "TOP",
+    "TRY", "TTD", "TWD", "TZS", "UAH", "UGX", "USD", "USN", "USS",
+    "UYI", "UYU", "UZS", "VEF", "VND", "VUV", "WST", "XAF", "XAG",
+    "XAU", "XBA", "XBB", "XBC", "XBD", "XCD", "XDR", "XFU", "XOF",
+    "XPD", "XPF", "XPT", "XTS", "XXX", "YER", "ZAR", "ZMW",
 )
+
+
+def _code_trie(codes: tuple[str, ...]) -> str:
+    """The codes as an alternation grouped by first letter,
+    ``A(?:ED|FN|…)|B(?:…)|…``.  Every code is three letters, so at most
+    one branch can match at a position and branch order cannot change a
+    match; the engine now rejects a word after one test per first letter
+    instead of one per code."""
+    groups: dict[str, list[str]] = {}
+    for code in codes:
+        groups.setdefault(code[0], []).append(code[1:])
+    return "|".join(f"{first}(?:{'|'.join(rest)})" for first, rest in groups.items())
+
+
+_CURRENCY_CODES = _code_trie(_ISO_CODES)
 
 from .jsws import JS_WS as _JS_WS
 
@@ -94,7 +116,7 @@ def _fractional_regexp(decimal: str, thousand: str, prepend: str) -> re.Pattern[
     if pat is None:
         d, t = re.escape(decimal), re.escape(thousand)
         pat = re.compile(
-            rf"(?:^|[{_JS_WS}])"
+            rf"[{_JS_WS}]"
             + prepend
             + "(" + _PSC + "|" + _CURRENCY_CODES + ")?"
             # amount group: (x)x(,xxx)* | x(xxx..) | 0 | <empty>, then .d{1,2}
@@ -115,7 +137,7 @@ def _whole_regexp(decimal: str, thousand: str, prepend: str) -> re.Pattern[str]:
     if pat is None:
         t = re.escape(thousand)
         pat = re.compile(
-            rf"(?:^|[{_JS_WS}])"
+            rf"[{_JS_WS}]"
             + prepend
             + "(" + _PSC + "|" + _CURRENCY_CODES + ")"  # currency REQUIRED
             + "((?:[1-9][0-9]{0,2}(?:" + t + "[0-9]{3})*)"
@@ -127,18 +149,13 @@ def _whole_regexp(decimal: str, thousand: str, prepend: str) -> re.Pattern[str]:
     return pat
 
 
-def prepare_text(text: str, decimal: str = ".", thousand: str = ",") -> str:
-    """Strip parentheses around well-formed amounts: ``(5,000.01)`` → ``5,000.01``.
-
-    Mirror of amount_parser.js:63-82 (whitespace-delimited, int part is
-    1-3 digits optionally extended by thousand-separated triples, or 0).
-    """
+def _prepare_regexp(decimal: str, thousand: str) -> re.Pattern[str]:
     key = (decimal, thousand)
     pat = _PREPARE_CACHE.get(key)
     if pat is None:
         d, t = re.escape(decimal), re.escape(thousand)
         pat = re.compile(
-            rf"(^|[{_JS_WS}])"
+            rf"([{_JS_WS}])"
             r"\(("
             r"(?:(?:[1-9][0-9]{0,2}(?:" + t + r"[0-9]{3})*)|0)"
             + d + r"[0-9]{1,2}"
@@ -147,7 +164,24 @@ def prepare_text(text: str, decimal: str = ".", thousand: str = ",") -> str:
             re.IGNORECASE,
         )
         _PREPARE_CACHE[key] = pat
-    return pat.sub(r"\1\2", text)
+    return pat
+
+
+def _unwrap(m: re.Match) -> str:
+    return m[1] + m[2]
+
+
+def prepare_text(text: str, decimal: str = ".", thousand: str = ",") -> str:
+    """Strip parentheses around well-formed amounts: ``(5,000.01)`` → ``5,000.01``.
+
+    Mirror of amount_parser.js:63-82 (whitespace-delimited, int part is
+    1-3 digits optionally extended by thousand-separated triples, or 0).
+    The leading boundary is re-emitted; the sentinel space stands in for
+    the reference's ``^`` branch and is stripped again.
+    """
+    if "(" not in text:
+        return text
+    return _prepare_regexp(decimal, thousand).sub(_unwrap, " " + text)[1:]
 
 
 def find_amounts(
@@ -173,9 +207,10 @@ def find_amounts(
     # cascade reuse an already-prepared text across sub-parsers.
     if not prepared:
         text = prepare_text(text, decimal, thousand)
+    padded = " " + text  # the sentinel matches where ``^`` did; spans shift by 1
     for regexp_builder in (_fractional_regexp, _whole_regexp):
         pat = regexp_builder(decimal, thousand, prepend)
-        for m in pat.finditer(text):
+        for m in pat.finditer(padded):
             raw = m.group(2)
             value = parse_float_js(
                 raw.replace(thousand, "", 1).replace(decimal, ".", 1)
@@ -185,8 +220,8 @@ def find_amounts(
                     currency=m.group(1),
                     amount=value,
                     text=raw,
-                    start=m.start(2),
-                    end=m.end(2),
+                    start=m.start(2) - 1,
+                    end=m.end(2) - 1,
                 )
             )
     return out

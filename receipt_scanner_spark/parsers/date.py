@@ -43,6 +43,24 @@ the exact ECMA-262 class (parsers/jsws.py) because it has a node
 differential oracle (tools/diff_date_repair_oracle.py) — the grammar
 stays pinned by the spec goldens + tests/test_date_properties.py
 instead, and only non-ASCII-exotic-whitespace adjacency is affected.
+
+Prefix rule (speed, not semantics): every regex on the parse path starts
+with a character class holding no re.I-cased letter, so CPython's ``re``
+skips in C to the next candidate start (tests/test_parser_prefix.py):
+
+* repairs (b)-(d) write the reference's ``(^|\\s)`` as ``[\\s]`` and run
+  over ``" " + text``; the sentinel space at 0 stands in for ``^``;
+* digit-led grammar patterns open with ``[0-9]`` and assert the word
+  boundary one character later, ``(?<!\\w.)`` (_BOUNDARY);
+* month names open with their first letter as an ASCII case pair
+  outside re.I, ``(?-i:[JjFf…])``, then dispatch on it (_month_names).
+
+Designed no-match: a month name's three-letter stem is ASCII.  Python's
+re.I folds U+017F (long s) onto ``s`` and U+0130/U+0131 onto ``i``, so
+``ſep`` or ``dıc`` used to match and then fail the month lookup with a
+KeyError.  They match nothing now, as under ECMA-262 ``/i`` without
+``u`` (no code point >= 128 folds onto ASCII); letters after the stem
+still fold (``Aprıl 5, 2016`` is April 5).
 """
 
 from __future__ import annotations
@@ -60,18 +78,54 @@ class DateMatch(NamedTuple):
 
 # --- month-name machinery ---------------------------------------------------
 
-# EN + ES month alternation, as in date_parser.js:29-33.
+# EN + ES month names, as in date_parser.js:29-33, one branch each in
+# source order.  Every branch opens with its three-letter stem.
 _MONTHS_EN = (
-    r"Jan(?:uary|\.)?|Feb(?:ruary|\.)?|Mar(?:ch|\.)?|Apr(?:il|\.)?|May|"
-    r"Jun(?:e|\.)?|Jul(?:y|\.)?|Aug(?:ust|\.)?|Sep(?:tember|\.)?|"
-    r"Oct(?:ober|\.)?|Nov(?:ember|\.)?|Dec(?:ember|\.)?"
+    r"Jan(?:uary|\.)?", r"Feb(?:ruary|\.)?", r"Mar(?:ch|\.)?", r"Apr(?:il|\.)?",
+    r"May", r"Jun(?:e|\.)?", r"Jul(?:y|\.)?", r"Aug(?:ust|\.)?",
+    r"Sep(?:tember|\.)?", r"Oct(?:ober|\.)?", r"Nov(?:ember|\.)?",
+    r"Dec(?:ember|\.)?",
 )
 _MONTHS_ES = (
-    r"Ene(?:ro|\.)?|Feb(?:rero|\.)?|Mar(?:zo|\.)?|Abr(?:il|\.)?|"
-    r"May(?:o|\.)?|Jun(?:io|\.)?|Jul(?:io|\.)?|Ago(?:sto|\.)?|"
-    r"Sep(?:tiembre|\.)?|Oct(?:ubre|\.)?|Nov(?:iembre|\.)?|Dic(?:iembre|\.)?"
+    r"Ene(?:ro|\.)?", r"Feb(?:rero|\.)?", r"Mar(?:zo|\.)?", r"Abr(?:il|\.)?",
+    r"May(?:o|\.)?", r"Jun(?:io|\.)?", r"Jul(?:io|\.)?", r"Ago(?:sto|\.)?",
+    r"Sep(?:tiembre|\.)?", r"Oct(?:ubre|\.)?", r"Nov(?:iembre|\.)?",
+    r"Dic(?:iembre|\.)?",
 )
-MONTH_NAME_REGEXP = _MONTHS_EN + "|" + _MONTHS_ES
+
+# ASCII letters that Python's re.IGNORECASE also matches with a non-ASCII
+# code point: U+0130/U+0131 -> i, U+212A (Kelvin) -> k, U+017F (long s) -> s.
+_NON_ASCII_FOLDS = "iks"
+
+
+def _month_names(branches: tuple[str, ...], after_first: str = "") -> str:
+    r"""One capture group matching any of ``branches`` (an alternation in
+    source order), shaped so that it starts with a character class:
+
+        ((?-i:[JjFf…])<after_first>(?:(?<=[Jj])(?:an…|un…|ul…)|(?<=[Ff])(?:eb…)|…))
+
+    The first letter is an explicit ASCII case pair outside re.I and the
+    lookbehinds dispatch on it, keeping branch order within each letter
+    (branches with different first letters exclude each other).  The whole
+    three-letter stem is ASCII: a stem letter in _NON_ASCII_FOLDS is a case
+    pair outside re.I too.  Letters after the stem still fold under re.I.
+    ``after_first`` goes right after the first letter (the grammar's
+    ``(?<!\w.)`` boundary)."""
+    groups: dict[str, list[str]] = {}
+    for b in branches:
+        stem = "".join(
+            f"(?-i:[{c.upper()}{c}])" if c in _NON_ASCII_FOLDS else c for c in b[1:3]
+        )
+        groups.setdefault(b[0].lower(), []).append(stem + b[3:])
+    first = "".join(c.upper() + c for c in groups)
+    dispatch = "|".join(
+        f"(?<=[{c.upper()}{c}])(?:{'|'.join(rest)})" for c, rest in groups.items()
+    )
+    return f"((?-i:[{first}]){after_first}(?:{dispatch}))"
+
+
+# EN + ES month names as one capture group (repairs (c) and (d)).
+MONTH_NAME_REGEXP = _month_names(_MONTHS_EN + _MONTHS_ES)
 
 _MONTH_NUM = {
     "jan": 1, "feb": 2, "mar": 3, "apr": 4, "may": 5, "jun": 6,
@@ -115,10 +169,14 @@ from .jsws import JS_WS as _JS_WS  # noqa: E402
 #     (the '/' inside the JS char class at date_parser.js:38 is literal).
 _RE_HYPHENS = re.compile("[–—‒﹘/]")
 
+# (b)-(d) scan ``" " + text``: the reference's leading ``(^|\s)`` becomes
+# ``[\s]`` (a class the engine can skip to), the sentinel space at 0
+# stands in for ``^``, and group 1 re-emits it until _repair strips it.
+
 # (b) dd?mm?yyyy with 1-2 junk separator chars → dd/mm/yyyy.
 #     [^a-z0-9] under JS 'i' excludes both cases → [^a-zA-Z0-9].
 _RE_NUMERIC_JUNK = re.compile(
-    rf"(^|[{_JS_WS}])"
+    rf"([{_JS_WS}])"
     r"(?:([0-3]{0,1}[0-9])[^a-zA-Z0-9]{1,2})"
     r"(?:([0-3]{0,1}[0-9])[^a-zA-Z0-9]{1,2})"
     r"([1-9][0-9]{3})"
@@ -127,8 +185,8 @@ _RE_NUMERIC_JUNK = re.compile(
 
 # (c) MMMdd yyyy → MMM dd yyyy
 _RE_MONTH_FIRST_JUNK = re.compile(
-    rf"(^|[{_JS_WS}])"
-    r"(?:(" + MONTH_NAME_REGEXP + r")[^a-zA-Z0-9]{0,2})"
+    rf"([{_JS_WS}])"
+    r"(?:" + MONTH_NAME_REGEXP + r"[^a-zA-Z0-9]{0,2})"
     r"(?:([0-3]{0,1}[0-9])[^a-zA-Z0-9]{1,2})"
     r"([1-9][0-9]{3})"
     rf"(?=\Z|[{_JS_WS}])",
@@ -137,9 +195,9 @@ _RE_MONTH_FIRST_JUNK = re.compile(
 
 # (d) ddMMM yyyy → dd MMM yyyy
 _RE_DAY_FIRST_JUNK = re.compile(
-    rf"(^|[{_JS_WS}])"
+    rf"([{_JS_WS}])"
     r"(?:([0-3]{0,1}[0-9])[^a-zA-Z0-9]{1,2})"
-    r"(?:(" + MONTH_NAME_REGEXP + r")[^a-zA-Z0-9]{1,2})"
+    r"(?:" + MONTH_NAME_REGEXP + r"[^a-zA-Z0-9]{1,2})"
     r"([1-9][0-9]{3})"
     rf"(?=\Z|[{_JS_WS}])",
     re.IGNORECASE,
@@ -157,37 +215,63 @@ _RE_TIME_JUNK = re.compile(
 
 
 # Three-letter stems that every branch of the month alternations starts
-# with (case-insensitive).  A text containing NO stem cannot match any
-# month-name pattern, so the expensive alternation scans are skipped —
-# a pure optimization: substring presence is necessary for a match, and
-# repairs (a)/(b)/(e) never add or remove letters.
+# with (ASCII, either case).  A text containing NO stem cannot match any
+# month-name pattern, so those scans are skipped — a pure optimization:
+# substring presence is necessary for a match, and the repairs never add,
+# remove or separate letters, so one check on the raw text serves both
+# the repairs and the scan.
 _STEMS_EN = ("jan", "feb", "mar", "apr", "may", "jun",
              "jul", "aug", "sep", "oct", "nov", "dec")
 _STEMS_ES_ONLY = ("ene", "abr", "ago", "dic")
 
 
-def _has_stem(low: str, stems: tuple[str, ...]) -> bool:
-    return any(s in low for s in stems)
+def _month_gates(text: str) -> tuple[bool, bool]:
+    """(an EN stem occurs, an EN or ES stem occurs)."""
+    low = text.lower()
+    en = any(s in low for s in _STEMS_EN)
+    return en, en or any(s in low for s in _STEMS_ES_ONLY)
+
+
+# Replacements as functions: a ``\1`` template string costs a Python-level
+# template lookup on every sub() call, match or not.
+def _slashed(m: re.Match) -> str:
+    return f"{m[1]}{m[2]}/{m[3]}/{m[4]}"
+
+
+def _spaced(m: re.Match) -> str:
+    return f"{m[1]}{m[2]} {m[3]} {m[4]}"
+
+
+def _timed(m: re.Match) -> str:
+    return f"T{m[1]}:{m[2]}:{m[3]}"
+
+
+def _repair(text: str, months: bool) -> str:
+    text = " " + _RE_HYPHENS.sub("-", text)
+    text = _RE_NUMERIC_JUNK.sub(_slashed, text)
+    if months:
+        text = _RE_MONTH_FIRST_JUNK.sub(_spaced, text)
+        text = _RE_DAY_FIRST_JUNK.sub(_spaced, text)
+    return _RE_TIME_JUNK.sub(_timed, text[1:])
 
 
 def prepare_text(text: str) -> str:
     """OCR-noise repair chain, in reference source order (date_parser.js:36-91)."""
-    text = _RE_HYPHENS.sub("-", text)
-    text = _RE_NUMERIC_JUNK.sub(r"\1\2/\3/\4", text)
-    low = text.lower()
-    if _has_stem(low, _STEMS_EN) or _has_stem(low, _STEMS_ES_ONLY):
-        text = _RE_MONTH_FIRST_JUNK.sub(r"\1\2 \3 \4", text)
-        text = _RE_DAY_FIRST_JUNK.sub(r"\1\2 \3 \4", text)
-    text = _RE_TIME_JUNK.sub(r"T\1:\2:\3", text)
-    return text
+    return _repair(text, _month_gates(text)[1])
 
 
 # --- the six-parser grammar ---------------------------------------------------
 
+# Every pattern opens with its first character's class (a digit, or a
+# month's ASCII first letter) and asserts the leading word boundary right
+# after it: ``(?<!\w.)`` there is ``(?<!\w)`` one character to the left.
+# At position 0 the width-2 lookbehind cannot match, so it passes, as
+# ``(?<!\w)`` does.  _BOUNDARY is the one spelling of that assertion.
+_BOUNDARY = r"(?<!\w.)"
+
 # 1. EN ISO: yyyy-MM-dd with optional Thh:mm:ss(.ms)(Z|±hh:mm)
 _P_ISO = re.compile(
-    r"(?<!\w)"
-    r"([0-9]{4})-([0-9]{1,2})-([0-9]{1,2})"
+    r"([0-9]" + _BOUNDARY + r"[0-9]{3})-([0-9]{1,2})-([0-9]{1,2})"
     r"(?:[Tt]([0-9]{1,2}):([0-9]{1,2})"
     r"(?::([0-9]{1,2})(?:\.(\d{1,4}))?)?"
     r"(?:Z|([+-]\d{2}):?(\d{2})?)?"
@@ -199,16 +283,14 @@ _P_ISO = re.compile(
 # 2. EN slash: (m)m/(d)d/yy(yy) with separators / - . ; month-first with swap.
 #    Year REQUIRED here (yearless forms are uncertain → filtered anyway).
 _P_SLASH = re.compile(
-    r"(?<!\w)"
-    r"([0-9]{1,2})[/.\-]([0-9]{1,2})[/.\-]([0-9]{4}|[0-9]{2})"
+    r"([0-9]" + _BOUNDARY + r"[0-9]?)[/.\-]([0-9]{1,2})[/.\-]([0-9]{4}|[0-9]{2})"
     r"(?!\w)"
 )
 
 # 3. EN slash starting with year: yyyy/(m)m/(d)d (slash or dot; the hyphen
 #    form is the ISO parser's).
 _P_SLASH_YEAR_FIRST = re.compile(
-    r"(?<!\w)"
-    r"([0-9]{4})[/.]([0-9]{1,2})[/.]([0-9]{1,2})"
+    r"([0-9]" + _BOUNDARY + r"[0-9]{3})[/.]([0-9]{1,2})[/.]([0-9]{1,2})"
     r"(?!\w)"
 )
 
@@ -216,9 +298,8 @@ _P_SLASH_YEAR_FIRST = re.compile(
 #    Year required (else uncertain); year separator must be non-empty so
 #    'May 2016' does not parse as May 20, year 16.
 _P_MIDDLE = re.compile(
-    r"(?<!\w)"
-    r"(" + _MONTHS_EN + r")"
-    r"(?:-|/|\s*,?\s*)"
+    _month_names(_MONTHS_EN, _BOUNDARY)
+    + r"(?:-|/|\s*,?\s*)"
     r"([0-9]{1,2})(?:st|nd|rd|th)?"
     r"(?:-|/|\s*,\s*|\s+)"
     r"([0-9]{4}|[0-9]{1,2})"
@@ -228,11 +309,10 @@ _P_MIDDLE = re.compile(
 
 # 5. EN month-name little-endian: 30 June 2016 / 30-June-2016 / 5th of May 2016.
 _P_LITTLE = re.compile(
-    r"(?<!\w)"
-    r"([0-9]{1,2})(?:st|nd|rd|th)?"
+    r"([0-9]" + _BOUNDARY + r"[0-9]?)(?:st|nd|rd|th)?"
     r"(?:-|/|\s*(?:of)?\s*)"
-    r"(" + _MONTHS_EN + r")"
-    r"(?:-|/|\s*,\s*|\s+)"
+    + _month_names(_MONTHS_EN)
+    + r"(?:-|/|\s*,\s*|\s+)"
     r"([0-9]{4}|[0-9]{1,2})"
     r"(?!\w)",
     re.IGNORECASE,
@@ -240,11 +320,10 @@ _P_LITTLE = re.compile(
 
 # 6. ES month-name little-endian: 15 Dic 2016 / 15 de Diciembre de 2016.
 _P_ES_LITTLE = re.compile(
-    r"(?<!\w)"
-    r"([0-9]{1,2})(?:º|ª|°)?"
+    r"([0-9]" + _BOUNDARY + r"[0-9]?)(?:º|ª|°)?"
     r"(?:\s*(?:de|,|-)\s*|\s+|-|/)"
-    r"(" + _MONTHS_ES + r")"
-    r"(?:\s*(?:del|de|,|-)\s*|\s+|-|/)"
+    + _month_names(_MONTHS_ES)
+    + r"(?:\s*(?:del|de|,|-)\s*|\s+|-|/)"
     r"([0-9]{4}|[0-9]{2})"
     r"(?!\w)",
     re.IGNORECASE,
@@ -305,16 +384,7 @@ _PARSERS = (
 )
 
 
-def all_dates(text: str) -> list[DateMatch]:
-    """Scan with all six parsers; results sorted by (index, parser order),
-    mirroring chrono's index sort (stable across parsers).
-
-    Month-name parsers (orders 3-5) are skipped when the text lacks
-    every month stem — pattern-necessary substrings, see _STEMS_* —
-    which drops three alternation scans on all-numeric texts."""
-    low = text.lower()
-    en = _has_stem(low, _STEMS_EN)
-    es = en or _has_stem(low, _STEMS_ES_ONLY)
+def _scan(text: str, en: bool, es: bool) -> list[DateMatch]:
     found: list[tuple[int, int, DateMatch]] = []
     for order, (pat, extract) in enumerate(_PARSERS):
         if order in (3, 4) and not en:
@@ -338,6 +408,16 @@ def all_dates(text: str) -> list[DateMatch]:
             )
     found.sort(key=lambda t: (t[0], t[1]))
     return [dm for _, _, dm in found]
+
+
+def all_dates(text: str) -> list[DateMatch]:
+    """Scan with all six parsers; results sorted by (index, parser order),
+    mirroring chrono's index sort (stable across parsers).
+
+    Month-name parsers (orders 3-5) are skipped when the text lacks
+    every month stem — pattern-necessary substrings, see _STEMS_* —
+    which drops three alternation scans on all-numeric texts."""
+    return _scan(text, *_month_gates(text))
 
 
 def extract_earliest(values: list[DateMatch]) -> _dt.date | None:
@@ -365,8 +445,8 @@ def parse_date(text: str, config: dict | None = None) -> dict:
     extractor = config.get("parser", "earliest")
     if isinstance(extractor, str):
         extractor = EXTRACTORS[extractor]
-    text = prepare_text(text)
-    matches = all_dates(text)
+    en, es = _month_gates(text)
+    matches = _scan(_repair(text, es), en, es)
     actual = extractor(matches)
     return {
         "matches": matches,

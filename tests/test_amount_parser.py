@@ -174,3 +174,41 @@ class TestParseTextE2E:
         m = all_amounts("1,234,567.00 2.00")
         vals = {x.text: x.amount for x in m}
         assert vals["1,234,567.00"] == 1234.0
+
+
+class TestBoundaryEdges:
+    """Whitespace-boundary edges of the scan regexes (text start and end,
+    one space shared by two matches, JS-only and Python-only spaces)."""
+
+    @pytest.mark.parametrize(
+        "text, span",
+        [("$5.00 paid", (1, 5)), ("paid $5.00", (6, 10)), ("5.00", (0, 4))],
+        ids=["start", "end", "whole_text"],
+    )
+    def test_amount_at_text_edges(self, text, span):
+        (m,) = parse_amount(text)["matches"]
+        assert (m.text, (m.start, m.end)) == ("5.00", span)
+
+    def test_two_amounts_share_one_space(self):
+        r = parse_amount("$1.00 $2.00")
+        assert [(m.text, m.start, m.end) for m in r["matches"]] == [
+            ("1.00", 1, 5), ("2.00", 7, 11)]
+        assert r["match"] == "2.00"
+
+    def test_paren_amount_then_total(self):
+        assert prepare_text("(5.00) Total 7.00") == "5.00 Total 7.00"
+        assert prepare_text("(5.00)") == "5.00"
+        r = parse_amount("(5.00) Total 7.00")
+        assert [(m.text, m.start) for m in r["matches"]] == [("7.00", 11)]
+
+    @pytest.mark.parametrize(
+        "space, anchored",
+        [("﻿", True), ("　", True), ("\x85", False)],
+        ids=["bom", "ideographic_space", "nel"],
+    )
+    def test_space_before_total(self, space, anchored):
+        # BOM and U+3000 are ECMA-262 \s; NEL is Python-only whitespace
+        text = space + "Total 5.00"
+        assert [m.text for m in all_amounts(text, TOTAL_PREPEND)] == (
+            ["5.00"] if anchored else [])
+        assert parse_amount(text)["match"] == "5.00"

@@ -103,11 +103,39 @@ class TestAllDates:
 
     @pytest.mark.parametrize(
         "text",
-        ["", "date", "paid 0000-01-02", "0000/01/01"],
-        ids=["empty", "no_date", "year_zero_iso", "year_zero_slash"],
+        ["", "date", "paid 0000-01-02", "0000/01/01", "x2016-01-02", "a5 Mar 2016"],
+        ids=["empty", "no_date", "year_zero_iso", "year_zero_slash",
+             "word_before_iso", "word_before_day"],
     )
     def test_no_dates(self, text):
         assert all_dates(text) == []
+
+    @pytest.mark.parametrize(
+        "text",
+        ["Sep. \u017fep 5, 2016", "dec: 5 \u017fep 2016",
+         "dic 15 \u017feptiembre 2016", "Jan \u017fep-5-2016",
+         "jan 15 D\u0131c 2016", "jan 15 D\u0130C 2016"],
+        ids=["long_s_middle", "long_s_little", "long_s_es", "long_s_repair",
+             "dotless_i_es", "dotted_i_es"],
+    )
+    def test_non_ascii_month_stem_is_no_match(self, text):
+        # Python's re.I folds these letters onto s / i; a month stem must
+        # be ASCII (another month stem in the text opens the stem gate)
+        assert all_dates(prepare_text(text)) == []
+        assert parse_date(text)["match"] is None
+
+    def test_non_ascii_letter_after_stem_still_folds(self):
+        assert parse_date("Apr\u0131l 5, 2016")["match"] == "2016-04-05"
+
+    @pytest.mark.parametrize(
+        "text, index, found",
+        [("2016-01-02 paid", 0, "2016-01-02"), ("paid 2016-01-02", 5, "2016-01-02"),
+         ("Mar 5 2016 x", 0, "Mar 5 2016"), ("x 5 Mar 2016", 2, "5 Mar 2016")],
+        ids=["iso_start", "iso_end", "month_start", "day_end"],
+    )
+    def test_date_at_text_edges(self, text, index, found):
+        m = parse_date(text)["matches"][0]
+        assert (m.index, m.text) == (index, found)
 
     @pytest.mark.parametrize(
         "text",

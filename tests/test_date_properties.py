@@ -36,11 +36,28 @@ SETTINGS = settings(
 
 def _consuming(pat: re.Pattern) -> re.Pattern:
     # chrono parsers match the leading non-word char as part of the
-    # match (PATTERN = /(\W|^).../) instead of asserting it.
-    return re.compile(pat.pattern.replace(r"(?<!\w)", r"(?:^|\W)", 1), pat.flags)
+    # match (PATTERN = /(\W|^).../) instead of asserting it.  Ours assert
+    # it as ``(?<!\w.)`` right after the first character (date._BOUNDARY):
+    # drop that assertion and consume the boundary in front instead.
+    body, n = re.subn(re.escape(D._BOUNDARY), "", pat.pattern)
+    assert n == 1, (n, pat.pattern)
+    return re.compile(r"(?:^|\W)" + body, pat.flags)
 
 
 _CONSUMING = tuple((_consuming(p), ex) for p, ex in D._PARSERS)
+
+
+def test_consuming_twin_differs_from_each_pattern():
+    """The twin must really have the consuming shape: it finds the date
+    behind a non-word character and not behind a word character, and
+    its match starts one character earlier than ours."""
+    assert len(_CONSUMING) == len(D._PARSERS) == 6
+    for (pat, _), (twin, _) in zip(D._PARSERS, _CONSUMING):
+        assert twin.pattern != pat.pattern
+        assert D._BOUNDARY not in twin.pattern
+    assert [m.start() for m in _CONSUMING[0][0].finditer("#2016-01-02")] == [0]
+    assert [m.start() for m in D._P_ISO.finditer("#2016-01-02")] == [1]
+    assert _CONSUMING[3][0].search("xMar 5 2016") is None
 
 
 def _scan_consuming(text: str) -> list:

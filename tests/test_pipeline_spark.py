@@ -201,6 +201,41 @@ def test_fused_udf_body_looks_up_traced_names(monkeypatch):
     assert all(calls.values()), calls
 
 
+def test_fused_udf_contains_unexpected_row_exception(monkeypatch):
+    """An exception no kernel expected becomes that row's ``error``; the
+    format and text computed before it are kept and the other rows of
+    the batch are unchanged."""
+    import pandas as pd
+
+    from receipt_scanner_spark.functions import udfs
+
+    html = pd.Series([
+        b"<html><body><p>Total $5.00 paid on 2016-08-13</p></body></html>",
+        b"<html><body><p>Total $6.00 BOOM 2016-08-14</p></body></html>",
+        None,
+    ])
+    text = pd.Series([None, None, "Total 7.00"])
+    before = udfs.process_udf.func(html, text)
+    parse_amount = udfs.parse_amount
+
+    def boom(t, config=None):
+        if "BOOM" in t:
+            raise RuntimeError("boom")
+        return parse_amount(t, config)
+
+    monkeypatch.setattr(udfs, "parse_amount", boom)
+    after = udfs.process_udf.func(html, text)
+    bad = after.iloc[1]
+    assert (bad["format"], bad["extracted_text"]) == (
+        before.iloc[1]["format"], before.iloc[1]["extracted_text"])
+    assert "BOOM" in bad["extracted_text"]
+    assert bad["error"] == "internal error: RuntimeError"
+    assert [bad[c] for c in ("amount", "date", "spans", "extra")] == [None] * 4
+    for i in (0, 2):
+        assert after.iloc[i].to_dict() == before.iloc[i].to_dict()
+    assert list(after["amount"]) == ["5.00", None, "7.00"]
+
+
 class TestLineSegmentation:
     """OCR-text line segmentation: a pure function, not a pipeline stage
     (the UDF passes extracted text through — byte-identity contract)."""
@@ -222,11 +257,13 @@ class TestLineSegmentation:
 
         raw = "Total 6,000.00\n####\nDate 2016-08-13"
         year0 = "paid 0000-01-02 on 2020-01-02"
+        long_s = "Sep. \u017fep 5, 2016"
         df = spark.createDataFrame(
-            [("u1", None, raw, "en"), ("u2", None, year0, "en")],
+            [("u1", None, raw, "en"), ("u2", None, year0, "en"),
+             ("u3", None, long_s, "en")],
             "url string, html binary, text string, lang string",
         )
-        r1, r2 = [
+        r1, r2, r3 = [
             row["r"] for row in df.orderBy("url")
             .select(process_udf(F.col("html"), F.col("text")).alias("r"))
             .collect()
@@ -234,3 +271,5 @@ class TestLineSegmentation:
         assert r1["extracted_text"] == raw  # pass-through, byte-identical
         # a year-0 date is a no-match, not a failed batch
         assert (r2["date"], r2["error"]) == ("2020-01-02", None)
+        # so is a month name whose stem only case-folds to ASCII
+        assert (r3["date"], r3["error"]) == (None, None)
