@@ -105,39 +105,136 @@ _HAS_ENTITY = re.compile(r"&[#a-zA-Z]")
 # (endpos, tag, start/startend/end decision): simple name, simply-
 # quoted or conservative bare values, no stray '/' or '='.  Anything
 # else falls through to the faithful tolerant machinery.
-_SIMPLE_OPEN = re.compile(
-    r"<([a-zA-Z][a-zA-Z0-9]*)"
-    r"((?:\s+[a-zA-Z][-a-zA-Z0-9_:.]*"
-    r"(?:\s*=\s*(?:\"[^\"<>]*\"|'[^'<>]*'|[-a-zA-Z0-9_./:;,#%+]+))?)*)"
-    r"\s*(/?)>"
+_NAME = r"[a-zA-Z][a-zA-Z0-9]*"
+_ATTRS = (
+    r"(?:\s+[a-zA-Z][-a-zA-Z0-9_:.]*"
+    r"(?:\s*=\s*(?:\"[^\"<>]*\"|'[^'<>]*'|[-a-zA-Z0-9_./:;,#%+]+))?)*"
 )
-_SIMPLE_CLOSE = re.compile(r"</([a-zA-Z][a-zA-Z0-9]*)\s*>")
+_SIMPLE_OPEN = re.compile(rf"<({_NAME}){_ATTRS}\s*(/?)>")
+_SIMPLE_CLOSE = re.compile(rf"</({_NAME})\s*>")
 
-# Document-level clean scan: ONE combined token regex — groups 1-3 are
-# exactly _SIMPLE_OPEN's, group 4 exactly _SIMPLE_CLOSE's, plus a
-# doctype branch (consumes to the first '>', as parse_html_declaration
-# does).  See the fast-path block in extract_main_text_fast for the
-# strict-subset equivalence argument.
+# Document-level clean scan: ONE combined token regex whose start/end
+# branches are exactly _SIMPLE_OPEN's and _SIMPLE_CLOSE's grammars,
+# plus a doctype branch (consumes to the first '>', as
+# parse_html_declaration does) and a catch-all for any other '<'.
+# ``m.lastindex`` names the token: 1 start tag (name in group 1),
+# 2 startend tag (name in group 1), 3 end tag (name in group 3),
+# 4 a '<' no clean token starts at (bail), None doctype.  See the
+# fast-path block in extract_main_text_fast for the strict-subset
+# equivalence argument.
 _CLEAN_ANY = re.compile(
-    r"<(?:([a-zA-Z][a-zA-Z0-9]*)"
-    r"((?:\s+[a-zA-Z][-a-zA-Z0-9_:.]*"
-    r"(?:\s*=\s*(?:\"[^\"<>]*\"|'[^'<>]*'|[-a-zA-Z0-9_./:;,#%+]+))?)*)"
-    r"\s*(/?)>"
-    r"|/([a-zA-Z][a-zA-Z0-9]*)\s*>"
-    r"|![dD][oO][cC][tT][yY][pP][eE][^>]*>)"
+    rf"<(?:({_NAME}){_ATTRS}\s*(?:>|(/)>)"
+    rf"|/({_NAME})\s*>"
+    r"|![dD][oO][cC][tT][yY][pP][eE][^>]*>"
+    r"|())"
 )
+_START, _STARTEND, _END, _STRAY = 1, 2, 3, 4
+
+# Tag → action bits for the clean scan: one dict probe per token
+# instead of lower() plus three set probes.
+_DROP, _LINK, _CHROME, _BLOCK, _CDATA, _SKIP = 1, 2, 4, 8, 16, 32
+
+
+def _tag_bits(tag: str) -> int:
+    """Action bits of a lower-case tag name (0 = no effect)."""
+    if tag in _DROP_SUBTREE:
+        # a drop tag does nothing else (handle_starttag returns early)
+        return _DROP | (_CDATA if tag in _CDATA_ELEMS else 0)
+    bits = (
+        (_LINK if tag == "a" else 0)
+        | (_CHROME if tag in _CHROME_TAGS else 0)
+        | (_BLOCK if tag in _BLOCK_TAGS else 0)
+    )
+    if bits & _CHROME and bits & _BLOCK:
+        # a chrome BLOCK tag (not menu) fences its subtree off: every
+        # block that opens inside it is chrome-tainted (see _CHROME_BODY)
+        bits |= _SKIP
+    return bits
+
+
+_ACTION_TAGS = _DROP_SUBTREE | _BLOCK_TAGS | _CHROME_TAGS | {"a"}
+# Keyed by the tag name as written, for the action tags in lower, upper
+# and capitalized spelling.  A name not found is looked up again
+# lower-cased, and a name that is no action tag has no bits.
+_TAG_BITS: dict[str, int] = {
+    v: _tag_bits(t)
+    for t in _ACTION_TAGS
+    for v in (t, t.upper(), t.capitalize())
+}
+
+
+def _ascii_ci(word: str) -> str:
+    """``word`` matched in either ASCII case without re.IGNORECASE (which
+    would also fold U+017F onto 's' and U+212A onto 'k')."""
+    return "".join(f"[{c}{c.upper()}]" if c.isalpha() else c for c in word)
+
+
+# Subtree skips (clean scan).  Some subtrees can contribute no text to
+# the output; what survives them is only the state they leave behind.
+# When the text up to the first matching closer is a "body" of text and
+# clean tokens that leave that state as they found it, the scan jumps
+# past the closer.  A body ends early on anything else — a token with
+# another effect, a comment, doctype, bogus tag or stray '<' — and the
+# subtree is then scanned token by token as usual.
+#
+# * Chrome (drop_chrome=True only): a clean chrome BLOCK tag (nav,
+#   header, footer, aside, form; not menu, which is no block tag) opens
+#   a subtree whose blocks are all chrome-tainted, so none of its text
+#   can be selected.  Opener and closer both flush the current block,
+#   which is all the skip has to do.  _CHROME_BODY allows clean
+#   startend tags of any name (handle_startendtag only flushes), clean
+#   start/end tags whose effect is at most the flush, and clean
+#   <a>...</a> pairs around such content.
+# * Drop (every profile): a non-cdata drop tag (head, noscript, svg, ...)
+#   emits nothing until its closer, and neither it nor its closer
+#   flushes.  _DROP_BODY allows clean tags with no effect at all and
+#   complete script/style elements (closed as _CDATA_CLOSERS close
+#   them), so the skip changes no state.
+
+
+def _ci_trie(words) -> str:
+    """Alternation of ``words`` (ASCII case-insensitive) grouped by first
+    letter, so a name is rejected after one test per first letter."""
+    groups: dict[str, list[str]] = {}
+    for w in sorted(words):
+        groups.setdefault(w[0], []).append(_ascii_ci(w[1:]))
+    return "|".join(f"{_ascii_ci(c)}(?:{'|'.join(rest)})" for c, rest in groups.items())
+
+
+def _name_except(tags) -> str:
+    """A clean tag name that is none of ``tags``."""
+    return rf"(?!(?:{_ci_trie(tags)})(?![a-zA-Z0-9])){_NAME}"
+
+
+_FLUSH_ONLY = _name_except(t for t in _ACTION_TAGS if _tag_bits(t) != _BLOCK)
+_NEUTRAL = (
+    rf"<(?:{_FLUSH_ONLY}{_ATTRS}\s*/?>|{_NAME}{_ATTRS}\s*/>|/{_FLUSH_ONLY}\s*>)"
+)
+_CHROME_BODY = re.compile(
+    rf"[^<]*+(?:(?:<[aA]{_ATTRS}\s*>[^<]*+(?:{_NEUTRAL}[^<]*+)*+</[aA]\s*>"
+    rf"|{_NEUTRAL})[^<]*+)*+"
+)
+_NO_ACTION = _name_except(_ACTION_TAGS)
+_CDATA_ELEMENT = "|".join(
+    # the closer under re.I, exactly as _CDATA_CLOSERS
+    rf"<{_ascii_ci(t)}{_ATTRS}\s*>(?s:.*?)(?i:{_CDATA_CLOSERS[t].pattern})"
+    for t in _CDATA_ELEMS
+)
+_DROP_BODY = re.compile(
+    rf"[^<]*+(?:(?:<{_NO_ACTION}{_ATTRS}\s*/?>|</{_NO_ACTION}\s*>"
+    rf"|{_CDATA_ELEMENT})[^<]*+)*+"
+)
+_SUBTREE_CLOSERS = {
+    t: re.compile(rf"</{_ascii_ci(t)}\s*>")
+    for t in _ACTION_TAGS
+    if _tag_bits(t) & _SKIP or _tag_bits(t) == _DROP
+}
 
 # start-tag scan budget multiplier (see module docstring)
 _SCAN_BUDGET_FACTOR = 64
 
-
-class _Block:
-    __slots__ = ("parts", "link_chars", "chrome_seen")
-
-    def __init__(self, chrome_seen: bool):
-        self.parts: list[str] = []
-        self.link_chars = 0
-        self.chrome_seen = chrome_seen
+# A block is one list: [chrome_seen, link_chars, *text_parts].
+_CHROME_SEEN, _LINK_CHARS, _PARTS = 0, 1, 2
 
 
 def extract_main_text_fast(
@@ -156,8 +253,8 @@ def extract_main_text_fast(
     else:
         text = html_bytes
 
-    blocks: list[_Block] = []
-    current: _Block | None = None
+    blocks: list[list] = []
+    current: list | None = None
     drop_depth = 0
     link_depth = 0
     chrome_depth = 0
@@ -169,20 +266,20 @@ def extract_main_text_fast(
         if drop_depth or not data:
             return
         if current is None:
-            current = _Block(chrome_depth > 0)
+            current = [chrome_depth > 0, 0]
             blocks.append(current)
         if decode and _HAS_ENTITY.search(data):
             data = unescape(data)
-        current.parts.append(data)
+        current.append(data)
         if link_depth > 0:
             # == len(_WS.sub(" ", data).strip()): str.split and re \s
             # agree on the whitespace set for every Unicode codepoint
             # (verified exhaustively; split avoids building the string)
             words = data.split()
             if words:
-                current.link_chars += sum(map(len, words)) + len(words) - 1
+                current[_LINK_CHARS] += sum(map(len, words)) + len(words) - 1
         if chrome_depth > 0:
-            current.chrome_seen = True
+            current[_CHROME_SEEN] = True
 
     def handle_starttag(tag: str) -> None:
         nonlocal current, drop_depth, link_depth, chrome_depth
@@ -216,98 +313,132 @@ def extract_main_text_fast(
     # would), the doctype branch consumes to the same first '>', and
     # cdata jumps use the same closer regexes.  ANY '<' not consumed by
     # a clean token (bogus tags, comments, PIs, marked sections,
-    # incomplete constructs, missing-'>' doctypes) lands in a gap or the
-    # tail, is detected by the '<'-in-gap check, and BAILS: state is
-    # reset and the document re-parses through the faithful loop below.
-    # Clean documents (the overwhelming web-scale common case) never
-    # touch the per-'<' machinery; irregular ones pay one extra partial
-    # scan.
+    # incomplete constructs, missing-'>' doctypes) is the first '<' the
+    # search meets after the previous token, so it matches the _STRAY
+    # catch-all and BAILS: state is reset and the document re-parses
+    # through the faithful loop below.  Clean documents (the
+    # overwhelming web-scale common case) never touch the per-'<'
+    # machinery; irregular ones pay one extra partial scan.
     n = len(text)
     pos = 0
     clean_ok = True
-    # hot-loop locals (attribute lookups cost in a 100-token/doc loop);
-    # the inlined emit/handler bodies below are LINE-FOR-LINE the same
-    # logic as emit()/handle_starttag()/handle_endtag() above — the
+    # hot-loop locals; the inlined emit/handler bodies below are the
+    # same logic as emit()/handle_starttag()/handle_endtag() above, with
+    # the tag's set memberships read from one _TAG_BITS probe — the
     # functions remain the readable spec for the faithful loop.
-    scan = _CLEAN_ANY.search
-    find_lt = text.find
+    scanner = _CLEAN_ANY.scanner
+    scan = scanner(text).search  # resumes after the previous match
     has_entity = _HAS_ENTITY.search
-    drop_tags, block_tags = _DROP_SUBTREE, _BLOCK_TAGS
-    chrome_tags, cdata_elems = _CHROME_TAGS, _CDATA_ELEMS
+    tag_bits = _TAG_BITS.get
+    chrome_body, drop_body = _CHROME_BODY.match, _DROP_BODY.match
+    closer_at: dict[str, re.Match | None] = {}
+
+    def subtree_end(tag: str, start: int, body) -> int:
+        """End of the first closer of ``tag`` at or after ``start`` when
+        the text up to it is ``body``, else -1 (see _SUBTREE_CLOSERS)."""
+        # a cached closer is still the first one while it lies ahead:
+        # the scan only moves forward
+        cm = closer_at.get(tag, False)
+        if cm is False or (cm is not None and cm.start() < start):
+            cm = closer_at[tag] = _SUBTREE_CLOSERS[tag].search(text, start)
+        if cm is None:
+            return -1
+        cs = cm.start()
+        return cm.end() if body(text, start, cs).end() == cs else -1
+
     while True:
-        m = scan(text, pos)
+        m = scan()
         if m is None:
-            tail = text[pos:]
-            if "<" in tail:
-                clean_ok = False
-            else:
-                emit(tail)
-                pos = n
+            # no '<' left: the rest is one text run
+            emit(text[pos:])
+            pos = n
             break
-        s = m.start()
-        if find_lt("<", pos, s) != -1:
-            clean_ok = False
-            break
+        s, e = m.span()
         if s > pos and not drop_depth:
             data = text[pos:s]
             if current is None:
-                current = _Block(chrome_depth > 0)
+                current = [chrome_depth > 0, 0]
                 blocks.append(current)
-            if has_entity(data):
+            if "&" in data and has_entity(data):
                 data = unescape(data)
-            current.parts.append(data)
+            current.append(data)
             if link_depth:
                 words = data.split()
                 if words:
-                    current.link_chars += sum(map(len, words)) + len(words) - 1
+                    current[_LINK_CHARS] += sum(map(len, words)) + len(words) - 1
             if chrome_depth:
-                current.chrome_seen = True
-        g = m.group
-        tag = g(1)
-        if tag is not None:
-            tag = tag.lower()
-            if g(3):
-                if tag in block_tags:
-                    current = None
-            else:
-                if tag in drop_tags:
-                    drop_depth += 1
-                else:
-                    if tag == "a":
-                        link_depth += 1
-                    if tag in chrome_tags:
-                        chrome_depth += 1
-                    if tag in block_tags:
-                        current = None
-                if tag in cdata_elems:
-                    cm = _CDATA_CLOSERS[tag].search(text, m.end())
-                    if cm is None:
-                        # rest never leaves cdata: flushed RAW at close
-                        emit(text[m.end():], decode=False)
-                        pos = n
-                        break
-                    if cm.start() > m.end():
-                        emit(text[m.end() : cm.start()], decode=False)
-                    handle_endtag(tag)
-                    pos = cm.end()
-                    continue
-            pos = m.end()
-        else:
-            close = g(4)
-            if close is not None:
-                tag = close.lower()
-                if tag in drop_tags:
+                current[_CHROME_SEEN] = True
+        kind = m.lastindex
+        if kind == _END:
+            tag = m[3]
+            bits = tag_bits(tag)
+            if bits is None:
+                bits = tag_bits(tag.lower(), 0)
+            if bits == _BLOCK:
+                current = None
+            elif bits:
+                if bits & _DROP:
                     if drop_depth:
                         drop_depth -= 1
                 else:
-                    if tag == "a" and link_depth:
+                    if bits & _LINK and link_depth:
                         link_depth -= 1
-                    if tag in chrome_tags and chrome_depth:
+                    if bits & _CHROME and chrome_depth:
                         chrome_depth -= 1
-                    if tag in block_tags:
+                    if bits & _BLOCK:
                         current = None
-            # else: doctype branch — consumed, nothing emitted
-            pos = m.end()
+        elif kind == _START:
+            tag = m[1]
+            bits = tag_bits(tag)
+            if bits is None:
+                bits = tag_bits(tag.lower(), 0)
+            if bits == _BLOCK:
+                current = None
+            elif bits:
+                if bits & _DROP:
+                    tag = tag.lower()
+                    if bits & _CDATA:
+                        # script/style: everything up to the closer is
+                        # cdata inside a drop subtree, so nothing is
+                        # emitted and the closer restores drop_depth
+                        cm = _CDATA_CLOSERS[tag].search(text, e)
+                        if cm is None:
+                            pos = n  # the rest never leaves cdata
+                            break
+                        pos = cm.end()
+                        scan = scanner(text, pos).search
+                        continue
+                    end = subtree_end(tag, e, drop_body)
+                    if end >= 0:
+                        pos = end
+                        scan = scanner(text, pos).search
+                        continue
+                    drop_depth += 1
+                else:
+                    if bits & _SKIP and drop_chrome:
+                        end = subtree_end(tag.lower(), e, chrome_body)
+                        if end >= 0:
+                            current = None
+                            pos = end
+                            scan = scanner(text, pos).search
+                            continue
+                    if bits & _LINK:
+                        link_depth += 1
+                    if bits & _CHROME:
+                        chrome_depth += 1
+                    if bits & _BLOCK:
+                        current = None
+        elif kind == _STARTEND:
+            bits = tag_bits(m[1])
+            if bits is None:
+                bits = tag_bits(m[1].lower(), 0)
+            if bits & _BLOCK:
+                current = None
+        elif kind == _STRAY:
+            clean_ok = False
+            break
+        # else: doctype — consumed, nothing emitted
+        pos = e
     if clean_ok:
         pos = n  # faithful loop below no-ops
     else:
@@ -360,7 +491,7 @@ def extract_main_text_fast(
             sm = _SIMPLE_OPEN.match(text, lt)
             if sm is not None:
                 tag = sm.group(1).lower()
-                if sm.group(3):
+                if sm.group(2):
                     # startendtag: block flush only
                     if tag in _BLOCK_TAGS:
                         current = None
@@ -534,13 +665,14 @@ def extract_main_text_fast(
 
     kept: list[str] = []
     for b in blocks:
+        if drop_chrome and b[_CHROME_SEEN]:
+            continue
         # identical to _WS.sub(" ", joined).strip() — see emit() note
-        t = " ".join("".join(b.parts).split())
-        if len(t) < min_block_chars:
+        t = " ".join("".join(b[_PARTS:]).split())
+        # segment_blocks drops empty blocks before selection
+        if not t or len(t) < min_block_chars:
             continue
-        if drop_chrome and b.chrome_seen:
-            continue
-        if b.link_chars / len(t) > max_link_density:
+        if b[_LINK_CHARS] / len(t) > max_link_density:
             continue
         kept.append(t)
     return "\n".join(kept)

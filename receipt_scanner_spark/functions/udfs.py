@@ -36,8 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# html_fast is the production stripper (~2.6x faster); extract/html.py is
-# the executable spec it is differentially tested against.
+# html_fast is the production stripper; extract/html.py is the executable
+# spec it is differentially tested against.
 from ..extract.html_fast import extract_main_text_fast as extract_main_text
 from ..extract.pdf import OCR_UNAVAILABLE_ERROR, process_pdf
 from ..extract.sniff import maybe_gunzip, sniff_format, unsupported_error

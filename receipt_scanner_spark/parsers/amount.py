@@ -30,6 +30,14 @@ The reference's leading ``(^|\\s)`` is therefore written ``[\\s]`` and run
 over ``" " + text``: the sentinel space at position 0 matches where
 ``^`` did, and spans are shifted back by one.  The ISO-code alternation
 is grouped by first letter (``_code_trie``), which changes no match.
+
+Keyword pre-scan (speed, not semantics): a scan with a non-empty prepend
+(the ``total`` sub-parser's keywords) can only start at a whitespace
+right before a prepend match.  Those starts are found once per text
+(``_prepend_starts``: ``str.find`` of the total keywords, a regex head
+for any other prepend) and each scan regex is matched there only, with
+finditer's rule that a match starts at or after the previous one's end
+(``_matches_at``): the same matches as four full scans.
 """
 
 from __future__ import annotations
@@ -82,26 +90,31 @@ _ISO_CODES = (
 
 def _code_trie(codes: tuple[str, ...]) -> str:
     """The codes as an alternation grouped by first letter,
-    ``A(?:ED|FN|…)|B(?:…)|…``.  Every code is three letters, so at most
-    one branch can match at a position and branch order cannot change a
-    match; the engine now rejects a word after one test per first letter
-    instead of one per code."""
+    ``(?=[AB…])(?:A(?:ED|FN|…)|B(?:…)|…)``.  Every code is three letters,
+    so at most one branch can match at a position and branch order cannot
+    change a match; the engine rejects a word after one test per first
+    letter instead of one per code.  The lookahead is the first letters as
+    one class (under re.I it folds exactly as the branch letters do), so
+    a digit or symbol is rejected by one test instead of one per letter."""
     groups: dict[str, list[str]] = {}
     for code in codes:
         groups.setdefault(code[0], []).append(code[1:])
-    return "|".join(f"{first}(?:{'|'.join(rest)})" for first, rest in groups.items())
+    trie = "|".join(f"{first}(?:{'|'.join(rest)})" for first, rest in groups.items())
+    return f"(?=[{''.join(groups)}])(?:{trie})"
 
 
 _CURRENCY_CODES = _code_trie(_ISO_CODES)
 
 from .jsws import JS_WS as _JS_WS
 
+_IS_WS = re.compile(f"[{_JS_WS}]").match
 _FLOAT_PREFIX = re.compile(r"^[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?")
 
 # Compiled-regex caches, keyed by (decimal, thousand, prepend).
 _FRACTIONAL_CACHE: dict[tuple[str, str, str], re.Pattern[str]] = {}
 _WHOLE_CACHE: dict[tuple[str, str, str], re.Pattern[str]] = {}
 _PREPARE_CACHE: dict[tuple[str, str], re.Pattern[str]] = {}
+_PREPEND_CACHE: dict[str, re.Pattern[str]] = {}
 
 
 def parse_float_js(s: str) -> float:
@@ -184,33 +197,59 @@ def prepare_text(text: str, decimal: str = ".", thousand: str = ",") -> str:
     return _prepare_regexp(decimal, thousand).sub(_unwrap, " " + text)[1:]
 
 
-def find_amounts(
-    text: str,
-    decimal: str | None = None,
-    thousand: str | None = None,
-    prepend: str = "",
-    prepared: bool = False,
-) -> list[AmountMatch]:
-    """One separator-profile scan: fractional matches then whole matches.
+def _prepend_head(prepend: str) -> re.Pattern[str]:
+    """The head of every scan regex with ``prepend`` (_fractional_regexp,
+    _whole_regexp): a whitespace followed by a ``prepend`` match."""
+    pat = _PREPEND_CACHE.get(prepend)
+    if pat is None:
+        pat = _PREPEND_CACHE[prepend] = re.compile(
+            rf"[{_JS_WS}](?={prepend})", re.IGNORECASE
+        )
+    return pat
 
-    Mirror of amount_parser.js:39-61 (including prepare_text applied
-    before each method pass; it is idempotent).
-    """
-    decimal = decimal or "."
-    thousand = thousand or ","
+
+def _prepend_starts(padded: str, prepend: str) -> list[int] | None:
+    """Every position a scan with ``prepend`` can start at: a whitespace
+    followed by a ``prepend`` match.  None for the empty prepend, where
+    that is every whitespace and a full scan is cheaper."""
+    if not prepend:
+        return None
+    if prepend == TOTAL_PREPEND:
+        low = padded.lower()
+        if len(low) == len(padded):  # else U+0130 shifted the positions
+            starts = []
+            for word in _TOTAL_WORDS:
+                i = low.find(word, 1)
+                while i >= 0:
+                    if _IS_WS(padded, i - 1):
+                        starts.append(i - 1)
+                    i = low.find(word, i + 1)
+            starts.sort()
+            return starts
+    return [m.start() for m in _prepend_head(prepend).finditer(padded)]
+
+
+def _matches_at(pat: re.Pattern[str], padded: str, starts: list[int] | None):
+    """``pat.finditer(padded)`` when every match starts in ``starts``."""
+    if starts is None:
+        yield from pat.finditer(padded)
+        return
+    end = 0
+    for p in starts:
+        if p >= end:
+            m = pat.match(padded, p)
+            if m is not None:
+                end = m.end()
+                yield m
+
+
+def _find(
+    padded: str, decimal: str, thousand: str, prepend: str, starts: list[int] | None
+) -> list[AmountMatch]:
     out: list[AmountMatch] = []
-    # the reference re-applies prepare_text before each method pass
-    # (amount_parser.js:49); it is idempotent (a strip never exposes a
-    # new whitespace-delimited "(amount)" form), so one application is
-    # output-identical — pinned by the 5,000-text node differential
-    # oracle (tools/diff_amount_oracle.py).  ``prepared=True`` lets the
-    # cascade reuse an already-prepared text across sub-parsers.
-    if not prepared:
-        text = prepare_text(text, decimal, thousand)
-    padded = " " + text  # the sentinel matches where ``^`` did; spans shift by 1
     for regexp_builder in (_fractional_regexp, _whole_regexp):
         pat = regexp_builder(decimal, thousand, prepend)
-        for m in pat.finditer(padded):
+        for m in _matches_at(pat, padded, starts):
             raw = m.group(2)
             value = parse_float_js(
                 raw.replace(thousand, "", 1).replace(decimal, ".", 1)
@@ -227,6 +266,32 @@ def find_amounts(
     return out
 
 
+def find_amounts(
+    text: str,
+    decimal: str | None = None,
+    thousand: str | None = None,
+    prepend: str = "",
+    prepared: bool = False,
+) -> list[AmountMatch]:
+    """One separator-profile scan: fractional matches then whole matches.
+
+    Mirror of amount_parser.js:39-61 (including prepare_text applied
+    before each method pass; it is idempotent).
+    """
+    decimal = decimal or "."
+    thousand = thousand or ","
+    # the reference re-applies prepare_text before each method pass
+    # (amount_parser.js:49); it is idempotent (a strip never exposes a
+    # new whitespace-delimited "(amount)" form), so one application is
+    # output-identical — pinned by the 5,000-text node differential
+    # oracle (tools/diff_amount_oracle.py).  ``prepared=True`` lets the
+    # cascade reuse an already-prepared text across sub-parsers.
+    if not prepared:
+        text = prepare_text(text, decimal, thousand)
+    padded = " " + text  # the sentinel matches where ``^`` did; spans shift by 1
+    return _find(padded, decimal, thousand, prepend, _prepend_starts(padded, prepend))
+
+
 def all_amounts(
     text: str,
     prepend: str = "",
@@ -239,8 +304,13 @@ def all_amounts(
     profile once, not once per sub-parser."""
     us = _prepared_us if _prepared_us is not None else prepare_text(text, ".", ",")
     eu = _prepared_eu if _prepared_eu is not None else prepare_text(text, ",", ".")
-    matches = find_amounts(us, None, None, prepend, prepared=True)
-    matches_comma = find_amounts(eu, ",", ".", prepend, prepared=True)
+    us, eu = " " + us, " " + eu  # sentinels, as in find_amounts
+    starts_us = _prepend_starts(us, prepend)
+    # the profiles' texts differ only where a parenthesized amount was
+    # stripped; otherwise they share the keyword starts
+    starts_eu = starts_us if eu == us else _prepend_starts(eu, prepend)
+    matches = _find(us, ".", ",", prepend, starts_us)
+    matches_comma = _find(eu, ",", ".", prepend, starts_eu)
     if len(matches_comma) > len(matches):
         return matches_comma
     return matches
@@ -260,6 +330,10 @@ def extract_largest(values: list[AmountMatch]) -> str | None:
 
 
 TOTAL_PREPEND = "(?:Total(?: due)?|Balance Due)[^a-z0-9]*"
+# The words a TOTAL_PREPEND match starts with, lower-cased.  re.I folds no
+# non-ASCII code point onto any of their letters, so they occur in a text
+# exactly where they occur in its lower() (when that keeps the length).
+_TOTAL_WORDS = ("total", "balance due")
 
 
 class _TotalParser:

@@ -55,6 +55,11 @@ skips in C to the next candidate start (tests/test_parser_prefix.py):
 * month names open with their first letter as an ASCII case pair
   outside re.I, ``(?-i:[JjFf…])``, then dispatch on it (_month_names).
 
+The five digit-led patterns are matched only where one candidate scan
+(_DIGIT_LED_SCANS) finds that at least one of them can match, instead of
+each walking every digit of the text; the matches are those of five full
+scans (tests/test_date_properties.py).
+
 Designed no-match: a month name's three-letter stem is ASCII.  Python's
 re.I folds U+017F (long s) onto ``s`` and U+0130/U+0131 onto ``i``, so
 ``ſep`` or ``dıc`` used to match and then fail the month lookup with a
@@ -110,7 +115,9 @@ def _month_names(branches: tuple[str, ...], after_first: str = "") -> str:
     three-letter stem is ASCII: a stem letter in _NON_ASCII_FOLDS is a case
     pair outside re.I too.  Letters after the stem still fold under re.I.
     ``after_first`` goes right after the first letter (the grammar's
-    ``(?<!\w.)`` boundary)."""
+    ``(?<!\w.)`` boundary).  Before the dispatch, one lookahead tests the
+    next two letters against every stem's second and third letter, which
+    turns most words away before the per-letter lookbehinds run."""
     groups: dict[str, list[str]] = {}
     for b in branches:
         stem = "".join(
@@ -118,10 +125,13 @@ def _month_names(branches: tuple[str, ...], after_first: str = "") -> str:
         )
         groups.setdefault(b[0].lower(), []).append(stem + b[3:])
     first = "".join(c.upper() + c for c in groups)
+    pairs = "|".join(sorted({
+        "".join(f"[{c}{c.upper()}]" for c in b[1:3].lower()) for b in branches
+    }))
     dispatch = "|".join(
         f"(?<=[{c.upper()}{c}])(?:{'|'.join(rest)})" for c, rest in groups.items()
     )
-    return f"((?-i:[{first}]){after_first}(?:{dispatch}))"
+    return f"((?-i:[{first}]){after_first}(?=(?-i:{pairs}))(?:{dispatch}))"
 
 
 # EN + ES month names as one capture group (repairs (c) and (d)).
@@ -269,9 +279,17 @@ def prepare_text(text: str) -> str:
 # ``(?<!\w)`` does.  _BOUNDARY is the one spelling of that assertion.
 _BOUNDARY = r"(?<!\w.)"
 
+
+def _digit_led(head: str, tail: str) -> str:
+    """A pattern that opens with a digit at a word boundary; group 1 is
+    that digit plus ``head``, ``tail`` is the rest."""
+    return "([0-9]" + _BOUNDARY + head + ")" + tail
+
+
 # 1. EN ISO: yyyy-MM-dd with optional Thh:mm:ss(.ms)(Z|±hh:mm)
-_P_ISO = re.compile(
-    r"([0-9]" + _BOUNDARY + r"[0-9]{3})-([0-9]{1,2})-([0-9]{1,2})"
+_ISO = (
+    r"[0-9]{3}",
+    r"-([0-9]{1,2})-([0-9]{1,2})"
     r"(?:[Tt]([0-9]{1,2}):([0-9]{1,2})"
     r"(?::([0-9]{1,2})(?:\.(\d{1,4}))?)?"
     r"(?:Z|([+-]\d{2}):?(\d{2})?)?"
@@ -282,16 +300,20 @@ _P_ISO = re.compile(
 
 # 2. EN slash: (m)m/(d)d/yy(yy) with separators / - . ; month-first with swap.
 #    Year REQUIRED here (yearless forms are uncertain → filtered anyway).
-_P_SLASH = re.compile(
-    r"([0-9]" + _BOUNDARY + r"[0-9]?)[/.\-]([0-9]{1,2})[/.\-]([0-9]{4}|[0-9]{2})"
-    r"(?!\w)"
+_SLASH = (
+    r"[0-9]?",
+    r"[/.\-]([0-9]{1,2})[/.\-]([0-9]{4}|[0-9]{2})"
+    r"(?!\w)",
+    0,
 )
 
 # 3. EN slash starting with year: yyyy/(m)m/(d)d (slash or dot; the hyphen
 #    form is the ISO parser's).
-_P_SLASH_YEAR_FIRST = re.compile(
-    r"([0-9]" + _BOUNDARY + r"[0-9]{3})[/.]([0-9]{1,2})[/.]([0-9]{1,2})"
-    r"(?!\w)"
+_SLASH_YEAR_FIRST = (
+    r"[0-9]{3}",
+    r"[/.]([0-9]{1,2})[/.]([0-9]{1,2})"
+    r"(?!\w)",
+    0,
 )
 
 # 4. EN month-name middle-endian: Mar 30 2016 / March 5, 2016 / Mar-05-2016.
@@ -308,8 +330,9 @@ _P_MIDDLE = re.compile(
 )
 
 # 5. EN month-name little-endian: 30 June 2016 / 30-June-2016 / 5th of May 2016.
-_P_LITTLE = re.compile(
-    r"([0-9]" + _BOUNDARY + r"[0-9]?)(?:st|nd|rd|th)?"
+_LITTLE = (
+    r"[0-9]?",
+    r"(?:st|nd|rd|th)?"
     r"(?:-|/|\s*(?:of)?\s*)"
     + _month_names(_MONTHS_EN)
     + r"(?:-|/|\s*,\s*|\s+)"
@@ -319,14 +342,20 @@ _P_LITTLE = re.compile(
 )
 
 # 6. ES month-name little-endian: 15 Dic 2016 / 15 de Diciembre de 2016.
-_P_ES_LITTLE = re.compile(
-    r"([0-9]" + _BOUNDARY + r"[0-9]?)(?:º|ª|°)?"
+_ES_LITTLE = (
+    r"[0-9]?",
+    r"(?:º|ª|°)?"
     r"(?:\s*(?:de|,|-)\s*|\s+|-|/)"
     + _month_names(_MONTHS_ES)
     + r"(?:\s*(?:del|de|,|-)\s*|\s+|-|/)"
     r"([0-9]{4}|[0-9]{2})"
     r"(?!\w)",
     re.IGNORECASE,
+)
+
+_P_ISO, _P_SLASH, _P_SLASH_YEAR_FIRST, _P_LITTLE, _P_ES_LITTLE = (
+    re.compile(_digit_led(head, tail), flags)
+    for head, tail, flags in (_ISO, _SLASH, _SLASH_YEAR_FIRST, _LITTLE, _ES_LITTLE)
 )
 
 
@@ -383,30 +412,84 @@ _PARSERS = (
     (_P_ES_LITTLE, _extract_little),
 )
 
+# Digit-led candidate pre-scan.  Five of the six patterns open with a
+# digit at a word boundary, so each used to walk every digit of the text.
+# One scan now finds the positions where at least one of them matches:
+# the boundary digit, then a lookahead over their tails (exactly the
+# patterns minus the shared first digit).  Each pattern is matched only
+# there, skipping positions before the end of its own previous match —
+# the matches finditer would have found, in the same order.
+_DIGIT_LED = {0: _ISO, 1: _SLASH, 2: _SLASH_YEAR_FIRST, 4: _LITTLE, 5: _ES_LITTLE}
+
+# What every day-month tail (patterns 5 and 6) needs up to its month
+# name, as one cheap test that rejects most digits before the month-name
+# machinery runs: a second digit; the ordinal suffix (st/nd/rd/th, or
+# º/ª, all word characters, ſ included as re.I folds it onto s); the
+# separators (whitespace , - / °, possessive since none of what follows
+# is one of them) with at most one "of"/"de" (re.I folds no other letter
+# onto o, f, d or e); and a month's three-letter stem, which is ASCII in
+# either case (_month_names).
+_DAY_MONTH_GUARD = (
+    r"(?=[0-9]?[^\W\d]{0,2}[\s,\-/ºª°]*+(?:[oOdD][fFeE][\s,\-/]*)?(?:"
+    + "|".join(sorted({
+        "".join(f"[{c}{c.upper()}]" for c in b[:3].lower())
+        for b in _MONTHS_EN + _MONTHS_ES
+    }))
+    + "))"
+)
+
+
+def _digit_led_scan(en: bool, es: bool):
+    """(candidate finditer, ((order, pattern, extract), ...)) for the
+    digit-led patterns the month gates leave on."""
+    orders = (0, 1, 2) + ((4,) if en else ()) + ((5,) if es else ())
+    tails = []
+    for order in orders:
+        head, tail, flags = _DIGIT_LED[order]
+        tails.append(f"(?i:{head}{tail})" if flags & re.IGNORECASE else head + tail)
+    numeric, day_month = "|".join(tails[:3]), "|".join(tails[3:])
+    if day_month:
+        numeric += f"|{_DAY_MONTH_GUARD}(?:{day_month})"
+    candidates = re.compile("[0-9]" + _BOUNDARY + "(?=" + numeric + ")")
+    return candidates.finditer, tuple((order, *_PARSERS[order]) for order in orders)
+
+
+_DIGIT_LED_SCANS = {
+    (en, es): _digit_led_scan(en, es) for en in (False, True) for es in (False, True)
+}
+
+
+def _keep(found: list, order: int, m: re.Match, extract) -> None:
+    ymd = extract(m)
+    if ymd is None:
+        return
+    y, mo, d = ymd
+    if d == 0:  # certainYearRefiner day-0 guard (date_parser.js:113)
+        return
+    if y == 0:
+        # "0000-01-02": the one year the four-digit-year patterns can
+        # yield that datetime.date cannot hold.  Dropped as a no-match so
+        # the other candidates still rank.
+        return
+    found.append((m.start(), order, DateMatch(m.start(), m.group(0), js_date(y, mo, d))))
+
 
 def _scan(text: str, en: bool, es: bool) -> list[DateMatch]:
     found: list[tuple[int, int, DateMatch]] = []
-    for order, (pat, extract) in enumerate(_PARSERS):
-        if order in (3, 4) and not en:
-            continue
-        if order == 5 and not es:
-            continue
-        for m in pat.finditer(text):
-            ymd = extract(m)
-            if ymd is None:
-                continue
-            y, mo, d = ymd
-            if d == 0:  # certainYearRefiner day-0 guard (date_parser.js:113)
-                continue
-            if y == 0:
-                # "0000-01-02": the one year the four-digit-year patterns
-                # can yield that datetime.date cannot hold.  Dropped as a
-                # no-match so the other candidates still rank.
-                continue
-            found.append(
-                (m.start(), order, DateMatch(m.start(), m.group(0), js_date(y, mo, d)))
-            )
-    found.sort(key=lambda t: (t[0], t[1]))
+    candidates, led = _DIGIT_LED_SCANS[en, es]
+    ends = [0] * len(_PARSERS)  # end of each pattern's previous match
+    for c in candidates(text):
+        p = c.start()
+        for order, pat, extract in led:
+            if p >= ends[order]:
+                m = pat.match(text, p)
+                if m is not None:
+                    ends[order] = m.end()
+                    _keep(found, order, m, extract)
+    if en:
+        for m in _P_MIDDLE.finditer(text):
+            _keep(found, 3, m, _extract_middle)
+    found.sort()  # by (index, parser order): a pattern's matches never share an index
     return [dm for _, _, dm in found]
 
 

@@ -212,3 +212,61 @@ class TestBoundaryEdges:
         assert [m.text for m in all_amounts(text, TOTAL_PREPEND)] == (
             ["5.00"] if anchored else [])
         assert parse_amount(text)["match"] == "5.00"
+
+
+class TestKeywordPrescan:
+    """The total scans run only where a whitespace precedes a keyword
+    (``_prepend_starts``) and must find exactly what full scans find."""
+
+    PIECES = ["Total", "total due", "TOTAL:", "Balance Due", "balance due -",
+              "Subtotal", "$5.00", "(5.00)", "1,234.56", "5,00", "EUR", "eur5.00",
+              "ſEK 7.00", "ıSK1.00", "x", "a", "　", "﻿", "\x85", " ", "\n"]
+
+    def test_matches_equal_full_scans(self):
+        import random
+
+        from receipt_scanner_spark.parsers import amount as A
+
+        rng = random.Random(5)
+        for _ in range(3000):
+            text = "".join(rng.choice(self.PIECES) + rng.choice([" ", "", "\n"])
+                           for _ in range(rng.randint(1, 12)))
+            # a custom prepend whose matches can contain a later start
+            for prepend in (TOTAL_PREPEND, "a[^0-9]*"):
+                for dec, thou in ((".", ","), (",", ".")):
+                    padded = " " + prepare_text(text, dec, thou)
+                    starts = A._prepend_starts(padded, prepend)
+                    for build in (A._fractional_regexp, A._whole_regexp):
+                        pat = build(dec, thou, prepend)
+                        want = [m.span() for m in pat.finditer(padded)]
+                        got = [m.span() for m in A._matches_at(pat, padded, starts)]
+                        assert got == want, (prepend, text)
+
+    def test_keyword_starts_equal_the_regex_head(self):
+        # the str.find path for the total keywords and the generic regex
+        # head find the same starts; U+0130 (lower() widens it) takes the
+        # regex path
+        import random
+
+        from receipt_scanner_spark.parsers import amount as A
+
+        rng = random.Random(6)
+        head = A._prepend_head(TOTAL_PREPEND)
+        for _ in range(3000):
+            padded = " " + "".join(rng.choice(self.PIECES + ["İ", "subtotal", "TOTALLY"])
+                                   + rng.choice([" ", "", "\n", "\ufeff"])
+                                   for _ in range(rng.randint(1, 12)))
+            want = [m.start() for m in head.finditer(padded)]
+            assert A._prepend_starts(padded, TOTAL_PREPEND) == want, padded
+
+    def test_adjacent_keywords(self):
+        r = parse_amount("Total Total 5.00 total due 6.00 TOTAL 1.00")
+        assert [m.text for m in r["matches"]] == ["5.00", "6.00", "1.00"]
+        assert r["match"] == "6.00"
+
+    def test_code_letters_fold_as_under_ignorecase(self):
+        # re.I folds U+212A onto K, U+017F onto S and U+0131 onto I; the
+        # first-letter guard of the code trie must fold the same way
+        for code in ("KES", "ſEK", "ıSK"):
+            (m,) = parse_amount(f"paid {code}5.00")["matches"]
+            assert (m.currency, m.text) == (code, "5.00")

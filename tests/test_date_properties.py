@@ -150,3 +150,45 @@ def test_all_dates_sorted_and_certain(text):
     assert all(a.index <= b.index for a, b in zip(ms, ms[1:]))
     for m in ms:
         assert m.date is not None  # js_date always yields a real date
+
+
+# --- digit-led candidate pre-scan ---------------------------------------------
+
+def _scan_full(text: str) -> list:
+    """The six patterns each run over the whole text, as before the
+    candidate pre-scan: same filters, same (index, parser order) sort."""
+    found = []
+    for order, (pat, extract) in enumerate(D._PARSERS):
+        for m in pat.finditer(text):
+            ymd = extract(m)
+            if ymd is None or ymd[2] == 0 or ymd[0] == 0:
+                continue
+            found.append((m.start(), order, D.DateMatch(m.start(), m.group(0),
+                                                        D.js_date(*ymd))))
+    found.sort(key=lambda t: (t[0], t[1]))
+    return [dm for _, _, dm in found]
+
+
+_DAY_MONTH = st.sampled_from([
+    "5th of May 2016", "1º de enero de 2017", "30June2016", "30-June-2016",
+    "5ſt May 2016", "3 DE Mayo 2016", "2ND OF dec 2016", "15 Dic 2016",
+    "12 de Diciembre del 2016", "7/Abr/2016", "9° Ago 2016", "Mar30'2016",
+    "1 market 2016", "22 suenen 2016", "0000-01-02", "1.2.2016",
+])
+
+
+@SETTINGS
+@given(st.lists(st.tuples(_SEPS, st.one_of(_DATES, _DAY_MONTH)), min_size=1,
+                max_size=5), _SEPS)
+def test_candidate_scan_equals_full_scans(parts, tail):
+    """Matching the digit-led patterns only where the pre-scan finds a
+    candidate finds what six full scans find, in the same order, even
+    when dates overlap or abut."""
+    text = "".join(s + d for s, d in parts) + tail
+    assert D._scan(text, True, True) == _scan_full(text), text
+
+
+@SETTINGS
+@given(st.text(alphabet=string.printable + "ſºª°ıİ", max_size=60))
+def test_candidate_scan_equals_full_scans_on_arbitrary_text(text):
+    assert D._scan(text, True, True) == _scan_full(text), text

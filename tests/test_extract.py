@@ -289,6 +289,94 @@ class TestFastStripperParity:
         assert extract_main_text(case) == extract_main_text_fast(case)
 
 
+class TestSubtreeSkip:
+    """The fast stripper's clean scan jumps over clean chrome subtrees
+    (nav/header/footer/aside/form, drop_chrome profiles only) and clean
+    drop subtrees such as head.  Every shape that must end a skip early and
+    fall back to the token-by-token scan is checked against the spec under
+    all four profiles."""
+
+    CASES = {
+        "nested_identical_chrome": "<nav><nav>a</nav>b</nav><p>main</p>",
+        "nested_identical_header": "<header>x<header>y</header>z</header><p>main</p>",
+        "menu_in_paragraph": "<p>before<menu>m</menu>after</p><p>main</p>",
+        "menu_in_nav": "<nav><menu><a href=/m>m</a></menu>n</nav><p>main</p>",
+        "nav_in_menu": "<p>a<menu><nav>n</nav>b</menu>c</p>",
+        "form_block_and_chrome": "<p>lead<form>f<input name=q>g</form>tail</p>",
+        "form_with_controls": (
+            "<form><select><option>o</option></select><button>b</button>t</form>"
+            "<p>main</p>"
+        ),
+        "unclosed_link_in_chrome": "<nav><a href='/x'>x</nav><p>main text here</p>",
+        "stray_link_close_in_chrome": "<a href=/o>out<nav></a>n</nav>side text<p>main</p>",
+        "nested_links_in_chrome": "<nav><a href=/a><a href=/b>b</a></a></nav><p>main</p>",
+        "link_spans_chrome_closer": "<nav><a href=/a>a</nav>tail</a><p>main</p>",
+        "drop_tag_in_chrome": "<nav><button>b</nav><p>main</p></button><p>after</p>",
+        "drop_close_in_chrome": "<button><nav></button>n</nav>rest</button><p>main</p>",
+        "script_in_chrome": "<nav><script>var s='</nav>';</script>n</nav><p>main</p>",
+        "style_in_chrome": "<footer><style>p{}</style>f</footer><p>main</p>",
+        "unclosed_script_in_chrome": "<aside><script>x</aside><p>main</p>",
+        "comment_in_chrome": "<nav><!-- </nav> -->n</nav><p>main</p>",
+        "bogus_tag_in_chrome": "<nav><!x>n<a b='c\"d'>l</a></nav><p>main</p>",
+        "stray_lt_in_chrome": "<nav>a < b</nav><p>main</p>",
+        "closer_upper_space": "<nav><a href=/h>h</a></NAV ><p>main</p>",
+        "closer_newline": "<nav>n</nav\n><p>main</p>",
+        "closer_with_junk": "<nav>n</nav x><p>main</p></nav><p>after</p>",
+        "chrome_never_closed": "<nav><a href=/h>h</a><p>main</p>",
+        "chrome_in_drop_subtree": "<noscript><nav>n</nav>x</noscript><p>main</p>",
+        "chrome_in_template": "<template><header><a href=/>h</a></header></template>p",
+        "startend_chrome": "<p>a<nav/>b<header/>c</p>",
+        "upper_case_chrome": "<NAV><A HREF='/'>h</A></NAV><Header>x</Header><p>main</p>",
+        "entities_in_chrome": "<nav>&amp; &lt;x &notreal;</nav><p>fish &amp; chips</p>",
+        "whitespace_only_blocks": "<nav> </nav><p> </p><p>hi</p>",
+        "head_with_block_tag": "<head><title>t</title><p>x</p></head>lead<p>main</p>",
+        "head_text_joins_block": "<p>one<head><title>t</title></head>two</p>",
+        "head_with_link": "<head><a href=/x>x</head>text<p>main</p>",
+        "head_never_closed": "<head><title>t</title><p>main</p>",
+        "head_script_hides_closer": "<head><script>'</head>'</script></head><p>main</p>",
+        "head_script_unclosed": "<head><script>x</head><p>main</p>",
+        "nested_head": "<head><head>x</head>y</head><p>main</p>",
+        "head_closer_upper": "<p>a<HEAD><TITLE>t</TITLE></HEAD >b</p>",
+        "chrome_in_head": "<head><nav>n</nav></head><p>main</p>",
+    }
+
+    @pytest.mark.parametrize("profile", ["default", "lenient", "aggressive", "raw"])
+    @pytest.mark.parametrize("case", list(CASES))
+    def test_matches_spec(self, case, profile):
+        from receipt_scanner_spark.extract.profiles import (
+            extract_with_profile,
+            extract_with_profile_spec,
+        )
+
+        html = self.CASES[case]
+        assert extract_with_profile(html, profile) == extract_with_profile_spec(
+            html, profile
+        )
+
+    def test_generated_subtrees_are_skippable(self):
+        """The skip must hold on the common shape, or the stripper silently
+        falls back to the slow path: every chrome and head subtree of a
+        generated page matches its body grammar up to its closer."""
+        import re
+
+        from receipt_scanner_spark.extract import html_fast as H
+
+        pages, _ = generate_pages(n_rows=60, seed=3)
+        n = 0
+        for h in pages.html:
+            if h is None or sniff_format(bytes(h)) != "html":
+                continue
+            text = bytes(h).decode()
+            for tag, body in (("nav", H._CHROME_BODY), ("header", H._CHROME_BODY),
+                              ("aside", H._CHROME_BODY), ("footer", H._CHROME_BODY),
+                              ("head", H._DROP_BODY)):
+                start = re.search(f"<{tag}>", text).end()
+                close = H._SUBTREE_CLOSERS[tag].search(text, start).start()
+                assert body.match(text, start, close).end() == close, (tag, text)
+                n += 1
+        assert n > 100
+
+
 class TestStripperScopeBoundary:
     """Historical note: before the faithful html.parser-mirror rewrite,
     non-HTML binary could tokenize differently between the spec and the

@@ -40,6 +40,7 @@ def _amount_patterns():
             prepend = sub.get_opts()
             yield f"fractional[{dec}|{sub.name}]", A._fractional_regexp(dec, thou, prepend)
             yield f"whole[{dec}|{sub.name}]", A._whole_regexp(dec, thou, prepend)
+    yield "prepend_head[total]", A._prepend_head(A.TOTAL_PREPEND)
 
 
 _DATE_PATTERNS = [
@@ -48,7 +49,10 @@ _DATE_PATTERNS = [
     ("month_first_junk", D._RE_MONTH_FIRST_JUNK),
     ("day_first_junk", D._RE_DAY_FIRST_JUNK),
     ("time_junk", D._RE_TIME_JUNK),
-] + [(f"grammar[{i}]", pat) for i, (pat, _) in enumerate(D._PARSERS)]
+] + [(f"grammar[{i}]", pat) for i, (pat, _) in enumerate(D._PARSERS)] + [
+    (f"digit_led_candidates[en={en},es={es}]", scan.__self__)
+    for (en, es), (scan, _) in D._DIGIT_LED_SCANS.items()
+]
 
 PATTERNS = list(_amount_patterns()) + _DATE_PATTERNS
 

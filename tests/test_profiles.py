@@ -12,6 +12,7 @@ from receipt_scanner_spark.extract.html import extract_main_text
 from receipt_scanner_spark.extract.html_fast import extract_main_text_fast
 from receipt_scanner_spark.extract.profiles import (
     PROFILES,
+    StripperProfile,
     extract_with_profile,
     extract_with_profile_spec,
 )
@@ -90,6 +91,16 @@ class TestProfileParity:
             assert extract_with_profile(PAGE, name) == extract_with_profile_spec(
                 PAGE, name
             ), name
+
+    def test_zero_min_block_chars_skips_empty_blocks(self):
+        # the spec drops whitespace-only blocks before selection, so a
+        # zero length floor never divides by an empty block's length
+        profile = StripperProfile("z", 0, 0.5, True)
+        for html in (b"<p> </p><p>hi</p>", b"<nav> </nav><p>\t</p>x", b" "):
+            assert extract_with_profile(html, profile) == extract_with_profile_spec(
+                html, profile
+            )
+        assert extract_with_profile(b"<p> </p><p>hi</p>", profile) == "hi"
 
 
 class TestProfileBenchmark:

@@ -97,7 +97,8 @@ AMOUNTS = ["$5.00", "(5.00)", "(1,234.56)", "5,00", "(5,00)", "1.234,56",
 WORDS = ["Total", "total due", "Balance Due", "TOTAL:", "Subtotal", "x", "a",
          "de", "del", "of", "th", "st", "º", "ª", "°", "T", "t", "(", ")", "-",
          "/", ".", ",", "'", "|", ";", ":", "–", "—", "‒", "﹘", "#", "ı", "İ",
-         "ſ", "Date:", "paid"]
+         "ſ", "Date:", "paid", "ſt", "ST", "Nd", "OF", "De", "DEL", "tOtAl",
+         "BALANCE DUE", "market", "suenen", "_"]
 
 
 def splice_texts(n: int, seed: int, codes: tuple[str, ...]) -> list[str]:
