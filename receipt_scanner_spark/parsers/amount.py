@@ -34,10 +34,10 @@ is grouped by first letter (``_code_trie``), which changes no match.
 Keyword pre-scan (speed, not semantics): a scan with a non-empty prepend
 (the ``total`` sub-parser's keywords) can only start at a whitespace
 right before a prepend match.  Those starts are found once per text
-(``_prepend_starts``: ``str.find`` of the total keywords, a regex head
-for any other prepend) and each scan regex is matched there only, with
-finditer's rule that a match starts at or after the previous one's end
-(``_matches_at``): the same matches as four full scans.
+(``_prepend_starts``, one scan of a regex head) and each scan regex is
+matched there only, with finditer's rule that a match starts at or after
+the previous one's end (``_matches_at``): the same matches as four full
+scans.
 """
 
 from __future__ import annotations
@@ -107,7 +107,6 @@ _CURRENCY_CODES = _code_trie(_ISO_CODES)
 
 from .jsws import JS_WS as _JS_WS
 
-_IS_WS = re.compile(f"[{_JS_WS}]").match
 _FLOAT_PREFIX = re.compile(r"^[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?")
 
 # Compiled-regex caches, keyed by (decimal, thousand, prepend).
@@ -214,18 +213,6 @@ def _prepend_starts(padded: str, prepend: str) -> list[int] | None:
     that is every whitespace and a full scan is cheaper."""
     if not prepend:
         return None
-    if prepend == TOTAL_PREPEND:
-        low = padded.lower()
-        if len(low) == len(padded):  # else U+0130 shifted the positions
-            starts = []
-            for word in _TOTAL_WORDS:
-                i = low.find(word, 1)
-                while i >= 0:
-                    if _IS_WS(padded, i - 1):
-                        starts.append(i - 1)
-                    i = low.find(word, i + 1)
-            starts.sort()
-            return starts
     return [m.start() for m in _prepend_head(prepend).finditer(padded)]
 
 
@@ -330,10 +317,6 @@ def extract_largest(values: list[AmountMatch]) -> str | None:
 
 
 TOTAL_PREPEND = "(?:Total(?: due)?|Balance Due)[^a-z0-9]*"
-# The words a TOTAL_PREPEND match starts with, lower-cased.  re.I folds no
-# non-ASCII code point onto any of their letters, so they occur in a text
-# exactly where they occur in its lower() (when that keeps the length).
-_TOTAL_WORDS = ("total", "balance due")
 
 
 class _TotalParser:

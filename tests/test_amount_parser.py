@@ -220,7 +220,8 @@ class TestKeywordPrescan:
 
     PIECES = ["Total", "total due", "TOTAL:", "Balance Due", "balance due -",
               "Subtotal", "$5.00", "(5.00)", "1,234.56", "5,00", "EUR", "eur5.00",
-              "ſEK 7.00", "ıSK1.00", "x", "a", "　", "﻿", "\x85", " ", "\n"]
+              "ſEK 7.00", "ıSK1.00", "İ", "subtotal", "TOTALLY", "x", "a", "　", "﻿",
+              "\x85", " ", "\n"]
 
     def test_matches_equal_full_scans(self):
         import random
@@ -241,23 +242,6 @@ class TestKeywordPrescan:
                         want = [m.span() for m in pat.finditer(padded)]
                         got = [m.span() for m in A._matches_at(pat, padded, starts)]
                         assert got == want, (prepend, text)
-
-    def test_keyword_starts_equal_the_regex_head(self):
-        # the str.find path for the total keywords and the generic regex
-        # head find the same starts; U+0130 (lower() widens it) takes the
-        # regex path
-        import random
-
-        from receipt_scanner_spark.parsers import amount as A
-
-        rng = random.Random(6)
-        head = A._prepend_head(TOTAL_PREPEND)
-        for _ in range(3000):
-            padded = " " + "".join(rng.choice(self.PIECES + ["İ", "subtotal", "TOTALLY"])
-                                   + rng.choice([" ", "", "\n", "\ufeff"])
-                                   for _ in range(rng.randint(1, 12)))
-            want = [m.start() for m in head.finditer(padded)]
-            assert A._prepend_starts(padded, TOTAL_PREPEND) == want, padded
 
     def test_adjacent_keywords(self):
         r = parse_amount("Total Total 5.00 total due 6.00 TOTAL 1.00")

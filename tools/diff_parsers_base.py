@@ -35,11 +35,9 @@ Usage: python tools/diff_parsers_base.py <base-ref> [n_texts]
 
 from __future__ import annotations
 
-import importlib
 import math
 import random
 import re
-import subprocess
 import sys
 import tempfile
 from collections import Counter
@@ -49,6 +47,8 @@ ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 sys.path.insert(0, str(ROOT / "tools"))
 
+from _gitbase import load_base  # noqa: E402
+
 MODULES = ("amount", "date", "jsws")
 
 # Stand-in for a non-ASCII letter in a month stem (see module docstring).
@@ -56,22 +56,6 @@ STAND_IN = "\u212a"
 # The stem letters the designed difference is about: the long s of "Sep",
 # the dotless/dotted i of "Dic".
 _FOLDED_STEM_LETTER = re.compile("\u017f(?=[Ee][Pp])|(?<=[Dd])[\u0130\u0131](?=[Cc])")
-
-
-def load_base(ref: str, into: Path):
-    """Import the parsers as of ``ref`` as the package ``base_parsers``."""
-    pkg = into / "base_parsers"
-    pkg.mkdir()
-    (pkg / "__init__.py").write_text("")
-    for name in MODULES:
-        src = subprocess.run(
-            ["git", "show", f"{ref}:receipt_scanner_spark/parsers/{name}.py"],
-            cwd=ROOT, capture_output=True, check=True, text=True,
-        ).stdout
-        (pkg / f"{name}.py").write_text(src)
-    sys.path.insert(0, str(into))
-    return (importlib.import_module("base_parsers.amount"),
-            importlib.import_module("base_parsers.date"))
 
 
 # --- inputs -------------------------------------------------------------------
@@ -247,7 +231,8 @@ def main() -> int:
         ("splice", splice_texts(n - len(web) - n_fuzz, 11, nA._ISO_CODES)),
     ]
     with tempfile.TemporaryDirectory() as tmp:
-        base = load_base(ref, Path(tmp))
+        mods = load_base(ref, "parsers", MODULES, Path(tmp))
+        base = (mods["amount"], mods["date"])
         c = compare(families, base, (nA, nD))
     for key in sorted(c):
         print(f"{key:36s} {c[key]}")

@@ -23,11 +23,9 @@ Usage: python tools/diff_stripper_base.py <base-ref> [n_pages]
 
 from __future__ import annotations
 
-import importlib
 import math
 import random
 import re
-import subprocess
 import sys
 import tempfile
 from collections import Counter
@@ -37,22 +35,9 @@ ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 sys.path.insert(0, str(ROOT / "tools"))
 
+from _gitbase import load_base  # noqa: E402
+
 MODULES = ("html", "html_fast")
-
-
-def load_base(ref: str, into: Path):
-    """Import the stripper as of ``ref`` as the package ``base_extract``."""
-    pkg = into / "base_extract"
-    pkg.mkdir()
-    (pkg / "__init__.py").write_text("")
-    for name in MODULES:
-        src = subprocess.run(
-            ["git", "show", f"{ref}:receipt_scanner_spark/extract/{name}.py"],
-            cwd=ROOT, capture_output=True, check=True, text=True,
-        ).stdout
-        (pkg / f"{name}.py").write_text(src)
-    sys.path.insert(0, str(into))
-    return importlib.import_module("base_extract.html_fast").extract_main_text_fast
 
 
 # --- inputs -------------------------------------------------------------------
@@ -232,7 +217,7 @@ def main() -> int:
     web = web_pages(max(1, n // 4))
     families = [("web", web), ("mutated", mutated_pages(web, n - len(web), seed=11))]
     with tempfile.TemporaryDirectory() as tmp:
-        base = load_base(ref, Path(tmp))
+        base = load_base(ref, "extract", MODULES, Path(tmp))["html_fast"].extract_main_text_fast
         c = compare(families, base, new)
     for key in sorted(c):
         print(f"{key:24s} {c[key]}")
