@@ -10,9 +10,11 @@ executors need.  Run outside spark-submit, it starts a local session via
 ``plans/session.get_spark``; on a cluster, submit against YARN/K8s —
 the code path is identical.
 
-Behavior (north rule): checkpointed per-partition commits with lineage
-and extraction-success metrics; rerunning after a kill resumes pending
-partitions only; ``--report`` prints the snapshot metrics history.
+Behavior (north rule): one extraction pass over the pending input, then
+checkpointed per-partition commits with lineage and extraction-success
+metrics (one JSON line per commit); rerunning after a kill resumes
+pending partitions only, and a rerun with nothing pending prints
+"nothing to do"; ``--report`` prints the snapshot metrics history.
 """
 
 from __future__ import annotations

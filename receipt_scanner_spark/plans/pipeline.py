@@ -38,8 +38,10 @@ OBSERVATION_NAME = "extraction_metrics"
 def extraction_counts() -> list:
     """The extraction counters: rows, rows with a parsed amount, rows
     with a parsed date, rows carrying an error (``total``/``amount``/
-    ``date``/``errors``).  Shared by ``observe`` metrics, snapshot
-    commit metrics and the per-host and ``--summary`` aggregates."""
+    ``date``/``errors``).  Shared by ``observe`` metrics and the
+    per-host and ``--summary`` aggregates; snapshot commit metrics
+    carry the same names, read from the written parquet footers
+    (``table.snapshots._footer_counts``)."""
     return [
         F.count(F.lit(1)).alias("total"),
         F.count("amount").alias("amount"),

@@ -20,6 +20,16 @@ Iceberg (``spark.read.table`` + snapshot metadata) is config-only:
   killed job processes only pending partitions, and re-committing an
   already-processed partition is rejected (idempotence guard) unless
   ``overwrite=True`` (the overwrite-by-partition idiom).
+* **Ingest** (``run_resumable_extraction``): one Spark job extracts
+  every pending row and writes it once, ``partitionBy`` a copy of the
+  key, to ``data/<uuid>/__part=<key>/``; then one snapshot per key is
+  published over that key's files only.  Per-partition metrics come
+  from the files' parquet footers (row counts and null counts, as
+  Iceberg's DataFile ``record_count``/``null_value_counts``), not from
+  a second pass.  A kill mid-pass commits nothing; a kill between
+  publishes keeps the partitions already published.
+* ``commit`` and the ingest share one guard (duplicate partitions,
+  explicit schema evolution) and one publish step.
 
 At 100 TB: one commit per input partition batch keeps manifests tiny
 (file lists per commit, not a global listing); reads prune by
@@ -34,7 +44,7 @@ import time
 import uuid
 from dataclasses import asdict, dataclass, field
 from pathlib import Path
-from typing import Callable, Iterable
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -65,6 +75,12 @@ class SnapshotTable:
 
     def _head_path(self) -> Path:
         return self.root / "_manifests" / "_current"
+
+    def _write_manifest(self, snap: Snapshot) -> None:
+        """Write a manifest to a temp name and ``os.replace`` it."""
+        tmp = self._manifest_path(snap.snapshot_id).with_suffix(".tmp")
+        tmp.write_text(json.dumps(asdict(snap), indent=1))
+        os.replace(tmp, self._manifest_path(snap.snapshot_id))
 
     def current_snapshot_id(self) -> int | None:
         p = self._head_path()
@@ -104,31 +120,21 @@ class SnapshotTable:
         return sorted(p for p in all_partitions if p not in done)
 
     # -- commit / read ---------------------------------------------------------
-    def commit(
+    def _guard(
         self,
-        df: DataFrame,
         partitions: list[str],
-        metrics: dict | None = None,
+        columns: list[str],
         overwrite: bool = False,
-        metrics_supplier: Callable[[], dict] | None = None,
         allow_schema_change: bool = False,
-    ) -> Snapshot:
-        """Write ``df`` under data/<uuid>/ and atomically publish a new
-        snapshot covering ``partitions``.  Crash before the final
-        rename leaves the table at the previous snapshot (orphan data
-        files are unreachable, as in Iceberg).
+    ) -> str:
+        """Check a commit of ``partitions`` with ``columns`` against HEAD
+        before anything is written; return its operation.
 
-        ``metrics_supplier`` is called AFTER the write action finishes —
-        the single-materialization hook: attach ``df.observe(obs, ...)``
-        upstream and supply ``lambda: obs.get`` so metrics ride the same
-        pass over the data as the write instead of a second full
-        recomputation of the plan.
-
-        Schema evolution is EXPLICIT, as in Iceberg: a commit whose
-        columns differ from the table's current schema is rejected
-        unless ``allow_schema_change=True`` (column ADDS only — drops/
-        renames would orphan history; reads merge old and new files
-        with nulls for missing columns)."""
+        Schema evolution is EXPLICIT, as in Iceberg: columns that differ
+        from the table's current schema are rejected unless
+        ``allow_schema_change=True`` (column ADDS only — drops/renames
+        would orphan history; reads merge old and new files with nulls
+        for missing columns)."""
         done = self.processed_partitions()
         dup = [p for p in partitions if p in done]
         if dup and not overwrite:
@@ -136,29 +142,40 @@ class SnapshotTable:
                 f"partitions already committed (resume should skip them): {dup}"
             )
         head = self.snapshot()
-        if head is not None and head.schema and df.columns != head.schema:
+        if head is not None and head.schema and columns != head.schema:
             if not allow_schema_change:
                 raise ValueError(
                     "schema change requires allow_schema_change=True: "
-                    f"table {head.schema} vs commit {df.columns}"
+                    f"table {head.schema} vs commit {columns}"
                 )
-            missing = [c for c in head.schema if c not in df.columns]
+            missing = [c for c in head.schema if c not in columns]
             if missing:
                 raise ValueError(
                     "schema evolution supports column ADDS only; commit "
                     f"drops existing columns {missing}"
                 )
+        return "overwrite" if dup else "append"
 
-        commit_dir = f"data/{uuid.uuid4().hex}"
-        out_path = str(self.root / commit_dir)
-        df.write.mode("error").parquet(out_path)
-        if metrics_supplier is not None:
-            metrics = dict(metrics or {}, **metrics_supplier())
-        files = sorted(
-            str(Path(commit_dir) / f.name)
-            for f in (self.root / commit_dir).glob("*.parquet")
+    def _new_data_dir(self) -> str:
+        return f"data/{uuid.uuid4().hex}"
+
+    def _data_files(self, data_dir: str) -> list[str]:
+        return sorted(
+            str(Path(data_dir) / f.name)
+            for f in (self.root / data_dir).glob("*.parquet")
         )
 
+    def _publish(
+        self,
+        partitions: list[str],
+        files: list[str],
+        metrics: dict,
+        columns: list[str],
+        operation: str = "append",
+    ) -> Snapshot:
+        """Atomically publish one snapshot over already-written ``files``:
+        the manifest is written to a temp name and ``os.replace``d, then
+        HEAD is swapped the same way."""
         parent = self.current_snapshot_id()
         sid = (parent or 0) + 1
         snap = Snapshot(
@@ -167,17 +184,35 @@ class SnapshotTable:
             committed_at=time.time(),
             partitions=list(partitions),
             files=files,
-            metrics=metrics or {},
-            operation="overwrite" if (dup and overwrite) else "append",
-            schema=df.columns,
+            metrics=metrics,
+            operation=operation,
+            schema=list(columns),
         )
-        tmp = self._manifest_path(sid).with_suffix(".tmp")
-        tmp.write_text(json.dumps(asdict(snap), indent=1))
-        os.replace(tmp, self._manifest_path(sid))  # atomic publish
+        self._write_manifest(snap)  # atomic publish
         head_tmp = self._head_path().with_suffix(".tmp")
         head_tmp.write_text(str(sid))
         os.replace(head_tmp, self._head_path())
         return snap
+
+    def commit(
+        self,
+        df: DataFrame,
+        partitions: list[str],
+        metrics: dict | None = None,
+        overwrite: bool = False,
+        allow_schema_change: bool = False,
+    ) -> Snapshot:
+        """Write ``df`` under data/<uuid>/ and atomically publish a new
+        snapshot covering ``partitions``.  Crash before the final
+        rename leaves the table at the previous snapshot (orphan data
+        files are unreachable, as in Iceberg).  Duplicate partitions
+        and schema changes are rejected before the write (``_guard``)."""
+        operation = self._guard(partitions, df.columns, overwrite, allow_schema_change)
+        data_dir = self._new_data_dir()
+        df.write.mode("error").parquet(str(self.root / data_dir))
+        return self._publish(
+            partitions, self._data_files(data_dir), metrics or {}, df.columns, operation
+        )
 
     def _live_files(self, as_of: int | None = None) -> list[str]:
         """Files visible at a snapshot: appends accumulate; an overwrite
@@ -284,9 +319,7 @@ class SnapshotTable:
                 operation="append",  # nothing earlier remains to shadow
                 schema=root.schema,
             )
-            tmp = self._manifest_path(root.snapshot_id).with_suffix(".tmp")
-            tmp.write_text(json.dumps(asdict(new_root), indent=1))
-            os.replace(tmp, self._manifest_path(root.snapshot_id))
+            self._write_manifest(new_root)
             for s in earlier:
                 self._manifest_path(s.snapshot_id).unlink(missing_ok=True)
         # keep_from already the root -> nothing to expire, but the
@@ -307,7 +340,7 @@ class SnapshotTable:
                 and d.name not in retained_dirs
                 and d.stat().st_mtime <= cutoff  # grace: may be in-flight
             ):
-                deleted += sum(1 for _ in d.glob("*.parquet"))
+                deleted += sum(1 for _ in d.rglob("*.parquet"))
                 shutil.rmtree(d)
         return {"expired": len(earlier), "orphan_files_deleted": deleted}
 
@@ -325,6 +358,44 @@ class SnapshotTable:
         ]
 
 
+# partitionBy column of the ingest write: a string copy of the partition
+# key, so the data files keep the original column
+_PART_DIR = "__part"
+
+# snapshot metric -> data column it counts non-null rows of (the names of
+# plans/pipeline.extraction_counts; ``total`` counts rows)
+_COUNTED = {"amount": "amount", "date": "date", "errors": "error"}
+
+
+def _footer_counts(paths: list[Path]) -> dict:
+    """``extraction_counts()`` of the rows in ``paths``, read from the
+    parquet footers: ``total`` = rows, every other counter = rows minus
+    the column's ``null_count`` (Iceberg's DataFile ``record_count`` /
+    ``null_value_counts``).  parquet-mr leaves a column chunk's
+    statistics out when a min/max value is over its 4 KiB limit; such a
+    chunk is counted from its data instead."""
+    import pyarrow.parquet as pq
+
+    counts = dict.fromkeys(["total", *_COUNTED], 0)
+    for path in paths:
+        pf = pq.ParquetFile(path)
+        for i in range(pf.metadata.num_row_groups):
+            rg = pf.metadata.row_group(i)
+            counts["total"] += rg.num_rows
+            chunks = {
+                rg.column(j).path_in_schema: rg.column(j)
+                for j in range(rg.num_columns)
+            }
+            for metric, column in _COUNTED.items():
+                stats = chunks[column].statistics
+                if stats is not None and stats.has_null_count:
+                    nulls = stats.null_count
+                else:
+                    nulls = pf.read_row_group(i, columns=[column]).column(0).null_count
+                counts[metric] += rg.num_rows - nulls
+    return counts
+
+
 def run_resumable_extraction(
     spark: SparkSession,
     pages: DataFrame,
@@ -336,35 +407,68 @@ def run_resumable_extraction(
     skipping partitions already committed — kill it anywhere and rerun;
     completed partitions are never recomputed.
 
-    Partitioning is by a low-cardinality input column (default
-    ``lang``; at scale it'd be crawl date / host bucket).  Each commit
-    records extraction-success metrics for its partition.
+    Partitioning is by a low-cardinality column the extraction output
+    carries (default ``lang``; at scale it'd be crawl date / host
+    bucket).  The partition key of a row is
+    ``coalesce(cast(col as string), "")``: a null value and ``""`` share
+    one partition, as they share Spark's default partition directory.
 
-    Metrics ride the commit write via ``df.observe`` (one pass over the
-    data): the extraction UDF runs exactly ONCE per input partition —
-    the earlier shape (``result.agg(...).first()`` then write) re-ran
-    the whole unmaterialized extraction plan a second time, doubling
-    the dominant cost at scale (pinned by
+    One Spark job extracts every pending row and writes it once under
+    ``data/<uuid>/__part=<key>/`` (``partitionBy`` on a copy of the key;
+    the files keep the original column).  The same pass collects the
+    key set with ``observe``.  Then one snapshot per key (sorted) is
+    published; it lists only that key's files, which are found through
+    Spark's own partition-path rule, so per-partition overwrite and
+    resume stay exact.  Its metrics (``total``/``amount``/``date``/
+    ``errors``, as ``extraction_counts()``) come from those files'
+    parquet footers, so the extraction UDF runs once per row (pinned by
     test_snapshots.test_extraction_udf_runs_once_per_row).
+
+    A table without commits gets no pre-scan.  Otherwise a key-only scan
+    of ``pages`` finds the pending keys: none pending returns ``[]``
+    without reading ``html``, else the pass extracts only pending rows.
+
+    Kill semantics: a kill during the pass commits nothing (the written
+    files are unreachable orphans); a kill between publishes keeps the
+    partitions already published, and the rerun extracts only the rest.
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from ..plans.pipeline import extract_pages, extraction_counts
+    from ..plans.pipeline import extract_pages
 
-    all_parts = [
-        str(r[0]) for r in pages.select(partition_column).distinct().collect()
-    ]
-    committed: list[Snapshot] = []
-    for part in table.pending_partitions(all_parts):
-        subset = pages.filter(F.col(partition_column) == part)
-        result = extract_pages(subset, observe=False, **extract_kwargs)
-        obs = Observation()
-        observed = result.observe(obs, *extraction_counts())
-        snap = table.commit(
-            observed,
-            [part],
-            metrics_supplier=lambda o=obs: {k: int(v) for k, v in o.get.items()},
+    key = F.coalesce(F.col(partition_column).cast("string"), F.lit(""))
+    pending: list[str] = []
+    if table.current_snapshot_id() is not None:
+        keys = [r[0] for r in pages.select(key).distinct().collect()]
+        pending = table.pending_partitions(keys)
+        if not pending:
+            return []
+        pages = pages.filter(key.isin(pending))
+    result = extract_pages(pages, observe=False, **extract_kwargs)
+    if partition_column not in result.columns:
+        raise ValueError(
+            f"partition column {partition_column!r} is not an output column "
+            f"{result.columns}"
         )
-        committed.append(snap)
+    table._guard(pending, result.columns)
+
+    data_dir = table._new_data_dir()
+    obs = Observation()
+    (
+        result.withColumn(_PART_DIR, key)
+        .observe(obs, F.collect_set(_PART_DIR).alias("keys"))
+        .write.mode("error")
+        .partitionBy(_PART_DIR)
+        .parquet(str(table.root / data_dir))
+    )
+    path_of = (
+        spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .getPartitionPathString
+    )
+    committed: list[Snapshot] = []
+    for part in sorted(obs.get["keys"]):
+        files = table._data_files(f"{data_dir}/{path_of(_PART_DIR, part)}")
+        metrics = _footer_counts([table.root / f for f in files])
+        committed.append(table._publish([part], files, metrics, result.columns))
     return committed

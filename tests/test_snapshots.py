@@ -2,14 +2,28 @@
 
 import json
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from receipt_scanner_spark.plans.pipeline import extraction_counts
 from receipt_scanner_spark.sources.pages import write_corpus
 from receipt_scanner_spark.table.snapshots import (
     SnapshotTable,
+    _footer_counts,
     run_resumable_extraction,
 )
+
+
+def _urls(df):
+    return sorted(r["url"] for r in df.select("url").collect())
+
+
+def _same_rows(a, b):
+    cols = ["url", "extracted_text", "amount", "date", "error"]
+    a, b = a.select(*cols), b.select(*cols)
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 @pytest.fixture()
@@ -182,13 +196,11 @@ class TestResumableExtraction:
         t2.commit(extract_pages(sub, observe=False), ["en"], metrics={})
         run_resumable_extraction(spark, pages, t2)
 
-        a = t1.read(spark).select("url", "extracted_text", "amount", "date", "error")
-        b = t2.read(spark).select("url", "extracted_text", "amount", "date", "error")
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        assert _same_rows(t1.read(spark), t2.read(spark))
 
     def test_extraction_udf_runs_once_per_row(self, spark, pages, tmp_path):
-        """Metrics ride the commit write via df.observe — the extraction
-        UDF must materialize exactly ONCE per row (the earlier shape ran
+        """Metrics come from the written files' footers — the extraction
+        UDF must materialize exactly ONCE per row (an earlier shape ran
         the plan twice: once for metrics, once for the write)."""
         calls = spark.sparkContext.accumulator(0)
 
@@ -207,7 +219,7 @@ class TestResumableExtraction:
         n_parsed = out.filter("extracted_text IS NOT NULL").count()
         assert n_parsed > 0.8 * n_rows
         assert calls.value == n_parsed  # once per parsed row, not 2x
-        # observe-based metrics still recorded per commit
+        # footer metrics still recorded per commit
         assert sum(s.metrics["total"] for s in snaps) == n_rows
         assert all(
             set(s.metrics) == {"total", "amount", "date", "errors"} for s in snaps
@@ -222,3 +234,104 @@ class TestResumableExtraction:
         assert {"snapshot_id", "parent_id", "partitions", "files", "metrics"} <= set(
             manifest
         )
+
+    def test_fresh_table_is_one_spark_job(self, spark, pages, tmp_path):
+        """A fresh ingest is one pass over ``pages``: no key pre-scan,
+        one extraction-plus-write job for every partition."""
+        sc = spark.sparkContext
+        sc.setJobGroup("fresh-ingest", "fresh ingest")
+        try:
+            snaps = run_resumable_extraction(
+                spark, pages, SnapshotTable(str(tmp_path / "t"))
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(snaps) == 2
+        assert len(sc.statusTracker().getJobIdsForGroup("fresh-ingest")) == 1
+
+    def test_null_partition_rows_kept(self, spark, tmp_path):
+        """A null partition value shares the "" partition (Spark's
+        default partition directory): every input row reaches the table,
+        and a rerun commits nothing."""
+        write_corpus(str(tmp_path / "c"), n_rows=50, seed=7, n_files=2)
+        raw = spark.read.parquet(str(tmp_path / "c" / "pages.parquet"))
+        nulls = _urls(raw)[:7]
+        pages = raw.withColumn(
+            "lang", F.when(F.col("url").isin(nulls), None).otherwise(F.col("lang"))
+        )
+        table = SnapshotTable(str(tmp_path / "t"))
+        snaps = run_resumable_extraction(spark, pages, table)
+        assert _urls(table.read(spark)) == _urls(raw)
+        by_key = {s.partitions[0]: s for s in snaps}
+        assert by_key[""].metrics["total"] == 7
+        assert sum(s.metrics["total"] for s in snaps) == 50
+        assert run_resumable_extraction(spark, pages, table) == []
+        assert table.read(spark).count() == 50
+
+    def test_crash_between_publishes_resumes(self, spark, pages, tmp_path):
+        """A kill after the pass, between two publishes, keeps the first
+        partition; the rerun commits only the missing one and the table
+        equals a single-shot run."""
+        table = SnapshotTable(str(tmp_path / "t"))
+        publish = table._publish
+        calls = []
+
+        def killed_on_second(*args, **kwargs):
+            calls.append(args[0])
+            if len(calls) == 2:
+                raise RuntimeError("killed between publishes")
+            return publish(*args, **kwargs)
+
+        table._publish = killed_on_second
+        with pytest.raises(RuntimeError, match="between publishes"):
+            run_resumable_extraction(spark, pages, table)
+        assert calls == [["en"], ["es"]]
+        assert table.processed_partitions() == {"en"}
+
+        restarted = SnapshotTable(str(tmp_path / "t"))
+        snaps = run_resumable_extraction(spark, pages, restarted)
+        assert [s.partitions for s in snaps] == [["es"]]
+        single = SnapshotTable(str(tmp_path / "single"))
+        run_resumable_extraction(spark, pages, single)
+        assert _same_rows(restarted.read(spark), single.read(spark))
+
+    def test_escaped_keys_and_footer_metrics(self, spark, pages, tmp_path):
+        """Keys that Spark escapes in partition paths, plus "" (the
+        default partition): each snapshot's files hold exactly that
+        key's rows, and its footer metrics equal extraction_counts()
+        over them."""
+        keys = ["a/b", "k=v", "50%", "é", " x", ""]
+        keyed = pages.withColumn(
+            "lang",
+            F.element_at(
+                F.array(*[F.lit(k) for k in keys]),
+                (F.pmod(F.xxhash64("url"), F.lit(len(keys))) + 1).cast("int"),
+            ),
+        )
+        table = SnapshotTable(str(tmp_path / "t"))
+        snaps = run_resumable_extraction(spark, keyed, table)
+        assert [s.partitions for s in snaps] == [[k] for k in sorted(keys)]
+        for s in snaps:
+            (key,) = s.partitions
+            got = spark.read.parquet(*[str(table.root / f) for f in s.files])
+            assert got.columns == s.schema
+            assert _urls(got) == _urls(keyed.filter(F.col("lang") == key))
+            assert got.agg(*extraction_counts()).first().asDict() == s.metrics
+        assert table.read(spark).count() == 300
+
+    def test_footer_counts_without_statistics(self, tmp_path):
+        """A column chunk without footer statistics (parquet-mr drops
+        them for min/max values over 4 KiB) is counted from its data."""
+        rows = pa.table({
+            "amount": ["1.00", None, "2.50", None],
+            "date": [None, None, "2020-01-02", None],
+            "error": [None, "x" * 5000, None, None],
+        })
+        want = {"total": 4, "amount": 2, "date": 1, "errors": 1}
+        for stats in (True, False):
+            path = tmp_path / f"stats-{stats}.parquet"
+            pq.write_table(rows, path, write_statistics=stats, row_group_size=3)
+            md = pq.ParquetFile(path).metadata
+            assert md.num_row_groups == 2
+            assert (md.row_group(0).column(0).statistics is not None) == stats
+            assert _footer_counts([path]) == want
