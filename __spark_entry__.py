@@ -149,10 +149,10 @@ def _ivf_recall_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _streaming_extract_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only: the SAME fused extraction UDF behind Structured
-    Streaming (readStream → Trigger.AvailableNow → parquet sink with
-    checkpoint), drained and read back.  Deterministic corpus, so the
-    output is stable across runs; exactly-once-per-file resume is
-    pinned separately in tests/test_streaming.py."""
+    Streaming (readStream → Trigger.AvailableNow → one snapshot-table
+    commit per micro-batch), drained and read back from the table.
+    Deterministic corpus, so the output is stable across runs; resume
+    and replay are pinned separately in tests/test_streaming.py."""
     import pathlib
     import shutil
     import tempfile
@@ -161,23 +161,21 @@ def _streaming_extract_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from receipt_scanner_spark.sources.pages import write_corpus
     from receipt_scanner_spark.streaming.incremental import stream_extract
+    from receipt_scanner_spark.table.snapshots import SnapshotTable
 
-    # fixed work dir, cleared each run (the checkpoint must be fresh for
-    # a deterministic drain; a mkdtemp per run would leak directories)
+    # fixed work dir, cleared each run (the checkpoint and table must be
+    # fresh for a deterministic drain; a mkdtemp per run would leak
+    # directories)
     work = str(pathlib.Path(tempfile.gettempdir()) / "rss_stream_q")
     shutil.rmtree(work, ignore_errors=True)
     src = f"{work}/src"
     write_corpus(src, n_rows=200, seed=11, n_files=4)
-    q = stream_extract(
-        spark,
-        f"{src}/pages.parquet",
-        f"{work}/out",
-        f"{work}/ckpt",
-        available_now=True,
-    )
-    q.awaitTermination()
+    table = SnapshotTable(f"{work}/table")
+    stream_extract(
+        spark, f"{src}/pages.parquet", table, f"{work}/ckpt"
+    ).awaitTermination()
     return (
-        spark.read.parquet(f"{work}/out")
+        table.read(spark)
         .select("url", "format", "amount", "date", "error")
         .orderBy(F.asc("url"))
     )
@@ -189,7 +187,7 @@ def _profile_benchmark_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact-match D4 scorer, 0.85/0.95 grading).  The default profile is
     the gated recipe and scores 1.0 by construction; alternates are
     informational, as in benchmark/image_preprocessors.js."""
-    from receipt_scanner_spark.plans.pipeline import benchmark_profiles
+    from receipt_scanner_spark.plans.pipeline import PAGES_SCHEMA, benchmark_profiles
     from receipt_scanner_spark.sources.pages import generate_pages
 
     # in-memory corpus: generating the deterministic 300-row set beats
@@ -201,10 +199,7 @@ def _profile_benchmark_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here (only image-branch rows carry upstream OCR text), and its
     # type must not depend on pandas inference over the non-null tail —
     # same hazard write_corpus guards with a pyarrow schema.
-    pages = spark.createDataFrame(
-        pages_pd,
-        "url string, warc_ts timestamp, html binary, text string, lang string",
-    ).repartition(32)
+    pages = spark.createDataFrame(pages_pd, PAGES_SCHEMA).repartition(32)
     # explicit schema: every goldens column is nullable string, and
     # pandas inference must not depend on which rows are null
     goldens = spark.createDataFrame(

@@ -6,9 +6,11 @@
 
 Packaging: ``cd /root/repo && zip -r rss.zip receipt_scanner_spark`` —
 the module only imports the package, so ``--py-files`` ships everything
-executors need.  Run outside spark-submit, it starts a local session via
+executors need.  Run outside spark-submit, it uses the session already
+active in the process as it is, or else starts a local session via
 ``plans/session.get_spark``; on a cluster, submit against YARN/K8s —
-the code path is identical.
+the code path is identical.  ``--codec`` is set on the session for the
+run and put back afterwards.
 
 Behavior (north rule): one extraction pass over the pending input, then
 checkpointed per-partition commits with lineage and extraction-success
@@ -25,6 +27,8 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+CODEC = "spark.sql.parquet.compression.codec"
 
 
 def main() -> None:
@@ -61,19 +65,34 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from receipt_scanner_spark.plans.session import get_spark
+
+    # a session already running in this process is used as it is (a
+    # builder's getOrCreate would re-apply its options to it); under
+    # spark-submit the session comes preconfigured; standalone runs fall
+    # back to a local session
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        if os.environ.get("SPARK_ENV_LOADED"):
+            spark = SparkSession.builder.appName("rss-extract").getOrCreate()
+        else:
+            spark = get_spark(app_name="rss-extract")
+        spark.sparkContext.setLogLevel("WARN")
+    prior_codec = spark.conf.getAll.get(CODEC)
+    spark.conf.set(CODEC, args.codec)
+    try:
+        _run(spark, args)
+    finally:
+        if prior_codec is None:
+            spark.conf.unset(CODEC)
+        else:
+            spark.conf.set(CODEC, prior_codec)
+
+
+def _run(spark, args: argparse.Namespace) -> None:
     from receipt_scanner_spark.table.snapshots import (
         SnapshotTable,
         run_resumable_extraction,
     )
-
-    # under spark-submit the session comes preconfigured; standalone runs
-    # fall back to a local session
-    if os.environ.get("SPARK_ENV_LOADED"):
-        spark = SparkSession.builder.appName("rss-extract").getOrCreate()
-    else:
-        spark = get_spark(app_name="rss-extract")
-    spark.conf.set("spark.sql.parquet.compression.codec", args.codec)
-    spark.sparkContext.setLogLevel("WARN")
 
     table = SnapshotTable(args.table)
     if args.report:

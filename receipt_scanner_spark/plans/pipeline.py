@@ -30,7 +30,8 @@ from pyspark.sql import functions as F
 
 from ..functions.udfs import build_process_udf, process_udf
 
-PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
+PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
+PAGES_COLUMNS = [field.split()[0] for field in PAGES_SCHEMA.split(", ")]
 
 OBSERVATION_NAME = "extraction_metrics"
 

@@ -8,11 +8,14 @@ Iceberg (``spark.read.table`` + snapshot metadata) is config-only:
 
 * **Snapshot**: an immutable manifest ``snap-<n>.json`` listing every
   data file with its input-partition lineage + row/metric counts,
-  plus a parent pointer.  Manifests are written to a temp name and
-  ``os.replace``d — atomic on POSIX, so readers never see a torn
-  commit (the Iceberg commit-swap analog).
-* **HEAD**: ``_current`` file holding the latest snapshot id, also
-  swapped atomically.
+  plus a parent pointer.  A manifest is written to a temp file of its
+  writer's own and hard-linked to its name, which fails if the name
+  exists: readers never see a torn manifest, and of two writers racing
+  for one id exactly one wins (Iceberg's optimistic-concurrency commit;
+  the loser re-checks against the new HEAD and takes the next id).
+* **HEAD**: the highest manifest id.  ``_current`` holds a hint that
+  ``current_snapshot_id`` probes forward from, as Iceberg's
+  ``version-hint`` does, so a stale hint is harmless.
 * **Lineage**: each commit records which INPUT partitions (e.g. url
   host buckets, WARC date ranges) it covers; ``processed_partitions``
   is the union over the snapshot chain — the resume watermark.
@@ -20,7 +23,8 @@ Iceberg (``spark.read.table`` + snapshot metadata) is config-only:
   killed job processes only pending partitions, and re-committing an
   already-processed partition is rejected (idempotence guard) unless
   ``overwrite=True`` (the overwrite-by-partition idiom).
-* **Ingest** (``run_resumable_extraction``): one Spark job extracts
+* **Ingest** (``run_resumable_extraction``, and each micro-batch of
+  ``streaming.incremental.stream_extract``): one Spark job extracts
   every pending row and writes it once, ``partitionBy`` a copy of the
   key, to ``data/<uuid>/__part=<key>/``; then one snapshot per key is
   published over that key's files only.  Per-partition metrics come
@@ -28,7 +32,7 @@ Iceberg (``spark.read.table`` + snapshot metadata) is config-only:
   Iceberg's DataFile ``record_count``/``null_value_counts``), not from
   a second pass.  A kill mid-pass commits nothing; a kill between
   publishes keeps the partitions already published.
-* ``commit`` and the ingest share one guard (duplicate partitions,
+* ``commit`` and the ingests share one guard (duplicate partitions,
   explicit schema evolution) and one publish step.
 
 At 100 TB: one commit per input partition batch keeps manifests tiny
@@ -47,6 +51,11 @@ from pathlib import Path
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _private_tmp(path: Path) -> Path:
+    """A temp name next to ``path`` that no other writer uses."""
+    return path.with_name(f"{path.name}.{uuid.uuid4().hex}.tmp")
 
 
 @dataclass
@@ -76,17 +85,21 @@ class SnapshotTable:
     def _head_path(self) -> Path:
         return self.root / "_manifests" / "_current"
 
-    def _write_manifest(self, snap: Snapshot) -> None:
-        """Write a manifest to a temp name and ``os.replace`` it."""
-        tmp = self._manifest_path(snap.snapshot_id).with_suffix(".tmp")
+    def _staged(self, snap: Snapshot) -> Path:
+        """Write ``snap`` to a temp file of this writer's own."""
+        tmp = _private_tmp(self._manifest_path(snap.snapshot_id))
         tmp.write_text(json.dumps(asdict(snap), indent=1))
-        os.replace(tmp, self._manifest_path(snap.snapshot_id))
+        return tmp
 
     def current_snapshot_id(self) -> int | None:
+        """HEAD: probe forward from the ``_current`` hint to the last
+        manifest (a writer may have published after the hint was
+        written, or died between its manifest and the hint)."""
         p = self._head_path()
-        if not p.exists():
-            return None
-        return int(p.read_text().strip())
+        sid = int(p.read_text()) if p.exists() else 0
+        while self._manifest_path(sid + 1).exists():
+            sid += 1
+        return sid or None
 
     def snapshot(self, snapshot_id: int | None = None) -> Snapshot | None:
         sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
@@ -171,26 +184,38 @@ class SnapshotTable:
         files: list[str],
         metrics: dict,
         columns: list[str],
-        operation: str = "append",
+        overwrite: bool = False,
+        allow_schema_change: bool = False,
     ) -> Snapshot:
-        """Atomically publish one snapshot over already-written ``files``:
-        the manifest is written to a temp name and ``os.replace``d, then
-        HEAD is swapped the same way."""
-        parent = self.current_snapshot_id()
-        sid = (parent or 0) + 1
-        snap = Snapshot(
-            snapshot_id=sid,
-            parent_id=parent,
-            committed_at=time.time(),
-            partitions=list(partitions),
-            files=files,
-            metrics=metrics,
-            operation=operation,
-            schema=list(columns),
-        )
-        self._write_manifest(snap)  # atomic publish
-        head_tmp = self._head_path().with_suffix(".tmp")
-        head_tmp.write_text(str(sid))
+        """Publish one snapshot over already-written ``files`` as HEAD's
+        child.  The manifest name is taken exclusively (``os.link``), so
+        a concurrent writer that took this id first makes this one re-run
+        ``_guard`` against the new HEAD and retry with the next id; no
+        published snapshot is ever replaced.  The HEAD hint is then
+        advanced by ``os.replace`` of a temp file."""
+        while True:
+            parent = self.current_snapshot_id()
+            operation = self._guard(partitions, columns, overwrite, allow_schema_change)
+            snap = Snapshot(
+                snapshot_id=(parent or 0) + 1,
+                parent_id=parent,
+                committed_at=time.time(),
+                partitions=list(partitions),
+                files=files,
+                metrics=metrics,
+                operation=operation,
+                schema=list(columns),
+            )
+            tmp = self._staged(snap)
+            try:
+                os.link(tmp, self._manifest_path(snap.snapshot_id))
+                break
+            except FileExistsError:
+                continue  # lost the race for this id
+            finally:
+                tmp.unlink()
+        head_tmp = _private_tmp(self._head_path())
+        head_tmp.write_text(str(snap.snapshot_id))
         os.replace(head_tmp, self._head_path())
         return snap
 
@@ -203,15 +228,20 @@ class SnapshotTable:
         allow_schema_change: bool = False,
     ) -> Snapshot:
         """Write ``df`` under data/<uuid>/ and atomically publish a new
-        snapshot covering ``partitions``.  Crash before the final
-        rename leaves the table at the previous snapshot (orphan data
+        snapshot covering ``partitions``.  Crash before the manifest
+        is linked leaves the table at the previous snapshot (orphan data
         files are unreachable, as in Iceberg).  Duplicate partitions
         and schema changes are rejected before the write (``_guard``)."""
-        operation = self._guard(partitions, df.columns, overwrite, allow_schema_change)
+        self._guard(partitions, df.columns, overwrite, allow_schema_change)
         data_dir = self._new_data_dir()
         df.write.mode("error").parquet(str(self.root / data_dir))
         return self._publish(
-            partitions, self._data_files(data_dir), metrics or {}, df.columns, operation
+            partitions,
+            self._data_files(data_dir),
+            metrics or {},
+            df.columns,
+            overwrite,
+            allow_schema_change,
         )
 
     def _live_files(self, as_of: int | None = None) -> list[str]:
@@ -319,7 +349,7 @@ class SnapshotTable:
                 operation="append",  # nothing earlier remains to shadow
                 schema=root.schema,
             )
-            self._write_manifest(new_root)
+            os.replace(self._staged(new_root), self._manifest_path(root.snapshot_id))
             for s in earlier:
                 self._manifest_path(s.snapshot_id).unlink(missing_ok=True)
         # keep_from already the root -> nothing to expire, but the
@@ -396,6 +426,49 @@ def _footer_counts(paths: list[Path]) -> dict:
     return counts
 
 
+def _write_and_publish(
+    table: SnapshotTable, result: DataFrame, key, partitions: list[str]
+) -> list[Snapshot]:
+    """The write-and-publish tail of every ingest (``run_resumable_extraction``
+    and each ``stream_extract`` micro-batch).
+
+    ``partitions`` (the keys known before the pass) are checked against
+    HEAD first.  Then ``result`` is written once under
+    ``data/<uuid>/__part=<key>/`` (``partitionBy`` on a string copy of
+    the ``key`` column; the files keep every ``result`` column), and the
+    same pass collects the key set with ``observe``.  One snapshot per
+    key (sorted) is published; it lists only that key's files, which are
+    found through Spark's own partition-path rule, so per-partition
+    overwrite and resume stay exact.  Its metrics (``total``/``amount``/
+    ``date``/``errors``, as ``extraction_counts()``) come from those
+    files' parquet footers, so the extraction UDF runs once per row
+    (pinned by test_snapshots.test_extraction_udf_runs_once_per_row).
+    """
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    table._guard(partitions, result.columns)
+    data_dir = table._new_data_dir()
+    obs = Observation()
+    (
+        result.withColumn(_PART_DIR, key)
+        .observe(obs, F.collect_set(_PART_DIR).alias("keys"))
+        .write.mode("error")
+        .partitionBy(_PART_DIR)
+        .parquet(str(table.root / data_dir))
+    )
+    path_of = (
+        result.sparkSession._jvm.org.apache.spark.sql.catalyst.catalog
+        .ExternalCatalogUtils.getPartitionPathString
+    )
+    committed: list[Snapshot] = []
+    for part in sorted(obs.get["keys"]):
+        files = table._data_files(f"{data_dir}/{path_of(_PART_DIR, part)}")
+        metrics = _footer_counts([table.root / f for f in files])
+        committed.append(table._publish([part], files, metrics, result.columns))
+    return committed
+
+
 def run_resumable_extraction(
     spark: SparkSession,
     pages: DataFrame,
@@ -413,16 +486,9 @@ def run_resumable_extraction(
     ``coalesce(cast(col as string), "")``: a null value and ``""`` share
     one partition, as they share Spark's default partition directory.
 
-    One Spark job extracts every pending row and writes it once under
-    ``data/<uuid>/__part=<key>/`` (``partitionBy`` on a copy of the key;
-    the files keep the original column).  The same pass collects the
-    key set with ``observe``.  Then one snapshot per key (sorted) is
-    published; it lists only that key's files, which are found through
-    Spark's own partition-path rule, so per-partition overwrite and
-    resume stay exact.  Its metrics (``total``/``amount``/``date``/
-    ``errors``, as ``extraction_counts()``) come from those files'
-    parquet footers, so the extraction UDF runs once per row (pinned by
-    test_snapshots.test_extraction_udf_runs_once_per_row).
+    One Spark job extracts every pending row and writes it once; then
+    one snapshot per key is published with metrics read from the
+    written files' footers (``_write_and_publish``).
 
     A table without commits gets no pre-scan.  Otherwise a key-only scan
     of ``pages`` finds the pending keys: none pending returns ``[]``
@@ -432,7 +498,6 @@ def run_resumable_extraction(
     files are unreachable orphans); a kill between publishes keeps the
     partitions already published, and the rerun extracts only the rest.
     """
-    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from ..plans.pipeline import extract_pages
@@ -451,24 +516,4 @@ def run_resumable_extraction(
             f"partition column {partition_column!r} is not an output column "
             f"{result.columns}"
         )
-    table._guard(pending, result.columns)
-
-    data_dir = table._new_data_dir()
-    obs = Observation()
-    (
-        result.withColumn(_PART_DIR, key)
-        .observe(obs, F.collect_set(_PART_DIR).alias("keys"))
-        .write.mode("error")
-        .partitionBy(_PART_DIR)
-        .parquet(str(table.root / data_dir))
-    )
-    path_of = (
-        spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .getPartitionPathString
-    )
-    committed: list[Snapshot] = []
-    for part in sorted(obs.get["keys"]):
-        files = table._data_files(f"{data_dir}/{path_of(_PART_DIR, part)}")
-        metrics = _footer_counts([table.root / f for f in files])
-        committed.append(table._publish([part], files, metrics, result.columns))
-    return committed
+    return _write_and_publish(table, result, key, pending)

@@ -30,20 +30,12 @@ def test_run_resume_report(spark, tmp_path, monkeypatch, capsys):
         job.main()
         return capsys.readouterr()
 
-    # main() sets the session's codec and get_spark's runtime confs on the
-    # shared test session; put them back afterwards
+    # main() runs on the caller's session and leaves its confs as they were
     conf_before = spark.conf.getAll
-    try:
-        first = run()
-        second = run()
-        report = run("--report")
-    finally:
-        conf_after = spark.conf.getAll
-        for k in conf_after.keys() - conf_before.keys():
-            spark.conf.unset(k)
-        for k, v in conf_before.items():
-            if conf_after.get(k) != v and spark.conf.isModifiable(k):
-                spark.conf.set(k, v)
+    first = run()
+    second = run()
+    report = run("--report")
+    assert spark.conf.getAll == conf_before
 
     langs = {
         r["lang"] for r in spark.read.parquet(pages_dir).select("lang").distinct().collect()

@@ -127,12 +127,10 @@ class TestProfileBenchmark:
     def test_extract_pages_profile_plumbs_through(self, spark, tmp_path):
         import datetime as dt
 
-        from receipt_scanner_spark.plans.pipeline import extract_pages
+        from receipt_scanner_spark.plans.pipeline import PAGES_SCHEMA, extract_pages
 
         rows = [("http://h/x.html", dt.datetime(2024, 1, 1), bytes(PAGE), None, "en")]
-        pages = spark.createDataFrame(
-            rows, "url string, warc_ts timestamp, html binary, text string, lang string"
-        )
+        pages = spark.createDataFrame(rows, PAGES_SCHEMA)
         lenient = extract_pages(pages, observe=False, profile="lenient").first()
         default = extract_pages(pages, observe=False).first()
         assert "corp header text" in lenient["extracted_text"]

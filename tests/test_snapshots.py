@@ -1,6 +1,9 @@
 """Snapshot table: atomic commits, lineage, time travel, kill/resume."""
 
 import json
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -152,6 +155,45 @@ class TestSnapshotTable:
         table.commit(pages.select("url").limit(10), ["p1"])
         leftovers = list((tmp_path / "t" / "_manifests").glob("*.tmp"))
         assert not leftovers
+
+    def test_concurrent_publishes_form_one_chain(self, tmp_path):
+        """Two writers racing on one table: every publish that returned
+        is in HEAD's chain, ids are consecutive, and no temp file is
+        left behind."""
+        barrier = threading.Barrier(2, timeout=60)
+
+        def writer(name):
+            table = SnapshotTable(str(tmp_path / "t"))
+            barrier.wait()
+            return [
+                table._publish([f"{name}-{i}"], [], {}, ["url"]).snapshot_id
+                for i in range(20)
+            ]
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)  # interleave the writers finely
+        try:
+            with ThreadPoolExecutor(2) as pool:
+                returned = [sid for ids in pool.map(writer, "ab") for sid in ids]
+        finally:
+            sys.setswitchinterval(interval)
+        history = SnapshotTable(str(tmp_path / "t")).history()
+        assert sorted(returned) == [s.snapshot_id for s in history]
+        assert [s.snapshot_id for s in history] == list(range(1, 41))
+        assert [s.parent_id for s in history] == [None, *range(1, 40)]
+        assert sorted(p for s in history for p in s.partitions) == sorted(
+            f"{w}-{i}" for w in "ab" for i in range(20)
+        )
+        assert not list((tmp_path / "t" / "_manifests").glob("*.tmp"))
+
+        # HEAD does not depend on the hint: a writer that dies between its
+        # manifest and the hint leaves it stale, or absent on a new table
+        table = SnapshotTable(str(tmp_path / "t"))
+        table._head_path().write_text("1")
+        assert table.current_snapshot_id() == 40
+        table._head_path().unlink()
+        assert table.current_snapshot_id() == 40
+        assert table._publish(["c"], [], {}, ["url"]).parent_id == 40
 
 
 class TestResumableExtraction:

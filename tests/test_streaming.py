@@ -1,283 +1,96 @@
-"""Structured Streaming: incremental extraction (exactly-once per file
-across restarts) and streaming sessionization."""
+"""Streaming ingest into the snapshot table: exactly-once per file
+across restarts, a replayed micro-batch commits nothing, and the
+streaming entry of ``__spark_entry__.queries()`` equals the batch
+extraction."""
 
 import shutil
 
-import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry_mod
+from receipt_scanner_spark.plans.pipeline import extract_pages, extraction_counts
 from receipt_scanner_spark.sources.pages import write_corpus
-from receipt_scanner_spark.streaming.incremental import (
-    stream_extract,
-    stream_sessionize,
-)
+from receipt_scanner_spark.streaming.incremental import stream_extract
+from receipt_scanner_spark.table.snapshots import SnapshotTable
+
+
+def _add_files(tmp_path, src, prefix, **corpus):
+    write_corpus(str(tmp_path / prefix), **corpus)
+    for f in (tmp_path / prefix / "pages.parquet").glob("*.parquet"):
+        shutil.copy(f, src / f"{prefix}_{f.name}")
+
+
+def _drain(spark, src, table, ckpt):
+    q = stream_extract(spark, str(src), table, ckpt)
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+
+def _same_rows(a, b):
+    cols = ["url", "format", "extracted_text", "amount", "date", "error"]
+    a, b = a.select(*cols), b.select(*cols)
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 class TestStreamExtract:
     def test_available_now_drains_then_resumes_new_files(self, spark, tmp_path):
         src = tmp_path / "src"
-        out = str(tmp_path / "out")
+        src.mkdir()
+        table = SnapshotTable(str(tmp_path / "t"))
         ckpt = str(tmp_path / "ckpt")
 
-        # batch 1: 4 files
-        write_corpus(str(tmp_path / "c1"), n_rows=200, seed=42, n_files=4)
-        src.mkdir()
-        for f in (tmp_path / "c1" / "pages.parquet").glob("*.parquet"):
-            shutil.copy(f, src / f"a_{f.name}")
+        _add_files(tmp_path, src, "a", n_rows=200, seed=42, n_files=4)
+        _drain(spark, src, table, ckpt)
+        assert table.read(spark).count() == 200
 
-        q = stream_extract(spark, str(src), out, ckpt)
-        q.awaitTermination(120)
-        n1 = spark.read.parquet(out).count()
-        assert n1 == 200
-
-        # batch 2: new files appear; restart with same checkpoint →
-        # ONLY the new files are processed (no duplicates)
-        write_corpus(str(tmp_path / "c2"), n_rows=100, seed=7, n_files=2)
-        for f in (tmp_path / "c2" / "pages.parquet").glob("*.parquet"):
-            shutil.copy(f, src / f"b_{f.name}")
-
-        q2 = stream_extract(spark, str(src), out, ckpt)
-        q2.awaitTermination(120)
-        result = spark.read.parquet(out)
-        # exactly-once per file: 200 + 100, NOT 400 (reprocess) or 500
-        # (both batches redone).  (URLs overlap across seeds — the two
-        # corpora share index-derived urls — so count rows, not urls.)
+        # new files appear; a restart on the same checkpoint processes
+        # ONLY them: 200 + 100, not 400 (reprocess) or 500 (both redone).
+        # (urls overlap across seeds, so count rows, not urls)
+        _add_files(tmp_path, src, "b", n_rows=100, seed=7, n_files=2)
+        _drain(spark, src, table, ckpt)
+        result = table.read(spark)
         assert result.count() == 300
-        # extraction actually ran (amounts parsed)
         assert result.filter(F.col("amount").isNotNull()).count() > 200
 
+        history = table.history()
+        assert [s.partitions for s in history] == [
+            ["batch-00000000"], ["batch-00000001"]
+        ]
+        # each micro-batch snapshot carries the ingest's footer metrics
+        for s in history:
+            files = spark.read.parquet(*[str(table.root / f) for f in s.files])
+            assert files.agg(*extraction_counts()).first().asDict() == s.metrics
+        assert [s.metrics["total"] for s in history] == [200, 100]
 
-class TestStreamSessionize:
-    def test_session_window_counts(self, spark, tmp_path):
-        # memory-source streaming frame via rate-like replay: use a
-        # file stream over a small parquet of events
-        import pandas as pd
-
-        ev = pd.DataFrame(
-            {
-                "user_id": [1, 1, 1, 2],
-                "ts": pd.to_datetime(
-                    [
-                        "2024-01-01 00:00:00",
-                        "2024-01-01 00:10:00",  # same session (gap 10m)
-                        "2024-01-01 01:10:00",  # new session (gap 60m)
-                        "2024-01-01 00:00:00",
-                    ]
-                ).astype("datetime64[us]"),
-                "value": [1.0, 2.0, 4.0, 8.0],
-            }
-        )
-        src = tmp_path / "events"
+    def test_replayed_batch_commits_nothing(self, spark, tmp_path):
+        """A crash after the publish but before Spark logs the batch's
+        commit: the restart replays that batch id, and the table skips
+        it."""
+        src = tmp_path / "src"
         src.mkdir()
-        ev.to_parquet(src / "part-0.parquet", index=False)
+        table = SnapshotTable(str(tmp_path / "t"))
+        ckpt = tmp_path / "ckpt"
+        _add_files(tmp_path, src, "a", n_rows=40, seed=3, n_files=2)
+        _drain(spark, src, table, str(ckpt))
+        before = table.history()
+        rows = table.read(spark)
+        assert [s.partitions for s in before] == [["batch-00000000"]]
 
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp, value double")
-            .parquet(str(src))
-        )
-        sessions = stream_sessionize(spark, stream, gap="30 minutes")
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName("sess")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = {
-            (r.user_id, r.n_events, r.session_value)
-            for r in spark.sql("select * from sess").collect()
-        }
-        assert (1, 2, 3.0) in rows  # first session: 2 events, value 1+2
-        assert (1, 1, 4.0) in rows  # second session
-        assert (2, 1, 8.0) in rows
+        last = max(int(p.name) for p in (ckpt / "commits").glob("[0-9]*"))
+        (ckpt / "commits" / str(last)).unlink()
+        (ckpt / "commits" / f".{last}.crc").unlink()
+        _drain(spark, src, SnapshotTable(str(tmp_path / "t")), str(ckpt))
+        assert (ckpt / "commits" / str(last)).exists()  # the batch re-ran
+        assert table.history() == before
+        assert _same_rows(table.read(spark), rows)
 
 
-class TestStatefulDedup:
-    def test_first_seen_across_restarts(self, spark, tmp_path):
-        """applyInPandasWithState: first occurrence per url survives;
-        re-fetches in LATER micro-batches are dropped via state (and the
-        state persists across a query restart on the same checkpoint)."""
-        import pandas as pd
-        from receipt_scanner_spark.streaming.incremental import (
-            stream_dedup_first_seen,
-        )
-
-        src = tmp_path / "crawl"
-        src.mkdir()
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def batch(name, rows):
-            pd.DataFrame(rows).to_parquet(src / f"{name}.parquet", index=False)
-
-        batch("b1", [dict(url="u1", fetch=1), dict(url="u2", fetch=1)])
-
-        def run():
-            stream = spark.readStream.schema("url string, fetch bigint").parquet(
-                str(src)
-            )
-            q = (
-                stream_dedup_first_seen(stream, "url")
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        run()
-        first = spark.read.parquet(out).collect()
-        assert {(r.url, r.fetch) for r in first} == {("u1", 1), ("u2", 1)}
-
-        # new batch: u1 re-fetched (must be dropped via persisted state),
-        # u3 is new (must be emitted)
-        batch("b2", [dict(url="u1", fetch=2), dict(url="u3", fetch=1)])
-        run()
-        rows = {(r.url, r.fetch) for r in spark.read.parquet(out).collect()}
-        assert rows == {("u1", 1), ("u2", 1), ("u3", 1)}, rows
-
-    def test_state_ttl_expires_and_reemits(self, spark, tmp_path):
-        """Default rolling-window dedup: after ttl_ms of inactivity the
-        seen-flag is reaped (lazy timer: the reap happens in the next
-        batch that runs) and a later occurrence is emitted again."""
-        import time
-
-        import pandas as pd
-        from receipt_scanner_spark.streaming.incremental import (
-            stream_dedup_first_seen,
-        )
-
-        src = tmp_path / "crawl"
-        src.mkdir()
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def batch(name, rows):
-            pd.DataFrame(rows).to_parquet(src / f"{name}.parquet", index=False)
-
-        def run():
-            stream = spark.readStream.schema("url string, fetch bigint").parquet(
-                str(src)
-            )
-            q = (
-                stream_dedup_first_seen(stream, "url", ttl_ms=500)
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        batch("b1", [dict(url="u1", fetch=1)])
-        run()
-        time.sleep(1.5)  # > ttl
-        # this batch has no u1 data -> u1's expired timer fires, state reaped
-        batch("b2", [dict(url="u2", fetch=1)])
-        run()
-        # u1 re-appears AFTER its state was reaped -> emitted again
-        batch("b3", [dict(url="u1", fetch=3)])
-        run()
-        rows = sorted(
-            (r.url, r.fetch) for r in spark.read.parquet(out).collect()
-        )
-        assert rows == [("u1", 1), ("u1", 3), ("u2", 1)], rows
-
-    def test_no_timeout_opt_in_keeps_state_forever(self, spark, tmp_path):
-        """Explicit timeout='NoTimeout' restores whole-stream
-        exactly-once-per-key (state never expires)."""
-        import time
-
-        import pandas as pd
-        from receipt_scanner_spark.streaming.incremental import (
-            stream_dedup_first_seen,
-        )
-
-        src = tmp_path / "crawl"
-        src.mkdir()
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def batch(name, rows):
-            pd.DataFrame(rows).to_parquet(src / f"{name}.parquet", index=False)
-
-        def run():
-            stream = spark.readStream.schema("url string, fetch bigint").parquet(
-                str(src)
-            )
-            q = (
-                stream_dedup_first_seen(stream, "url", timeout="NoTimeout")
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        batch("b1", [dict(url="u1", fetch=1)])
-        run()
-        time.sleep(1.2)
-        batch("b2", [dict(url="u1", fetch=2), dict(url="u2", fetch=1)])
-        run()
-        rows = sorted(
-            (r.url, r.fetch) for r in spark.read.parquet(out).collect()
-        )
-        assert rows == [("u1", 1), ("u2", 1)], rows
-
-
-class TestWatermarkLateData:
-    def test_late_events_dropped_deterministically(self, spark, tmp_path):
-        """Watermark semantics: an event arriving in a later micro-batch,
-        older than (max seen ts - watermark), must not reopen its session."""
-        import pandas as pd
-        from receipt_scanner_spark.streaming.incremental import stream_sessionize
-
-        src = tmp_path / "ev"
-        src.mkdir()
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ck")
-
-        def run_batch():
-            stream = (
-                spark.readStream.schema("user_id bigint, ts timestamp, value double")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(str(src))
-            )
-            q = (
-                stream_sessionize(spark, stream, gap="10 minutes", watermark="30 minutes")
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-
-        def write(name, when, value):
-            df = pd.DataFrame([dict(user_id=1, ts=when, value=value)])
-            df["ts"] = pd.to_datetime(df["ts"]).astype("datetime64[us]")
-            df.to_parquet(src / name, index=False)
-
-        # batch 1: one early event; batch 2 (separate file -> separate
-        # micro-batch) advances the clock far ahead
-        write("a.parquet", "2024-01-01 00:00:00", 1.0)
-        write("b.parquet", "2024-01-01 06:00:00", 2.0)
-        run_batch()
-        first = spark.read.parquet(out).collect()
-        # the 00:00 session is finalized (watermark passed it)
-        assert any(r.session_value == 1.0 for r in first)
-
-        # batch 3: a LATE event for the long-closed 00:05 slot
-        write("c.parquet", "2024-01-01 00:05:00", 64.0)
-        run_batch()
-        rows = spark.read.parquet(out).collect()
-        # late event dropped: no session ever contains value 64
-        assert not any(r.session_value == 64.0 or r.session_value == 65.0
-                       for r in rows), rows
+def test_spark_entry_equals_extract_pages(spark, tmp_path):
+    """``__spark_entry__``'s streaming entry returns exactly what the
+    batch extraction of the same corpus returns."""
+    got = entry_mod.queries()["streaming_extract_availablenow"](spark, "")
+    write_corpus(str(tmp_path / "c"), n_rows=200, seed=11, n_files=4)
+    pages = spark.read.parquet(str(tmp_path / "c" / "pages.parquet"))
+    want = extract_pages(pages, observe=False).select(*got.columns)
+    assert got.count() == 200
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
