@@ -1,5 +1,5 @@
 """Real, stdlib-only OCR for bitmap-font text — the executable engine
-behind the pipeline's pluggable ``ocr=`` hook.
+behind the pipeline's pluggable ``ocr_arrays=`` hook (``ocr_pixels``).
 
 The reference shells out to tesseract for photographed receipts
 (lib/image_processor.js:1,49; lib/pdf_processor.js:25 uses it as the
@@ -14,8 +14,8 @@ bitmap font it ships (A-Z, 0-9, receipt punctuation), which is also
 the font ``render_text`` uses to generate synthetic receipt images —
 so image → decode → OCR → parse_text runs end-to-end with zero
 external dependencies and exact expected outputs.  A production swap
-to tesseract remains config-only (same ``ocr(bytes) -> str``
-contract).
+to tesseract remains config-only (same ``ocr_arrays(luma) -> str``
+contract: pytesseract reads arrays).
 
 Geometry contract (shared by renderer and recognizer):
   * glyph cell 5×7 font pixels, advance 6 (one spacer column);
@@ -365,12 +365,13 @@ def ocr_pixels(px: np.ndarray, font: BitmapFont = DEFAULT_FONT) -> str:
 
 
 def bitmap_ocr(image_bytes: bytes, font: BitmapFont = DEFAULT_FONT) -> str:
-    """The pluggable engine: decode (real PNG/BMP/GIF codecs) then
-    recognize.  Drop-in for the pipeline's ``ocr=`` hook
-    (functions/udfs.py, extract/pdf.process_pdf) — the same
-    ``ocr(bytes) -> str`` contract a tesseract adapter would honor
-    (reference lib/image_processor.js:49); bind a custom ``font`` with
-    ``functools.partial`` to keep that contract."""
+    """Encoded image bytes → text: decode (real PNG/BMP/GIF/JPEG/...
+    codecs via extract/imaging.decode_pixels) then ``ocr_pixels`` —
+    the reference's one-tesseract-call-per-image analog
+    (lib/image_processor.js:49), used by operators/multimodal.ocr_images.
+    The extraction pipeline's hook is ``ocr_pixels`` itself
+    (``ocr_arrays=``), which also sees PDF images and EXIF-rotated or
+    multi-page TIFF pixels."""
     from .imaging import decode_pixels
 
     return ocr_pixels(decode_pixels(bytes(image_bytes)), font)

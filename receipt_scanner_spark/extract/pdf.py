@@ -19,7 +19,8 @@ image codestreams decode via extract/jpeg.py (DCTDecode) and
 extract/ccitt.py (CCITTFaxDecode); encrypted or exotic PDFs
 yield empty text and flow into the error path.  That covers the
 deterministic synthetic corpus and simple real-world text-layer PDFs;
-at web scale the OCR stage stays a pluggable stub (SURVEY.md §2.3 I11).
+at web scale OCR stays off unless a pixel hook (``ocr_arrays``) is
+plugged in (SURVEY.md §2.3 I11).
 
 Designed for row-at-a-time use inside Arrow-batched pandas UDFs: bytes
 stay in memory end-to-end (no temp files, unlike the reference's
@@ -52,10 +53,6 @@ class PdfText(NamedTuple):
 class PdfResult(NamedTuple):
     text: str | None
     error: str | None
-
-
-def _decode_pdf_string(raw: bytes) -> str:
-    return _unescape_pdf_string(raw).decode("latin-1")
 
 
 def _unescape_pdf_string(raw: bytes) -> bytes:
@@ -622,21 +619,6 @@ def _object_stream_body(pdf_bytes: bytes, num: int) -> bytes | None:
     return None
 
 
-def extract_pdf_images(pdf_bytes: bytes) -> list[bytes]:
-    """Materialize embedded image bytes in file order — the
-    ``pdfimages`` analog (lib/pdf_processor.js:86-97), feeding the
-    per-image OCR fan-out: /Image XObjects and inline (BI/ID/EI)
-    images.  The /Filter chain is applied (same bomb/truncation guards
-    as the text path); image codecs (DCT/CCITT/JPX/JBIG2) pass through
-    as their codestream bytes.  Corrupt/over-cap streams are skipped
-    (error-as-value: the document survives with fewer images)."""
-    return [
-        data
-        for _h, data, _codec in _iter_image_payloads(pdf_bytes)
-        if data is not None
-    ]
-
-
 _WIDTH_RE = re.compile(rb"/Width\s+(\d+)")
 _HEIGHT_RE = re.compile(rb"/Height\s+(\d+)")
 _BPC_RE = re.compile(rb"/BitsPerComponent\s+(\d+)")
@@ -652,9 +634,8 @@ def extract_pdf_image_arrays(pdf_bytes: bytes) -> list[tuple]:
     extract/ccitt.py (unsupported codecs are error-as-value).  Returns one
     ``(pixels, error)`` pair per image in file order, exactly one of
     the two non-None — the same error-as-value idiom as the text path.
-    This is what an OCR engine plugged into ``process_pdf`` would
-    consume after its own decode; with these arrays the plug can skip
-    that step for raster PDFs entirely."""
+    These arrays are what ``process_pdf`` hands its ``ocr_arrays``
+    hook."""
     import numpy as np
 
     out: list[tuple] = []
@@ -771,28 +752,21 @@ def extract_pdf_image_arrays(pdf_bytes: bytes) -> list[tuple]:
     return out
 
 
-def process_pdf(
-    pdf_bytes: bytes,
-    ocr: Callable[[bytes], str] | None = None,
-    ocr_arrays: Callable | None = None,
-) -> PdfResult:
+def process_pdf(pdf_bytes: bytes, ocr_arrays: Callable | None = None) -> PdfResult:
     """Full PDF branch with the reference's blank-text/OCR-fallback gates.
 
-    ``ocr`` (pluggable, off by default at web scale) maps ONE decoded
-    embedded image's bytes to its text — the ImageProcessor-per-image
-    analog.  On a blank text layer the embedded /Image XObject streams
-    are materialized in file order (extract_pdf_images, the pdfimages
-    analog) and fanned out to ``ocr`` one by one; results join with
-    '\\n\\n\\n' in image order (lib/pdf_processor.js:53-84).  Any image
-    OCR failure fails the document (error-as-value), matching the
+    ``ocr_arrays`` (pluggable, off by default at web scale) maps ONE
+    decoded (h, w) uint8 luma array to its text, e.g. the built-in
+    extract/ocr.ocr_pixels recognizer.  On a blank text layer the
+    embedded images are decoded in file order (extract_pdf_image_arrays,
+    the pdfimages analog) and fanned out to ``ocr_arrays`` one by one;
+    results join with '\\n\\n\\n' in image order
+    (lib/pdf_processor.js:53-84).  A per-image decode or OCR failure
+    fails the document with that error (error-as-value), matching the
     reference's first-error callback (pdf_processor.js:69-72).
 
-    ``ocr_arrays`` (takes priority when both are given) maps ONE real
-    decoded (h, w) uint8 luma array to its text — the contract for
-    engines that want pixels, not stream bytes (e.g. the built-in
-    extract/ocr.ocr_pixels recognizer).  Images are decoded by
-    extract_pdf_image_arrays; a per-image decode error fails the
-    document with that error (same first-error semantics).
+    Without a hook a blank text layer reports 'OCR not configured' when
+    some image stream decodes, else 'No images found in PDF'.
     """
     if not pdf_bytes.startswith(b"%PDF-"):
         return PdfResult(None, "Unsupported format: application/octet-stream")
@@ -804,35 +778,27 @@ def process_pdf(
     if not _BLANK_RE.match(text):
         return PdfResult(text, None)
     # Blank text layer → OCR fallback (pdf_processor.js:32-38,53-84).
-    if ocr_arrays is not None:
-        try:
-            pairs = extract_pdf_image_arrays(pdf_bytes)
-        except Exception as exc:
-            return PdfResult(None, f"PDF parse error: {type(exc).__name__}")
-        if not pairs:
-            return PdfResult(None, NO_IMAGES_ERROR)
-        ocr_pages = []
-        for px, img_err in pairs:
-            if img_err is not None:
-                # first-error callback semantics (pdf_processor.js:69-72)
-                return PdfResult(None, f"OCR error: {img_err}")
-            try:
-                ocr_pages.append(ocr_arrays(px))
-            except Exception as exc:
-                return PdfResult(None, f"OCR error: {type(exc).__name__}")
-        return PdfResult("\n\n\n".join(ocr_pages), None)
     try:
-        images = extract_pdf_images(pdf_bytes)
+        if ocr_arrays is None:
+            # a list, not a short-circuiting any(): a payload after the
+            # first decodable one that raises still makes this a 'PDF
+            # parse error'.  No decodable image (all-corrupt streams
+            # included) is the reference's pdfimages-found-nothing value
+            # (pdf_processor.js:61)
+            decoded = [d is not None for _h, d, _c in _iter_image_payloads(pdf_bytes)]
+            return PdfResult(None, OCR_UNAVAILABLE_ERROR if any(decoded) else NO_IMAGES_ERROR)
+        pairs = extract_pdf_image_arrays(pdf_bytes)
     except Exception as exc:
         return PdfResult(None, f"PDF parse error: {type(exc).__name__}")
-    if not images:
-        # pdfimages produced nothing → the reference's exact error value
-        # (pdf_processor.js:61); also covers all-corrupt image streams.
+    if not pairs:
         return PdfResult(None, NO_IMAGES_ERROR)
-    if ocr is None:
-        return PdfResult(None, OCR_UNAVAILABLE_ERROR)
-    try:
-        ocr_pages = [ocr(img) for img in images]
-    except Exception as exc:
-        return PdfResult(None, f"OCR error: {type(exc).__name__}")
+    ocr_pages = []
+    for px, img_err in pairs:
+        if img_err is not None:
+            # first-error callback semantics (pdf_processor.js:69-72)
+            return PdfResult(None, f"OCR error: {img_err}")
+        try:
+            ocr_pages.append(ocr_arrays(px))
+        except Exception as exc:
+            return PdfResult(None, f"OCR error: {type(exc).__name__}")
     return PdfResult("\n\n\n".join(ocr_pages), None)

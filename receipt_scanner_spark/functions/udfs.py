@@ -75,7 +75,7 @@ PROCESS_SCHEMA = StructType(
 def extract_row(
     html: bytes | None,
     text: str | None,
-    ocr: Callable | None = None,
+    *,
     profile: str | None = None,
     ocr_arrays: Callable | None = None,
 ) -> tuple[str, str | None, str | None]:
@@ -89,13 +89,11 @@ def extract_row(
     reference's selectable preprocessor surface I12-I14); None/'default'
     is the byte-identity contract path.
 
-    OCR engines (both pluggable, off by default at web scale — I11):
-    ``ocr(image_bytes) -> text`` consumes encoded bytes (the tesseract-
-    adapter contract); ``ocr_arrays(luma_hw_uint8) -> text`` consumes
-    real decoded pixels (the extract/ocr.ocr_pixels contract) — for it,
-    standalone images decode via extract/imaging.decode_pixels and PDF
-    XObjects via extract_pdf_image_arrays.  ``ocr`` wins when both are
-    given (it sees the original bytes).
+    ``ocr_arrays(luma_hw_uint8) -> text`` is the one OCR hook (off by
+    default at web scale — I11; the extract/ocr.ocr_pixels contract).
+    It sees decoded pixels: standalone images decode via
+    extract/imaging.decode_pixels (EXIF orientation applied, every TIFF
+    page), PDF images via extract/pdf.extract_pdf_image_arrays.
     """
     html = maybe_gunzip(html)  # WARC-style gzip'd payloads (no-op else)
     fmt = sniff_format(html)
@@ -106,20 +104,13 @@ def extract_row(
 
         return fmt, extract_with_profile(html, profile), None
     if fmt == "pdf":
-        r = process_pdf(bytes(html), ocr=ocr, ocr_arrays=ocr_arrays)
+        r = process_pdf(bytes(html), ocr_arrays=ocr_arrays)
         return fmt, r.text, r.error
     if fmt.startswith("image/"):
         # OCR is pluggable and off by default at web scale (I11); the
         # `text` column carries upstream OCR output when present.
-        # Contract: ocr(image_bytes) -> text, one call per image (the
-        # ImageProcessor analog — a standalone image is ONE image).
         if text is not None:
             return fmt, text, None
-        if ocr is not None:
-            try:
-                return fmt, ocr(bytes(html)), None
-            except Exception as exc:
-                return fmt, None, f"OCR error: {type(exc).__name__}"
         if ocr_arrays is not None:
             from ..extract.imaging import (
                 apply_orientation,
@@ -215,15 +206,16 @@ def parse_row(
 
 def build_process_udf(
     parsers: list | None = None,
-    ocr: Callable | None = None,
+    *,
     profile: str | None = None,
     ocr_arrays: Callable | None = None,
 ):
     """Fused extract+parse: one Arrow exchange per batch.
 
-    ``profile``: named stripper preprocessing profile
-    (extract/profiles.PROFILES) — the reference's selectable
-    preprocessor surface (I12-I14)."""
+    ``profile`` and ``ocr_arrays`` are passed to ``extract_row``:
+    a named stripper preprocessing profile (extract/profiles.PROFILES,
+    the reference's selectable preprocessor surface I12-I14) and the
+    pixel OCR hook."""
 
     @pandas_udf(PROCESS_SCHEMA)
     def process(html: pd.Series, text: pd.Series) -> pd.DataFrame:
@@ -231,7 +223,7 @@ def build_process_udf(
         for h, t in zip(html, text):
             fmt = extracted = None
             try:
-                fmt, extracted, error = extract_row(h, t, ocr, profile, ocr_arrays)
+                fmt, extracted, error = extract_row(h, t, profile=profile, ocr_arrays=ocr_arrays)
                 out.append((fmt, extracted, error, *parse_row(extracted, parsers)))
             except Exception as exc:
                 # one bad document never fails the batch: an unexpected

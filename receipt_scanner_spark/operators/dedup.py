@@ -287,30 +287,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-def embedding_lsh_buckets(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """(id, bucket LONG): sign pattern of ``n_planes`` seeded random
-    hyperplanes — cosine-similar vectors collide with high probability.
-    Computed in one vectorized pandas UDF (Arrow-batched numpy matmul).
-
-    Pass ``dim`` when the embedding dimension is known (it always is in
-    a real pipeline) to skip the one-row probe job that otherwise infers
-    it from the data."""
-    planes = (
-        _hyperplanes(dim, n_planes, seed)
-        if dim is not None
-        else _hyperplanes_cache(df, vec_col, n_planes, seed)
-    )
-    bucket = _bucket_udf(planes, n_planes)
-    return df.select(F.col(id_col), bucket(F.col(vec_col)).alias("bucket"))
-
-
 def _bucket_udf(planes: np.ndarray, n_planes: int):
     """Arrow-batched sign-pattern bucket id for a vector column."""
     dim = planes.shape[1]

@@ -366,22 +366,19 @@ def ocr_images(
     df: DataFrame,
     id_col: str = "media_id",
     bytes_col: str = "media",
-    engine=None,
 ) -> DataFrame:
     """mapInPandas OCR: binary image → recognized text, error-as-value.
 
-    ``engine`` is the pluggable ``ocr(bytes) -> str`` hook (same
-    contract as the extraction pipeline's ``ocr=`` and the reference's
-    tesseract call, lib/image_processor.js:49); the default is the
-    REAL built-in recognizer (extract/ocr.bitmap_ocr — binarize,
-    scale-infer, segment, template-match over the real PNG/BMP/GIF
-    decoders).  Scale shape: map-only, one Python worker pass, peak
-    memory one Arrow batch of decoded pages."""
+    One image, one call, as the reference's tesseract call
+    (lib/image_processor.js:49), through the REAL built-in recognizer
+    (extract/ocr.bitmap_ocr — binarize, scale-infer, segment,
+    template-match over the real PNG/BMP/GIF decoders).  Scale shape:
+    map-only, one Python worker pass, peak memory one Arrow batch of
+    decoded pages."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..extract.ocr import bitmap_ocr
 
-        fn = engine or bitmap_ocr
         for pdf in batches:
             ids, texts, errs = [], [], []
             for mid, data in zip(pdf[id_col], pdf[bytes_col]):
@@ -389,7 +386,7 @@ def ocr_images(
                 try:
                     if data is None or len(data) == 0:
                         raise ValueError("empty payload")
-                    texts.append(fn(bytes(data)))
+                    texts.append(bitmap_ocr(bytes(data)))
                     errs.append(None)
                 except NotImplementedError as exc:
                     texts.append(None)

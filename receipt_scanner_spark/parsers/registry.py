@@ -31,11 +31,6 @@ PARSERS: dict[str, ParserFn] = {
 }
 
 
-def register_parser(name: str, fn: ParserFn) -> None:
-    """Plug-in surface (T17): user-supplied parser, keyed by name."""
-    PARSERS[name] = fn
-
-
 def parse_text(
     text: str,
     parsers: list[Any] | None = None,

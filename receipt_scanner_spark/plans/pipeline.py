@@ -69,7 +69,6 @@ def extract_pages(
     salt_partitions: int | None = None,
     salt: int = 16,
     parsers: list | None = None,
-    ocr=None,
     ocr_arrays=None,
     observe: bool = True,
     profile: str | None = None,
@@ -83,12 +82,14 @@ def extract_pages(
 
     ``profile``: named stripper preprocessing profile (I12-I14 surface,
     extract/profiles.py); None == 'default' == the byte-identity path.
+
+    ``ocr_arrays``: the pixel OCR hook, (h, w) uint8 luma → text
+    (functions/udfs.extract_row); None leaves OCR off.
     """
     udf = (
         process_udf
-        if parsers is None and ocr is None and ocr_arrays is None
-        and profile in (None, "default")
-        else build_process_udf(parsers, ocr, profile=profile, ocr_arrays=ocr_arrays)
+        if parsers is None and ocr_arrays is None and profile in (None, "default")
+        else build_process_udf(parsers, profile=profile, ocr_arrays=ocr_arrays)
     )
 
     df = pages.select(*PAGES_COLUMNS)

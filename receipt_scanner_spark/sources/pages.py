@@ -183,8 +183,8 @@ def make_pdf(pages: list[list[str]], compress: bool = False, blank: bool = False
 
     ``with_image``: number of embedded /Image XObjects on the blank path
     (True == 1).  Image i carries pixel bytes ``bytes([i]) * (i+1)``;
-    odd-indexed images are FlateDecode-compressed so the decode path in
-    extract_pdf_images is exercised."""
+    odd-indexed images are FlateDecode-compressed so the image decode
+    path of extract/pdf is exercised."""
     objs: list[bytes] = []
 
     def content_stream(lines: list[str]) -> bytes:

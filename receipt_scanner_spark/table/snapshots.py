@@ -17,8 +17,10 @@ Iceberg (``spark.read.table`` + snapshot metadata) is config-only:
   ``current_snapshot_id`` probes forward from, as Iceberg's
   ``version-hint`` does, so a stale hint is harmless.
 * **Lineage**: each commit records which INPUT partitions (e.g. url
-  host buckets, WARC date ranges) it covers; ``processed_partitions``
-  is the union over the snapshot chain — the resume watermark.
+  host buckets, WARC date ranges) it covers, and ``processed``, the
+  union over its chain — the resume watermark, read from ONE manifest
+  (Iceberg keeps its table state in the newest metadata file the same
+  way), so a commit costs the same at any chain length.
 * **Resume**: ``pending = all_partitions - processed``; re-running a
   killed job processes only pending partitions, and re-committing an
   already-processed partition is rejected (idempotence guard) unless
@@ -46,7 +48,7 @@ import json
 import os
 import time
 import uuid
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, replace
 from pathlib import Path
 from typing import Iterable
 
@@ -66,6 +68,9 @@ class Snapshot:
     partitions: list[str]  # input partitions covered by THIS commit
     files: list[str]  # data files added by this commit (relative)
     metrics: dict  # extraction-success metrics for this commit
+    # sorted union of ``partitions`` over the chain up to this commit; no
+    # default, so a manifest written without it fails to load
+    processed: list[str]
     operation: str = "append"
     schema: list[str] = field(default_factory=list)
 
@@ -118,15 +123,16 @@ class SnapshotTable:
         return list(reversed(chain))
 
     def processed_partitions(self, as_of: int | None = None) -> set[str]:
-        chain = self.history()
-        if as_of is not None:
-            chain = [s for s in chain if s.snapshot_id <= as_of]
-        out: set[str] = set()
-        for s in chain:
-            if s.operation == "overwrite":
-                pass  # overwrite replaces data but the partition stays processed
-            out.update(s.partitions)
-        return out
+        """Input partitions committed up to snapshot ``as_of`` (default
+        HEAD; an overwrite leaves its partitions processed).  Reads one
+        manifest; an id before the chain or expired has none."""
+        head = self.current_snapshot_id()
+        if head is None:
+            return set()
+        sid = head if as_of is None else min(as_of, head)
+        if sid < 1 or not self._manifest_path(sid).exists():
+            return set()
+        return set(self.snapshot(sid).processed)
 
     def pending_partitions(self, all_partitions: Iterable[str]) -> list[str]:
         done = self.processed_partitions()
@@ -139,22 +145,23 @@ class SnapshotTable:
         columns: list[str],
         overwrite: bool = False,
         allow_schema_change: bool = False,
-    ) -> str:
+    ) -> tuple[Snapshot | None, str]:
         """Check a commit of ``partitions`` with ``columns`` against HEAD
-        before anything is written; return its operation.
+        before anything is written; return HEAD and the commit's
+        operation.
 
         Schema evolution is EXPLICIT, as in Iceberg: columns that differ
         from the table's current schema are rejected unless
         ``allow_schema_change=True`` (column ADDS only — drops/renames
         would orphan history; reads merge old and new files with nulls
         for missing columns)."""
-        done = self.processed_partitions()
+        head = self.snapshot()
+        done = set(head.processed) if head is not None else set()
         dup = [p for p in partitions if p in done]
         if dup and not overwrite:
             raise ValueError(
                 f"partitions already committed (resume should skip them): {dup}"
             )
-        head = self.snapshot()
         if head is not None and head.schema and columns != head.schema:
             if not allow_schema_change:
                 raise ValueError(
@@ -167,7 +174,7 @@ class SnapshotTable:
                     "schema evolution supports column ADDS only; commit "
                     f"drops existing columns {missing}"
                 )
-        return "overwrite" if dup else "append"
+        return head, "overwrite" if dup else "append"
 
     def _new_data_dir(self) -> str:
         return f"data/{uuid.uuid4().hex}"
@@ -194,8 +201,10 @@ class SnapshotTable:
         published snapshot is ever replaced.  The HEAD hint is then
         advanced by ``os.replace`` of a temp file."""
         while True:
-            parent = self.current_snapshot_id()
-            operation = self._guard(partitions, columns, overwrite, allow_schema_change)
+            head, operation = self._guard(
+                partitions, columns, overwrite, allow_schema_change
+            )
+            parent = head.snapshot_id if head is not None else None
             snap = Snapshot(
                 snapshot_id=(parent or 0) + 1,
                 parent_id=parent,
@@ -203,6 +212,9 @@ class SnapshotTable:
                 partitions=list(partitions),
                 files=files,
                 metrics=metrics,
+                processed=sorted(
+                    {*partitions, *(head.processed if head is not None else ())}
+                ),
                 operation=operation,
                 schema=list(columns),
             )
@@ -339,15 +351,12 @@ class SnapshotTable:
                     "earlier partitions (compact() first)"
                 )
             # squash: keep_from becomes the chain root, absorbing coverage
-            new_root = Snapshot(
-                snapshot_id=root.snapshot_id,
+            # (its ``processed`` already holds it)
+            new_root = replace(
+                root,
                 parent_id=None,
-                committed_at=root.committed_at,
                 partitions=sorted(set(root.partitions) | earlier_parts),
-                files=root.files,
-                metrics=root.metrics,
                 operation="append",  # nothing earlier remains to shadow
-                schema=root.schema,
             )
             os.replace(self._staged(new_root), self._manifest_path(root.snapshot_id))
             for s in earlier:

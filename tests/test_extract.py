@@ -155,30 +155,18 @@ class TestPdf:
         r = process_pdf(make_pdf([], blank=True, with_image=True))
         assert r.error == OCR_UNAVAILABLE_ERROR
 
-    def test_blank_pdf_with_images_and_ocr_stub(self):
-        # per-image OCR fan-out, joined with '\n\n\n' in image order
-        # (pdf_processor.js:53-84); the stub receives the DECODED image
-        # bytes (image 0 raw, image 1 FlateDecode-inflated)
-        seen = []
+    def test_pdf_image_extraction_file_order_and_decode(self):
+        from receipt_scanner_spark.extract.pdf import _iter_image_payloads
 
-        def ocr(img_bytes):
-            seen.append(img_bytes)
-            return f"ocr of {img_bytes.hex()}"
+        def payloads(pdf):
+            return [data for _h, data, _codec in _iter_image_payloads(pdf)]
 
-        r = process_pdf(make_pdf([], blank=True, with_image=2), ocr=ocr)
         # make_pdf: image i pixels are bytes([i]) * (i+1); image 1 was
         # flate-compressed inside the PDF and arrives decoded here
-        assert seen == [b"\x00", b"\x01\x01"]
-        assert r.text == "ocr of 00\n\n\nocr of 0101"
-
-    def test_pdf_image_extraction_file_order_and_decode(self):
-        from receipt_scanner_spark.extract.pdf import extract_pdf_images
-
         pdf = make_pdf([], blank=True, with_image=3)
-        imgs = extract_pdf_images(pdf)
-        assert imgs == [b"\x00", b"\x01\x01", b"\x02\x02\x02"]
+        assert payloads(pdf) == [b"\x00", b"\x01\x01", b"\x02\x02\x02"]
         # text-layer PDFs have no image XObjects
-        assert extract_pdf_images(make_pdf([["hello"]])) == []
+        assert payloads(make_pdf([["hello"]])) == []
 
     def test_blank_pdf_all_corrupt_images_no_images_error(self):
         """Corrupt (truncated-flate) image streams are skipped; if none
@@ -193,7 +181,7 @@ class TestPdf:
             b" /Filter /FlateDecode /Length " + str(len(trunc)).encode()
             + b" >>\nstream\n" + trunc + b"\nendstream\nendobj\n"
         )
-        r = process_pdf(pdf, ocr=lambda b: "never called")
+        r = process_pdf(pdf)
         assert r.text is None and r.error == NO_IMAGES_ERROR
 
     def test_escaped_strings(self):

@@ -164,7 +164,7 @@ class TestOcrIntoParsers:
         from receipt_scanner_spark.functions.udfs import extract_row, parse_row
 
         png = encode_png_gray(render_text("JOES DINER\nTOTAL $23.45", scale=2))
-        fmt, text, err = extract_row(png, None, ocr=bitmap_ocr)
+        fmt, text, err = extract_row(png, None, ocr_arrays=ocr_pixels)
         assert (fmt, err) == ("image/png", None)
         assert text == "JOES DINER\nTOTAL $23.45"
         amount, _date, _spans, _extra = parse_row(text)
@@ -219,6 +219,15 @@ class TestPdfOcrArrays:
         r = process_pdf(pdf, ocr_arrays=ocr_pixels)
         assert r.error is None
         assert r.text == "PAGE ONE\nTOTAL $5.00\n\n\nPAGE TWO"
+
+    def test_decodable_image_without_hook_needs_ocr(self):
+        from receipt_scanner_spark.extract.pdf import (
+            OCR_UNAVAILABLE_ERROR,
+            process_pdf,
+        )
+
+        pdf = _raster_pdf((render_text("TOTAL $5.00", scale=2), False))
+        assert process_pdf(pdf) == (None, OCR_UNAVAILABLE_ERROR)
 
     def test_jpeg_xobject_is_first_error(self):
         from receipt_scanner_spark.extract.pdf import process_pdf

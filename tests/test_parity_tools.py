@@ -24,7 +24,9 @@ def _in_git_checkout() -> bool:
 pytestmark = pytest.mark.skipif(not _in_git_checkout(), reason="not a git checkout")
 
 
-@pytest.mark.parametrize("tool", ["diff_parsers_base.py", "diff_stripper_base.py"])
+@pytest.mark.parametrize(
+    "tool", ["diff_parsers_base.py", "diff_stripper_base.py", "diff_pdf_base.py"]
+)
 def test_tool_passes_against_head(tool):
     r = subprocess.run([sys.executable, str(ROOT / "tools" / tool), "HEAD", "300"],
                        cwd=ROOT, capture_output=True, text=True, timeout=900)

@@ -348,7 +348,6 @@ class TestInlineImages:
     def test_uncompressed_gray(self):
         from receipt_scanner_spark.extract.pdf import (
             extract_pdf_image_arrays,
-            extract_pdf_images,
         )
 
         px = np.arange(12, dtype=np.uint8).reshape(3, 4) * 20
@@ -356,7 +355,6 @@ class TestInlineImages:
             b"q BI /W 4 /H 3 /BPC 8 /CS /G ID " + px.tobytes() + b" EI Q"
         )
         pdf = self._content_pdf(content)
-        assert extract_pdf_images(pdf) == [px.tobytes()]
         [(arr, err)] = extract_pdf_image_arrays(pdf)
         assert err is None and np.array_equal(arr, px)
 
@@ -381,12 +379,15 @@ class TestInlineImages:
     def test_binary_data_containing_EI(self):
         # uncompressed data whose BYTES spell ' EI ' must not truncate:
         # the explicit-length path reads exactly W*H bytes
-        from receipt_scanner_spark.extract.pdf import extract_pdf_images
+        from receipt_scanner_spark.extract.pdf import (
+            extract_pdf_image_arrays,
+        )
 
         px = b"ab EI cd EI "  # 12 bytes = 4x3 gray
         content = b"BI /W 4 /H 3 /BPC 8 /CS /G ID " + px + b" EI"
         pdf = self._content_pdf(content)
-        assert extract_pdf_images(pdf) == [px]
+        [(arr, err)] = extract_pdf_image_arrays(pdf)
+        assert err is None and arr.shape == (3, 4) and arr.tobytes() == px
 
     def test_decode_array_inverts_1bit(self):
         from receipt_scanner_spark.extract.pdf import (
@@ -431,7 +432,9 @@ class TestInlineImages:
     def test_inline_inside_flate_content(self):
         # the content stream itself is Flate-compressed; inline parse
         # must run on the DECODED bytes
-        from receipt_scanner_spark.extract.pdf import extract_pdf_images
+        from receipt_scanner_spark.extract.pdf import (
+            extract_pdf_image_arrays,
+        )
 
         px = bytes(range(16))
         inner = b"BT (x) Tj ET BI /W 4 /H 4 /BPC 8 /CS /G ID " + px + b" EI"
@@ -440,7 +443,8 @@ class TestInlineImages:
             b"/Length %d /Filter /FlateDecode" % len(comp), comp
         )
         pdf = b"%PDF-1.4\n" + s + b"\n%%EOF"
-        assert extract_pdf_images(pdf) == [px]
+        [(arr, err)] = extract_pdf_image_arrays(pdf)
+        assert err is None and arr.shape == (4, 4) and arr.tobytes() == px
 
     def test_ocr_gate_sees_inline_images(self):
         # blank text layer + ONLY an inline image: the OCR fallback

@@ -4,6 +4,7 @@ import json
 import sys
 import threading
 from concurrent.futures import ThreadPoolExecutor
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -149,6 +150,8 @@ class TestSnapshotTable:
         # further commits proceed normally on the squashed chain
         table.commit(pages.select("url", "lang").limit(5), ["p3"])
         assert table.read(spark).count() == len(rows) + 5
+        assert table.processed_partitions() == {"p1", "p2", "p3"}
+        assert table.processed_partitions(as_of=1) == set()  # expired
 
     def test_atomic_manifest_no_tmp_leak(self, spark, pages, tmp_path):
         table = SnapshotTable(str(tmp_path / "t"))
@@ -184,6 +187,11 @@ class TestSnapshotTable:
         assert sorted(p for s in history for p in s.partitions) == sorted(
             f"{w}-{i}" for w in "ab" for i in range(20)
         )
+        # the loser of a race recomputes ``processed`` from the new HEAD
+        for prev, snap in zip([None, *history], history):
+            assert snap.processed == sorted(
+                {*snap.partitions, *(prev.processed if prev else ())}
+            )
         assert not list((tmp_path / "t" / "_manifests").glob("*.tmp"))
 
         # HEAD does not depend on the hint: a writer that dies between its
@@ -194,6 +202,54 @@ class TestSnapshotTable:
         table._head_path().unlink()
         assert table.current_snapshot_id() == 40
         assert table._publish(["c"], [], {}, ["url"]).parent_id == 40
+
+
+    def test_publish_reads_one_manifest_at_any_chain_length(
+        self, tmp_path, monkeypatch
+    ):
+        """The resume watermark is HEAD's ``processed``: a publish and a
+        ``processed_partitions()`` read the same number of manifests on
+        a chain of 1 snapshot as on one of 200."""
+        table = SnapshotTable(str(tmp_path / "t"))
+        reads = []
+        read_text = Path.read_text
+
+        def counting(path, *args, **kwargs):
+            if path.name.startswith("snap-"):
+                reads.append(path.name)
+            return read_text(path, *args, **kwargs)
+
+        monkeypatch.setattr(Path, "read_text", counting)
+
+        def manifest_reads(fn):
+            reads.clear()
+            fn()
+            return len(reads)
+
+        def publish(i):
+            return lambda: table._publish([f"p{i}"], [], {}, ["url"])
+
+        publish(0)()
+        at_1 = manifest_reads(publish(1))
+        for i in range(2, 200):
+            publish(i)()
+        assert table.current_snapshot_id() == 200
+        assert manifest_reads(publish(200)) == at_1 == 1
+        assert manifest_reads(table.processed_partitions) == 1
+        assert table.processed_partitions() == {f"p{i}" for i in range(201)}
+        assert table.processed_partitions(as_of=3) == {"p0", "p1", "p2"}
+        assert table.pending_partitions(["p7", "q"]) == ["q"]
+
+    def test_manifest_without_processed_fails_loudly(self, tmp_path):
+        """A manifest written before ``processed`` was recorded must not
+        read as "nothing processed" (that would re-ingest everything)."""
+        table = SnapshotTable(str(tmp_path / "t"))
+        path = table._manifest_path(table._publish(["en"], [], {}, ["url"]).snapshot_id)
+        data = json.loads(path.read_text())
+        del data["processed"]
+        path.write_text(json.dumps(data))
+        with pytest.raises(TypeError, match="processed"):
+            table.pending_partitions(["en", "fr"])
 
 
 class TestResumableExtraction:
