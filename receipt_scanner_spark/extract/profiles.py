@@ -56,8 +56,8 @@ PROFILES: dict[str, StripperProfile] = {
 def extract_with_profile(
     html_bytes: bytes | str, profile: str | StripperProfile = "default"
 ) -> str:
-    """Production path: the fast tokenizer with the profile's selection
-    thresholds.  ``default`` is byte-identical to extract_main_text."""
+    """The fast tokenizer with the profile's selection thresholds, as in
+    functions/udfs.extract_row; ``default`` equals extract_main_text."""
     p = PROFILES[profile] if isinstance(profile, str) else profile
     return extract_main_text_fast(
         html_bytes,

@@ -16,14 +16,14 @@ The row kernels ``extract_row`` / ``parse_row`` and the layer entry
 points are looked up as module globals on every row, so a profiler
 can wrap them in place (perfbench/tracing.py does).
 
-Custom parsers (reference plug-in surface T17, lib/processor.js:86-90)
-are supported by building a UDF from an explicit parser list via
-``build_process_udf([...])``.
+``build_process_udf`` resolves the config once (profile, custom parser
+list — reference plug-in surface T17, lib/processor.js:86-90 — and OCR
+hook); the row kernels only read the resolved values.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable, Iterable
+from typing import Callable
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
@@ -39,11 +39,14 @@ from pyspark.sql.types import (
 # html_fast is the production stripper; extract/html.py is the executable
 # spec it is differentially tested against.
 from ..extract.html_fast import extract_main_text_fast as extract_main_text
+from ..extract.imaging import apply_orientation, decode_pixels, exif_orientation
 from ..extract.pdf import OCR_UNAVAILABLE_ERROR, process_pdf
+from ..extract.profiles import PROFILES, StripperProfile
 from ..extract.sniff import maybe_gunzip, sniff_format, unsupported_error
+from ..extract.tiff import decode_tiff_pages
 from ..parsers.amount import parse_amount
 from ..parsers.date import parse_date
-from ..parsers.registry import PARSERS
+from ..parsers.registry import resolve_cascade
 
 SPAN_TYPE = StructType(
     [
@@ -72,11 +75,15 @@ PROCESS_SCHEMA = StructType(
 
 # --- row kernels (pure) ------------------------------------------------------
 
+# cascade entries holding these fill the amount/date columns
+_AMOUNT, _DATE = parse_amount, parse_date
+
+
 def extract_row(
     html: bytes | None,
     text: str | None,
     *,
-    profile: str | None = None,
+    profile: StripperProfile = PROFILES["default"],
     ocr_arrays: Callable | None = None,
 ) -> tuple[str, str | None, str | None]:
     """(html bytes, upstream text) → (format, extracted_text, error).
@@ -85,9 +92,9 @@ def extract_row(
     stripper, pdf → text layer (+OCR gate), image/* → upstream OCR text
     (the ``text`` column), empty → empty text, else → error value.
 
-    ``profile``: named preprocessing profile (extract/profiles.py — the
-    reference's selectable preprocessor surface I12-I14); None/'default'
-    is the byte-identity contract path.
+    ``profile``: a StripperProfile (extract/profiles.py, I12-I14) whose
+    thresholds go to the stripper; the default profile's fields are the
+    stripper's defaults (the byte-identity contract path).
 
     ``ocr_arrays(luma_hw_uint8) -> text`` is the one OCR hook (off by
     default at web scale — I11; the extract/ocr.ocr_pixels contract).
@@ -98,11 +105,12 @@ def extract_row(
     html = maybe_gunzip(html)  # WARC-style gzip'd payloads (no-op else)
     fmt = sniff_format(html)
     if fmt == "html":
-        if profile is None or profile == "default":
-            return fmt, extract_main_text(html), None
-        from ..extract.profiles import extract_with_profile
-
-        return fmt, extract_with_profile(html, profile), None
+        return fmt, extract_main_text(
+            html,
+            min_block_chars=profile.min_block_chars,
+            max_link_density=profile.max_link_density,
+            drop_chrome=profile.drop_chrome,
+        ), None
     if fmt == "pdf":
         r = process_pdf(bytes(html), ocr_arrays=ocr_arrays)
         return fmt, r.text, r.error
@@ -112,19 +120,11 @@ def extract_row(
         if text is not None:
             return fmt, text, None
         if ocr_arrays is not None:
-            from ..extract.imaging import (
-                apply_orientation,
-                decode_pixels,
-                exif_orientation,
-            )
-
             try:
                 if fmt == "image/tiff":
                     # fax/scanner TIFFs chain pages as IFDs: OCR every
                     # page, '\n\n\n'-joined (the PDF multi-image
                     # convention, lib/pdf_processor.js:53-84)
-                    from ..extract.tiff import decode_tiff_pages
-
                     pages = decode_tiff_pages(bytes(html))
                     if not pages:
                         return fmt, None, "OCR error: no decodable pages"
@@ -149,31 +149,28 @@ def extract_row(
 
 
 def parse_row(
-    text: str | None, parsers: Iterable[Any] | None = None
+    text: str | None, cascade: tuple = resolve_cascade()
 ) -> tuple[str | None, str | None, list[dict] | None, dict | None]:
-    """extracted_text → (amount, date, spans, extra).  Span offsets are
-    relative to the text the parser actually scanned (amount:
-    paren-normalized text; date: repair-rewritten text), mirroring the
-    reference's verbose match lists (lib/text_parser.js:35-40).
-    ``extra`` maps any non-default parser's name to its match."""
+    """extracted_text → (amount, date, spans, extra) over a resolved
+    cascade (``resolve_cascade``).  Span offsets are relative to the text
+    the parser actually scanned (amount: paren-normalized text; date:
+    repair-rewritten text), as the reference's verbose match lists
+    (lib/text_parser.js:35-40).  ``extra``: other entries' matches."""
     if text is None:
         return None, None, None, None
     amount_val: str | None = None
     date_val: str | None = None
     spans: list[dict] = []
     extra: dict[str, str | None] = {}
-    for entry in parsers or ("amount", "date"):
-        config = None
-        if isinstance(entry, (list, tuple)):
-            entry, config = entry
-        if entry == "amount" or entry is parse_amount:
+    for name, fn, config in cascade:
+        if fn is _AMOUNT:
             r = parse_amount(text, config)
             amount_val = r["match"]
             for m in r["matches"]:
                 spans.append(
                     {"parser": "amount", "start": m.start, "end": m.end, "text": m.text}
                 )
-        elif entry == "date" or entry is parse_date:
+        elif fn is _DATE:
             r = parse_date(text, config)
             date_val = r["match"]
             for dm in r["matches"]:
@@ -186,8 +183,6 @@ def parse_row(
                     }
                 )
         else:
-            name = entry if isinstance(entry, str) else getattr(entry, "__name__", "custom")
-            fn = PARSERS[entry] if isinstance(entry, str) else entry
             r = fn(text, config)
             extra[name] = r.get("match")
             for m in r.get("matches", []):
@@ -210,12 +205,22 @@ def build_process_udf(
     profile: str | None = None,
     ocr_arrays: Callable | None = None,
 ):
-    """Fused extract+parse: one Arrow exchange per batch.
-
-    ``profile`` and ``ocr_arrays`` are passed to ``extract_row``:
-    a named stripper preprocessing profile (extract/profiles.PROFILES,
-    the reference's selectable preprocessor surface I12-I14) and the
-    pixel OCR hook."""
+    """Fused extract+parse: one Arrow exchange per batch.  The closure
+    captures the config resolved once: ``profile`` (a PROFILES name,
+    I12-I14; None is 'default') → its StripperProfile, ``parsers`` →
+    ``resolve_cascade(parsers)``, and the pixel OCR hook ``ocr_arrays``.
+    ``ValueError`` for a bad name or a config its parser fails on "";
+    ``TypeError`` for a non-callable ``ocr_arrays``."""
+    if ocr_arrays is not None and not callable(ocr_arrays):
+        raise TypeError(f"ocr_arrays must be callable, not {type(ocr_arrays).__name__}")
+    try:
+        stripper = PROFILES["default" if profile is None else profile]
+        cascade = resolve_cascade(parsers)
+        for _name, fn, config in cascade:
+            if config is not None:  # a bad name in a config fails here, not per row
+                fn("", config).get("match")
+    except Exception as exc:
+        raise ValueError(f"bad extraction config {profile=}, {parsers=}: {exc!r}") from exc
 
     @pandas_udf(PROCESS_SCHEMA)
     def process(html: pd.Series, text: pd.Series) -> pd.DataFrame:
@@ -223,8 +228,8 @@ def build_process_udf(
         for h, t in zip(html, text):
             fmt = extracted = None
             try:
-                fmt, extracted, error = extract_row(h, t, profile=profile, ocr_arrays=ocr_arrays)
-                out.append((fmt, extracted, error, *parse_row(extracted, parsers)))
+                fmt, extracted, error = extract_row(h, t, profile=stripper, ocr_arrays=ocr_arrays)
+                out.append((fmt, extracted, error, *parse_row(extracted, cascade)))
             except Exception as exc:
                 # one bad document never fails the batch: an unexpected
                 # exception becomes this row's error value
@@ -235,5 +240,5 @@ def build_process_udf(
     return process
 
 
-# Default instance (module-level so Spark serializes one closure).
+# Default instance: the body perfbench/tracing.py replays.
 process_udf = build_process_udf()

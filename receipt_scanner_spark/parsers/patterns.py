@@ -55,11 +55,9 @@ _MERCHANT_RULES: list[tuple[str, re.Pattern[str]]] = [
 ]
 
 
-def parse_merchant(text: str, config: dict | None = None) -> dict:
+def _first_rule(text: str, rules) -> dict:
     """First rule in the table with a match wins; ``matches`` carries
     every hit of the winning rule (verbose analog)."""
-    config = config or {}
-    rules = config.get("rules") or _MERCHANT_RULES
     for rule_name, pat in rules:
         hits = [
             PatternMatch(m.group("v"), m.start("v"), m.end("v"), rule_name)
@@ -68,6 +66,11 @@ def parse_merchant(text: str, config: dict | None = None) -> dict:
         if hits:
             return {"matches": hits, "match": hits[0].text}
     return {"matches": [], "match": None}
+
+
+def parse_merchant(text: str, config: dict | None = None) -> dict:
+    """Labels beat positional heuristics (``_first_rule``)."""
+    return _first_rule(text, (config or {}).get("rules") or _MERCHANT_RULES)
 
 
 # --- tax id ----------------------------------------------------------------------
@@ -100,13 +103,4 @@ def parse_tax_id(text: str, config: dict | None = None) -> dict:
     """Anchored only — bare digit runs are never tax ids (phone/IP/date
     rejection comes free, same spirit as the amount parser's whitespace
     anchoring)."""
-    config = config or {}
-    rules = config.get("rules") or _TAX_RULES
-    for rule_name, pat in rules:
-        hits = [
-            PatternMatch(m.group("v"), m.start("v"), m.end("v"), rule_name)
-            for m in pat.finditer(text)
-        ]
-        if hits:
-            return {"matches": hits, "match": hits[0].text}
-    return {"matches": [], "match": None}
+    return _first_rule(text, (config or {}).get("rules") or _TAX_RULES)

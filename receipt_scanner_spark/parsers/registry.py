@@ -4,8 +4,8 @@ Mirror of the reference's TextParser loop and plug-in surface
 (/root/reference/lib/text_parser.js:14-43, lib/text_parser/parser.js:1-16,
  lib/processor.js:86-90): string name → registered callable; custom
 parsers are any ``(text, config) -> {"matches": [...], "match": x}``
-callable, keyed by function name.  Default cascade is
-``['amount', 'date']`` (lib/text_parser.js:7-9).
+callable, keyed by function name; ``resolve_cascade`` is the one place
+a parser list is read.  Default cascade ``['amount', 'date']`` (lib/text_parser.js:7-9).
 
 (The reference has a harmless bug at lib/text_parser.js:29 — config is
 taken from ``parsers[i][1]`` even for string entries, yielding a junk
@@ -31,30 +31,36 @@ PARSERS: dict[str, ParserFn] = {
 }
 
 
+def resolve_cascade(parsers: list[Any] | None = None) -> tuple:
+    """The one normalizer of a parser list → ``((name, fn, config), ...)``.
+    Entries: parser names (an unknown one raises ``KeyError``), callables
+    (named by ``__name__``, else by their type's name) or ``(entry,
+    config)`` pairs; empty means ``['amount', 'date']``."""
+    out = []
+    for entry in parsers or ("amount", "date"):
+        config = None
+        if isinstance(entry, (list, tuple)):
+            entry, config = entry
+        if isinstance(entry, str):
+            out.append((entry, PARSERS[entry], config))
+        else:
+            out.append((getattr(entry, "__name__", type(entry).__name__), entry, config))
+    return tuple(out)
+
+
 def parse_text(
     text: str,
     parsers: list[Any] | None = None,
     verbose: bool = False,
 ) -> dict:
-    """Run the configured parser cascade over one document's text.
-
-    ``parsers`` entries are parser names, callables, or
-    ``(name_or_fn, config)`` pairs.  Result maps parser name → match
-    (None replaces the reference's ``false``); with ``verbose`` the
-    full per-parser match lists plus the input text are included.
+    """Run the configured parser cascade (``resolve_cascade``) over one
+    document's text.  Result maps parser name → match (None replaces
+    the reference's ``false``); with ``verbose`` the full per-parser
+    match lists plus the input text are included.
     """
-    if not parsers:
-        parsers = ["amount", "date"]
     results: dict = {}
     verbose_out: dict = {}
-    for entry in parsers:
-        config: dict | None = None
-        if isinstance(entry, (list, tuple)):
-            entry, config = entry[0], entry[1]
-        if isinstance(entry, str):
-            name, fn = entry, PARSERS[entry]
-        else:
-            name, fn = getattr(entry, "__name__", str(entry)), entry
+    for name, fn, config in resolve_cascade(parsers):
         parsed = fn(text, config)
         results[name] = parsed["match"]
         if verbose:

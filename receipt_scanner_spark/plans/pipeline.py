@@ -28,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import build_process_udf, process_udf
+from ..extract.profiles import PROFILES
+from ..functions.udfs import build_process_udf
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 PAGES_COLUMNS = [field.split()[0] for field in PAGES_SCHEMA.split(", ")]
@@ -80,17 +81,12 @@ def extract_pages(
     skew-defeating shuffle.  Leave None for map-only execution (input
     splits already balanced).
 
-    ``profile``: named stripper preprocessing profile (I12-I14 surface,
-    extract/profiles.py); None == 'default' == the byte-identity path.
-
-    ``ocr_arrays``: the pixel OCR hook, (h, w) uint8 luma → text
-    (functions/udfs.extract_row); None leaves OCR off.
+    ``parsers``, ``profile`` (stripper profile name, I12-I14; None is
+    'default') and ``ocr_arrays`` (pixel OCR hook; None is off) are
+    resolved by ``functions/udfs.build_process_udf``, which raises on a
+    bad config before any Spark job runs.
     """
-    udf = (
-        process_udf
-        if parsers is None and ocr_arrays is None and profile in (None, "default")
-        else build_process_udf(parsers, profile=profile, ocr_arrays=ocr_arrays)
-    )
+    udf = build_process_udf(parsers, profile=profile, ocr_arrays=ocr_arrays)
 
     df = pages.select(*PAGES_COLUMNS)
     if salt_partitions:
@@ -202,8 +198,6 @@ def benchmark_profiles(
     informational — alternative recipes may legitimately score worse on
     goldens produced by the default recipe, exactly as the reference's
     non-CI preprocessors do."""
-    from ..extract.profiles import PROFILES
-
     names = profiles if profiles is not None else list(PROFILES)
     out: dict[str, dict] = {}
     total = goldens.count()  # loop-invariant: one action, not one per profile

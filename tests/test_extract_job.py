@@ -1,12 +1,16 @@
 """Smoke test of the production entry point ``jobs/extract_job.py``:
-a run, a resumed run and ``--report`` on a small corpus."""
+a run, a resumed run, ``--report``, and a bad ``--profile`` on a small
+corpus."""
 
 import importlib.util
 import json
 import sys
 from pathlib import Path
 
+import pytest
+
 from receipt_scanner_spark.sources.pages import write_corpus
+from receipt_scanner_spark.table.snapshots import SnapshotTable
 
 JOB = Path(__file__).resolve().parents[1] / "jobs" / "extract_job.py"
 
@@ -47,6 +51,15 @@ def test_run_resume_report(spark, tmp_path, monkeypatch, capsys):
 
     assert second.out == ""
     assert "nothing to do" in second.err
+
+    # an unknown profile fails before the pass: nothing is committed
+    bad_table = str(tmp_path / "bad")
+    monkeypatch.setattr(sys, "argv", ["extract_job.py", "--input", pages_dir,
+                                      "--table", bad_table, "--profile", "nope"])
+    with pytest.raises(ValueError, match="profile='nope'"):
+        job.main()
+    assert SnapshotTable(bad_table).current_snapshot_id() is None
+    assert spark.conf.getAll == conf_before
 
     history = json.loads(report.out)
     assert [(h["snapshot_id"], h["partitions"], h["metrics"]) for h in history] == [

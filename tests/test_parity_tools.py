@@ -25,7 +25,8 @@ pytestmark = pytest.mark.skipif(not _in_git_checkout(), reason="not a git checko
 
 
 @pytest.mark.parametrize(
-    "tool", ["diff_parsers_base.py", "diff_stripper_base.py", "diff_pdf_base.py"]
+    "tool", ["diff_parsers_base.py", "diff_stripper_base.py", "diff_pdf_base.py",
+             "diff_udf_base.py"]
 )
 def test_tool_passes_against_head(tool):
     r = subprocess.run([sys.executable, str(ROOT / "tools" / tool), "HEAD", "300"],

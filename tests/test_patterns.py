@@ -64,6 +64,25 @@ class TestCascadeIntegration:
             "tax_id": "12-3456789",
         }
 
+    def test_one_naming_rule_for_parse_text_and_parse_row(self):
+        """Both run ``resolve_cascade``: a callable is keyed by its
+        ``__name__``, else by its type's name; the registry's amount
+        callable still fills the UDF's ``amount`` column."""
+        import functools
+
+        from receipt_scanner_spark.functions.udfs import parse_row
+        from receipt_scanner_spark.parsers.amount import parse_amount
+        from receipt_scanner_spark.parsers.registry import resolve_cascade
+
+        text = "ACME Inc.\nEIN: 12-3456789\nTotal: $698.00"
+        assert parse_text(text, [parse_amount]) == {"parse_amount": "698.00"}
+        amount, _date, spans, extra = parse_row(text, resolve_cascade([parse_amount]))
+        assert (amount, extra) == ("698.00", None)
+        assert [s["parser"] for s in spans] == ["amount"]
+        tax = functools.partial(parse_tax_id)
+        assert parse_text(text, [tax]) == {"partial": "12-3456789"}
+        assert parse_row(text, resolve_cascade([tax]))[3] == {"partial": "12-3456789"}
+
     def test_spark_custom_cascade(self, spark):
         """T17 at the Spark level: extended parser list through the fused
         UDF; extras land in the `extra` map, spans carry real offsets."""

@@ -236,6 +236,24 @@ def test_fused_udf_contains_unexpected_row_exception(monkeypatch):
     assert list(after["amount"]) == ["5.00", None, "7.00"]
 
 
+@pytest.mark.parametrize("kwargs, exc, match", [
+    ({"parsers": ["amout"]}, ValueError, "KeyError..amout"),
+    ({"parsers": [("amount", {"parsers": ["larget"]})]}, ValueError, "KeyError..larget"),
+    ({"parsers": [("date", {"parser": "frist"})]}, ValueError, "KeyError..frist"),
+    ({"profile": "nope"}, ValueError, "KeyError..nope"),
+    ({"parsers": [(lambda text, config: None, {})]}, ValueError, "AttributeError"),
+    ({"ocr_arrays": "tesseract"}, TypeError, "must be callable"),
+], ids=["parser", "amount_config", "date_config", "profile", "no_result", "ocr_arrays"])
+def test_bad_config_fails_when_the_udf_is_built(kwargs, exc, match):
+    """A bad name fails on the driver, not as an error value on every row.
+    Only configured entries are tried on "" (unconfigured callables may
+    count their calls, tests/test_snapshots.py)."""
+    from receipt_scanner_spark.functions.udfs import build_process_udf
+
+    with pytest.raises(exc, match=match):
+        build_process_udf(**kwargs)
+
+
 class TestLineSegmentation:
     """OCR-text line segmentation: a pure function, not a pipeline stage
     (the UDF passes extracted text through — byte-identity contract)."""

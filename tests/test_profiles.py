@@ -62,6 +62,17 @@ class TestProfileSemantics:
         with pytest.raises(KeyError):
             extract_with_profile(PAGE, "nope")
 
+    @pytest.mark.parametrize("profile", [*PROFILES, None])
+    def test_udf_html_path_runs_the_profile(self, profile):
+        """The fused UDF's one stripper call equals the named profile's
+        stripper; None is the default profile."""
+        import pandas as pd
+
+        from receipt_scanner_spark.functions.udfs import build_process_udf
+
+        out = build_process_udf(profile=profile).func(pd.Series([PAGE]), pd.Series([None]))
+        assert out.iloc[0]["extracted_text"] == extract_with_profile(PAGE, profile or "default")
+
 
 _tag = st.sampled_from(
     ["p", "div", "a", "nav", "span", "li", "script", "header", "footer", "b"]
