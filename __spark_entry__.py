@@ -1600,33 +1600,18 @@ _PCX_B64 = (
 #    256-color trailer palette (session 4).
 
 
-def _multimodal_pipeline_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rows-only: the multimodal plumbing end-to-end on a deterministic
-    synthetic media set — real header parsing (PNG/GIF/BMP/JPEG/TIFF/
-    WebP/JBIG2), REAL pixel decode for PNG/BMP/GIF/baseline-JPEG/
-    G4-fax-TIFF (r3) plus arithmetic JPEG, JBIG2, and lossless-WebP
-    (r4; the WebP fixture bytes are THIRD-PARTY-encoded by libwebp)
-    + the REAL bitmap-font OCR engine, nearest-neighbor
-    resize, and evenly-spaced frame sampling (one-to-N fan-out).
-    Output strings/counts are exact and deterministic, but DuckDB has
-    no twin for the decode chain, so this stays a rows-only stability
-    check, not an oracle entry."""
+def _multimodal_media() -> list[tuple[int, bytearray]]:
+    """The (media_id, payload) rows of the multimodal entry: one
+    fixture per image codec and variant, a truncated GIF, a fake
+    video and a garbage row.  Also read by the multimodal tests and
+    tools/diff_udf_base.py."""
     import base64
     import struct
     import zlib
 
-    from pyspark.sql import functions as F
-
     from receipt_scanner_spark.extract.imaging import encode_png_gray
     from receipt_scanner_spark.extract.ocr import render_text
-    from receipt_scanner_spark.operators.multimodal import (
-        _FAKE_FRAME_BYTES,
-        decode_media_meta,
-        extract_features,
-        ocr_images,
-        resize_images,
-        sample_frames,
-    )
+    from receipt_scanner_spark.operators.multimodal import _FAKE_FRAME_BYTES
 
     def png(w, h):
         raw = (b"\x00" + b"\x01" * (w * 3)) * h
@@ -1652,7 +1637,7 @@ def _multimodal_pipeline_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
                 + info + body)
 
-    rows = [
+    return [
         (1, bytearray(png(32, 16))),  # REAL PNG decode (extract/imaging)
         (2, bytearray(b"GIF89a" + struct.pack("<HH", 100, 50) + b"x" * 24)),
         (3, bytearray(b"v" * (_FAKE_FRAME_BYTES * 9))),  # fake 9-frame video
@@ -1742,7 +1727,30 @@ def _multimodal_pipeline_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         # palette, structurally sniffed (session 4)
         (32, bytearray(base64.b64decode(_PCX_B64))),
     ]
-    media = spark.createDataFrame(rows, "media_id long, media binary")
+
+
+def _multimodal_pipeline_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rows-only: the multimodal plumbing end-to-end on a deterministic
+    synthetic media set — real header parsing (PNG/GIF/BMP/JPEG/TIFF/
+    WebP/JBIG2), REAL pixel decode for PNG/BMP/GIF/baseline-JPEG/
+    G4-fax-TIFF (r3) plus arithmetic JPEG, JBIG2, and lossless-WebP
+    (r4; the WebP fixture bytes are THIRD-PARTY-encoded by libwebp)
+    + the REAL bitmap-font OCR engine, nearest-neighbor
+    resize, and evenly-spaced frame sampling (one-to-N fan-out).
+    Output strings/counts are exact and deterministic, but DuckDB has
+    no twin for the decode chain, so this stays a rows-only stability
+    check, not an oracle entry."""
+    from pyspark.sql import functions as F
+
+    from receipt_scanner_spark.operators.multimodal import (
+        decode_media_meta,
+        extract_features,
+        ocr_images,
+        resize_images,
+        sample_frames,
+    )
+
+    media = spark.createDataFrame(_multimodal_media(), "media_id long, media binary")
     meta = decode_media_meta(media).select(
         "media_id", "meta.kind", "meta.width", "meta.height"
     )

@@ -22,6 +22,7 @@ OCR hook), so swapping in a full codec library remains config-only.
 
 from __future__ import annotations
 
+import importlib
 import struct
 import zlib
 
@@ -290,6 +291,16 @@ def _bmp_rle_decode(
                 idx[y, x : x + cnt] = pix[:cnt]
             x += v
     return idx[::-1]  # bottom-up → top-down
+
+
+def looks_like_bmp(data: bytes) -> bool:
+    """The 2-byte 'BM' magic is weak (text can start 'BMI …'), so
+    require the BITMAPFILEHEADER's reserved words to be zero and its
+    pixel-data offset to lie inside the buffer."""
+    if len(data) < 14 or data[:2] != b"BM":
+        return False
+    reserved, pixel_off = struct.unpack("<II", data[6:14])
+    return reserved == 0 and pixel_off <= len(data)
 
 
 def decode_bmp(data: bytes) -> np.ndarray:
@@ -1136,45 +1147,42 @@ def decode_ico(data: bytes) -> np.ndarray:
     return luma.astype(np.uint8)
 
 
+# sniff_format tag -> (module, decoder).  The sibling codec modules are
+# imported on first use: they import this module, and a worker that
+# never sees a JPEG 2000 never loads jpx.
+_DECODERS = {
+    "image/png": (".imaging", "decode_png"),
+    "image/jpeg": (".jpeg", "decode_jpeg"),
+    "image/gif": (".imaging", "decode_gif"),
+    "image/bmp": (".imaging", "decode_bmp"),
+    "image/tiff": (".tiff", "decode_tiff"),
+    "image/jbig2": (".jbig2", "decode_jbig2_embedded"),
+    "image/jp2": (".jpx", "decode_jpx"),
+    "image/webp": (".webp", "decode_webp"),
+    "image/ico": (".imaging", "decode_ico"),
+    "image/pnm": (".imaging", "decode_pnm"),
+    "image/tga": (".imaging", "decode_tga"),
+    "image/pcx": (".imaging", "decode_pcx"),
+}
+
+
+def image_decoder(fmt: str):
+    """The ``data -> (h, w) uint8`` decoder for a sniff_format tag;
+    NotImplementedError for a tag that is not an image."""
+    if fmt not in _DECODERS:
+        raise NotImplementedError("no decode path: unrecognized image format")
+    module, name = _DECODERS[fmt]
+    return getattr(importlib.import_module(module, __package__), name)
+
+
 def decode_pixels(data: bytes) -> np.ndarray:
-    """Dispatch on magic bytes.  Real decode for PNG/BMP/GIF and
-    baseline JPEG (extract/jpeg.py); unknown formats and non-baseline
-    JPEG variants raise NotImplementedError (error-as-value upstream)."""
-    if data[:8] == _PNG_SIG:
-        return decode_png(data)
-    if data[:2] == b"BM":
-        return decode_bmp(data)
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        return decode_gif(data)
-    if data[:2] == b"\xff\xd8":
-        from .jpeg import decode_jpeg
+    """Decode an image of any format sniff_format tags ``image/*``:
+    the tag picks the decoder (``image_decoder``), and the first page
+    of a TIFF is read.  Formats without a tag raise NotImplementedError,
+    corrupt payloads ValueError (error-as-value upstream)."""
+    from .sniff import sniff_format  # sniff imports this module
 
-        return decode_jpeg(data)
-    if data[:4] in (b"II*\x00", b"MM\x00*"):
-        from .tiff import decode_tiff
-
-        return decode_tiff(data)
-    if data[:8] == b"\x97JB2\r\n\x1a\n":
-        from .jbig2 import decode_jbig2_embedded
-
-        return decode_jbig2_embedded(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        from .webp import decode_webp
-
-        return decode_webp(data)
-    if data[:12] == b"\x00\x00\x00\x0cjP  \r\n\x87\n" or data[:4] == b"\xff\x4f\xff\x51":
-        from .jpx import decode_jpx
-
-        return decode_jpx(data)
-    if looks_like_ico(data):
-        return decode_ico(data)
-    if looks_like_pnm(data):
-        return decode_pnm(data)
-    if looks_like_tga(data):
-        return decode_tga(data)
-    if looks_like_pcx(data):
-        return decode_pcx(data)
-    raise NotImplementedError("no decode path: unrecognized image format")
+    return image_decoder(sniff_format(data))(data)
 
 
 def _frame_luma_alpha(ihdr, plte, idat: bytes):

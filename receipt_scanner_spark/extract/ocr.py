@@ -8,14 +8,17 @@ until round 3 the OCR hook was a plug point that only ever received
 real decoded bytes.  This module closes the loop as far as the
 environment allows: a REAL recognizer — binarize, scale inference,
 line/glyph segmentation, template matching — that reads pixel arrays
-produced by the real PNG/BMP/GIF decoders (extract/imaging.py) and
-returns text.  The engine is complete for the deterministic 5×7
+produced by the real image decoders (extract/imaging.py and its codec
+modules) and returns text.  The engine is complete for the deterministic 5×7
 bitmap font it ships (A-Z, 0-9, receipt punctuation), which is also
 the font ``render_text`` uses to generate synthetic receipt images —
 so image → decode → OCR → parse_text runs end-to-end with zero
 external dependencies and exact expected outputs.  A production swap
 to tesseract remains config-only (same ``ocr_arrays(luma) -> str``
 contract: pytesseract reads arrays).
+
+``image_text`` is the package's one image → text step; the fused UDF
+and the Spark ``ocr_images`` operator both call it.
 
 Geometry contract (shared by renderer and recognizer):
   * glyph cell 5×7 font pixels, advance 6 (one spacer column);
@@ -36,7 +39,12 @@ is absorbed by block-majority downsampling for s ≥ 3.
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
+
+from .imaging import apply_orientation, exif_orientation, image_decoder
+from .tiff import decode_tiff_pages
 
 CELL_W, CELL_H = 5, 7
 ADVANCE = 6  # glyph cell + 1 spacer column
@@ -364,14 +372,23 @@ def ocr_pixels(px: np.ndarray, font: BitmapFont = DEFAULT_FONT) -> str:
     return "\n".join(lines)
 
 
-def bitmap_ocr(image_bytes: bytes, font: BitmapFont = DEFAULT_FONT) -> str:
-    """Encoded image bytes → text: decode (real PNG/BMP/GIF/JPEG/...
-    codecs via extract/imaging.decode_pixels) then ``ocr_pixels`` —
-    the reference's one-tesseract-call-per-image analog
-    (lib/image_processor.js:49), used by operators/multimodal.ocr_images.
-    The extraction pipeline's hook is ``ocr_pixels`` itself
-    (``ocr_arrays=``), which also sees PDF images and EXIF-rotated or
-    multi-page TIFF pixels."""
-    from .imaging import decode_pixels
-
-    return ocr_pixels(decode_pixels(bytes(image_bytes)), font)
+def image_text(
+    data: bytes, fmt: str, ocr_arrays: Callable[[np.ndarray], str]
+) -> tuple[str | None, str | None]:
+    """The one image → text step: image bytes of sniff_format tag
+    ``fmt`` → (text, error).  Every TIFF page is read, '\\n\\n\\n'-joined
+    (the PDF multi-image convention, lib/pdf_processor.js:53-84); other
+    images are decoded and turned upright per their EXIF orientation,
+    as tesseract/PIL do.  Failures are 'OCR error: …' values."""
+    try:
+        if fmt == "image/tiff":
+            pages = decode_tiff_pages(data)
+            if not pages:
+                return None, "OCR error: no decodable pages"
+            return "\n\n\n".join(ocr_arrays(p) for p in pages), None
+        px = image_decoder(fmt)(data)
+        return ocr_arrays(apply_orientation(px, exif_orientation(data))), None
+    except NotImplementedError as exc:
+        return None, f"OCR error: {exc}"
+    except Exception as exc:
+        return None, f"OCR error: {type(exc).__name__}"

@@ -7,12 +7,19 @@ Dispatch semantics preserved: pdf → PDF branch, image/* → OCR branch,
 html/text → stripper, else an error VALUE
 ('Unsupported format: <mime>', processor.js:64) — never an exception.
 
+``sniff_format`` is the package's only map from magic bytes to an image
+format: its ``image/<kind>`` tags key extract/imaging's decoder table
+and name the kinds operators/multimodal reports.  Weak magics (BMP,
+ICO, netpbm, PCX) are validated structurally before a payload is tagged.
+
 The format column this produces is a plain Spark string column, so
 Catalyst can route rows (predicate pushdown of the dispatch gate) and
 the per-format pandas UDFs only ever see their own rows.
 """
 
 from __future__ import annotations
+
+from .imaging import looks_like_bmp, looks_like_ico, looks_like_pcx, looks_like_pnm
 
 FORMAT_PDF = "pdf"
 FORMAT_HTML = "html"
@@ -24,7 +31,6 @@ _IMAGE_MAGICS: list[tuple[bytes, str]] = [
     (b"\xff\xd8\xff", "image/jpeg"),
     (b"GIF87a", "image/gif"),
     (b"GIF89a", "image/gif"),
-    (b"BM", "image/bmp"),
     (b"II*\x00", "image/tiff"),
     (b"MM\x00*", "image/tiff"),
     (b"\x97JB2\r\n\x1a\n", "image/jbig2"),
@@ -72,25 +78,19 @@ def sniff_format(data: bytes | None) -> str:
             return fmt
     if head[:4] == b"RIFF" and head[8:12] == b"WEBP":
         return "image/webp"
+    # weak magics ('BMI calculator…' is text): validate the structure
+    if head[:2] == b"BM" and looks_like_bmp(data):
+        return "image/bmp"
     if head[:2] == b"\x00\x00" and head[2:4] in (b"\x01\x00", b"\x02\x00"):
-        # ICONDIR magic is weak — validate the directory structure
-        from .imaging import looks_like_ico
-
         if looks_like_ico(bytes(data)):
             return "image/ico"
     if head[0:1] == b"P" and len(head) >= 3 and head[1] in b"123456":
-        from .imaging import looks_like_pnm
-
-        # weak 2-byte magic: structural validation before tagging
         if looks_like_pnm(bytes(data)):
             return "image/pnm"
     if len(data) >= 44 and bytes(data[-18:]) == b"TRUEVISION-XFILE\x2e\x00":
         return "image/tga"
-    if head[0:1] == b"\x0a" and len(data) >= 129:
-        from .imaging import looks_like_pcx
-
-        if looks_like_pcx(bytes(data)):
-            return "image/pcx"
+    if head[0:1] == b"\x0a" and len(data) >= 129 and looks_like_pcx(bytes(data)):
+        return "image/pcx"
     stripped = head.lstrip(b" \t\r\n\f")
     low = stripped[:64].lower()
     if low.startswith(_HTML_PREFIXES) or b"<html" in head[:256].lower():

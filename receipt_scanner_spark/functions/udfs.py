@@ -39,14 +39,13 @@ from pyspark.sql.types import (
 # html_fast is the production stripper; extract/html.py is the executable
 # spec it is differentially tested against.
 from ..extract.html_fast import extract_main_text_fast as extract_main_text
-from ..extract.imaging import apply_orientation, decode_pixels, exif_orientation
+from ..extract.ocr import image_text
 from ..extract.pdf import OCR_UNAVAILABLE_ERROR, process_pdf
 from ..extract.profiles import PROFILES, StripperProfile
 from ..extract.sniff import maybe_gunzip, sniff_format, unsupported_error
-from ..extract.tiff import decode_tiff_pages
 from ..parsers.amount import parse_amount
 from ..parsers.date import parse_date
-from ..parsers.registry import resolve_cascade
+from ..parsers.registry import read_result, resolve_cascade
 
 SPAN_TYPE = StructType(
     [
@@ -98,9 +97,10 @@ def extract_row(
 
     ``ocr_arrays(luma_hw_uint8) -> text`` is the one OCR hook (off by
     default at web scale — I11; the extract/ocr.ocr_pixels contract).
-    It sees decoded pixels: standalone images decode via
-    extract/imaging.decode_pixels (EXIF orientation applied, every TIFF
-    page), PDF images via extract/pdf.extract_pdf_image_arrays.
+    It sees decoded pixels: a standalone image goes through
+    extract/ocr.image_text with the format sniffed here (its decoder
+    looked up by that tag, EXIF orientation applied, every TIFF page),
+    PDF images through extract/pdf.extract_pdf_image_arrays.
     """
     html = maybe_gunzip(html)  # WARC-style gzip'd payloads (no-op else)
     fmt = sniff_format(html)
@@ -119,28 +119,9 @@ def extract_row(
         # `text` column carries upstream OCR output when present.
         if text is not None:
             return fmt, text, None
-        if ocr_arrays is not None:
-            try:
-                if fmt == "image/tiff":
-                    # fax/scanner TIFFs chain pages as IFDs: OCR every
-                    # page, '\n\n\n'-joined (the PDF multi-image
-                    # convention, lib/pdf_processor.js:53-84)
-                    pages = decode_tiff_pages(bytes(html))
-                    if not pages:
-                        return fmt, None, "OCR error: no decodable pages"
-                    return fmt, "\n\n\n".join(
-                        ocr_arrays(p) for p in pages
-                    ), None
-                px = decode_pixels(bytes(html))
-                # phone photos arrive rotated with an EXIF tag; honor
-                # it like tesseract/PIL do before reading glyphs
-                px = apply_orientation(px, exif_orientation(bytes(html)))
-                return fmt, ocr_arrays(px), None
-            except NotImplementedError as exc:
-                return fmt, None, f"OCR error: {exc}"
-            except Exception as exc:
-                return fmt, None, f"OCR error: {type(exc).__name__}"
-        return fmt, None, OCR_UNAVAILABLE_ERROR
+        if ocr_arrays is None:
+            return fmt, None, OCR_UNAVAILABLE_ERROR
+        return fmt, *image_text(bytes(html), fmt, ocr_arrays)
     if fmt == "empty":
         return fmt, (text or ""), None
     if fmt == "text":
@@ -183,9 +164,8 @@ def parse_row(
                     }
                 )
         else:
-            r = fn(text, config)
-            extra[name] = r.get("match")
-            for m in r.get("matches", []):
+            extra[name], matches = read_result(fn(text, config))
+            for m in matches:
                 spans.append(
                     {
                         "parser": name,

@@ -3,15 +3,17 @@
 Images/audio/video ride as opaque ``binary`` columns next to a typed
 metadata struct, exactly like ``html binary`` in the pages table.  The
 Spark-side plumbing here is REAL and tested — schemas, Arrow batch
-shapes, ``mapInPandas`` iterator protocol, error-as-value rows:
-``decode_image_meta`` parses real header bytes (PNG/JPEG/GIF/BMP
-dimensions — pure stdlib, no codec needed); ``extract_features``,
-``resize_images`` and ``ocr_images`` consume REAL decoded pixels for
-PNG/BMP/GIF **and baseline JPEG** (extract/imaging.py +
-extract/jpeg.py — zlib + spec unfiltering, spec LZW, T.81
-Huffman/IDCT).  Only non-baseline JPEG variants and video demuxing
-stay behind clearly-marked env-stub plug points where Pillow/ffmpeg
-would slot in.
+shapes, ``mapInPandas`` iterator protocol, error-as-value rows.
+
+The image path is the extraction engine's: extract/sniff.sniff_format
+names every image format (``decode_media_meta`` reads each kind's
+header dimensions; only audio and AVIF/HEIC are recognized here),
+``extract_features`` and ``resize_images`` decode through
+extract/imaging.decode_pixels, ``sample_frames`` demuxes by the same
+tag, and ``ocr_images`` is extract/ocr.image_text with the built-in
+recognizer — the step the fused UDF runs on image rows, so both give
+the same text for the same bytes.  Video demuxing stays behind a
+clearly-marked stub plug point where ffmpeg would slot in.
 
 Batch-shape contract for the real thing: ``mapInPandas`` receives an
 iterator of pandas DataFrames (one per Arrow batch, bounded by
@@ -23,13 +25,21 @@ not one partition.
 from __future__ import annotations
 
 import struct
-import zlib
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..extract.imaging import (
+    decode_pixels,
+    demux_apng_frames,
+    demux_gif_frames,
+    encode_png_gray,
+)
+from ..extract.ocr import image_text, ocr_pixels
+from ..extract.sniff import sniff_format
 
 MEDIA_META_SCHEMA = (
     "kind string, width int, height int, n_bytes int, codec string, error string"
@@ -64,12 +74,43 @@ def _isobmff_ispe_dims(data: bytes) -> tuple[int, int] | None:
 
 
 def sniff_image_dims(data: bytes) -> tuple[str, int | None, int | None, str | None]:
-    """(kind, width, height, error) from real header bytes, stdlib only."""
+    """(kind, width, height, error) from real header bytes, stdlib only.
+    Audio and AVIF/HEIC, which the engine does not sniff, are checked
+    here first; every other kind is extract/sniff.sniff_format's
+    ``image/<kind>`` tag, and the dimensions are read from that kind's
+    header."""
     try:
-        if data[:8] == b"\x89PNG\r\n\x1a\n":
+        if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
+            # audio rides the same binary column: no dims; a WAV is
+            # recognized (error=None -> codec set) only if its fmt
+            # chunk parses, so corrupt containers become error rows
+            i = 12
+            while i + 8 <= len(data):
+                cid = data[i : i + 4]
+                (sz,) = struct.unpack("<I", data[i + 4 : i + 8])
+                if cid == b"fmt " and i + 16 <= len(data):
+                    return "wav", None, None, None
+                i += 8 + sz + (sz & 1)
+            return "wav", None, None, "no fmt chunk"
+        if data[:4] == b"fLaC":
+            return "flac", None, None, None
+        if data[:4] == b"OggS":
+            return "ogg", None, None, None
+        if data[:3] == b"ID3":
+            return "mp3", None, None, None
+        if len(data) >= 12 and data[4:8] == b"ftyp":
+            brand = data[8:12]
+            if brand in (b"avif", b"avis", b"heic", b"heix", b"mif1"):
+                kind = "avif" if brand.startswith(b"avi") else "heic"
+                dims = _isobmff_ispe_dims(data)
+                if dims:
+                    return kind, dims[0], dims[1], None
+                return kind, None, None, "no ispe box"
+        kind = sniff_format(data).removeprefix("image/")
+        if kind == "png":
             w, h = struct.unpack(">II", data[16:24])
             return "png", w, h, None
-        if data[:3] == b"\xff\xd8\xff":
+        if kind == "jpeg":
             i, n = 2, len(data)
             while i + 9 < n:
                 if data[i] != 0xFF:
@@ -101,31 +142,13 @@ def sniff_image_dims(data: bytes) -> tuple[str, int | None, int | None, str | No
                 seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
                 i += 2 + seg_len
             return "jpeg", None, None, "no SOF marker"
-        if data[:6] in (b"GIF87a", b"GIF89a"):
+        if kind == "gif":
             w, h = struct.unpack("<HH", data[6:10])
             return "gif", w, h, None
-        if data[:2] == b"BM":
+        if kind == "bmp":
             w, h = struct.unpack("<ii", data[18:26])
             return "bmp", w, abs(h), None
-        if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-            # audio rides the same binary column: no dims; a WAV is
-            # recognized (error=None -> codec set) only if its fmt
-            # chunk parses, so corrupt containers become error rows
-            i = 12
-            while i + 8 <= len(data):
-                cid = data[i : i + 4]
-                (sz,) = struct.unpack("<I", data[i + 4 : i + 8])
-                if cid == b"fmt " and i + 16 <= len(data):
-                    return "wav", None, None, None
-                i += 8 + sz + (sz & 1)
-            return "wav", None, None, "no fmt chunk"
-        if data[:4] == b"fLaC":
-            return "flac", None, None, None
-        if data[:4] == b"OggS":
-            return "ogg", None, None, None
-        if data[:3] == b"ID3":
-            return "mp3", None, None, None
-        if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
+        if kind == "webp":
             # all three WebP flavors carry dims without full decode
             fourcc = data[12:16]
             if fourcc == b"VP8X" and len(data) >= 30:
@@ -140,18 +163,7 @@ def sniff_image_dims(data: bytes) -> tuple[str, int | None, int | None, str | No
                 h = int.from_bytes(data[28:30], "little") & 0x3FFF
                 return "webp", w, h, None
             return "webp", None, None, "unrecognized WebP chunk layout"
-        if len(data) >= 12 and data[4:8] == b"ftyp":
-            brand = data[8:12]
-            if brand in (b"avif", b"avis", b"heic", b"heix", b"mif1"):
-                kind = "avif" if brand.startswith(b"avi") else "heic"
-                dims = _isobmff_ispe_dims(data)
-                if dims:
-                    return kind, dims[0], dims[1], None
-                return kind, None, None, "no ispe box"
-        if (
-            data[:12] == b"\x00\x00\x00\x0cjP  \r\n\x87\n"
-            or data[:4] == b"\xff\x4f\xff\x51"
-        ):
+        if kind == "jp2":
             # JPEG 2000: dims live in the SIZ segment, which directly
             # follows SOC at the start of the codestream — anchor to
             # the jp2c box / SOC so a stray \xff\x51 byte pair inside a
@@ -169,7 +181,7 @@ def sniff_image_dims(data: bytes) -> tuple[str, int | None, int | None, str | No
                 )
                 return "jp2", xs - xog, ys - yog, None
             return "jp2", None, None, "no SIZ segment"
-        if data[:8] == b"\x97JB2\r\n\x1a\n":
+        if kind == "jbig2":
             # standalone JBIG2: dims live in the first page-info
             # segment; a light segment walk finds it (r4)
             try:
@@ -182,7 +194,7 @@ def sniff_image_dims(data: bytes) -> tuple[str, int | None, int | None, str | No
                 return "jbig2", None, None, "no page information segment"
             except (ValueError, NotImplementedError) as exc:
                 return "jbig2", None, None, str(exc)
-        if data[:4] in (b"II*\x00", b"MM\x00*"):
+        if kind == "tiff":
             from ..extract.tiff import _TAG_HEIGHT, _TAG_WIDTH, _read_ifd
 
             e = "<" if data[:2] == b"II" else ">"
@@ -192,9 +204,7 @@ def sniff_image_dims(data: bytes) -> tuple[str, int | None, int | None, str | No
             if w is None or h is None:
                 return "tiff", None, None, "IFD missing dimensions"
             return "tiff", w, h, None
-        from ..extract.imaging import looks_like_pnm
-
-        if looks_like_pnm(data):
+        if kind == "pnm":
             # netpbm: width/height are the first two header tokens
             import re as _re
 
@@ -204,19 +214,13 @@ def sniff_image_dims(data: bytes) -> tuple[str, int | None, int | None, str | No
             if len(toks) == 2:
                 return "pnm", int(toks[0]), int(toks[1]), None
             return "pnm", None, None, "truncated PNM header"
-        from ..extract.imaging import (
-            looks_like_ico,
-            looks_like_pcx,
-            looks_like_tga,
-        )
-
-        if looks_like_pcx(data):
+        if kind == "pcx":
             x0, y0, x1, y1 = struct.unpack("<HHHH", data[4:12])
             return "pcx", x1 - x0 + 1, y1 - y0 + 1, None
-        if looks_like_tga(data) and len(data) >= 18:
+        if kind == "tga":
             w, h = struct.unpack("<HH", data[12:16])
             return "tga", w, h, None
-        if looks_like_ico(data):
+        if kind == "ico":
             (count,) = struct.unpack("<H", data[4:6])
             best = (0, None, None)
             for e in range(count):
@@ -251,20 +255,7 @@ def decode_media_meta(df: DataFrame, bytes_col: str = "media") -> DataFrame:
     return df.withColumn("meta", meta_udf(F.col(bytes_col)))
 
 
-# --- feature extraction (REAL decode: PNG/BMP/GIF/baseline JPEG) ---------------
-
-def _decode_pixels(data: bytes) -> np.ndarray:
-    """(h, w) uint8 luma.  r3: PNG, BMP, GIF and baseline JPEG decode
-    is REAL (extract/imaging.py + extract/jpeg.py — zlib inflate +
-    spec unfiltering, raw rows, spec LZW, T.81 Huffman + batched
-    IDCT); non-baseline JPEG variants raise NotImplementedError (the
-    error message carries that boundary).  PLUG POINT for a full
-    library: replace imaging.decode_pixels with PIL.Image.open — same
-    (h, w) contract."""
-    from ..extract.imaging import decode_pixels
-
-    return decode_pixels(bytes(data))
-
+# --- feature extraction (REAL decode of every sniffed image format) -----------
 
 def extract_features(
     df: DataFrame,
@@ -283,7 +274,7 @@ def extract_features(
             for mid, data in zip(pdf[id_col], pdf[bytes_col]):
                 ids.append(mid)
                 try:
-                    px = _decode_pixels(data)
+                    px = decode_pixels(bytes(data))
                     hist = np.histogram(px, bins=dim, range=(0, 256))[0]
                     v = hist.astype(np.float32)
                     n = np.linalg.norm(v)
@@ -304,7 +295,7 @@ def extract_features(
     )
 
 
-# --- resize (real resampling math over real PNG/BMP pixels) --------------------
+# --- resize (real resampling math over decoded pixels) ------------------------
 
 RESIZE_SCHEMA = (
     "media_id long, pixels binary, width int, height int, error string"
@@ -321,8 +312,8 @@ def resize_images(
     """Nearest-neighbor resize over mapInPandas batches.
 
     The RESAMPLING is real (index-grid gather over the decoded pixel
-    array), and so is the decode for PNG/BMP (extract/imaging.py);
-    JPEG/GIF rows become error-as-value.  Output pixels ride as raw
+    array), and so is the decode (extract/imaging.decode_pixels);
+    undecodable rows become error-as-value.  Output pixels ride as raw
     row-major bytes + dimensions, the same opaque-binary-plus-typed-
     metadata shape the rest of the pipeline uses.  Error-as-value."""
 
@@ -332,7 +323,7 @@ def resize_images(
             for mid, data in zip(pdf[id_col], pdf[bytes_col]):
                 ids.append(mid)
                 try:
-                    px = _decode_pixels(data)
+                    px = decode_pixels(bytes(data))
                     h, w = px.shape
                     yi = (np.arange(target_h) * h) // target_h
                     xi = (np.arange(target_w) * w) // target_w
@@ -370,30 +361,21 @@ def ocr_images(
     """mapInPandas OCR: binary image → recognized text, error-as-value.
 
     One image, one call, as the reference's tesseract call
-    (lib/image_processor.js:49), through the REAL built-in recognizer
-    (extract/ocr.bitmap_ocr — binarize, scale-infer, segment,
-    template-match over the real PNG/BMP/GIF decoders).  Scale shape:
-    map-only, one Python worker pass, peak memory one Arrow batch of
-    decoded pages."""
+    (lib/image_processor.js:49): extract/ocr.image_text with the REAL
+    built-in recognizer ``ocr_pixels`` — the fused UDF's image step
+    (every TIFF page, EXIF orientation, 'OCR error: …' values).  Scale
+    shape: map-only, one Python worker pass, peak memory one Arrow
+    batch of decoded pages."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..extract.ocr import bitmap_ocr
-
         for pdf in batches:
             ids, texts, errs = [], [], []
             for mid, data in zip(pdf[id_col], pdf[bytes_col]):
                 ids.append(mid)
-                try:
-                    if data is None or len(data) == 0:
-                        raise ValueError("empty payload")
-                    texts.append(bitmap_ocr(bytes(data)))
-                    errs.append(None)
-                except NotImplementedError as exc:
-                    texts.append(None)
-                    errs.append(str(exc))
-                except Exception as exc:
-                    texts.append(None)
-                    errs.append(f"OCR failed: {type(exc).__name__}")
+                data = bytes(data or b"")
+                text, err = image_text(data, sniff_format(data), ocr_pixels)
+                texts.append(text)
+                errs.append(err)
             yield pd.DataFrame({"media_id": ids, "text": texts, "error": errs})
 
     return df.select(F.col(id_col), F.col(bytes_col)).mapInPandas(
@@ -421,29 +403,26 @@ def _demux_frames_stub(data: bytes) -> list[bytes]:
 
 
 def _demux_frames(data: bytes) -> list[bytes]:
-    """Real demux where the codecs exist natively (r4): animated WebP
-    composes each frame (VP8/VP8L + ALPH, blend/dispose rules) and
-    yields PNG-gray-encoded canvases — decodable frame bytes, not raw
-    chunks.  Other payloads keep the deterministic stub (the ffmpeg
-    swap stays config-only at this seam)."""
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        from ..extract.imaging import encode_png_gray
+    """Real demux, by sniff_format tag, where the codecs exist natively:
+    animated WebP composes each frame (VP8/VP8L + ALPH, blend/dispose
+    rules), GIF and APNG likewise, each yielding PNG-gray-encoded
+    canvases — decodable frame bytes, not raw chunks.  Other payloads
+    keep the deterministic stub (the ffmpeg swap stays config-only at
+    this seam)."""
+    fmt = sniff_format(data)
+    if fmt == "image/webp":
         from ..extract.webp import demux_webp_frames
 
         return [
             encode_png_gray(luma) for luma, _dur in demux_webp_frames(data)
         ]
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        from ..extract.imaging import demux_gif_frames, encode_png_gray
-
+    if fmt == "image/gif":
         return [
             encode_png_gray(luma) for luma, _dur in demux_gif_frames(data)
         ]
-    if data[:8] == b"\x89PNG\r\n\x1a\n" and b"acTL" in bytes(data[:256]):
+    if fmt == "image/png" and b"acTL" in bytes(data[:256]):
         # animated PNG (r5): acTL must precede IDAT, so it sits in the
         # first chunks; static PNGs keep the deterministic stub
-        from ..extract.imaging import demux_apng_frames, encode_png_gray
-
         return [
             encode_png_gray(luma) for luma, _dur in demux_apng_frames(data)
         ]

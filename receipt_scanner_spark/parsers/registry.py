@@ -48,6 +48,14 @@ def resolve_cascade(parsers: list[Any] | None = None) -> tuple:
     return tuple(out)
 
 
+def read_result(parsed: dict) -> tuple[Any, list]:
+    """(match, matches) of one parser result: the contract
+    ``{"matches": [...], "match": x}`` with both keys required
+    (``KeyError`` otherwise).  ``parse_text`` and the fused UDF's
+    ``parse_row`` read custom results only through here."""
+    return parsed["match"], parsed["matches"]
+
+
 def parse_text(
     text: str,
     parsers: list[Any] | None = None,
@@ -62,7 +70,7 @@ def parse_text(
     verbose_out: dict = {}
     for name, fn, config in resolve_cascade(parsers):
         parsed = fn(text, config)
-        results[name] = parsed["match"]
+        results[name], _matches = read_result(parsed)
         if verbose:
             verbose_out[name] = parsed
     if verbose:

@@ -139,6 +139,58 @@ class TestMultimodal:
         # undecodable rows: error-as-value, no crash
         assert out[4].pixels is None and out[4].error is not None
 
+    def test_one_image_path(self, spark, media):
+        """The multimodal operators and the engine share one image path:
+        over every battery image fixture and the suite's BMP/GIF/PNG/
+        TIFF encoders, sniff_image_dims names sniff_format's kind, and
+        ocr_images reads the text the fused UDF extracts."""
+        import __spark_entry__ as entry_mod
+        from receipt_scanner_spark.extract.imaging import encode_png_gray
+        from receipt_scanner_spark.extract.ocr import ocr_pixels, render_text
+        from receipt_scanner_spark.extract.sniff import sniff_format
+        from receipt_scanner_spark.functions.udfs import build_process_udf
+        from receipt_scanner_spark.operators.multimodal import (
+            ocr_images,
+            sniff_image_dims,
+        )
+        from tests.test_ccitt import encode_g4
+        from tests.test_imaging import _bmp_shell, _encode_png, _gif
+        from tests.test_ocr import _gray_bmp
+        from tests.test_tiff import write_tiff_multi
+
+        px = render_text("BUILT $4.50", scale=2)
+        h, w = px.shape
+        ink = (px < 128).astype(np.uint8)
+        pal = np.array([[255, 255, 255], [0, 0, 0]], np.uint8)
+        stride = (w + 3) // 4 * 4
+        rows8 = b"".join(ink[y].tobytes() + bytes(stride - w) for y in range(h - 1, -1, -1))
+        pages = [render_text(t) for t in ("PAGE ONE $1.00", "TOTAL $3.00")]
+        built = [
+            _gray_bmp(px),
+            _bmp_shell(w, h, 8, 0, pal, rows8),
+            _gif(ink, pal, 2),
+            _encode_png(px[:, :, None], 0, [0] * h),
+            encode_png_gray(px),
+            write_tiff_multi([(encode_g4(p < 128), p.shape[1], p.shape[0], 4) for p in pages]),
+            *(bytes(r.media) for r in media.collect()),
+        ]
+        images = [
+            b for b in [bytes(m) for _, m in entry_mod._multimodal_media()] + built
+            if sniff_format(b).startswith("image/")
+        ]
+        assert len(images) >= 29 + 6
+        for b in images:
+            assert sniff_image_dims(b)[0] == sniff_format(b).removeprefix("image/")
+        want = build_process_udf(ocr_arrays=ocr_pixels).func(
+            pd.Series(images), pd.Series([None] * len(images))
+        )["extracted_text"].tolist()
+        df = spark.createDataFrame(
+            pd.DataFrame({"media_id": range(len(images)), "media": images}))
+        got = {r.media_id: r.text for r in ocr_images(df).collect()}
+        assert [got[i] for i in range(len(images))] == want
+        assert want[-9:-3] == ["BUILT $4.50"] * 5 + ["PAGE ONE $1.00\n\n\nTOTAL $3.00"]
+        assert sum(t is not None for t in want) == len(images) - 3
+
     def test_frame_sampling_fans_out(self, spark, media):
         from receipt_scanner_spark.operators.multimodal import (
             _FAKE_FRAME_BYTES,

@@ -50,6 +50,25 @@ class TestSniff:
         assert sniff_format(b"II*\x00rest") == "image/tiff"
         assert sniff_format(b"MM\x00*rest") == "image/tiff"
 
+    def test_text_starting_bm_is_not_a_bitmap(self):
+        """'BM' is a weak magic: a page that starts with it keeps its
+        text, and the multimodal sniffer agrees it is no image."""
+        import pandas as pd
+
+        from receipt_scanner_spark.functions.udfs import build_process_udf
+        from receipt_scanner_spark.operators.multimodal import sniff_image_dims
+
+        page = b"BMI calculator: enter your height and weight. Total $5.00"
+        assert sniff_format(page) == "text"
+        row = build_process_udf().func(pd.Series([page]), pd.Series([None])).iloc[0]
+        assert (row["format"], row["extracted_text"], row["error"]) == (
+            "text", page.decode(), None)
+        assert row["amount"] == "5.00"
+        assert sniff_image_dims(page) == ("unknown", None, None, "unrecognized magic")
+        # a header-only BMP (reserved words zero, offset inside) still is one
+        stub = b"BM" + b"\x00" * 16 + b"\x40\x00\x00\x00\xd0\xff\xff\xff" + b"\x00" * 8
+        assert sniff_format(stub) == "image/bmp"
+
 
 class TestGzipTransparency:
     def test_gzip_html_extracts(self):

@@ -15,7 +15,7 @@ encoded by two different real-world encoders (test_files/benchmark/
 both and requiring near-identical pixels validates against encoders
 this repo did not write.
 
-The OCR round trip (render → JPEG-encode → bitmap_ocr) is the
+The OCR round trip (render → JPEG-encode → decode → OCR) is the
 end-to-end check that decoded pixels are faithful enough to drive the
 template matcher — the actual production consumer
 (lib/image_processor.js:49 hands JPEGs to tesseract; here the whole
@@ -888,11 +888,12 @@ class TestIntegration:
     def test_ocr_reads_jpeg_receipt(self):
         """render → independent JPEG encode → real decode → template
         OCR: the full photographed-receipt chain, no stubs anywhere."""
-        from receipt_scanner_spark.extract.ocr import bitmap_ocr, render_text
+        from receipt_scanner_spark.extract.imaging import decode_pixels
+        from receipt_scanner_spark.extract.ocr import ocr_pixels, render_text
 
         text = "TOTAL: $12.95\nDATE 2016-03-02"
         px = render_text(text, scale=2, margin=4)
-        assert bitmap_ocr(encode_jpeg([px])) == text
+        assert ocr_pixels(decode_pixels(encode_jpeg([px]))) == text
 
 
 class Test12BitPrecision:

@@ -7,7 +7,7 @@ binarization, scale inference, downsampling, segmentation, and
 template matching.  The reference's analogous surface is the tesseract
 shell-out (lib/image_processor.js:49, lib/pdf_processor.js:25); here
 the engine itself is executable, and a tesseract swap stays
-config-only (same ``ocr(bytes) -> str`` contract).
+config-only (same ``ocr_arrays(luma) -> str`` contract).
 """
 
 import struct
@@ -15,11 +15,11 @@ import struct
 import numpy as np
 import pytest
 
-from receipt_scanner_spark.extract.imaging import encode_png_gray
+from receipt_scanner_spark.extract.imaging import decode_pixels, encode_png_gray
 from receipt_scanner_spark.extract.ocr import (
     ALPHABET,
     GLYPHS,
-    bitmap_ocr,
+    image_text,
     ocr_pixels,
     render_text,
 )
@@ -141,19 +141,21 @@ class TestBitmapOcrBytes:
     def test_png_and_bmp_payloads(self):
         text = "RECEIPT #881\nTOTAL $45.00"
         px = render_text(text, scale=2)
-        assert bitmap_ocr(encode_png_gray(px)) == text
-        assert bitmap_ocr(_gray_bmp(px)) == text
+        assert ocr_pixels(decode_pixels(encode_png_gray(px))) == text
+        assert ocr_pixels(decode_pixels(_gray_bmp(px))) == text
 
     def test_jpeg_real_decode_and_corrupt_raises(self):
         # JPEG decode is REAL as of r3 (extract/jpeg.py) — corrupt
         # payloads are data errors (ValueError), not a codec boundary
         with pytest.raises(ValueError):
-            bitmap_ocr(b"\xff\xd8\xff\xe0jpeg")
+            decode_pixels(b"\xff\xd8\xff\xe0jpeg")
+        assert image_text(b"\xff\xd8\xff\xe0jpeg", "image/jpeg", ocr_pixels) == (
+            None, "OCR error: ValueError")
         from tests.test_jpeg import encode_jpeg
 
         text = "JPEG LANE $3.50"
         px = render_text(text, scale=2)
-        assert bitmap_ocr(encode_jpeg([px])) == text
+        assert ocr_pixels(decode_pixels(encode_jpeg([px]))) == text
 
 
 class TestOcrIntoParsers:
@@ -351,12 +353,10 @@ class TestPluggableFont:
             BitmapFont({})
 
     def test_bitmap_ocr_font_binding(self):
-        # the ocr(bytes)->str hook contract holds for a bound font
+        # the ocr_arrays(luma)->str hook contract holds for a bound font
         import functools
-
-        from receipt_scanner_spark.extract.ocr import bitmap_ocr, render_text
 
         font2 = self._font2()
         png = encode_png_gray(render_text("FAX $3.25", scale=2, font=font2))
-        hook = functools.partial(bitmap_ocr, font=font2)
-        assert hook(png) == "FAX $3.25"
+        hook = functools.partial(ocr_pixels, font=font2)
+        assert image_text(png, "image/png", hook) == ("FAX $3.25", None)

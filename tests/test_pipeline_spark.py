@@ -236,6 +236,35 @@ def test_fused_udf_contains_unexpected_row_exception(monkeypatch):
     assert list(after["amount"]) == ["5.00", None, "7.00"]
 
 
+def test_custom_parser_results_are_read_by_one_rule():
+    """parse_text and the fused UDF read a custom parser's result the
+    same way: both keys of ``{"matches": [...], "match": x}`` are
+    required, so a result without "match" fails in both (the UDF keeps
+    the failure as the row's error value)."""
+    import pandas as pd
+
+    from receipt_scanner_spark.functions.udfs import build_process_udf
+    from receipt_scanner_spark.parsers.registry import parse_text
+
+    def no_match(text, config):
+        return {"matches": []}
+
+    def total(text, config):
+        return {"matches": ["T"], "match": "T" if "Total" in text else None}
+
+    page = pd.Series([b"<html><body><p>Total $5.00 paid</p></body></html>"])
+    for parser, want in ((no_match, KeyError), (total, {"total": "T"})):
+        row = build_process_udf([parser]).func(page, pd.Series([None])).iloc[0]
+        if want is KeyError:
+            with pytest.raises(KeyError, match="match"):
+                parse_text(row["extracted_text"], [parser])
+            assert row["error"] == "internal error: KeyError"
+            assert row["extra"] is None
+        else:
+            assert parse_text(row["extracted_text"], [parser]) == want
+            assert row["error"] is None and row["extra"] == want
+
+
 @pytest.mark.parametrize("kwargs, exc, match", [
     ({"parsers": ["amout"]}, ValueError, "KeyError..amout"),
     ({"parsers": [("amount", {"parsers": ["larget"]})]}, ValueError, "KeyError..larget"),

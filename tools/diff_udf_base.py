@@ -22,7 +22,9 @@ counted as an exception (the body's row guard caught one); the
 Inputs: ``generate_pages`` rows (``html`` and ``text``) of seeds 1-3,
 whose image rows carry upstream OCR text and whose PDFs hold no images;
 so 2% of the rows are receipts the OCR hook can read, without ``text``:
-``render_text`` PNGs and diff_pdf_base's raster PDFs.
+the image fixtures of ``__spark_entry__``'s multimodal entry (one per
+codec and variant, so the hook reaches every decoder), ``render_text``
+PNGs and diff_pdf_base's raster PDFs.
 
 Usage: python tools/diff_udf_base.py <base-ref> [n_rows]
 (default 100000 rows per combination) -> exits non-zero on any mismatch
@@ -53,6 +55,7 @@ COLUMNS = ("format", "extracted_text", "error", "amount", "date", "spans", "extr
 
 
 def inputs(n: int) -> tuple[list, list]:
+    from __spark_entry__ import _multimodal_media
     from diff_pdf_base import raster
     from receipt_scanner_spark.extract.imaging import encode_png_gray
     from receipt_scanner_spark.extract.ocr import render_text
@@ -60,7 +63,8 @@ def inputs(n: int) -> tuple[list, list]:
 
     rng = random.Random(11)
     k = max(2, n // 50)
-    html = raster(rng, k // 2)[: k // 2]
+    html = [bytes(m) for _, m in _multimodal_media()][:k]
+    html += raster(rng, k // 2)[: max(0, k // 2 - len(html))]
     while len(html) < k:
         receipt = "TOTAL $%d.%02d\nDATE 2016-%02d-%02d" % (
             rng.randrange(1000), rng.randrange(100), rng.randrange(1, 13), rng.randrange(1, 29))
