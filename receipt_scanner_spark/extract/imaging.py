@@ -293,14 +293,20 @@ def _bmp_rle_decode(
     return idx[::-1]  # bottom-up → top-down
 
 
+# DIB header sizes: OS/2 core (12), BITMAPINFOHEADER (40), the V2/V3
+# info headers (52, 56), OS/2 2.x (64), V4 (108) and V5 (124)
+_BMP_DIB_SIZES = frozenset((12, 40, 52, 56, 64, 108, 124))
+
+
 def looks_like_bmp(data: bytes) -> bool:
     """The 2-byte 'BM' magic is weak (text can start 'BMI …'), so
-    require the BITMAPFILEHEADER's reserved words to be zero and its
-    pixel-data offset to lie inside the buffer."""
-    if len(data) < 14 or data[:2] != b"BM":
+    require a known DIB header size after the BITMAPFILEHEADER and a
+    pixel-data offset inside the buffer.  The file header's reserved
+    words are application-defined and not checked."""
+    if len(data) < 18 or data[:2] != b"BM":
         return False
-    reserved, pixel_off = struct.unpack("<II", data[6:14])
-    return reserved == 0 and pixel_off <= len(data)
+    pixel_off, dib_size = struct.unpack("<II", data[10:18])
+    return dib_size in _BMP_DIB_SIZES and pixel_off <= len(data)
 
 
 def decode_bmp(data: bytes) -> np.ndarray:

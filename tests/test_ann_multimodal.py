@@ -100,7 +100,8 @@ class TestMultimodal:
         rows = [
             dict(media_id=1, media=_png(32, 16)),
             dict(media_id=2, media=b"GIF89a" + struct.pack("<HH", 100, 50) + b"x" * 20),
-            dict(media_id=3, media=b"BM" + b"\x00" * 16 + struct.pack("<ii", 64, -48) + b"\x00" * 8),
+            dict(media_id=3, media=b"BM" + b"\x00" * 12 + struct.pack("<Iii", 40, 64, -48)
+                 + b"\x00" * 8),
             dict(media_id=4, media=b"\x00garbage\xff"),
             dict(media_id=5, media=b""),
         ]

@@ -65,9 +65,40 @@ class TestSniff:
             "text", page.decode(), None)
         assert row["amount"] == "5.00"
         assert sniff_image_dims(page) == ("unknown", None, None, "unrecognized magic")
-        # a header-only BMP (reserved words zero, offset inside) still is one
-        stub = b"BM" + b"\x00" * 16 + b"\x40\x00\x00\x00\xd0\xff\xff\xff" + b"\x00" * 8
+        # a header-only BMP (BITMAPINFOHEADER size, offset inside) still is one
+        stub = (b"BM" + b"\x00" * 12 + b"\x28\x00\x00\x00"
+                + b"\x40\x00\x00\x00\xd0\xff\xff\xff" + b"\x00" * 8)
         assert sniff_format(stub) == "image/bmp"
+
+    @pytest.mark.parametrize("page", [
+        b"BMI calculator",  # too short for a DIB header
+        b"BMW 320i service invoice. Total $5.00",
+        b"BM\x00\x00\x00\x00 reserved zero, text after it: total $5.00",
+        b"BM" + b"\x00" * 16 + b"zero file header, no DIB header size",
+    ])
+    def test_bm_text_without_a_dib_header_is_not_a_bitmap(self, page):
+        from receipt_scanner_spark.operators.multimodal import sniff_image_dims
+
+        assert sniff_format(page) != "image/bmp"
+        assert sniff_image_dims(page)[0] != "bmp"
+
+    @pytest.mark.parametrize("reserved", [b"\x00\x00\x00\x00", b"\x01\x00\x00\x00", b"GIMP"])
+    def test_bmp_reserved_words_are_application_defined(self, reserved):
+        """bfReserved1/2 may hold anything; the DIB header size names
+        the format (2×2, 24-bit, BITMAPINFOHEADER)."""
+        import struct
+
+        import numpy as np
+
+        from receipt_scanner_spark.extract.imaging import decode_bmp
+        from receipt_scanner_spark.operators.multimodal import sniff_image_dims
+
+        rows = b"\x00\x00\x00\xff\xff\xff\x00\x00" + b"\x80\x80\x80\x10\x10\x10\x00\x00"
+        info = struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0, len(rows), 0, 0, 0, 0)
+        bmp = b"BM" + struct.pack("<I", 54 + len(rows)) + reserved + struct.pack("<I", 54) + info + rows
+        assert sniff_format(bmp) == "image/bmp"
+        assert sniff_image_dims(bmp) == ("bmp", 2, 2, None)
+        np.testing.assert_array_equal(decode_bmp(bmp), [[128, 16], [0, 255]])
 
 
 class TestGzipTransparency:

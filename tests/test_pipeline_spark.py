@@ -283,6 +283,66 @@ def test_bad_config_fails_when_the_udf_is_built(kwargs, exc, match):
         build_process_udf(**kwargs)
 
 
+def test_one_udf_per_config():
+    """An equal config gets the UDF already built (Spark then pickles its
+    closure and registers its JVM function once); another config, or a
+    config changed in place since the build, gets its own."""
+    from receipt_scanner_spark.extract.ocr import ocr_pixels
+    from receipt_scanner_spark.functions import udfs
+
+    def merchant(text, config):
+        return {"matches": [], "match": None}
+
+    cfg = ["amount", ("date", {"parser": "first"}), merchant]
+    a = udfs.build_process_udf(cfg, profile="lenient", ocr_arrays=ocr_pixels)
+    assert udfs.build_process_udf(
+        ["amount", ["date", {"parser": "first"}], merchant], profile="lenient", ocr_arrays=ocr_pixels
+    ) is not a  # a list pair is another spelling, built once more
+    assert udfs.build_process_udf(
+        ["amount", ("date", {"parser": "first"}), merchant], profile="lenient", ocr_arrays=ocr_pixels
+    ) is a
+    assert udfs.build_process_udf(cfg, profile="default", ocr_arrays=ocr_pixels) is not a
+    assert udfs.build_process_udf(cfg, profile="lenient") is not a
+    assert udfs.build_process_udf(
+        ["amount", ("date", {"parser": "first"}), lambda t, c: merchant(t, c)],
+        profile="lenient", ocr_arrays=ocr_pixels,
+    ) is not a  # callables by identity
+    # equal but differently typed values are different configs
+    assert udfs.build_process_udf([(merchant, 1)]) is not udfs.build_process_udf([(merchant, True)])
+    cfg[1][1]["parser"] = "last"
+    b = udfs.build_process_udf(
+        ["amount", ("date", {"parser": "first"}), merchant], profile="lenient", ocr_arrays=ocr_pixels
+    )
+    assert b is not a
+    # the default config is the module's default instance, in extract_pages too
+    assert udfs.build_process_udf() is udfs.process_udf
+    assert udfs.build_process_udf(None, profile=None) is udfs.process_udf
+    # an unhashable config value still builds, uncached
+    odd = [("amount", {"parsers": {"largest"}})]
+    assert udfs.build_process_udf(odd) is not udfs.build_process_udf(odd)
+
+
+def test_extract_pages_builds_one_udf_per_config(spark, monkeypatch):
+    from receipt_scanner_spark.functions import udfs
+    from receipt_scanner_spark.plans.pipeline import extract_pages
+
+    built = []
+    build = udfs._build_process_udf
+    monkeypatch.setattr(udfs, "_build_process_udf", lambda *a: built.append(a) or build(*a))
+
+    def tag(text, config):
+        return {"matches": [], "match": "t"}
+
+    pages = spark.createDataFrame(
+        [("u1", None, None, "Total $5.00", "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    for _ in range(3):
+        out = extract_pages(pages, parsers=["amount", tag], observe=False).collect()
+        assert [(r.amount, r.extra) for r in out] == [("5.00", {"tag": "t"})]
+    assert len(built) == 1
+
+
 class TestLineSegmentation:
     """OCR-text line segmentation: a pure function, not a pipeline stage
     (the UDF passes extracted text through — byte-identity contract)."""
