@@ -41,7 +41,9 @@ _IMAGE_MAGICS: list[tuple[bytes, str]] = [
 _HTML_PREFIXES = (b"<!doctype", b"<html", b"<head", b"<body", b"<?xml")
 
 
-_MAX_GUNZIP = 16 << 20  # shared decompression-bomb posture
+# Per-document budget: the most a gzip payload inflates to, and the
+# largest payload (or upstream text, in characters) extract_row reads.
+MAX_DOC_BYTES = 16 << 20
 
 
 def maybe_gunzip(data: bytes | None) -> bytes | None:
@@ -57,8 +59,8 @@ def maybe_gunzip(data: bytes | None) -> bytes | None:
 
     try:
         d = zlib.decompressobj(wbits=31)  # gzip container
-        out = d.decompress(bytes(data), _MAX_GUNZIP + 1)
-        if len(out) > _MAX_GUNZIP:
+        out = d.decompress(bytes(data), MAX_DOC_BYTES + 1)
+        if len(out) > MAX_DOC_BYTES:
             return data
         return out
     except zlib.error:

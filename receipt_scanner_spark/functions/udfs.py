@@ -1,9 +1,11 @@
 """Arrow-batched pandas UDFs — the engine's only Python hot path.
 
 Design (SURVEY.md §1.4): the reference processes one document at a time
-through child processes; here thousands of documents cross the
-JVM→Python boundary per Arrow batch
-(``spark.sql.execution.arrow.maxRecordsPerBatch``), and each row is
+through child processes; here many documents cross the JVM→Python
+boundary per Arrow batch (closed after the row that crosses
+``spark.sql.execution.arrow.maxBytesPerBatch``, 1 MiB in
+plans/session.get_spark, or at 10k rows: at most 1 MiB plus one row,
+and ``extract_row`` reads no row over 16 MiB), and each row is
 handled by the pure-Python extract/parse core (no per-row Python *UDF
 calls*, per BASELINE.json input_hint — the per-row work is regex/DOM
 parsing that is irreducibly row-wise, batched through one vectorized
@@ -43,7 +45,7 @@ from ..extract.html_fast import extract_main_text_fast as extract_main_text
 from ..extract.ocr import image_text
 from ..extract.pdf import OCR_UNAVAILABLE_ERROR, process_pdf
 from ..extract.profiles import PROFILES, StripperProfile
-from ..extract.sniff import maybe_gunzip, sniff_format, unsupported_error
+from ..extract.sniff import MAX_DOC_BYTES, maybe_gunzip, sniff_format, unsupported_error
 from ..parsers.amount import parse_amount
 from ..parsers.date import parse_date
 from ..parsers.registry import read_result, resolve_cascade
@@ -102,9 +104,20 @@ def extract_row(
     extract/ocr.image_text with the format sniffed here (its decoder
     looked up by that tag, EXIF orientation applied, every TIFF page),
     PDF images through extract/pdf.extract_pdf_image_arrays.
+
+    Per-document budget: a payload over ``MAX_DOC_BYTES`` (16 MiB, after
+    gunzip) or an upstream ``text`` over as many characters is the error
+    value ``Document too large: <n> bytes`` (the payload's length, else
+    the text's UTF-8 length).  Its format is still sniffed; no stripper,
+    PDF, OCR or parser call is made for it.
     """
     html = maybe_gunzip(html)  # WARC-style gzip'd payloads (no-op else)
     fmt = sniff_format(html)
+    if html is not None and len(html) > MAX_DOC_BYTES:
+        return fmt, None, f"Document too large: {len(html)} bytes"
+    if text is not None and len(text) > MAX_DOC_BYTES:
+        n = len(text.encode("utf-8", "surrogatepass"))
+        return fmt, None, f"Document too large: {n} bytes"
     if fmt == "html":
         return fmt, extract_main_text(
             html,

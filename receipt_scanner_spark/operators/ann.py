@@ -28,9 +28,9 @@ from pyspark.sql.functions import pandas_udf
 
 def cosine_to_query_udf(query: list[float]):
     """Arrow-batched cosine against one broadcast query vector: a single
-    BLAS matvec per ~10k-row batch.  Replaces the earlier zip_with +
-    aggregate fold, which Spark runs INTERPRETED per row per element
-    (measured 100× slower on this exact shape — see
+    BLAS matvec per Arrow batch (up to 10k rows or 1 MiB).  Replaces the
+    earlier zip_with + aggregate fold, which Spark runs INTERPRETED per
+    row per element (measured 100× slower on this exact shape — see
     plans/queries.embedding_cosine_pairs).  float32→float64 widening is
     exact; only BLAS summation order differs from a sequential fold, in
     the last ulp, which the callers' round(6) absorbs (same argument

@@ -16,10 +16,12 @@ the same text for the same bytes.  Video demuxing stays behind a
 clearly-marked stub plug point where ffmpeg would slot in.
 
 Batch-shape contract for the real thing: ``mapInPandas`` receives an
-iterator of pandas DataFrames (one per Arrow batch, bounded by
-``spark.sql.execution.arrow.maxRecordsPerBatch``); heavy decoders
-process batch-by-batch so peak memory is one batch of decoded frames,
-not one partition.
+iterator of pandas DataFrames, one per Arrow batch; plans/session.get_spark
+bounds a batch by bytes (``spark.sql.execution.arrow.maxBytesPerBatch``,
+1 MiB, closed after the row that crosses it) and Spark by rows (10k), so a
+batch is at most 1 MiB plus one row.  Heavy decoders process
+batch-by-batch so peak memory is one batch of decoded frames, not one
+partition.
 """
 
 from __future__ import annotations

@@ -34,11 +34,14 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow exchange for pandas UDFs — the hot path. Batch size bounds
-        # Python-worker memory: 10k rows × ~50KB page ≈ 500MB ceiling per
-        # batch across 32 workers; lower it for fatter rows.
+        # Arrow exchange for pandas UDFs — the hot path. A Python worker
+        # holds one input batch plus its pandas copies, so batches are
+        # bounded by bytes: Spark closes one after the row that crosses
+        # 1 MiB (or at its default 10k rows).  Its own 64 MiB default let
+        # the workers reach ~1 GB on ~48 KB pages (~270 MB at 1 MiB);
+        # 1 MiB still batches several 200 KB pages together.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(1 << 20))
         # Scan parallelism: keep splits near the default 128 MiB so a
         # 100 TB table yields ~800k tasks, not 8 giant ones.
         .config("spark.sql.files.maxPartitionBytes", "134217728")

@@ -146,6 +146,74 @@ class TestGzipTransparency:
             assert maybe_gunzip(b) == b
 
 
+class TestDocumentBudget:
+    """A payload over 16 MiB (after gunzip) or an upstream text over 16 Mi
+    characters is the designed error value ``Document too large: <n>
+    bytes``, its format still sniffed; a row at the cap is read."""
+
+    CAP = 16 << 20
+    TAIL = "TOTAL $5.00 on 2016-01-02"
+    PNG = b"\x89PNG\r\n\x1a\n"
+
+    def cases(self):
+        cap = self.CAP
+        return [
+            # (url, html, text) → (format, extracted_text, error, amount, date)
+            ("payload-at-cap", self.PNG + bytes(cap - len(self.PNG)), None,
+             ("image/png", None, OCR_UNAVAILABLE_ERROR, None, None)),
+            ("payload-over", self.PNG + bytes(cap + 1 - len(self.PNG)), None,
+             ("image/png", None, f"Document too large: {cap + 1} bytes", None, None)),
+            ("html-over", b"<html>" + b" " * (cap + 1 - 6), None,
+             ("html", None, f"Document too large: {cap + 1} bytes", None, None)),
+            ("text-at-cap", None, self.TAIL + " " * (cap - len(self.TAIL)),
+             ("empty", self.TAIL + " " * (cap - len(self.TAIL)), None, "5.00", "2016-01-02")),
+            # over in characters; n counts its UTF-8 bytes
+            ("text-over", None, "é" + " " * cap,
+             ("empty", None, f"Document too large: {cap + 2} bytes", None, None)),
+        ]
+
+    def test_extract_row(self, monkeypatch):
+        import pandas as pd
+
+        from receipt_scanner_spark.extract.sniff import MAX_DOC_BYTES
+        from receipt_scanner_spark.functions import udfs
+
+        assert MAX_DOC_BYTES == self.CAP
+        # no stripper, PDF or OCR call for a row over the cap
+        for name in ("extract_main_text", "process_pdf", "image_text"):
+            monkeypatch.setattr(udfs, name, None)
+        cases = self.cases()
+        for url, html, text, want in cases:
+            fmt, extracted, error = udfs.extract_row(html, text)
+            assert (fmt, extracted, error) == want[:3], url
+        out = udfs.process_udf.func(
+            pd.Series([html for _, html, _, _ in cases], dtype=object),
+            pd.Series([text for _, _, text, _ in cases], dtype=object))
+        got = list(out[["format", "extracted_text", "error", "amount", "date"]]
+                   .itertuples(index=False, name=None))
+        assert got == [want for *_, want in cases]
+
+    def test_extract_pages(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from receipt_scanner_spark.plans.pipeline import extract_pages, read_pages
+
+        cases = self.cases()
+        # through parquet, not the driver: no pickled copy on the JVM heap
+        pq.write_table(pa.table({
+            "url": [url for url, *_ in cases],
+            "warc_ts": pa.array([None] * len(cases), pa.timestamp("us")),
+            "html": pa.array([html for _, html, _, _ in cases], pa.binary()),
+            "text": pa.array([text for _, _, text, _ in cases], pa.string()),
+            "lang": ["en"] * len(cases),
+        }), tmp_path / "pages.parquet", row_group_size=1)
+        pages = read_pages(spark, str(tmp_path / "pages.parquet"))
+        got = {r.url: (r.format, r.extracted_text, r.error, r.amount, r.date)
+               for r in extract_pages(pages, observe=False).collect()}
+        assert got == {url: want for url, _, _, want in cases}
+
+
 class TestHtmlStripper:
     def test_drops_chrome_and_linkfarms(self):
         html = (

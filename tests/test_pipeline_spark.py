@@ -125,6 +125,110 @@ class TestPlanShape:
         assert plan.count("ArrowEvalPython") == 1, plan
 
 
+def _arrow_batches(df, col):
+    """(rows, bytes of ``col``, bytes of its last row) of each Arrow batch
+    a mapInPandas operator over ``df`` receives."""
+
+    def probe(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            sizes = [len(b) for b in pdf[col]]
+            yield pd.DataFrame({"rows": [len(sizes)], "size": [sum(sizes)],
+                                "last": [sizes[-1]]})
+
+    return [tuple(r) for r in df.mapInPandas(probe, "rows long, size long, last long").collect()]
+
+
+class TestArrowBatchBound:
+    """plans/session.get_spark bounds every Arrow input batch at 1 MiB:
+    Spark closes a batch after the row that crosses the bound, so a
+    Python worker holds at most 1 MiB plus one row."""
+
+    BOUND = 1 << 20
+
+    def test_session_bounds_batches_by_bytes(self, spark):
+        conf = spark.conf.get
+        assert conf("spark.sql.execution.arrow.maxBytesPerBatch") == str(self.BOUND)
+        # Spark's own default, not restated by get_spark
+        assert conf("spark.sql.execution.arrow.maxRecordsPerBatch") == "10000"
+
+    def test_pandas_udf_batches_are_bounded(self, spark):
+        import random
+        import uuid
+
+        import pandas as pd
+        from pyspark.sql.functions import pandas_udf
+
+        @pandas_udf("string")
+        def probe(html: pd.Series) -> pd.Series:
+            sizes = html.map(len)
+            tag = f"{uuid.uuid4().hex} {len(sizes)} {sizes.sum()} {sizes.iloc[-1]}"
+            return pd.Series([tag] * len(sizes))
+
+        rng = random.Random(3)
+        rows = [(i, bytes([65 + i % 26]) * rng.randrange(10_000, 150_000)) for i in range(60)]
+        assert sum(len(h) for _, h in rows) >= 3 << 20
+        df = spark.createDataFrame(rows, "id int, html binary").coalesce(1)
+        tags = {r.tag for r in df.select(probe("html").alias("tag")).collect()}
+        batches = [tuple(map(int, t.split()[1:])) for t in tags]
+        assert len(batches) >= 3, batches
+        assert sum(n for n, _, _ in batches) == len(rows)
+        for n, size, last in batches:
+            assert size - last <= self.BOUND, batches
+
+    def test_row_over_the_bound_is_extracted(self, spark):
+        from receipt_scanner_spark.functions.udfs import extract_row, parse_row
+
+        filler = b"".join(b"<p>Paragraph %d of a long article, with enough words "
+                          b"to be kept as a content block.</p>" % i for i in range(26_000))
+        big = b"<html><body><article><p>Total $12.34 on 2016-03-04</p>" + filler
+        big += b"</article></body></html>"
+        assert len(big) > 2 << 20
+        rows = [(f"u{i}", None, b"<html><body><p>Total $%d.00</p></body></html>" % i, None, "en")
+                for i in range(6)]
+        rows.insert(3, ("big", None, big, None, "en"))
+        pages = spark.createDataFrame(
+            rows, "url string, warc_ts timestamp, html binary, text string, lang string"
+        ).coalesce(1)
+        got = {r.url: r for r in extract_pages(pages, observe=False).collect()}
+        assert len(got) == len(rows)
+        for url, _, html, text, _ in rows:
+            fmt, extracted, error = extract_row(html, text)
+            amount, date, spans, _extra = parse_row(extracted)
+            r = got[url]
+            assert (r.format, r.extracted_text, r.error, r.amount, r.date) == (
+                fmt, extracted, error, amount, date), url
+            assert [s.asDict() for s in r.spans] == spans, url
+        assert got["big"].amount == "12.34" and got["big"].date == "2016-03-04"
+
+    def test_map_in_pandas_over_several_batches(self, spark):
+        """sample_frames yields more rows than it reads; its output over
+        several input batches equals its output over one batch."""
+        import random
+
+        from receipt_scanner_spark.operators.multimodal import sample_frames
+
+        rng = random.Random(5)
+        media = spark.createDataFrame(
+            [(i, rng.randbytes(rng.randrange(50_000, 250_000))) for i in range(30)],
+            "media_id long, media binary",
+        ).coalesce(1)
+        key = "spark.sql.execution.arrow.maxBytesPerBatch"
+        bound = spark.conf.get(key)
+        spark.conf.set(key, str(1 << 30))
+        try:
+            assert len(_arrow_batches(media, "media")) == 1
+            one = sample_frames(media).localCheckpoint(eager=True)
+        finally:
+            spark.conf.set(key, bound)
+        assert len(_arrow_batches(media, "media")) >= 3
+        many = sample_frames(media)
+        assert one.count() == many.count() > 30
+        assert many.exceptAll(one).count() == 0
+        assert one.exceptAll(many).count() == 0
+
+
 class TestGoldenScorer:
     def test_gate_passes_and_counts_planted_regression(self, spark, corpus_dir, results):
         from receipt_scanner_spark.plans.pipeline import (

@@ -23,8 +23,9 @@ Inputs: ``generate_pages`` rows (``html`` and ``text``) of seeds 1-3,
 whose image rows carry upstream OCR text and whose PDFs hold no images;
 so 2% of the rows are receipts the OCR hook can read, without ``text``:
 the image fixtures of ``__spark_entry__``'s multimodal entry (one per
-codec and variant, so the hook reaches every decoder), ``render_text``
-PNGs and diff_pdf_base's raster PDFs.
+codec and variant, so the hook reaches every decoder), payloads at the
+edges of the weak-magic checks (``weak_magic``), ``render_text`` PNGs
+and diff_pdf_base's raster PDFs.
 
 Usage: python tools/diff_udf_base.py <base-ref> [n_rows]
 (default 100000 rows per combination) -> exits non-zero on any mismatch
@@ -36,6 +37,7 @@ from __future__ import annotations
 import itertools
 import pickle
 import random
+import struct
 import subprocess
 import sys
 import tempfile
@@ -54,6 +56,33 @@ BATCH = 2000
 COLUMNS = ("format", "extracted_text", "error", "amount", "date", "spans", "extra")
 
 
+def weak_magic(media: list[bytes]) -> list[bytes]:
+    """Payloads at the edges of the weak-magic checks
+    (``extract/imaging.looks_like_{bmp,ico,pnm,pcx}``): the fixture
+    BMP with nonzero reserved words and bad DIB sizes or pixel offsets,
+    text that starts with each weak magic, and each fixture's header cut
+    short at every field boundary the checks read."""
+    bmp = next(m for m in media if m[:2] == b"BM")
+    ico = next(m for m in media if m[:4] == b"\x00\x00\x01\x00")
+    pnm = next(m for m in media if m[:1] == b"P")
+    pcx = next(m for m in media if m[:1] == b"\n")
+    out = [bmp[:6] + reserved + bmp[10:]
+           for reserved in (b"\x01\x00\x00\x00", b"\x00\x00\x01\x00", b"GIMP", b"\xff" * 4)]
+    out += [bmp[:10] + struct.pack("<I", off) + bmp[14:] for off in (len(bmp), len(bmp) + 1)]
+    out += [bmp[:14] + struct.pack("<I", dib) + bmp[18:] for dib in (0, 12, 39, 41, 124, 125)]
+    body = b"I report 2016: TOTAL $12.50 paid on 2016-03-04 at the corner shop. " * 3
+    for magic in (b"BM", b"BMI ", b"BM\x00\x00\x00\x00", b"BM" + bytes(12) + b"\x28\x00\x00\x00",
+                  b"\x00\x00\x01\x00", b"\x00\x00\x02\x00\x01\x00", b"P1 ", b"P2 2016 ",
+                  b"P5\n", b"P6 4 4 255\n", b"\n", b"\n\x05\x01\x08"):
+        out += [magic + body[:40], magic + body]
+    out += [b"P2 2 2 255\n1 2 3 4", b"P5 4 4 255\n" + bytes(15), b"P5 4 4 255\n" + bytes(16)]
+    for m in (bmp, ico, pnm, pcx):
+        cuts = (2, 3, 4, 6, 10, 13, 14, 17, 18, 21, 22, 25, 26, 54, 128, 129,
+                len(m) // 2, len(m) - 1)
+        out += [m[:c] for c in sorted(set(cuts)) if c < len(m)]
+    return out
+
+
 def inputs(n: int) -> tuple[list, list]:
     from __spark_entry__ import _multimodal_media
     from diff_pdf_base import raster
@@ -63,7 +92,8 @@ def inputs(n: int) -> tuple[list, list]:
 
     rng = random.Random(11)
     k = max(2, n // 50)
-    html = [bytes(m) for _, m in _multimodal_media()][:k]
+    media = [bytes(m) for _, m in _multimodal_media()]
+    html = (media + weak_magic(media))[:k]
     html += raster(rng, k // 2)[: max(0, k // 2 - len(html))]
     while len(html) < k:
         receipt = "TOTAL $%d.%02d\nDATE 2016-%02d-%02d" % (
