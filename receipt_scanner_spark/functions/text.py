@@ -2,7 +2,7 @@
 
 A vectorized Karp-Rabin rolling-hash document fingerprint (numpy Horner
 over UTF-8 bytes — content-defined, order-sensitive, unlike the md5
-set-style fingerprint used for exact dedup) and the line segmenter.
+set-style fingerprint used for exact dedup).
 """
 
 from __future__ import annotations
@@ -15,11 +15,7 @@ from pyspark.sql.functions import pandas_udf
 
 # --- rolling-hash fingerprint ---------------------------------------------------
 
-_KR_BASE = np.uint64(257)
-_KR_MOD = np.uint64((1 << 61) - 1)  # Mersenne prime 2^61-1
-
-
-_KR_B, _KR_M = 257, (1 << 61) - 1
+_KR_B, _KR_M = 257, (1 << 61) - 1  # Mersenne prime 2^61-1
 _KR_CHUNK = 65536
 _KR_TABLES: tuple[np.ndarray, np.ndarray] | None = None
 
@@ -82,33 +78,3 @@ def rolling_fingerprint(df: DataFrame, id_col: str = "doc_id",
 
     udf = pandas_udf(fp, "long")
     return df.select(F.col(id_col), udf(F.col(text_col)).alias("fingerprint"))
-
-
-def segment_lines(
-    text: str,
-    min_chars: int = 1,
-    min_alpha_ratio: float = 0.0,
-) -> list[str]:
-    """OCR-text line segmentation (north-star component; the text-side
-    analog of the reference's word-shaped text-element contour filter,
-    opencv.js:150-180): split on newlines, strip each line, drop lines
-    below ``min_chars`` or whose alphabetic ratio is below
-    ``min_alpha_ratio`` (punctuation/noise lines — the aspect-ratio
-    test's textual counterpart).
-
-    Defaults are PASS-THROUGH thresholds: the reference pipes tesseract
-    output to the parser cascade unfiltered (lib/image_processor.js:48-54
-    → lib/processor.js:68-78), so the extraction UDF does not call
-    this: its output stays byte-identical to the extractor's text.
-    """
-    out = []
-    for line in text.split("\n"):
-        stripped = line.strip()
-        if len(stripped) < min_chars:
-            continue
-        if min_alpha_ratio > 0.0:
-            n_alpha = sum(1 for ch in stripped if ch.isalpha())
-            if n_alpha / len(stripped) < min_alpha_ratio:
-                continue
-        out.append(stripped)
-    return out

@@ -20,8 +20,8 @@ can wrap them in place (perfbench/tracing.py does).
 
 ``build_process_udf`` resolves the config once (profile, custom parser
 list — reference plug-in surface T17, lib/processor.js:86-90 — and OCR
-hook) and builds one UDF per config; the row kernels only read the
-resolved values.
+hook); the default config is the one prebuilt ``process_udf``, and
+the row kernels only read the resolved values.
 """
 
 from __future__ import annotations
@@ -193,27 +193,6 @@ def parse_row(
 
 # --- UDF builder -------------------------------------------------------------
 
-def _frozen(value):
-    """Hashable stand-in for a config value: lists and tuples → tuples,
-    dicts → sorted item tuples, callables by identity (their id, with the
-    object kept alive so the id is not reused), other values as they
-    are; each tagged with its type (``1``, ``1.0`` and ``True`` are
-    different configs)."""
-    if isinstance(value, (list, tuple)):
-        return type(value), tuple(map(_frozen, value))
-    if isinstance(value, dict):
-        return dict, tuple(sorted((k, _frozen(v)) for k, v in value.items()))
-    if callable(value):
-        return id(value), value
-    return type(value), value
-
-
-# frozen config → (its UDF, the parsers it was built from); a few configs
-# per process, oldest dropped past the bound
-_UDFS: dict = {}
-_MAX_UDFS = 32
-
-
 def build_process_udf(
     parsers: list | None = None,
     *,
@@ -227,25 +206,12 @@ def build_process_udf(
     ``ValueError`` for a bad name or a config its parser fails on "";
     ``TypeError`` for a non-callable ``ocr_arrays``.
 
-    One UDF per config: an equal config (lists, dicts and scalars by
-    value, callables by identity) returns the same UDF object, so Spark
-    pickles its closure and registers its JVM function once, not per
-    action."""
-    try:
-        key = (_frozen(parsers), _frozen(profile), _frozen(ocr_arrays))
-        hash(key)
-    except TypeError:  # an unhashable or unorderable config value
-        return _build_process_udf(parsers, profile, ocr_arrays)
-    hit = _UDFS.get(key)
-    # a hit whose parser configs were mutated in place since is rebuilt
-    if hit is not None and _frozen(hit[1]) == key[0]:
-        return hit[0]
-    udf = _build_process_udf(parsers, profile, ocr_arrays)
-    _UDFS.pop(key, None)
-    if len(_UDFS) >= _MAX_UDFS:
-        _UDFS.pop(next(iter(_UDFS)), None)
-    _UDFS[key] = (udf, parsers)
-    return udf
+    The default config returns the module's ``process_udf``, so Spark
+    pickles its closure and registers its JVM function once per
+    process; any other config builds a new UDF."""
+    if not parsers and profile in (None, "default") and ocr_arrays is None:
+        return process_udf
+    return _build_process_udf(parsers, profile, ocr_arrays)
 
 
 def _build_process_udf(parsers, profile, ocr_arrays):
@@ -279,4 +245,4 @@ def _build_process_udf(parsers, profile, ocr_arrays):
 
 
 # Default instance: the body perfbench/tracing.py replays.
-process_udf = build_process_udf()
+process_udf = _build_process_udf(None, None, None)

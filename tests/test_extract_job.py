@@ -1,6 +1,6 @@
 """Smoke test of the production entry point ``jobs/extract_job.py``:
-a run, a resumed run, ``--report``, and a bad ``--profile`` on a small
-corpus."""
+a run, a resumed run, ``--report``, ``--summary`` with ``--json-out``,
+and a bad ``--profile`` on a small corpus."""
 
 import importlib.util
 import json
@@ -9,6 +9,8 @@ from pathlib import Path
 
 import pytest
 
+from receipt_scanner_spark.functions.natsort import natural_key
+from receipt_scanner_spark.plans.pipeline import summary
 from receipt_scanner_spark.sources.pages import write_corpus
 from receipt_scanner_spark.table.snapshots import SnapshotTable
 
@@ -39,6 +41,8 @@ def test_run_resume_report(spark, tmp_path, monkeypatch, capsys):
     first = run()
     second = run()
     report = run("--report")
+    out_json = tmp_path / "out.json"
+    outputs = run("--summary", "--json-out", str(out_json))
     assert spark.conf.getAll == conf_before
 
     langs = {
@@ -65,3 +69,11 @@ def test_run_resume_report(spark, tmp_path, monkeypatch, capsys):
     assert [(h["snapshot_id"], h["partitions"], h["metrics"]) for h in history] == [
         (line["snapshot"], line["partitions"], line["metrics"]) for line in lines
     ]
+
+    # --summary and --json-out read the whole table (nothing pending here)
+    written = SnapshotTable(table).read(spark)
+    want = summary(written).first().asDict()
+    assert json.loads(outputs.out.splitlines()[-1]) == {"summary": want}
+    urls = [r["url"] for r in written.orderBy(natural_key("url"), "url").collect()]
+    keys = list(json.loads(out_json.read_text()))
+    assert len(keys) == 60 and keys == urls

@@ -232,15 +232,16 @@ class TestArrowBatchBound:
 class TestGoldenScorer:
     def test_gate_passes_and_counts_planted_regression(self, spark, corpus_dir, results):
         from receipt_scanner_spark.plans.pipeline import (
+            benchmark_profiles,
             golden_regressions,
-            success_rate_gate,
         )
 
+        pages = read_pages(spark, f"{corpus_dir}/pages.parquet")
         goldens = spark.read.parquet(f"{corpus_dir}/goldens.parquet")
         # clean run: zero regressions, green grade
-        report = success_rate_gate(results, goldens)
-        assert report == {"total": 600, "failures": 0, "success_rate": 1.0,
-                          "grade": "green"}
+        report = benchmark_profiles(pages, goldens, profiles=["default"])
+        assert report == {"default": {"total": 600, "failures": 0, "success_rate": 1.0,
+                                      "grade": "green"}}
         # plant a corrupted golden -> exactly that url is reported
         bad = goldens.withColumn(
             "amount",
@@ -249,14 +250,14 @@ class TestGoldenScorer:
         )
         regs = golden_regressions(results, bad).collect()
         assert len(regs) == 1 and regs[0].want_amount == "999.99"
-        with pytest.raises(AssertionError, match="below gate"):
-            success_rate_gate(results, bad, min_rate=1.0)
+        with pytest.raises(AssertionError, match="below 1.0"):
+            benchmark_profiles(pages, bad, profiles=["default"], min_rate=1.0)
 
 
 def test_grade_thresholds():
-    """One rate-and-grade rule for success_rate_gate and
-    benchmark_profiles: rate = matches / goldens, green above 0.95,
-    yellow above 0.85; no goldens grade 1.0 only without mismatches."""
+    """The rate-and-grade rule of benchmark_profiles: rate = matches /
+    goldens, green above 0.95, yellow above 0.85; no goldens grade 1.0
+    only without mismatches."""
     from receipt_scanner_spark.plans.pipeline import _grade
 
     def report(total, failures):
@@ -387,100 +388,46 @@ def test_bad_config_fails_when_the_udf_is_built(kwargs, exc, match):
         build_process_udf(**kwargs)
 
 
-def test_one_udf_per_config():
-    """An equal config gets the UDF already built (Spark then pickles its
-    closure and registers its JVM function once); another config, or a
-    config changed in place since the build, gets its own."""
-    from receipt_scanner_spark.extract.ocr import ocr_pixels
+def test_one_udf_per_config(spark, monkeypatch):
+    """The default config is the module's prebuilt UDF (Spark pickles its
+    closure and registers its JVM function once per process), in
+    extract_pages too; any other config builds its own."""
     from receipt_scanner_spark.functions import udfs
+    from receipt_scanner_spark.plans import pipeline
 
-    def merchant(text, config):
-        return {"matches": [], "match": None}
-
-    cfg = ["amount", ("date", {"parser": "first"}), merchant]
-    a = udfs.build_process_udf(cfg, profile="lenient", ocr_arrays=ocr_pixels)
-    assert udfs.build_process_udf(
-        ["amount", ["date", {"parser": "first"}], merchant], profile="lenient", ocr_arrays=ocr_pixels
-    ) is not a  # a list pair is another spelling, built once more
-    assert udfs.build_process_udf(
-        ["amount", ("date", {"parser": "first"}), merchant], profile="lenient", ocr_arrays=ocr_pixels
-    ) is a
-    assert udfs.build_process_udf(cfg, profile="default", ocr_arrays=ocr_pixels) is not a
-    assert udfs.build_process_udf(cfg, profile="lenient") is not a
-    assert udfs.build_process_udf(
-        ["amount", ("date", {"parser": "first"}), lambda t, c: merchant(t, c)],
-        profile="lenient", ocr_arrays=ocr_pixels,
-    ) is not a  # callables by identity
-    # equal but differently typed values are different configs
-    assert udfs.build_process_udf([(merchant, 1)]) is not udfs.build_process_udf([(merchant, True)])
-    cfg[1][1]["parser"] = "last"
-    b = udfs.build_process_udf(
-        ["amount", ("date", {"parser": "first"}), merchant], profile="lenient", ocr_arrays=ocr_pixels
-    )
-    assert b is not a
-    # the default config is the module's default instance, in extract_pages too
     assert udfs.build_process_udf() is udfs.process_udf
     assert udfs.build_process_udf(None, profile=None) is udfs.process_udf
-    # an unhashable config value still builds, uncached
-    odd = [("amount", {"parsers": {"largest"}})]
-    assert udfs.build_process_udf(odd) is not udfs.build_process_udf(odd)
-
-
-def test_extract_pages_builds_one_udf_per_config(spark, monkeypatch):
-    from receipt_scanner_spark.functions import udfs
-    from receipt_scanner_spark.plans.pipeline import extract_pages
-
     built = []
-    build = udfs._build_process_udf
-    monkeypatch.setattr(udfs, "_build_process_udf", lambda *a: built.append(a) or build(*a))
 
-    def tag(text, config):
-        return {"matches": [], "match": "t"}
+    def build(*args, **kwargs):
+        built.append(udfs.build_process_udf(*args, **kwargs))
+        return built[-1]
 
-    pages = spark.createDataFrame(
-        [("u1", None, None, "Total $5.00", "en")],
-        "url string, warc_ts timestamp, html binary, text string, lang string",
+    monkeypatch.setattr(pipeline, "build_process_udf", build)
+    pipeline.extract_pages(spark.createDataFrame([], pipeline.PAGES_SCHEMA))
+    assert len(built) == 1 and built[0] is udfs.process_udf
+    custom = udfs.build_process_udf(["amount", ("date", {"parser": "first"})], profile="lenient")
+    assert custom is not udfs.process_udf and callable(custom.func)
+
+
+def test_default_pipeline_passes_text_through(spark):
+    from receipt_scanner_spark.functions.udfs import process_udf
+
+    raw = "Total 6,000.00\n####\nDate 2016-08-13"
+    year0 = "paid 0000-01-02 on 2020-01-02"
+    long_s = "Sep. \u017fep 5, 2016"
+    df = spark.createDataFrame(
+        [("u1", None, raw, "en"), ("u2", None, year0, "en"),
+         ("u3", None, long_s, "en")],
+        "url string, html binary, text string, lang string",
     )
-    for _ in range(3):
-        out = extract_pages(pages, parsers=["amount", tag], observe=False).collect()
-        assert [(r.amount, r.extra) for r in out] == [("5.00", {"tag": "t"})]
-    assert len(built) == 1
-
-
-class TestLineSegmentation:
-    """OCR-text line segmentation: a pure function, not a pipeline stage
-    (the UDF passes extracted text through — byte-identity contract)."""
-
-    def test_segment_lines_filters(self):
-        from receipt_scanner_spark.functions.text import segment_lines
-
-        text = "Total 5.00\n\n  ---- \nx\nMerchant GmbH\n!!!"
-        assert segment_lines(text) == ["Total 5.00", "----", "x", "Merchant GmbH", "!!!"]
-        assert segment_lines(text, min_chars=2) == ["Total 5.00", "----", "Merchant GmbH", "!!!"]
-        assert segment_lines(text, min_chars=2, min_alpha_ratio=0.3) == [
-            "Total 5.00", "Merchant GmbH"
-        ]
-
-    def test_default_pipeline_unchanged_without_filter(self, spark):
-        from pyspark.sql import functions as F
-
-        from receipt_scanner_spark.functions.udfs import process_udf
-
-        raw = "Total 6,000.00\n####\nDate 2016-08-13"
-        year0 = "paid 0000-01-02 on 2020-01-02"
-        long_s = "Sep. \u017fep 5, 2016"
-        df = spark.createDataFrame(
-            [("u1", None, raw, "en"), ("u2", None, year0, "en"),
-             ("u3", None, long_s, "en")],
-            "url string, html binary, text string, lang string",
-        )
-        r1, r2, r3 = [
-            row["r"] for row in df.orderBy("url")
-            .select(process_udf(F.col("html"), F.col("text")).alias("r"))
-            .collect()
-        ]
-        assert r1["extracted_text"] == raw  # pass-through, byte-identical
-        # a year-0 date is a no-match, not a failed batch
-        assert (r2["date"], r2["error"]) == ("2020-01-02", None)
-        # so is a month name whose stem only case-folds to ASCII
-        assert (r3["date"], r3["error"]) == (None, None)
+    r1, r2, r3 = [
+        row["r"] for row in df.orderBy("url")
+        .select(process_udf(F.col("html"), F.col("text")).alias("r"))
+        .collect()
+    ]
+    assert r1["extracted_text"] == raw  # pass-through, byte-identical
+    # a year-0 date is a no-match, not a failed batch
+    assert (r2["date"], r2["error"]) == ("2020-01-02", None)
+    # so is a month name whose stem only case-folds to ASCII
+    assert (r3["date"], r3["error"]) == (None, None)

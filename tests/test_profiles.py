@@ -135,6 +135,16 @@ class TestProfileBenchmark:
         with pytest.raises(AssertionError, match="below"):
             benchmark_profiles(pages, goldens, gate_profile="raw", min_rate=1.0)
 
+    @pytest.mark.parametrize("kwargs", [{"gate_profile": "defualt"},
+                                        {"profiles": ["raw", "lenient"]}])
+    def test_unscored_gate_profile_raises_before_any_job(self, kwargs):
+        """A gate that names no scored profile would gate nothing; it
+        raises before the pages or goldens are read."""
+        from receipt_scanner_spark.plans.pipeline import benchmark_profiles
+
+        with pytest.raises(ValueError, match="is not scored"):
+            benchmark_profiles(None, None, **kwargs)
+
     def test_extract_pages_profile_plumbs_through(self, spark, tmp_path):
         import datetime as dt
 

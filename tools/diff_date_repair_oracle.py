@@ -1,4 +1,4 @@
-"""Differential oracle for the date REPAIR stage: our
+r"""Differential oracle for the date REPAIR stage: our
 ``parsers.date.prepare_text`` vs the ACTUAL reference ``prepareText``
 (date_parser.js:34-91).
 
