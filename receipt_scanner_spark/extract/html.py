@@ -25,7 +25,7 @@ by scoring text blocks.  Stage-by-stage analogs (SURVEY.md §2.3):
 Pure stdlib (html.parser), fully deterministic, no network, no
 locale/timezone dependence — byte-identical output per input is the
 contract (north rule).  Designed to run row-at-a-time inside an
-Arrow-batched pandas UDF: one compiled parser instance per call, no
+Arrow-batched UDF: one compiled parser instance per call, no
 I/O, bounded memory.
 """
 

@@ -22,7 +22,7 @@ deterministic synthetic corpus and simple real-world text-layer PDFs;
 at web scale OCR stays off unless a pixel hook (``ocr_arrays``) is
 plugged in (SURVEY.md §2.3 I11).
 
-Designed for row-at-a-time use inside Arrow-batched pandas UDFs: bytes
+Designed for row-at-a-time use inside the Arrow-batched UDF: bytes
 stay in memory end-to-end (no temp files, unlike the reference's
 tmp-spill at lib/processor.js:98-107).
 """

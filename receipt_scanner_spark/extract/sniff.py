@@ -14,7 +14,7 @@ ICO, netpbm, PCX) are validated structurally before a payload is tagged.
 
 The format column this produces is a plain Spark string column, so
 Catalyst can route rows (predicate pushdown of the dispatch gate) and
-the per-format pandas UDFs only ever see their own rows.
+the per-format UDFs only ever see their own rows.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Arrow-batched pandas UDFs — the engine's only Python hot path.
+"""The fused extraction UDF: an Arrow UDF, the engine's only Python hot path.
 
 Design (SURVEY.md §1.4): the reference processes one document at a time
 through child processes; here many documents cross the JVM→Python
@@ -13,10 +13,21 @@ call).
 
 One fusion level: ``process_udf`` runs format sniff, text extraction
 and the parser cascade in ONE Arrow round-trip per batch (two chained
-pandas UDFs would cost two JVM↔Python exchanges in the same stage).
+UDFs would cost two JVM↔Python exchanges in the same stage).
 The row kernels ``extract_row`` / ``parse_row`` and the layer entry
 points are looked up as module globals on every row, so a profiler
 can wrap them in place (perfbench/tracing.py does).
+
+No pandas in the Spark Python worker: the body is an ``arrow_udf``
+(PySpark ≥ 4.1).  It reads each batch's columns with ``to_pylist()``
+and builds its ``StructArray`` output from buffers (``_struct_array``),
+already of the type Spark expects (``PROCESS_TYPE``), so Spark passes it
+through without a cast.  ``pyarrow.array`` on Python objects and
+``Array.to_numpy``/``to_pandas`` would each load pandas into the
+worker (~70 MB per worker).  Each row's strings are encoded to UTF-8 in
+that row's guard, so a value Arrow cannot hold fails its row, not the
+batch.  Called with ``pd.Series`` columns the body returns a
+``pd.DataFrame`` of the same rows (tests, tools, perfbench's replay).
 
 ``build_process_udf`` resolves the config once (profile, custom parser
 list — reference plug-in surface T17, lib/processor.js:86-90 — and OCR
@@ -26,10 +37,14 @@ the row kernels only read the resolved values.
 
 from __future__ import annotations
 
+from array import array
+from itertools import accumulate
 from typing import Callable
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import numpy as np
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -73,6 +88,11 @@ PROCESS_SCHEMA = StructType(
         StructField("extra", MapType(StringType(), StringType())),
     ]
 )
+
+# the Arrow type Spark expects of the UDF's output
+PROCESS_TYPE = to_arrow_type(PROCESS_SCHEMA)
+_SPANS_TYPE = PROCESS_TYPE.field("spans").type
+_EXTRA_TYPE = PROCESS_TYPE.field("extra").type
 
 
 # --- row kernels (pure) ------------------------------------------------------
@@ -226,22 +246,136 @@ def _build_process_udf(parsers, profile, ocr_arrays):
     except Exception as exc:
         raise ValueError(f"bad extraction config {profile=}, {parsers=}: {exc!r}") from exc
 
-    @pandas_udf(PROCESS_SCHEMA)
-    def process(html: pd.Series, text: pd.Series) -> pd.DataFrame:
-        out = []
+    def process(html, text):
+        """``pa.Array`` columns (what Spark passes) → ``pa.StructArray``;
+        ``pd.Series`` columns → a ``pd.DataFrame`` of the same rows.  The
+        ``StructArray`` is built either way, so a replay on ``pd.Series``
+        (perfbench/tracing.py) times the work a Spark worker does."""
+        arrow = isinstance(html, pa.Array)
+        if arrow:
+            html, text = html.to_pylist(), text.to_pylist()
+        rows, encoded = [], []
         for h, t in zip(html, text):
             fmt = extracted = None
             try:
                 fmt, extracted, error = extract_row(h, t, profile=stripper, ocr_arrays=ocr_arrays)
-                out.append((fmt, extracted, error, *parse_row(extracted, cascade)))
+                row = (fmt, extracted, error, *parse_row(extracted, cascade))
+                encoded.append(_encode_row(*row))
             except Exception as exc:
                 # one bad document never fails the batch: an unexpected
-                # exception becomes this row's error value
-                out.append((fmt, extracted, f"internal error: {type(exc).__name__}",
-                            None, None, None, None))
-        return pd.DataFrame(out, columns=PROCESS_SCHEMA.names)
+                # exception, or a value Arrow cannot hold, becomes this
+                # row's error value
+                row = _error_row(fmt, extracted, exc)
+                encoded.append(_encode_row(*row))
+            rows.append(row)
+        out = _struct_array(encoded)
+        if arrow:
+            return out
+        import pandas as pd  # callers outside Spark only: Spark passes pa.Array
 
-    return process
+        return pd.DataFrame(rows, columns=PROCESS_SCHEMA.names)
+
+    return arrow_udf(PROCESS_SCHEMA)(process)
+
+
+# --- Arrow output from buffers -----------------------------------------------
+
+_I32_MAX = (1 << 31) - 1
+
+
+def _utf8(s: str | None) -> bytes | None:
+    return None if s is None else str.encode(s)  # TypeError for a non-str
+
+
+def _int32(v: int) -> int:
+    if not -_I32_MAX - 1 <= v <= _I32_MAX:
+        raise OverflowError(f"span offset {v} does not fit int32")
+    return v
+
+
+def _encode_row(fmt, extracted, error, amount, date, spans, extra) -> tuple:
+    """One output row as ``_struct_array`` reads it: every string UTF-8
+    encoded (``UnicodeEncodeError`` for a lone surrogate), spans as
+    (parser, start, end, text) tuples, extra as (key, value) pairs."""
+    if spans is not None:
+        spans = [(str.encode(s["parser"]), _int32(s["start"]), _int32(s["end"]),
+                  str.encode(s["text"])) for s in spans]
+    if extra is not None:
+        extra = [(str.encode(k), _utf8(v)) for k, v in extra.items()]
+    return _utf8(fmt), _utf8(extracted), _utf8(error), _utf8(amount), _utf8(date), spans, extra
+
+
+def _error_row(fmt: str | None, extracted, exc: Exception) -> tuple:
+    """The row of a document whose kernels, or the encoding of their
+    output, raised: its format and text as far as they were computed (no
+    text that is not a string Arrow can hold)."""
+    try:
+        _utf8(extracted)
+    except (TypeError, UnicodeEncodeError):
+        extracted = None
+    return fmt, extracted, f"internal error: {type(exc).__name__}", None, None, None, None
+
+
+def _offsets(lengths) -> pa.Buffer:
+    """int32 Arrow offsets of consecutive lengths.  The sum is exact, so a
+    column of one batch over 2**31 - 1 bytes raises instead of wrapping."""
+    ends = list(accumulate(lengths, initial=0))
+    if ends[-1] > _I32_MAX:
+        raise ValueError(
+            f"one Arrow batch's output column holds {ends[-1]} bytes or items, over"
+            " the int32 offset limit 2**31 - 1; lower"
+            " spark.sql.execution.arrow.maxBytesPerBatch")
+    return pa.py_buffer(array("i", ends))
+
+
+def _validity(values) -> tuple[pa.Buffer | None, int]:
+    """(validity bitmap, null count); no bitmap when nothing is null."""
+    nulls = values.count(None)
+    if not nulls:
+        return None, 0
+    valid = np.fromiter((v is not None for v in values), bool, len(values))
+    return pa.py_buffer(np.packbits(valid, bitorder="little")), nulls
+
+
+def _lengths(values, nulls: int):
+    return (0 if v is None else len(v) for v in values) if nulls else map(len, values)
+
+
+def _strings(values) -> pa.Array:
+    bitmap, nulls = _validity(values)
+    return pa.StringArray.from_buffers(
+        len(values), _offsets(_lengths(values, nulls)),
+        pa.py_buffer(b"".join(filter(None, values))), bitmap, nulls)
+
+
+def _int32s(values) -> pa.Array:
+    return pa.Array.from_buffers(pa.int32(), len(values), [None, pa.py_buffer(array("i", values))])
+
+
+def _lists(type_: pa.DataType, rows, fields: list, children: list) -> pa.Array:
+    """A list (or map) column: ``rows`` holds each row's item list or
+    None, ``children`` the struct fields of all items in order."""
+    bitmap, nulls = _validity(rows)
+    return pa.Array.from_buffers(
+        type_, len(rows), [bitmap, _offsets(_lengths(rows, nulls))],
+        null_count=nulls, children=[pa.StructArray.from_arrays(children, fields=fields)])
+
+
+def _struct_array(rows: list[tuple]) -> pa.StructArray:
+    """``_encode_row`` rows → the UDF's output, of type ``PROCESS_TYPE``."""
+    columns = list(zip(*rows)) if rows else [()] * len(PROCESS_TYPE)
+    spans, extra = columns[5], columns[6]
+    span_items = [s for r in spans if r is not None for s in r]
+    extra_items = [kv for r in extra if r is not None for kv in r]
+    parser, start, end, text = zip(*span_items) if span_items else [()] * 4
+    key, value = zip(*extra_items) if extra_items else [()] * 2
+    return pa.StructArray.from_arrays(
+        [*map(_strings, columns[:5]),
+         _lists(_SPANS_TYPE, spans, list(_SPANS_TYPE.value_type),
+                [_strings(parser), _int32s(start), _int32s(end), _strings(text)]),
+         _lists(_EXTRA_TYPE, extra, [_EXTRA_TYPE.key_field, _EXTRA_TYPE.item_field],
+                [_strings(key), _strings(value)])],
+        fields=list(PROCESS_TYPE))
 
 
 # Default instance: the body perfbench/tracing.py replays.

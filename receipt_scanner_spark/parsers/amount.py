@@ -18,7 +18,7 @@ and pinned by the reference spec files re-encoded as pytest goldens
 * whole-number matches (currency required) are appended AFTER all
   fractional matches (amount_parser.js:44 method order).
 
-These functions run row-at-a-time *inside* Arrow-batched pandas UDFs
+These functions run row-at-a-time *inside* the Arrow-batched fused UDF
 (receipt_scanner_spark/functions/udfs.py); they are deliberately
 regex-only and allocation-light.
 

@@ -3,7 +3,7 @@
 One logical chain (SURVEY.md §3.1 mapping):
 
     scan pages → [salted repartition on url-host] → fused
-    extract+parse pandas UDF → (url, warc_ts, lang, format,
+    extract+parse Arrow UDF → (url, warc_ts, lang, format,
     extracted_text, amount, date, spans, error)
 
 Scale properties the plan guarantees:

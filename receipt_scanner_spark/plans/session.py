@@ -34,8 +34,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow exchange for pandas UDFs — the hot path. A Python worker
-        # holds one input batch plus its pandas copies, so batches are
+        # Arrow exchange for Python UDFs — the hot path. A Python worker
+        # holds one input batch plus its Python copies, so batches are
         # bounded by bytes: Spark closes one after the row that crosses
         # 1 MiB (or at its default 10k rows).  Its own 64 MiB default let
         # the workers reach ~1 GB on ~48 KB pages (~270 MB at 1 MiB);

@@ -153,18 +153,10 @@ class TestArrowBatchBound:
         # Spark's own default, not restated by get_spark
         assert conf("spark.sql.execution.arrow.maxRecordsPerBatch") == "10000"
 
-    def test_pandas_udf_batches_are_bounded(self, spark):
+    def _assert_bounded(self, spark, probe):
+        """``probe(html)`` tags every row with ``"<batch id> <rows> <bytes>
+        <bytes of its last row>"`` of the batch it came in."""
         import random
-        import uuid
-
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("string")
-        def probe(html: pd.Series) -> pd.Series:
-            sizes = html.map(len)
-            tag = f"{uuid.uuid4().hex} {len(sizes)} {sizes.sum()} {sizes.iloc[-1]}"
-            return pd.Series([tag] * len(sizes))
 
         rng = random.Random(3)
         rows = [(i, bytes([65 + i % 26]) * rng.randrange(10_000, 150_000)) for i in range(60)]
@@ -176,6 +168,35 @@ class TestArrowBatchBound:
         assert sum(n for n, _, _ in batches) == len(rows)
         for n, size, last in batches:
             assert size - last <= self.BOUND, batches
+
+    def test_pandas_udf_batches_are_bounded(self, spark):
+        import uuid
+
+        import pandas as pd
+        from pyspark.sql.functions import pandas_udf
+
+        @pandas_udf("string")
+        def probe(html: pd.Series) -> pd.Series:
+            sizes = html.map(len)
+            tag = f"{uuid.uuid4().hex} {len(sizes)} {sizes.sum()} {sizes.iloc[-1]}"
+            return pd.Series([tag] * len(sizes))
+
+        self._assert_bounded(spark, probe)
+
+    def test_arrow_udf_batches_are_bounded(self, spark):
+        """The engine's fused UDF is an Arrow UDF (functions/udfs.py)."""
+        import uuid
+
+        import pyarrow as pa
+        from pyspark.sql.functions import arrow_udf
+
+        @arrow_udf("string")
+        def probe(html: pa.Array) -> pa.Array:
+            sizes = [len(h) for h in html.to_pylist()]
+            tag = f"{uuid.uuid4().hex} {len(sizes)} {sum(sizes)} {sizes[-1]}"
+            return pa.array([tag] * len(sizes), pa.string())
+
+        self._assert_bounded(spark, probe)
 
     def test_row_over_the_bound_is_extracted(self, spark):
         from receipt_scanner_spark.functions.udfs import extract_row, parse_row
@@ -368,6 +389,160 @@ def test_custom_parser_results_are_read_by_one_rule():
         else:
             assert parse_text(row["extracted_text"], [parser]) == want
             assert row["error"] is None and row["extra"] == want
+
+
+def test_unencodable_output_fails_its_row_only(spark):
+    """A custom parser's value Arrow cannot hold (a lone surrogate in
+    ``extra`` or a span, a span offset outside int32) becomes its row's
+    error value; the other rows of the batch are extracted as usual."""
+    from types import SimpleNamespace
+
+    def odd(text, config):
+        if "SURROGATE_MATCH" in text:
+            return {"match": "\ud800", "matches": []}
+        if "SURROGATE_SPAN" in text:
+            return {"match": "x", "matches": [SimpleNamespace(start=0, end=1, text="\udfff")]}
+        if "HUGE_SPAN" in text:
+            return {"match": "x", "matches": [SimpleNamespace(start=0, end=1 << 31, text="y")]}
+        return {"match": "ok", "matches": []}
+
+    bad = {"u1": ("SURROGATE_MATCH", "UnicodeEncodeError"),
+           "u3": ("SURROGATE_SPAN", "UnicodeEncodeError"),
+           "u4": ("HUGE_SPAN", "OverflowError")}
+    words = {"u0": "fine", "u2": "fine", **{u: w for u, (w, _) in bad.items()}}
+    rows = [(u, None, b"<html><body><p>Total $5.00 on 2016-03-04 %s</p></body></html>"
+             % w.encode(), None, "en") for u, w in sorted(words.items())]
+    pages = spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary,"
+                                        " text string, lang string").coalesce(1)
+    got = {r.url: r for r in extract_pages(pages, parsers=["amount", "date", odd],
+                                           observe=False).collect()}
+    assert sorted(got) == sorted(words)
+    for url, row in got.items():
+        assert row.format == "html" and words[url] in row.extracted_text
+        if url in bad:
+            assert row.error == f"internal error: {bad[url][1]}", url
+            assert [row.amount, row.date, row.spans, row.extra] == [None] * 4, url
+        else:
+            assert (row.error, row.amount, row.date) == (None, "5.00", "2016-03-04")
+            assert row.extra == {"odd": "ok"}
+
+
+def test_unencodable_text_is_left_out_of_its_error_row(monkeypatch):
+    """A text Arrow cannot hold (a PDF font can map a glyph to a lone
+    surrogate) fails its row: the error row keeps the format, not the
+    text."""
+    import pyarrow as pa
+
+    from receipt_scanner_spark.functions import udfs
+
+    monkeypatch.setattr(udfs, "extract_main_text", lambda html, **kw: "Total \ud800 $5.00")
+    out = udfs.process_udf.func(pa.array([b"<html>x</html>", b"Total $6.00"], pa.binary()),
+                                pa.array([None, None], pa.string()))
+    bad, good = out.to_pylist()
+    assert bad == {"format": "html", "extracted_text": None,
+                   "error": "internal error: UnicodeEncodeError",
+                   "amount": None, "date": None, "spans": None, "extra": None}
+    assert (good["format"], good["amount"], good["error"]) == ("text", "6.00", None)
+
+
+def test_output_offsets_never_wrap():
+    """Offsets are summed exactly: a column of one batch over 2**31 - 1
+    bytes raises instead of wrapping to a negative int32."""
+    import numpy as np
+
+    from receipt_scanner_spark.functions.udfs import _offsets
+
+    ends = np.frombuffer(_offsets([0, 5, (1 << 31) - 6]), np.int32)
+    assert ends.tolist() == [0, 0, 5, (1 << 31) - 1]
+    for lengths in ([1 << 30, 1 << 30], [(1 << 31) - 1, 1], [1 << 33]):
+        with pytest.raises(ValueError, match=r"int32 offset limit 2\*\*31 - 1"):
+            _offsets(lengths)
+
+
+_WORKER_SCRIPT = """
+import sys
+
+import pyspark.worker  # what a Spark Python worker imports first
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_type
+
+from receipt_scanner_spark.extract.ocr import ocr_pixels
+from receipt_scanner_spark.functions import udfs
+
+assert "pandas" not in sys.modules, "importing the worker's extraction path loaded pandas"
+batch = pa.ipc.open_stream(sys.stdin.buffer).read_next_batch()
+outs = []
+for body in (udfs.process_udf.func, udfs.build_process_udf(ocr_arrays=ocr_pixels).func):
+    out = body(batch.column(0), batch.column(1))
+    assert out.type == to_arrow_type(udfs.PROCESS_SCHEMA), out.type
+    out.validate(full=True)
+    outs.append(out)
+assert "pandas" not in sys.modules, "running the Arrow body loaded pandas"
+result = pa.RecordBatch.from_arrays(outs, ["default", "ocr"])
+with pa.ipc.new_stream(sys.stdout.buffer, result.schema) as w:
+    w.write_batch(result)
+"""
+
+
+def test_fused_udf_keeps_pandas_out_of_the_worker():
+    """The Spark worker's extraction path never imports pandas (~70 MB per
+    Python worker): a fresh interpreter imports what a worker does and
+    runs the Arrow body over a batch that takes every ``extract_row``
+    branch, with and without the OCR hook.  Its rows are the rows of
+    the ``pd.Series`` branch."""
+    import gzip
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import pandas as pd
+    import pyarrow as pa
+
+    from receipt_scanner_spark.extract.imaging import encode_png_gray
+    from receipt_scanner_spark.extract.ocr import ocr_pixels, render_text
+    from receipt_scanner_spark.functions.udfs import build_process_udf, process_udf
+    from receipt_scanner_spark.sources.pages import make_pdf, make_pdf_tree
+
+    page = b"<html><body><p>Total $5.00 paid on 2016-08-13</p></body></html>"
+    png = encode_png_gray(render_text("TOTAL $12.50\nDATE 2016-03-04", scale=2))
+    cases = [
+        (page, None),
+        (gzip.compress(page), None),
+        (make_pdf([["Total $7.50", "Date 2016-08-14"]]), None),
+        (make_pdf_tree([["Total $8.50", "Date 2016-08-15"]], encrypt=True), None),
+        (png, "Total $9.50 on 2016-08-16"),
+        (png, None),
+        (None, None),
+        (b"", "Total $3.00"),
+        (b"Total $4.00 on 2016-08-17", None),
+        (b"PK\x03\x04not a document", None),
+    ]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([h for h, _ in cases], pa.binary()), pa.array([t for _, t in cases], pa.string())],
+        ["html", "text"])
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, batch.schema) as w:
+        w.write_batch(batch)
+    r = subprocess.run([sys.executable, "-c", _WORKER_SCRIPT], input=sink.getvalue().to_pybytes(),
+                       capture_output=True, cwd=Path(__file__).resolve().parent.parent, timeout=300)
+    assert r.returncode == 0, r.stderr.decode()[-3000:]
+    got = pa.ipc.open_stream(r.stdout).read_next_batch()
+
+    def rows(out):
+        return [{**d, "extra": None if d["extra"] is None else dict(d["extra"])}
+                for d in out.to_pylist()]
+
+    html = pd.Series([h for h, _ in cases], dtype=object)
+    text = pd.Series([t for _, t in cases], dtype=object)
+    for name, body in (("default", process_udf.func),
+                       ("ocr", build_process_udf(ocr_arrays=ocr_pixels).func)):
+        assert rows(got.column(name)) == body(html, text).to_dict("records"), name
+    formats = [d["format"] for d in got.column("default").to_pylist()]
+    assert formats == ["html", "html", "pdf", "pdf", "image/png", "image/png", "empty",
+                       "empty", "text", "application/octet-stream"]
+    by_case = got.column("ocr").to_pylist()
+    assert [d["amount"] for d in by_case[:6]] == ["5.00", "5.00", "7.50", "8.50", "9.50", "12.50"]
+    assert by_case[-1]["error"] == "Unsupported format: application/octet-stream"
 
 
 @pytest.mark.parametrize("kwargs, exc, match", [

@@ -5,9 +5,10 @@ This tool needs only git: it unpacks the whole package as of
 ``<base-ref>`` (``git archive``; ``functions/udfs`` imports ``extract/``
 and ``parsers/``) into a temporary directory and runs it in a child
 process.  Both sides run ``build_process_udf(...).func`` over the same
-batches, and every full output row (``format``, ``extracted_text``,
-``error``, ``amount``, ``date``, ``spans``, ``extra``) is compared, for
-each combination of
+batches: the working tree as Spark calls it (``pa.Array`` columns in,
+``StructArray`` out), the base on ``pd.Series`` columns.  Every full
+output row (``format``, ``extracted_text``, ``error``, ``amount``,
+``date``, ``spans``, ``extra``) is compared, for each combination of
 
 * profile: ``default``, ``lenient``, ``aggressive``, ``raw``;
 * cascade: the default; ``["amount", "date", "merchant", "tax_id"]``;
@@ -107,10 +108,14 @@ def inputs(n: int) -> tuple[list, list]:
     return html[:n], text[:n]
 
 
-def batches(html: list, text: list):
+def batches(html: list, text: list, arrow: bool):
     """Yield (combo, rows) per batch of each combination, from the
-    package first on ``sys.path``."""
+    package first on ``sys.path``.  ``arrow``: call the body as Spark
+    does, on ``pa.Array`` columns, and read the rows of the
+    ``StructArray`` it returns; else on ``pd.Series`` columns (every
+    revision's body takes these)."""
     import pandas as pd
+    import pyarrow as pa
 
     from receipt_scanner_spark.extract.ocr import ocr_pixels
     from receipt_scanner_spark.functions.udfs import build_process_udf
@@ -119,9 +124,15 @@ def batches(html: list, text: list):
         body = build_process_udf(CASCADES[cascade], profile=profile,
                                  ocr_arrays=ocr_pixels if ocr else None).func
         for i in range(0, len(html), BATCH):
-            out = body(pd.Series(html[i:i + BATCH], dtype=object),
-                       pd.Series(text[i:i + BATCH], dtype=object))
-            yield (profile, cascade, ocr), list(out.itertuples(index=False, name=None))
+            h, t = html[i:i + BATCH], text[i:i + BATCH]
+            if arrow:
+                out = body(pa.array(h, pa.binary()), pa.array(t, pa.string()))
+                rows = [tuple(dict(v) if c == "extra" and v is not None else v
+                              for c, v in r.items()) for r in out.to_pylist()]
+            else:
+                out = body(pd.Series(h, dtype=object), pd.Series(t, dtype=object))
+                rows = list(out.itertuples(index=False, name=None))
+            yield (profile, cascade, ocr), rows
 
 
 def side(root: str, inputs_path: str) -> None:
@@ -134,7 +145,7 @@ def side(root: str, inputs_path: str) -> None:
     with open(inputs_path, "rb") as fh:
         html, text = pickle.load(fh)
     out = sys.stdout.buffer
-    for item in batches(html, text):
+    for item in batches(html, text, arrow=False):
         pickle.dump(item, out, protocol=pickle.HIGHEST_PROTOCOL)
         out.flush()
 
@@ -165,7 +176,7 @@ def main() -> int:
             cwd=tmp, stdout=subprocess.PIPE,
         )
         try:
-            for combo, got in batches(html, text):
+            for combo, got in batches(html, text, arrow=True):
                 base_combo, want = pickle.load(child.stdout)
                 assert base_combo == combo, (base_combo, combo)
                 s = stats[combo]
